@@ -26,6 +26,17 @@ def get_spark(
       columnar-batched.
     - UTC session timezone: parity with the DuckDB oracle and with the
       reference's ISO-8601 string timestamps.
+    - Local masters (``local`` / ``local[N]``) cap HotSpot at two JIT
+      compiler threads (``-XX:CICompilerCount=2``, one C1 + one C2, the
+      tiered minimum) instead of the ergonomic default that grows with
+      the core count. In local mode the driver JVM also runs the N task
+      threads, so extra compiler threads only compete with tasks for the
+      same cores; on a cluster the driver runs no tasks and is left
+      alone. The cap is set as ``spark.driver.defaultJavaOptions``, so a
+      caller's ``spark.driver.extraJavaOptions`` is appended after it;
+      to change or drop it, pass your own
+      ``spark.driver.defaultJavaOptions`` in ``extra_conf``. Like every
+      driver JVM option it only applies when this call launches the JVM.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -46,6 +57,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
     )
+    if master == "local" or master.startswith("local["):
+        builder = builder.config(
+            "spark.driver.defaultJavaOptions", "-XX:CICompilerCount=2"
+        )
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

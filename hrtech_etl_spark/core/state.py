@@ -3,9 +3,11 @@
 The reference returns the advanced ``Cursor`` from ``pull()`` and
 leaves persistence to the caller (``core/pipeline.py:77``). Here the
 cursor is durable engine state: a tiny JSON document per (pipeline,
-resource) pair, written atomically. On a cluster this path lives on
-shared storage (HDFS/S3 via the same API); the document is a few bytes
-of driver-side state, never data.
+resource) pair, written atomically. The store uses the driver's local
+filesystem API (``os``), so its root must be a local or POSIX-mounted
+path (on a cluster, a shared mount the driver sees); HDFS/S3 URIs are
+not supported. The document is a few bytes of driver-side state, never
+data.
 
 Tie-safety: cursors are the lexicographic pair ``(cursor_col, uid)``
 (SURVEY.md §7.3) so a resume with ties on e.g. ``updated_at`` neither

@@ -83,12 +83,17 @@ def merge_upsert(
     """
     _recover_swap(spark, target_path.rstrip("/"))
 
-    exists = _dataset_exists(spark, target_path)
-    if not exists:
+    if not _dataset_exists(spark, target_path):
         w = source.write.mode("overwrite")
         if partition_col:
             w = w.partitionBy(partition_col)
         w.parquet(target_path)
+        # An empty partitioned batch writes no partition, only
+        # `_SUCCESS`: a directory no reader can infer a schema from.
+        # Leave no target instead, so the next batch bootstraps again.
+        # (Unpartitioned, Spark writes one schema-bearing empty file.)
+        if partition_col and not _dataset_exists(spark, target_path):
+            _rm(spark, target_path)
         return
 
     target = spark.read.parquet(target_path)
@@ -196,10 +201,11 @@ def _dataset_exists(spark: SparkSession, path: str) -> bool:
         # count as data: a killed bootstrap would otherwise route the
         # replayed batch into a doomed read of a half-written table.
         # Real partition directories are `col=value` names; committed
-        # writes leave part files and/or _SUCCESS.
+        # writes leave part files. A bare `_SUCCESS` (an empty
+        # partitioned write) holds no schema, so it is not data either.
         if st.isDirectory() and not name.startswith(("_", ".")):
             return True
-        if name.endswith(".parquet") or name == "_SUCCESS":
+        if name.endswith(".parquet"):
             return True
     return False
 

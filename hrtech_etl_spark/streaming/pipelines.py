@@ -379,8 +379,11 @@ def foreach_batch_upsert(
     it (exactly-once) — swallowing it would be silent data loss.
 
     The batch is persisted before the merge so the dead-letter write
-    appends the rows that actually failed instead of recomputing (and
-    possibly re-failing) the batch plan."""
+    stores the rows that actually failed instead of recomputing (and
+    possibly re-failing) the batch plan. Each failed batch overwrites
+    its own ``<dead_letter_path>/batch=<batch_id>`` partition, so a
+    replay the checkpoint did not commit rewrites that batch's dead
+    letters instead of adding them twice."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
@@ -402,7 +405,9 @@ def foreach_batch_upsert(
                 metrics.errors.append(f"batch {batch_id}: {exc}")
             if dead_letter_path is None:
                 raise  # fail the batch → checkpoint not committed → retried
-            batch_df.write.mode("append").parquet(dead_letter_path)
+            batch_df.write.mode("overwrite").parquet(
+                f"{dead_letter_path.rstrip('/')}/batch={batch_id}"
+            )
         finally:
             batch_df.unpersist()
 

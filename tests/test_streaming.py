@@ -352,6 +352,21 @@ def test_merge_upsert_partition_scoped(spark, tmp_path):
     assert got == {1: ("2024-01-01", "a"), 2: ("2024-01-02", "B")}
 
 
+@pytest.mark.parametrize("partition_col", ["day", None])
+def test_merge_upsert_empty_bootstrap_then_rows(spark, tmp_path, partition_col):
+    """An empty first batch must not leave a target without a schema
+    (an empty partitioned write leaves only `_SUCCESS`): the next,
+    non-empty merge has to succeed and land exactly its rows."""
+    path = str(tmp_path / "etarget")
+    schema = "id INT, day STRING, val STRING"
+    empty = spark.createDataFrame([], schema)
+    merge_upsert(spark, path, empty, ["id"], partition_col=partition_col)
+    rows = spark.createDataFrame([(1, "2024-01-01", "a")], schema)
+    merge_upsert(spark, path, rows, ["id"], partition_col=partition_col)
+    got = [(r["id"], r["val"]) for r in spark.read.parquet(path).collect()]
+    assert got == [(1, "a")]
+
+
 def test_merge_upsert_partition_guard(spark, tmp_path, monkeypatch):
     """A mis-keyed partition_col (high cardinality) must fail loudly
     instead of collecting millions of values onto the driver."""
@@ -448,6 +463,9 @@ def test_foreach_batch_error_containment(spark, tmp_path):
         wrapped2(df, 1)
         assert metrics2.errors and "boom" in metrics2.errors[0]
         assert metrics2.batches == 0
+        # a replay of the same batch id (checkpoint never committed it)
+        # rewrites that batch's dead letters instead of appending twice
+        wrapped2(df, 1)
         assert spark.read.parquet(dlq).count() == 1
     finally:
         P.merge_upsert = orig
