@@ -2202,8 +2202,9 @@ def shingle_containment_pairs(
     single-threaded, before the widening exchange the heavy
     projection exists behind. With the cheap restatement the pushed
     filter IS the optimization. Value-identical on the full pair
-    frame; quiet-host A/B (AB_containment_r15.json): 1.08x vs the
-    round-14 formulation at sf0.1 (the entry is job-launch-bound at
+    frame; quiet-host A/B (``git show 4b9511f:AB_containment_r15.json``):
+    1.08x vs the round-14 formulation at sf0.1 (the entry is
+    job-launch-bound at
     5k docs, so the local delta is small — the real win is the 2x
     heavy-expression evaluation and the narrow-scan serialization at
     real corpus sizes). The same record measures a collect_list-per-

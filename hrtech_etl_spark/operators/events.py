@@ -150,13 +150,6 @@ def normalize_event_type(col: Column, type_map: Mapping[str, str] | None = None)
     return expr.otherwise("upserted") if expr is not None else F.lit("upserted")
 
 
-def parse_events_json(spark, payloads_df: DataFrame, json_col: str, schema) -> DataFrame:
-    """Permissive JSON parse + malformed-drop (the reference's
-    ``from_payload`` returning None on malformed input)."""
-    parsed = payloads_df.select(F.from_json(F.col(json_col), schema).alias("e"))
-    return parsed.where(F.col("e").isNotNull()).select("e.*")
-
-
 def push_events(
     events: DataFrame,
     resources: DataFrame,

@@ -82,8 +82,9 @@ _INTERNAL_COLS = ("__rb", "__lrn", "__lrk", "__ldr", "__cnt", "__ndv",
 
 #: below this bucket count the plain linear fold is at worst a wash
 #: against the binary search (A/B at 5M rows,
-#: AB_rank_bucketing_r14.json: fold 0.790s vs bsearch 0.801s at 32
-#: buckets — a tie; bsearch 6.17x faster at 512, 10.62x at 2048) —
+#: ``git show 4b9511f:AB_rank_bucketing_r14.json``: fold 0.790s vs
+#: bsearch 0.801s at 32 buckets — a tie; bsearch 6.17x faster at
+#: 512, 10.62x at 2048) —
 #: the probe bookkeeping costs about as much as ~64 straight-line
 #: comparisons, so the simpler expression wins the small-n regime.
 #: Both expressions are value-identical (the A/B asserts zero

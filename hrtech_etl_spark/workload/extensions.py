@@ -5392,8 +5392,9 @@ def events_rfm_segments(spark, sf_dir):
     materialized |users| frame instead of replaying the |events|
     groupBy per pass. (A round-14 A/B folded the three boundary scans
     into one shared aggregate and REJECTED it for this small-frame
-    query — AB_rfm_boundaries_r14.json; the boundaries= API remains
-    for large-frame multi-metric callers.) The monetary sum is exact
+    query — ``git show 4b9511f:AB_rfm_boundaries_r14.json``; the
+    boundaries= API remains for large-frame multi-metric callers.)
+    The monetary sum is exact
     DECIMAL, so both the ntile order and the final per-cell total are
     engine-portable.
     Green at sf0.001/0.01/0.1."""
@@ -5408,7 +5409,8 @@ def events_rfm_segments(spark, sf_dir):
         F.sum(F.col("value").cast("decimal(18,4)")).alias("monetary_d"),
     )
     u = u.localCheckpoint(eager=False)
-    # Boundary strategy (round-14 A/B, AB_rfm_boundaries_r14.json):
+    # Boundary strategy (round-14 A/B, git show
+    # 4b9511f:AB_rfm_boundaries_r14.json):
     # folding the three boundary scans into ONE shared aggregate via
     # with_global_ranks(boundaries=) was built, property-tested, and
     # REJECTED for this query — the per-user frame is small, so the

@@ -1,4 +1,4 @@
-"""Registry-order lock + tools/ compile smoke.
+"""Registry-order lock, tools/ compile smoke and doc-command check.
 
 The driver's correctness gate reads the FIRST 50 registry entries in
 registration order (see ``workload/__init__.py``). Registration order
@@ -17,6 +17,7 @@ from __future__ import annotations
 import hashlib
 import pathlib
 import py_compile
+import re
 
 import pytest
 
@@ -122,3 +123,44 @@ def test_tools_compile(path):
     by the suite, so a half-committed refactor would otherwise ship a
     SyntaxError unnoticed — happened to scale_smoke.py in round 9)."""
     py_compile.compile(str(path), doraise=True)
+
+
+REPO_ROOT = TOOLS_DIR.parent
+DOCS = ("README.md", ".claude/skills/verify/SKILL.md")
+_PYTHON_CMD = re.compile(r"\bpython3?\s+([^\s`]+)")
+
+
+def _repo_script(token):
+    """The repo path a documented ``python <token>`` command runs, or
+    None when the token is not a script of this repo (``-m``, stdin,
+    prose, or a path outside the repo)."""
+    token = token.rstrip(").,;:")
+    if not token.endswith(".py"):
+        return None
+    path = pathlib.PurePosixPath(token)
+    if path.is_absolute():
+        # Docs name the checkout absolutely; match it by its directory.
+        parents = path.parts[:-1]
+        if REPO_ROOT.name not in parents:
+            return None
+        cut = len(parents) - parents[::-1].index(REPO_ROOT.name)
+        path = pathlib.PurePosixPath(*path.parts[cut:])
+    if len(path.parts) == 1 or path.parts[0] in ("tools", "hrbench"):
+        return path
+    return None
+
+
+@pytest.mark.parametrize("doc", DOCS)
+def test_doc_commands_name_existing_scripts(doc):
+    """Every ``python``/``python3`` command in the docs runs a script
+    that exists, so deleting a script cannot leave a doc pointing at
+    nothing."""
+    text = (REPO_ROOT / doc).read_text()
+    scripts = {
+        path
+        for path in map(_repo_script, _PYTHON_CMD.findall(text))
+        if path is not None
+    }
+    assert scripts, f"{doc}: no python commands found"
+    missing = sorted(str(p) for p in scripts if not (REPO_ROOT / p).is_file())
+    assert not missing, f"{doc} runs scripts that do not exist: {missing}"

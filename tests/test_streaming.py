@@ -590,6 +590,96 @@ def test_merge_upsert_crash_recovery_from_old(spark, tmp_path):
     assert not os.path.exists(path + ".__old")
 
 
+def test_merge_upsert_killed_between_swap_renames(spark, tmp_path, monkeypatch):
+    """Kill the real swap after `target → .__old` and before
+    `.__tmp → target`: the retried merge restores `.__old`, merges the
+    batch into it, and the leftover `.__tmp` from the killed call is
+    overwritten rather than read."""
+    import os
+
+    import hrtech_etl_spark.operators.upsert as U
+
+    path = str(tmp_path / "ktarget")
+    base = spark.createDataFrame([(1, "a"), (2, "b")], ["id", "val"])
+    merge_upsert(spark, path, base, ["id"])
+    upd = spark.createDataFrame([(2, "B"), (3, "c")], ["id", "val"])
+
+    real_rename = U._rename
+
+    def killed_rename(spark_, src, dst):
+        if src.endswith(".__tmp"):
+            raise IOError("killed between the swap renames")
+        real_rename(spark_, src, dst)
+
+    monkeypatch.setattr(U, "_rename", killed_rename)
+    with pytest.raises(IOError, match="killed"):
+        merge_upsert(spark, path, upd, ["id"])
+    monkeypatch.undo()
+    assert not os.path.exists(path)
+    assert os.path.exists(path + ".__old") and os.path.exists(path + ".__tmp")
+
+    merge_upsert(spark, path, upd, ["id"])
+    got = {r["id"]: r["val"] for r in spark.read.parquet(path).collect()}
+    assert got == {1: "a", 2: "B", 3: "c"}
+    assert not os.path.exists(path + ".__old")
+    assert not os.path.exists(path + ".__tmp")
+
+
+def test_malformed_only_batch_leaves_partitioned_target(spark, tmp_path):
+    """A micro-batch whose every payload is malformed parses to zero
+    rows: the partitioned merge rewrites nothing and, since nothing
+    failed, writes no dead letters."""
+    import json
+    import os
+
+    from hrtech_etl_spark.operators.events import (
+        CONNECTOR_EVENT_SPECS,
+        parse_connector_events,
+    )
+
+    spec = CONNECTOR_EVENT_SPECS["warehouse_a.jobs"]
+
+    def batch(*payloads):
+        raw = spark.createDataFrame([(p,) for p in payloads], ["raw"])
+        return parse_connector_events(raw, "raw", spec)
+
+    def event(eid, etype, ts="2024-05-01T10:00:00"):
+        return json.dumps({"id": eid, "type": etype, "timestamp": ts,
+                           "data": {"job": {"id": f"j{eid}"}}})
+
+    def parquet_files(root):
+        return sorted(
+            os.path.relpath(os.path.join(d, f), root)
+            for d, _, files in os.walk(root)
+            for f in files
+            if f.endswith(".parquet")
+        )
+
+    target = str(tmp_path / "events")
+    dlq = str(tmp_path / "dead")
+    metrics = StreamMetrics()
+    sink = foreach_batch_upsert(
+        target, ["event_id"], partition_col="type", metrics=metrics,
+        dead_letter_path=dlq,
+    )
+    sink(batch(event("e1", "job.created"), event("e2", "job.updated")), 0)
+    before = sorted(map(tuple, spark.read.parquet(target).collect()))
+    files_before = parquet_files(target)
+
+    sink(batch(
+        "{not json",
+        json.dumps({"type": "job.created", "data": {"job": {"id": "j9"}}}),
+        json.dumps({"id": "e9", "type": "job.created", "data": {}}),
+        event("e10", "job.created", ts="not-a-date"),
+    ), 1)
+
+    assert sorted(map(tuple, spark.read.parquet(target).collect())) == before
+    assert parquet_files(target) == files_before
+    assert not os.path.exists(dlq)
+    assert metrics.errors == []
+    assert (metrics.batches, metrics.rows_written) == (2, 2)
+
+
 # ---------------------------------------------------------------------------
 # TIMESTAMP_NTZ regression (round-4 driver breakage: parquet written
 # with isAdjustedToUTC=false reads as NTZ, which withWatermark rejects)

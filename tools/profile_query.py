@@ -11,7 +11,7 @@ For each named registry query:
 
 Usage:
   python tools/profile_query.py --only q1,q2 [--sf-dir DIR] [--runs 2]
-      [--plans-dir plans/r17 --plan-tag before] [--json OUT]
+      [--plans-dir /tmp/plans --plan-tag before] [--json OUT]
 """
 
 from __future__ import annotations
