@@ -544,16 +544,18 @@ def jaccard_verify(
 # Near-dup clustering (pairs → connected components → canonical keep)
 # ---------------------------------------------------------------------------
 
+#: near_dup_clusters truncates the label lineage every this many rounds
+_CHECKPOINT_EVERY = 3
+
+
 def near_dup_clusters(
     pairs: DataFrame,
     ids: DataFrame,
     id_col: str,
     *,
     max_iterations: int = 10,
-    checkpoint_every: int = 3,
     accelerate: bool = False,
     checkpoint_dir: str | None = None,
-    steps_per_round: int = 1,
 ) -> DataFrame:
     """Connected components over verified near-dup pairs → one cluster
     label per id (the minimum id in its component; singletons label
@@ -586,7 +588,7 @@ def near_dup_clusters(
     a second driver action (``Observation`` does NOT fire on a
     ``localCheckpoint`` materialization, which is why the round action
     is a real count). Lineage is truncated by an eager
-    ``localCheckpoint`` only every ``checkpoint_every`` rounds (a cheap
+    ``localCheckpoint`` only every ``_CHECKPOINT_EVERY`` rounds (a cheap
     cache read); between checkpoints the persisted round outputs keep
     execution flat while plans grow by one join per round.
 
@@ -614,35 +616,7 @@ def near_dup_clusters(
     probe rides a real ``count()`` on the persisted frame, never a
     checkpoint materialization, so the Observation caveat above does
     not change).
-
-    ``steps_per_round=2`` (round-18, default 1 = the historical
-    cadence) chains TWO propagation steps into ONE materialized round
-    — one persisted frame, one count job, one convergence probe per
-    two steps — halving the per-round job/scheduling overhead for
-    chain-shaped pair graphs whose components need many rounds.
-    Soundness: labels only ever decrease, so judging convergence on
-    the FINAL step's probe is exact — if step ``2k`` changed nothing,
-    its input was already a fixed point of one propagation step (zero
-    is absorbing), and the returned labels equal the one-step
-    cadence's bit for bit. The raise boundary is also unchanged: a
-    trailing short round runs ``max_iterations - steps_done`` steps,
-    so both cadences execute exactly ``max_iterations`` steps before
-    declaring non-convergence, and (by the absorbing argument) their
-    last probes agree. The mid-step frame is ``persist()``-ed (lazily
-    — it materializes inside the round's one count job) because under
-    ``accelerate`` the second step references it THREE times (neighbor
-    build, join left side, jump table): uncached, the round-17 fusion
-    A/B measured the re-computation costing more than the saved job
-    overhead, which is why the fused cadence is per-call and default
-    OFF — enable it for chain-shaped consumers, leave converge-fast
-    consumers (e.g. semantic prune's clique-like components) on the
-    one-step cadence.
     """
-    if steps_per_round not in (1, 2):
-        raise ValueError(
-            f"near_dup_clusters: steps_per_round must be 1 or 2, got "
-            f"{steps_per_round}"
-        )
     from pyspark.sql import Observation
 
     prev_ckpt_dir = None
@@ -704,62 +678,37 @@ def near_dup_clusters(
             .select("id", F.col("id").alias("cluster")),
             eager=False,
         )
-        def _step(lbls: DataFrame, obs) -> DataFrame:
-            """ONE min-label propagation step over ``lbls`` — the
-            historical round body, factored out so a fused round can
-            chain two of them before materializing. ``obs=None`` for a
-            mid-step (no probe; convergence is judged on the final
-            step only — sound because zero changes is absorbing)."""
+        prev_cached: DataFrame | None = None
+        for it in range(max_iterations):
+            obs = Observation(f"near_dup_clusters_round_{it}")
             neigh = (
-                edges.join(lbls, edges["dst"] == lbls["id"])
+                edges.join(labels, edges["dst"] == labels["id"])
                 .groupBy("src")
                 .agg(F.min("cluster").alias("neigh_min"))
             )
             candidates = [F.col("cluster"), F.coalesce("neigh_min", F.col("cluster"))]
-            joined = lbls.join(neigh, lbls["id"] == neigh["src"], "left")
+            joined = labels.join(neigh, labels["id"] == neigh["src"], "left")
             if accelerate:
-                jump = lbls.select(
+                jump = labels.select(
                     F.col("id").alias("__jid"), F.col("cluster").alias("__jcluster")
                 )
                 joined = joined.join(jump, F.col("cluster") == F.col("__jid"), "left")
                 candidates.append(F.coalesce("__jcluster", F.col("cluster")))
-            out = joined.select(
-                "id",
-                F.least(*candidates).alias("__new"),
-                (F.least(*candidates) < F.col("cluster")).alias("__changed"),
-            ).withColumnRenamed("__new", "cluster")
-            if obs is not None:
-                out = out.observe(
-                    obs, F.count_if(F.col("__changed")).alias("n_changed")
+            cached = (
+                joined.select(
+                    "id",
+                    F.least(*candidates).alias("__new"),
+                    (F.least(*candidates) < F.col("cluster")).alias("__changed"),
                 )
-            return out.drop("__changed")
-
-        prev_cached: DataFrame | None = None
-        steps_done = 0
-        round_no = 0
-        while steps_done < max_iterations:
-            # a trailing short round keeps the executed step count —
-            # and with it the raise boundary — EXACTLY max_iterations
-            n_steps = min(steps_per_round, max_iterations - steps_done)
-            obs = Observation(f"near_dup_clusters_round_{round_no}")
-            cur = labels
-            mids: list[DataFrame] = []
-            for _ in range(n_steps - 1):
-                # lazy persist: materializes inside the round's one
-                # count job; under accelerate the next step reads this
-                # frame three times (neigh build, join left, jump)
-                cur = _step(cur, None).persist()
-                mids.append(cur)
-            cached = _step(cur, obs).persist()
+                .withColumnRenamed("__new", "cluster")
+                .observe(obs, F.count_if(F.col("__changed")).alias("n_changed"))
+                .drop("__changed")
+                .persist()
+            )
             cached.count()  # the round's ONE job: materialize + fire the probe
-            for m in mids:
-                m.unpersist()
             n_changed = obs.get["n_changed"]
             labels = cached
-            prev_steps = steps_done
-            steps_done += n_steps
-            round_no += 1
-            if steps_done // checkpoint_every > prev_steps // checkpoint_every:
+            if (it + 1) % _CHECKPOINT_EVERY == 0:
                 labels = _truncate(cached, eager=True)  # reads the cache
                 cached.unpersist()
                 cached = None

@@ -1455,16 +1455,6 @@ def write_codebook_table(
     grid.write.mode(mode).parquet(path)
 
 
-#: Session-scoped MODEL-STATE cache for ``read_codebook_table(cache=
-#: True)`` — the validated m×ksub×dsub centroid grid (a few KiB of
-#: floats, the same bounded artifact class as the schema cache and the
-#: kmeans_lloyd driver state; never query results). Keyed by (path,
-#: geometry) with (applicationId, mtime, grid) in the value so a
-#: rewritten table or a new Spark application re-reads and
-#: re-validates storage.
-_CB_READ_CACHE: dict[tuple[str, int, int, int], tuple[str, float, list]] = {}
-
-
 def read_codebook_table(
     spark,
     path: str,
@@ -1472,7 +1462,6 @@ def read_codebook_table(
     m: int = 8,
     ksub: int = 16,
     dim: int = 64,
-    cache: bool = False,
 ) -> DataFrame:
     """Read a persisted codebook back into the one-row broadcast
     ``__cb`` artifact every PQ plan consumes — the serve half of the
@@ -1488,47 +1477,12 @@ def read_codebook_table(
     set with ``dim/m``-wide centroids (the
     :func:`pq_codebook_from_kmeans` validation, re-applied to storage
     because a partially-written or hand-edited table is exactly what
-    a serving fleet must refuse).
-
-    ``cache=True`` keeps the VALIDATED grid in a session-scoped
-    model-state cache (guide §5: the artifact is bounded — m·ksub
-    centroids — exactly the state a serving fleet pins in memory
-    rather than re-reading per query). The first read per (path,
-    geometry) still scans and validates storage — and therefore pays
-    its cost inside whichever timed caller runs first; repeats skip
-    only the re-read/re-validate of a file proven unchanged (mtime
-    and applicationId are checked; a rewritten table or a new Spark
-    app re-validates). This caches the trained MODEL, never any
-    query's result."""
+    a serving fleet must refuse)."""
     from pyspark.sql import types as T
 
     if dim % m:
         raise ValueError(f"read_codebook_table: dim {dim} % m {m} != 0")
     dsub = dim // m
-    app_id = spark.sparkContext.applicationId
-    ckey = (path, m, ksub, dim)
-    mtime = None
-    if cache:
-        import os as _os
-
-        # stat BEFORE the read (the schema-cache discipline): if the
-        # table is rewritten between this stat and the scan below, the
-        # cache stores the PRE-rewrite mtime with whatever was read —
-        # stale at worst for one cycle, and self-healing because the
-        # next call's fresh stat mismatches and re-reads. Stamping a
-        # post-read mtime instead could pin an old grid under the new
-        # file's mtime forever.
-        try:
-            mtime = _os.path.getmtime(path)
-        except OSError:
-            mtime = None
-        hit = _CB_READ_CACHE.get(ckey)
-        if hit is not None and mtime is not None and hit[0] == app_id and hit[1] == mtime:
-            return F.broadcast(
-                spark.createDataFrame(
-                    [(hit[2],)], "`__cb` ARRAY<ARRAY<ARRAY<DOUBLE>>>"
-                )
-            )
     df = spark.read.parquet(path)
     missing = {"s", "cid", "centroid", "cb_meta"} - set(df.columns)
     if missing:
@@ -1584,9 +1538,6 @@ def read_codebook_table(
             f"the declared dim={dim}/m={m}"
         )
     cb = [[by[(s, j)] for j in range(ksub)] for s in range(m)]
-    if cache and mtime is not None:
-        # mtime from the pre-read stat above — see the comment there
-        _CB_READ_CACHE[ckey] = (app_id, mtime, cb)
     return F.broadcast(
         spark.createDataFrame([(cb,)], "`__cb` ARRAY<ARRAY<ARRAY<DOUBLE>>>")
     )
@@ -1700,17 +1651,6 @@ def write_code_table(
     ).write.mode(mode).parquet(path)
 
 
-#: Session-scoped cache for ``read_code_table(cache=True)`` — the
-#: validated (id, __codes) frame pinned as a localCheckpoint, i.e. the
-#: PERSISTED serving index held in executor memory the way a serving
-#: fleet holds it (the dedup_incremental LSH-index class: stored model
-#: state, not a query result). Value carries (applicationId, mtime,
-#: frame) so a rewritten table or a fresh Spark app re-reads storage.
-_CODES_READ_CACHE: dict[
-    tuple[str, str, int, int, int], tuple[str, float, DataFrame]
-] = {}
-
-
 def read_code_table(
     spark,
     path: str,
@@ -1719,7 +1659,6 @@ def read_code_table(
     m: int = 8,
     ksub: int = 16,
     dim: int = 64,
-    cache: bool = False,
 ) -> DataFrame:
     """Read a persisted code table back for ADC serving — returns
     ``(id, __codes)`` shaped exactly like :func:`pq_encode` output,
@@ -1738,33 +1677,11 @@ def read_code_table(
     so the tags prove the pair belongs to one trained family. The
     scan stays column-pruned: a query that only runs ADC reads
     ``(id, __codes)`` — m bytes of codes per row, the whole point of
-    the compressed serving scan.
-
-    ``cache=True`` pins the validated frame as an EAGER
-    localCheckpoint in a session-scoped cache — the serving fleet's
-    in-memory copy of the persisted code index (guide §5; the same
-    stored-model-state class as the dedup_incremental LSH index). The
-    first read per (path, geometry) scans AND validates storage —
-    every guard fires during the eager materialization, and the cost
-    lands inside whichever timed caller runs first; repeats reuse the
-    checkpointed partitions of a file proven unchanged (mtime +
-    applicationId checked). Stored codes only, never query results."""
+    the compressed serving scan."""
     from pyspark.sql import types as T
 
     if dim % m:
         raise ValueError(f"read_code_table: dim {dim} % m {m} != 0")
-    ckey = (path, id_col, m, ksub, dim)
-    if cache:
-        import os as _os
-
-        app_id = spark.sparkContext.applicationId
-        try:
-            mtime = _os.path.getmtime(path)
-        except OSError:
-            mtime = None
-        hit = _CODES_READ_CACHE.get(ckey)
-        if hit is not None and mtime is not None and hit[0] == app_id and hit[1] == mtime:
-            return hit[2]
     df = spark.read.parquet(path)
     missing = {id_col, "__codes", "cb_meta"} - set(df.columns)
     if missing:
@@ -1834,16 +1751,4 @@ def read_code_table(
             )
         )
     )
-    out = df.select(F.col(id_col), guarded.alias("__codes"))
-    if cache:
-        if mtime is not None:
-            out = out.localCheckpoint(eager=True)
-            # Replacing a superseded entry drops the dict's reference
-            # to the old checkpointed frame; its executor blocks are
-            # reclaimed by Spark's ContextCleaner once unreferenced
-            # (there is no public API to free localCheckpoint blocks
-            # eagerly). At most one stale frame per rewrite cycle is
-            # in flight — the same lifecycle as every per-call lazy
-            # checkpoint in this package.
-            _CODES_READ_CACHE[ckey] = (app_id, mtime, out)
-    return out
+    return df.select(F.col(id_col), guarded.alias("__codes"))

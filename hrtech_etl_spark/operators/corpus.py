@@ -448,7 +448,6 @@ def prepare_training_corpus(
     chunk_overlap: int = 200,
     pack_max_len: int = 512,
     redact: bool = True,
-    dedup_knobs: dict | None = None,
     decon_knobs: dict | None = None,
     boilerplate_frac: float | None = None,
     packing: str = "ffd",
@@ -477,10 +476,7 @@ def prepare_training_corpus(
        drop from every document BEFORE dedup, so shared banners can't
        glue otherwise-distinct documents into near-dup clusters
     1. exact dedup (content-hash, min-id keep)
-    2. near-dup dedup (MinHash-LSH → verify → clusters;
-       ``dedup_knobs`` forwards the corpus-scale knobs —
-       ``stop_shingle_frac``, ``max_bucket_size``, ``accelerate``,
-       ``checkpoint_dir``)
+    2. near-dup dedup (MinHash-LSH → verify → clusters)
     2b. (optional, ``embeddings``) SemDeDup semantic pruning
        (functions/similarity.py::semantic_dedup) — drops documents a
        lexical dedup can't see as duplicates (paraphrases, templated
@@ -525,8 +521,7 @@ def prepare_training_corpus(
     3. benchmark decontamination vs ``test_set`` (13-gram overlap by
        default; ``decon_knobs`` forwards ``shingle_k`` /
        ``min_overlap`` / ``test_text_col`` for corpora where the
-       published 13-gram convention is miscalibrated — symmetric with
-       ``dedup_knobs``)
+       published 13-gram convention is miscalibrated)
     4. quality filter (``quality_score >= quality_min``)
     5. PII redaction (emails/phones/SSNs → typed placeholders)
     6. chunking into overlapping context windows
@@ -615,7 +610,6 @@ def prepare_training_corpus(
         text_col,
         id_col,
         threshold=near_dup_threshold,
-        **(dedup_knobs or {}),
     )
     if embeddings is not None:
         from hrtech_etl_spark.functions.similarity import semantic_dedup

@@ -68,7 +68,7 @@ from pyspark.sql import types as T
 
 from hrtech_etl_spark.core.partitioning import bounded_window_key
 
-__all__ = ["shared_boundaries", "with_global_ranks"]
+__all__ = ["with_global_ranks"]
 
 #: local windows hand back int32; a bucket past this row count would
 #: wrap before the long casts (patched down by the guard's unit test).
@@ -94,8 +94,7 @@ _FOLD_MAX_BUCKETS = 64
 
 def _fold_bucket_expr(vd: Column, barr: Column) -> Column:
     """|{t in boundaries : t < vd}| by linear fold — O(len) per row,
-    order-independent (used below _FOLD_MAX_BUCKETS, and by the A/B
-    tool as the small-n reference)."""
+    order-independent (used below _FOLD_MAX_BUCKETS)."""
     return F.aggregate(
         barr,
         F.lit(0),
@@ -103,17 +102,16 @@ def _fold_bucket_expr(vd: Column, barr: Column) -> Column:
     )
 
 
-def _bsearch_bucket_expr(
-    vd: Column, barr: Column, sz: Column, n_buckets: int
-) -> Column:
+def _bsearch_bucket_expr(vd: Column, barr: Column, n_buckets: int) -> Column:
     """|{t in boundaries : t < vd}| by bitwise lower-bound binary
     search over the ASCENDING boundary array — O(log2 n_buckets) per
     row. Runs as ONE higher-order aggregate over the descending powers
     of two so the accumulator stays a lambda VARIABLE (an unrolled
     when-chain would re-expand the partial result 3^steps times).
-    ``sz`` gates every probe, so arrays shorter than the static bound
-    (including the empty array a NULL boundary scan coalesces to) just
-    stop early."""
+    The array size gates every probe, so arrays shorter than the static
+    bound (including the empty array a NULL boundary scan coalesces to)
+    just stop early."""
+    sz = F.size(barr)
     bsteps = []
     k = 1
     while k << 1 <= n_buckets - 1:
@@ -128,47 +126,6 @@ def _bsearch_bucket_expr(
             (p + s <= sz) & (vd > F.element_at(barr, p + s)), p + s
         ).otherwise(p),
     )
-
-
-def _boundary_agg_expr(
-    vd: Column, n_buckets: int, accuracy: int = 1000
-) -> Column:
-    """THE bucket-boundary recipe — ``n_buckets - 1`` equally-spaced
-    approximate quantiles at the given accuracy. Single definition:
-    both :func:`with_global_ranks`' self-computed branch and
-    :func:`shared_boundaries` render exactly this expression, so
-    externally-built arrays can never drift from internal ones."""
-    qs = F.lit([i / n_buckets for i in range(1, n_buckets)])
-    return F.percentile_approx(vd, qs, F.lit(accuracy))
-
-
-def shared_boundaries(
-    df: DataFrame,
-    value_cols: list[str] | tuple[str, ...],
-    *,
-    n_buckets: int,
-    accuracy: int = 1000,
-) -> DataFrame:
-    """ONE ``percentile_approx`` aggregate emitting the bucket-boundary
-    array for SEVERAL value columns — the multi-metric companion to
-    :func:`with_global_ranks`'s ``boundaries=``: a query scoring k
-    metrics over the same frame (the RFM query scores three) pays one
-    boundary scan instead of k. Output: one lazily-pinned row with one
-    ``array<double>`` column PER value column, named after it — slice
-    with ``.select(col)`` and pass the SAME ``n_buckets``. The quantile
-    spacing and accuracy here are the exact recipe the operator uses
-    for self-computed boundaries, kept in one place so external arrays
-    can never drift from the internal ones."""
-    if n_buckets < 2:
-        raise ValueError("shared_boundaries: n_buckets must be >= 2")
-    return df.agg(
-        *[
-            _boundary_agg_expr(
-                F.col(c).cast("double"), n_buckets, accuracy
-            ).alias(c)
-            for c in value_cols
-        ]
-    ).localCheckpoint(eager=False)
 
 
 _BUCKETABLE = (
@@ -196,7 +153,6 @@ def with_global_ranks(
     cume_dist: str | None = None,
     ntile: dict[str, int] | None = None,
     n_buckets: int | None = None,
-    boundaries: DataFrame | None = None,
 ) -> DataFrame:
     """Append exact global ranking columns to ``df`` without an
     unpartitioned window.
@@ -211,18 +167,6 @@ def with_global_ranks(
     ``ntile`` maps output column name → bucket count, e.g.
     ``{"quartile": 4}``. All ranks are ascending, NULLS FIRST (Spark's
     ASC default).
-
-    ``boundaries`` (optional): a ONE-row, ONE-column frame whose single
-    value is an ascending ``array<double>`` of bucket boundaries —
-    e.g. one slice of a multi-column ``percentile_approx`` aggregate
-    shared by SEVERAL ranking passes over the same frame (the RFM
-    query scores three metrics; one boundary scan instead of three).
-    Boundaries steer load balance only, never exactness, so any
-    ascending array over the ``value_col``-cast-double domain is
-    valid. The array must hold at most ``n_buckets - 1`` entries
-    (the binary search's static probe depth — pass
-    ``n_buckets = len + 1``); longer arrays raise at run time rather
-    than silently under-counting.
     """
     ntile = dict(ntile or {})
     out_total = [c for c in (row_number, percent_rank, cume_dist) if c] + list(ntile)
@@ -254,87 +198,10 @@ def with_global_ranks(
     vd = v.cast("double")
 
     # -- phase 1: broadcast boundary array (load balance only) ---------
-    if boundaries is not None and n_buckets < 2:
-        raise ValueError(
-            "with_global_ranks: boundaries= needs n_buckets >= 2 "
-            "(pass n_buckets = boundary array length + 1)"
-        )
     if n_buckets >= 2:
-        if boundaries is not None:
-            if len(boundaries.columns) != 1:
-                raise ValueError(
-                    "with_global_ranks: boundaries= must be a one-row, "
-                    f"ONE-column frame, got columns {boundaries.columns}"
-                )
-            # eager dtype check (the _BUCKETABLE twin for the array
-            # side): a non-numeric element type — say an array<string>
-            # of labels grabbed from the wrong column — would
-            # element-cast to NULLs below, sail through the ascending
-            # check (NULLs trail after array_sort), and silently
-            # degrade to near-single-bucket load balance. Exactness
-            # never depends on boundaries, so the mistake would be
-            # invisible; fail it at the call instead. Numeric only:
-            # the contract is an array over the value-CAST-DOUBLE
-            # domain (shared_boundaries emits array<double>), so even
-            # date/timestamp order columns pass their boundaries as
-            # the already-cast doubles.
-            btype = boundaries.schema[boundaries.columns[0]].dataType
-            if not (
-                isinstance(btype, T.ArrayType)
-                and isinstance(btype.elementType, T.NumericType)
-            ):
-                raise ValueError(
-                    "with_global_ranks: boundaries= column must be an "
-                    "array of a NUMERIC type (the value_col-cast-"
-                    f"double domain), got {btype.simpleString()}"
-                )
-            # one-row enforcement: a multi-row boundaries frame would
-            # silently MULTIPLY df through the crossJoin (and an empty
-            # one would erase it) — re-aggregate to exactly one row and
-            # raise loudly on any cardinality but 1
-            bnd = (
-                boundaries.select(
-                    F.col(boundaries.columns[0])
-                    .cast("array<double>")
-                    .alias("__bv")
-                )
-                .agg(
-                    F.first("__bv").alias("__bv"),
-                    F.count(F.lit(1)).alias("__bc"),
-                )
-                .select(
-                    # ascending check rides the same one-row branch:
-                    # the binary search is monotone only over SORTED
-                    # boundaries (the load-balance-only contract holds
-                    # regardless of the values, not of their order) —
-                    # an unsorted caller array would corrupt ranks
-                    # silently. A NULL array is fine (empty → bucket 0,
-                    # same as an all-NULL self-computed scan).
-                    F.when(
-                        (F.col("__bc") == 1)
-                        & (
-                            F.col("__bv").isNull()
-                            | (F.col("__bv") == F.array_sort("__bv"))
-                        ),
-                        F.col("__bv"),
-                    )
-                    .otherwise(
-                        F.array(
-                            F.raise_error(
-                                F.format_string(
-                                    "with_global_ranks: boundaries= must "
-                                    "hold exactly ONE row with an "
-                                    "ASCENDING array, got %s row(s)",
-                                    F.col("__bc"),
-                                )
-                            ).cast("double")
-                        )
-                    )
-                    .alias("__bnds")
-                )
-            )
-        else:
-            bnd = df.agg(_boundary_agg_expr(vd, n_buckets).alias("__bnds"))
+        # n_buckets - 1 equally-spaced approximate quantiles
+        qs = F.lit([i / n_buckets for i in range(1, n_buckets)])
+        bnd = df.agg(F.percentile_approx(vd, qs, F.lit(1000)).alias("__bnds"))
         b = df.crossJoin(F.broadcast(bnd))
         # bucket = |{t in boundaries : t < v}|. Two value-identical
         # expressions, chosen by cost (_FOLD_MAX_BUCKETS, A/B'd): the
@@ -345,33 +212,10 @@ def with_global_ranks(
         # boundary array; coalesce to empty → every probe/fold step
         # gated off → single bucket 0 on both paths.
         barr = F.coalesce("__bnds", F.array())
-        sz = F.size(barr)
-        if boundaries is not None:
-            # caller-provided arrays have RUNTIME length; one longer
-            # than the static probe depth would silently under-count
-            # on the binary-search path (the missing high powers can
-            # never be stepped) — raise instead, on BOTH paths so the
-            # contract doesn't shift with the cost-based switch.
-            # Self-computed arrays are exactly n_buckets-1 by
-            # construction, so the branch costs nothing there.
-            sz = F.when(sz <= n_buckets - 1, sz).otherwise(
-                F.raise_error(
-                    F.format_string(
-                        "with_global_ranks: boundaries= array holds %s "
-                        "entries — more than n_buckets-1 = %s and beyond "
-                        "the binary search's probe depth; pass "
-                        "n_buckets = array length + 1",
-                        F.size(barr),
-                        F.lit(n_buckets - 1),
-                    )
-                ).cast("int")
-            )
         if n_buckets <= _FOLD_MAX_BUCKETS:
-            counted = _fold_bucket_expr(
-                vd, F.slice(barr, F.lit(1), sz) if boundaries is not None else barr
-            )
+            counted = _fold_bucket_expr(vd, barr)
         else:
-            counted = _bsearch_bucket_expr(vd, barr, sz, n_buckets)
+            counted = _bsearch_bucket_expr(vd, barr, n_buckets)
         bucket = (
             F.when(v.isNull(), F.lit(-1)).otherwise(counted).alias("__rb")
         )

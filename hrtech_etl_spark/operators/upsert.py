@@ -79,7 +79,10 @@ def merge_upsert(
     With ``partition_col`` the target must be written partitioned by
     that column; only partitions containing source keys are rewritten
     via dynamic partition overwrite — the 100 TB path: a day's upsert
-    touches a day's partitions.
+    touches a day's partitions. A key's ``partition_col`` value must
+    never change: the merge only reads the partitions the source
+    touches, so a key moved to another partition keeps its old row
+    there as well.
     """
     _recover_swap(spark, target_path.rstrip("/"))
 
@@ -120,7 +123,13 @@ def merge_upsert(
                 "(full-table rewrite)."
             )
         affected = [r[0] for r in rows]
-        sub_target = target.where(F.col(partition_col).isin(affected))
+        in_affected = F.col(partition_col).isin(affected)
+        if None in affected:
+            # isin never matches NULL: without this, the NULL
+            # partition's existing rows would skip the merge and the
+            # dynamic overwrite would replace them with the source alone
+            in_affected = in_affected | F.col(partition_col).isNull()
+        sub_target = target.where(in_affected)
         merged = merge_frames(sub_target, source, key_cols, order_cols)
         # Dynamic mode replaces only the partitions present in `merged`.
         # Session-scoped conf: save/restore so later mode('overwrite')

@@ -383,7 +383,10 @@ def foreach_batch_upsert(
     possibly re-failing) the batch plan. Each failed batch overwrites
     its own ``<dead_letter_path>/batch=<batch_id>`` partition, so a
     replay the checkpoint did not commit rewrites that batch's dead
-    letters instead of adding them twice."""
+    letters instead of adding them twice.
+
+    With ``partition_col``, a key's partition value must never change
+    across batches (see :func:`merge_upsert`)."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()

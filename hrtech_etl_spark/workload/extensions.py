@@ -1407,17 +1407,7 @@ def _lsh_cluster_labels(spark, sf_dir):
     pairs = dd.jaccard_verify(
         cand, d, "text", "doc_id", threshold=0.3, shingles=sh
     )
-    # steps_per_round=2 (round 18): these two consumers are the
-    # chain-shaped ones — two propagation steps per materialized
-    # round halves the driver-synchronized probe rounds; the mid-step
-    # frame is persisted inside near_dup_clusters (see its docstring).
-    # Interleaved sf0.1 A/B (5 reps, one session): med 2.449 -> 2.225s,
-    # min 2.201 -> 2.114s, labels bit-identical. dedup_semantic_prune
-    # keeps the one-step cadence (its clique-like components converge
-    # in fewer steps; the r17 fusion A/B regressed it).
-    return dd.near_dup_clusters(
-        pairs, d, "doc_id", accelerate=True, steps_per_round=2
-    )
+    return dd.near_dup_clusters(pairs, d, "doc_id", accelerate=True)
 
 
 @query(
@@ -5392,8 +5382,7 @@ def events_rfm_segments(spark, sf_dir):
     materialized |users| frame instead of replaying the |events|
     groupBy per pass. (A round-14 A/B folded the three boundary scans
     into one shared aggregate and REJECTED it for this small-frame
-    query — ``git show 4b9511f:AB_rfm_boundaries_r14.json``; the
-    boundaries= API remains for large-frame multi-metric callers.)
+    query — ``git show 4b9511f:AB_rfm_boundaries_r14.json``.)
     The monetary sum is exact
     DECIMAL, so both the ntile order and the final per-cell total are
     engine-portable.
@@ -5411,16 +5400,14 @@ def events_rfm_segments(spark, sf_dir):
     u = u.localCheckpoint(eager=False)
     # Boundary strategy (round-14 A/B, git show
     # 4b9511f:AB_rfm_boundaries_r14.json):
-    # folding the three boundary scans into ONE shared aggregate via
-    # with_global_ranks(boundaries=) was built, property-tested, and
-    # REJECTED for this query — the per-user frame is small, so the
-    # saved scans (~10-50ms each against the checkpointed aggregate)
-    # cost less than the shared path's ~6 extra job launches (one
-    # checkpoint materialization + three one-row guard aggs + three
-    # broadcast builds), a 0.5-1s net loss at sf0.1. Each pass
-    # self-computes its boundary array inside its own broadcast build;
-    # shared_boundaries remains the right tool where the ranked frame
-    # is large enough that k boundary scans dominate k*6 job launches.
+    # folding the three boundary scans into ONE shared aggregate was
+    # built, property-tested, and REJECTED for this query — the
+    # per-user frame is small, so the saved scans (~10-50ms each
+    # against the checkpointed aggregate) cost less than the shared
+    # path's ~6 extra job launches (one checkpoint materialization +
+    # three one-row guard aggs + three broadcast builds), a 0.5-1s net
+    # loss at sf0.1. Each pass self-computes its boundary array inside
+    # its own broadcast build.
     # Each scoring pass sits behind its own lazy checkpoint: pass
     # k+1's boundary scan + bucket exchange would otherwise replay
     # pass k's full window/join subtree (only u was materialized),
@@ -8660,7 +8647,7 @@ def sim_pq_serve_from_store(spark, sf_dir):
         spark, sf_dir, m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM, iters=_KM_ITERS
     )
     cb = sim.read_codebook_table(
-        spark, path, m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM, cache=True
+        spark, path, m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM
     )
     e = load_table(spark, "embeddings", sf_dir)
     enc = sim.pq_encode(e, cb, m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM)
@@ -8833,7 +8820,7 @@ def sim_ivf_serve_from_store(spark, sf_dir):
         spark, sf_dir, m=1, ksub=_IVF_KSUB, dim=_KM_DIM, iters=_KM_ITERS
     )
     cb = sim.read_codebook_table(
-        spark, path, m=1, ksub=_IVF_KSUB, dim=_KM_DIM, cache=True
+        spark, path, m=1, ksub=_IVF_KSUB, dim=_KM_DIM
     )
     # the stored m=1 grid IS the (__cid, __cvec) quantizer table —
     # a driver-side adapt of the few-KiB artifact, like the __cb build
@@ -8966,7 +8953,7 @@ def _trained_codes_path(spark, sf_dir: str) -> str:
     from hrtech_etl_spark.functions import similarity as sim
 
     cb = sim.read_codebook_table(
-        spark, cb_path, m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM, cache=True
+        spark, cb_path, m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM
     )
     e = load_table(spark, "embeddings", sf_dir)
     # materialize the encode EAGERLY before re-taking the lock: the
@@ -9029,11 +9016,11 @@ def sim_pq_serve_codes_from_store(spark, sf_dir):
     )
     codes_path = _trained_codes_path(spark, sf_dir)
     cb = sim.read_codebook_table(
-        spark, cb_path, m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM, cache=True
+        spark, cb_path, m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM
     )
     codes = sim.read_code_table(
         spark, codes_path, id_col="vec_id",
-        m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM, cache=True,
+        m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM,
     )
     e = load_table(spark, "embeddings", sf_dir)
     q = e.where(F.col("vec_id") == 0)

@@ -333,53 +333,3 @@ def test_serving_path_is_shuffle_free(spark, tmp_path):
     assert "Exchange hashpartitioning" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert "TakeOrderedAndProject" in plan, plan
-
-
-def test_cached_reads_serve_model_state_and_invalidate(spark, tmp_path):
-    """``cache=True`` on the two store readers is a session-scoped
-    MODEL-STATE cache (r18): identical values to the uncached read,
-    storage re-validated when the artifact file changes (mtime), and
-    a corrupt table still refused on the FIRST cached read — the
-    cache can only ever hold a grid/frame that passed validation."""
-    from hrtech_etl_spark.functions import similarity as sim
-    from hrtech_etl_spark.functions.similarity import (
-        pq_encode,
-        read_code_table,
-        write_code_table,
-        write_codebook_table,
-    )
-
-    emb = _emb(spark)
-    cb = pq_codebook(emb, **_GEOM)
-    out = str(tmp_path / "cb")
-    write_codebook_table(cb, out)
-    cold = read_codebook_table(spark, out, **_GEOM, cache=True)
-    assert _cb_value(cold) == _cb_value(cb)
-    # warm read: served from the validated in-memory grid
-    key = (out, _GEOM["m"], _GEOM["ksub"], _GEOM["dim"])
-    assert key in sim._CB_READ_CACHE
-    warm = read_codebook_table(spark, out, **_GEOM, cache=True)
-    assert _cb_value(warm) == _cb_value(cb)
-    # rewrite the artifact -> mtime bump -> cache re-validates storage
-    cb_b = pq_codebook(emb.where("vec_id >= 8"), **_GEOM)
-    write_codebook_table(cb_b, out, mode="overwrite")
-    os.utime(out, (os.path.getmtime(out) + 5,) * 2)
-    fresh = read_codebook_table(spark, out, **_GEOM, cache=True)
-    assert _cb_value(fresh) == _cb_value(cb_b)
-    assert _cb_value(fresh) != _cb_value(cb)
-
-    # code table: cached read == uncached read, and the pinned frame
-    # is reused across calls within the session
-    enc = pq_encode(emb, cb, **_GEOM).select("vec_id", "__codes")
-    cpath = str(tmp_path / "codes")
-    write_code_table(enc, cpath, **_GEOM)
-    c1 = read_code_table(spark, cpath, **_GEOM, cache=True)
-    assert sorted(map(tuple, c1.collect())) == sorted(
-        map(tuple, enc.collect())
-    )
-    c2 = read_code_table(spark, cpath, **_GEOM, cache=True)
-    assert c2 is c1  # the session-pinned serving frame
-    # geometry mismatch on a CACHED-mode first read still raises
-    # (different geometry = different cache key -> storage is read)
-    with pytest.raises(Exception, match="different codebook family"):
-        read_code_table(spark, cpath, m=8, ksub=8, dim=16, cache=True)

@@ -100,7 +100,7 @@ def test_drop_near_duplicates_keeps_min_per_cluster(spark, sf_dir):
 def test_one_driver_action_per_round(spark, monkeypatch):
     """Round-5 structure: each round runs ONE count() (materialize +
     Observation convergence probe in the same job); eager lineage
-    checkpoints happen only every checkpoint_every rounds, not per
+    checkpoints happen only every _CHECKPOINT_EVERY rounds, not per
     round (the old shape was checkpoint + probe-count = 2 actions)."""
     # patch the CONCRETE class (pyspark.sql.classic under Spark 4
     # overrides the abstract base's methods, so patching the base
@@ -131,7 +131,7 @@ def test_one_driver_action_per_round(spark, monkeypatch):
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
     # 3 rounds to converge -> 3 counts. Checkpoints (round 12): edge
     # list and pair-touched id set are lazy (materialized inside round
-    # 1's job); round 3 (i+1 == checkpoint_every) truncates lineage
+    # 1's job); round 3 (i+1 == _CHECKPOINT_EVERY) truncates lineage
     # eagerly, and the returned singleton-restoring join is eagerly
     # truncated so the result stays lineage-free as callers rely on.
     assert counts == {"count": 3, "ckpt_eager": 2, "ckpt_lazy": 2}
@@ -175,90 +175,6 @@ def test_accelerated_matches_plain_on_documents(spark, sf_dir):
         ).collect()
     }
     assert plain == fast
-
-
-def test_fused_two_step_rounds_match_one_step(spark, monkeypatch):
-    """steps_per_round=2 (round 18): two propagation steps per
-    materialized round — identical labels, FEWER count jobs (one probe
-    per two steps), and the same raise boundary (both cadences execute
-    exactly max_iterations steps before declaring non-convergence)."""
-    DataFrame = type(spark.range(1))
-    counts = {"n": 0}
-    orig_count = DataFrame.count
-
-    def count_spy(self):
-        counts["n"] += 1
-        return orig_count(self)
-
-    monkeypatch.setattr(DataFrame, "count", count_spy)
-
-    n = 12  # path graph: 11 steps to converge, step 12 probes zero
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, n)], ["id_a", "id_b"]
-    )
-    ids = spark.createDataFrame([(i,) for i in range(1, n + 1)], ["doc_id"])
-
-    counts["n"] = 0
-    plain = {
-        r["id"]: r["cluster"]
-        for r in near_dup_clusters(
-            pairs, ids, "doc_id", max_iterations=20
-        ).collect()
-    }
-    plain_counts = counts["n"]
-
-    counts["n"] = 0
-    fused = {
-        r["id"]: r["cluster"]
-        for r in near_dup_clusters(
-            pairs, ids, "doc_id", max_iterations=20, steps_per_round=2
-        ).collect()
-    }
-    fused_counts = counts["n"]
-
-    assert fused == plain and set(fused.values()) == {1}
-    # 12 one-step rounds -> 6 fused rounds (each one count job)
-    assert fused_counts < plain_counts
-
-    # raise boundary unchanged: 2 steps cannot converge an 11-step
-    # chain under either cadence
-    with pytest.raises(RuntimeError, match="did not converge"):
-        near_dup_clusters(
-            pairs, ids, "doc_id", max_iterations=2, steps_per_round=2
-        )
-    # odd max_iterations: the trailing short round runs ONE step, so
-    # exactly 3 steps execute — still short of convergence
-    with pytest.raises(RuntimeError, match="did not converge"):
-        near_dup_clusters(
-            pairs, ids, "doc_id", max_iterations=3, steps_per_round=2
-        )
-    with pytest.raises(ValueError, match="steps_per_round"):
-        near_dup_clusters(pairs, ids, "doc_id", steps_per_round=3)
-
-
-def test_fused_accelerated_matches_on_documents(spark, sf_dir):
-    """The production combination (accelerate + fused rounds) on the
-    real fixture: labels identical to the one-step accelerated
-    cadence."""
-    from hrtech_etl_spark.sources.testdata import load_table
-
-    d = load_table(spark, "documents", sf_dir)
-    cand = minhash_lsh_pairs(d, "text", "doc_id")
-    verified = jaccard_verify(cand, d, "text", "doc_id", threshold=0.5)
-    one = {
-        r["id"]: r["cluster"]
-        for r in near_dup_clusters(
-            verified, d.select("doc_id"), "doc_id", accelerate=True
-        ).collect()
-    }
-    two = {
-        r["id"]: r["cluster"]
-        for r in near_dup_clusters(
-            verified, d.select("doc_id"), "doc_id", accelerate=True,
-            steps_per_round=2,
-        ).collect()
-    }
-    assert one == two
 
 
 def test_minhash_bucket_cap(spark):

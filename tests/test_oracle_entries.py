@@ -1,0 +1,51 @@
+"""Registry entries checked against their DuckDB oracles at sf0.001 —
+the same comparison as ``tools/oracle_check.py`` (row count, sorted
+column names, order-insensitive value hash), run inside the suite for
+the entries whose operators lost an option: the store readers, the
+cluster rounds and the global-rank plan."""
+
+from __future__ import annotations
+
+import pytest
+
+from hrtech_etl_spark.core.schemas import TESTDATA_TABLES
+from hrtech_etl_spark.workload import REGISTRY
+from tools.oracle_check import result_hash
+
+ENTRIES = [
+    "dedup_clusters",
+    "corpus_leakage_safe_split",
+    "sim_pq_serve_from_store",
+    "sim_ivf_serve_from_store",
+    "sim_pq_serve_codes_from_store",
+    "events_rfm_segments",
+    "window_rank_suite",
+]
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TESTDATA_TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", ENTRIES)
+def test_entry_matches_oracle(spark, sf_dir, duck, name):
+    qd = REGISTRY[name]
+    df = qd.fn(spark, sf_dir)
+    scols = df.columns
+    srows = [tuple(r) for r in df.collect()]
+    res = duck.execute(qd.sql)
+    dcols = [d[0] for d in res.description]
+    drows = res.fetchall()
+    assert srows, "vacuous: the entry returned no rows"
+    assert len(srows) == len(drows)
+    assert sorted(scols) == sorted(dcols)
+    assert result_hash(scols, srows) == result_hash(dcols, drows)

@@ -189,132 +189,36 @@ def test_property_matches_native_windows(spark, vals, n_buckets, k):
     assert g == e
 
 
-# ---------------------------------------------------------------------------
-# boundaries= (precomputed / shared boundary arrays — round 14)
-# ---------------------------------------------------------------------------
-
-
-def test_precomputed_boundaries_bit_identical(spark, skewed):
-    """boundaries steer load balance only: an externally supplied
-    ascending array — here deliberately NOT the percentile array the
-    default path would compute — must leave every rank value
-    bit-identical."""
-    base = with_global_ranks(
-        skewed, "val", ("id",), row_number="rn", rank="rk",
-        dense_rank="dr", ntile={"t5": 5},
+def test_null_boundary_array_single_bucket(spark):
+    """An all-NULL order column makes percentile_approx yield a NULL
+    boundary array, which coalesces to one bucket on both the fold and
+    the binary-search path — values still match native windows."""
+    df = spark.createDataFrame(
+        [(i, None) for i in range(40)], "id INT, val INT"
+    ).repartition(3)
+    w = W.orderBy("val", "id")
+    wv = W.orderBy("val")
+    ref = df.select(
+        "*",
+        F.row_number().over(w).cast("long").alias("rn"),
+        F.rank().over(wv).cast("long").alias("rk"),
+        F.dense_rank().over(wv).cast("long").alias("dr"),
+        F.ntile(3).over(w).alias("t3"),
     )
-    bnd = spark.createDataFrame([([3.0, 7.0, 29.0, 41.0],)], "b ARRAY<DOUBLE>")
-    got = with_global_ranks(
-        skewed, "val", ("id",), row_number="rn", rank="rk",
-        dense_rank="dr", ntile={"t5": 5}, boundaries=bnd, n_buckets=5,
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, base.collect()))
-
-
-def test_shared_boundary_aggregate_slices(spark, skewed):
-    """The RFM shape: ONE aggregate emits several boundary arrays; each
-    slice feeds its own ranking pass."""
-    bnd = skewed.agg(
-        F.percentile_approx(F.col("val").cast("double"), F.lit([0.25, 0.5, 0.75]), F.lit(1000)).alias("bv"),
-        F.percentile_approx(F.col("id").cast("double"), F.lit([0.25, 0.5, 0.75]), F.lit(1000)).alias("bi"),
-    ).localCheckpoint(eager=False)
-    a = with_global_ranks(
-        skewed, "val", ("id",), row_number="rn",
-        boundaries=bnd.select("bv"), n_buckets=4,
-    )
-    b = with_global_ranks(
-        a, "id", ("name",), row_number="rn2",
-        boundaries=bnd.select("bi"), n_buckets=4,
-    )
-    ref = with_global_ranks(
-        with_global_ranks(skewed, "val", ("id",), row_number="rn"),
-        "id", ("name",), row_number="rn2",
-    )
-    assert sorted(map(tuple, b.collect())) == sorted(map(tuple, ref.collect()))
-
-
-def test_boundaries_guards(spark, skewed):
-    import pyspark.errors
-
-    two_rows = spark.createDataFrame(
-        [([1.0],), ([2.0],)], "b ARRAY<DOUBLE>"
-    )
-    with pytest.raises(Exception, match="exactly ONE row"):
-        with_global_ranks(
-            skewed, "val", ("id",), row_number="rn",
-            boundaries=two_rows, n_buckets=2,
-        ).collect()
-    unsorted = spark.createDataFrame([([9.0, 1.0],)], "b ARRAY<DOUBLE>")
-    with pytest.raises(Exception, match="ASCENDING"):
-        with_global_ranks(
-            skewed, "val", ("id",), row_number="rn",
-            boundaries=unsorted, n_buckets=3,
-        ).collect()
-    too_long = spark.createDataFrame([([1.0, 2.0, 3.0],)], "b ARRAY<DOUBLE>")
-    with pytest.raises(Exception, match="probe depth"):
-        with_global_ranks(
-            skewed, "val", ("id",), row_number="rn",
-            boundaries=too_long, n_buckets=3,
-        ).collect()
-    two_cols = spark.createDataFrame([([1.0], [2.0])], "a ARRAY<DOUBLE>, b ARRAY<DOUBLE>")
-    with pytest.raises(ValueError, match="ONE-column"):
-        with_global_ranks(
-            skewed, "val", ("id",), row_number="rn",
-            boundaries=two_cols, n_buckets=3,
+    want = sorted(map(tuple, ref.collect()))
+    for n_buckets in (4, 128):
+        got = with_global_ranks(
+            df, "val", ("id",), row_number="rn", rank="rk",
+            dense_rank="dr", ntile={"t3": 3}, n_buckets=n_buckets,
         )
-    with pytest.raises(ValueError, match="n_buckets >= 2"):
-        with_global_ranks(
-            skewed, "val", ("id",), row_number="rn",
-            boundaries=spark.createDataFrame([([1.0],)], "b ARRAY<DOUBLE>"),
-            n_buckets=1,
-        )
-    # wrong-dtype column (array<string> of labels): would element-cast
-    # to NULLs and silently degrade to one bucket — must raise EAGERLY
-    # (no .collect() here, the check runs at the call)
-    labels = spark.createDataFrame([(["lo", "hi"],)], "b ARRAY<STRING>")
-    with pytest.raises(ValueError, match="NUMERIC"):
-        with_global_ranks(
-            skewed, "val", ("id",), row_number="rn",
-            boundaries=labels, n_buckets=3,
-        )
-    not_array = spark.createDataFrame([(1.0,)], "b DOUBLE")
-    with pytest.raises(ValueError, match="NUMERIC"):
-        with_global_ranks(
-            skewed, "val", ("id",), row_number="rn",
-            boundaries=not_array, n_buckets=3,
-        )
-    # any NUMERIC element type is fine (element-cast to double is
-    # lossless here): array<int> boundaries must pass the eager check
-    # and leave values identical to the self-computed path
-    ints = spark.createDataFrame([([3, 29],)], "b ARRAY<INT>")
-    got = with_global_ranks(
-        skewed, "val", ("id",), row_number="rn",
-        boundaries=ints, n_buckets=3,
-    )
-    ref = with_global_ranks(skewed, "val", ("id",), row_number="rn")
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, ref.collect())
-    )
-
-
-def test_null_boundary_array_single_bucket(spark, skewed):
-    """A NULL boundary array (what percentile_approx over an all-NULL
-    column yields) degrades to one bucket — same values, no error."""
-    bnd = spark.createDataFrame([(None,)], "b ARRAY<DOUBLE>")
-    got = with_global_ranks(
-        skewed, "val", ("id",), row_number="rn",
-        boundaries=bnd, n_buckets=4,
-    )
-    ref = with_global_ranks(skewed, "val", ("id",), row_number="rn")
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
+        assert sorted(map(tuple, got.collect())) == want, n_buckets
 
 
 def test_bsearch_path_matches_native_windows(spark, skewed):
     """n_buckets above _FOLD_MAX_BUCKETS takes the binary-search bucket
     expression — the path production clusters (parallelism > 64)
-    actually run; every other test sits on the fold path. Values must
-    still be bit-identical to native windows, and the caller-array
-    probe-depth raise must fire on THIS path too."""
+    actually run; most other tests sit on the fold path. Values must
+    still be bit-identical to native windows."""
     got = with_global_ranks(
         skewed, "val", ("id",), row_number="rn", rank="rk",
         dense_rank="dr", ntile={"t5": 5}, n_buckets=128,
@@ -332,11 +236,3 @@ def test_bsearch_path_matches_native_windows(spark, skewed):
         (*r[:3], int(r["rn"]), int(r["rk"]), int(r["dr"]), r["t5"])
         for r in ref.collect()
     )
-    too_long = spark.createDataFrame(
-        [(list(map(float, range(200))),)], "b ARRAY<DOUBLE>"
-    )
-    with pytest.raises(Exception, match="probe depth"):
-        with_global_ranks(
-            skewed, "val", ("id",), row_number="rn",
-            boundaries=too_long, n_buckets=128,
-        ).collect()

@@ -367,6 +367,24 @@ def test_merge_upsert_empty_bootstrap_then_rows(spark, tmp_path, partition_col):
     assert got == [(1, "a")]
 
 
+def test_merge_upsert_null_partition_keeps_untouched_rows(spark, tmp_path):
+    """A merge into the NULL partition must keep that partition's other
+    rows: the dynamic overwrite replaces the whole NULL partition, so
+    its existing rows have to reach the merge."""
+    path = str(tmp_path / "ntarget")
+    schema = "id INT, val STRING, p STRING"
+    base = spark.createDataFrame(
+        [(1, "a", None), (2, "b", None), (3, "c", "x")], schema
+    )
+    merge_upsert(spark, path, base, ["id"], partition_col="p")
+    upd = spark.createDataFrame([(1, "a2", None)], schema)
+    merge_upsert(spark, path, upd, ["id"], partition_col="p")
+    got = {
+        (r["id"], r["val"], r["p"]) for r in spark.read.parquet(path).collect()
+    }
+    assert got == {(1, "a2", None), (2, "b", None), (3, "c", "x")}
+
+
 def test_merge_upsert_partition_guard(spark, tmp_path, monkeypatch):
     """A mis-keyed partition_col (high cardinality) must fail loudly
     instead of collecting millions of values onto the driver."""
