@@ -1,1 +1,1 @@
-"""Scalar/text/similarity function families (dedup, ANN, text analysis, multimodal)."""
+"""Scalar/text/similarity function families (dedup, ANN, text analysis)."""

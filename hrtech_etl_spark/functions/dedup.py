@@ -20,6 +20,8 @@ Shapes
 
 from __future__ import annotations
 
+import weakref
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -155,12 +157,13 @@ def shingle_table(
     the CHEAP exact-equivalent predicate ``size(tokens) >= k`` (it is
     literally the word_ngrams CASE condition; for k=1 every non-NULL
     text keeps its historical [""] set, and NULL text is dropped on
-    both forms) — applied BELOW the exchange, and tags the ``sh``
-    column metadata so downstream signature builds skip their
-    ``size(sh) > 0`` re-filter. Why this exists (r18 profiling):
-    Catalyst pushes that downstream filter through the barrier
-    exchange, substituting the FULL tokenize+shingle construction into
-    the predicate — which then evaluates once per row inside the
+    both forms) — applied BELOW the exchange, and marks the returned
+    frame so downstream signature builds skip their ``size(sh) > 0``
+    re-filter (see :func:`_shingles_nonempty`). Why this exists (r18
+    profiling): Catalyst pushes that downstream filter through the
+    barrier exchange, substituting the FULL tokenize+shingle
+    construction into the predicate — which then evaluates once per
+    row inside the
     single-task scan stage (~0.3s of the minhash gate's 1.1s job time
     at sf0.1; guide §2.4/§7.2 — the round-13 pushed-predicate disease
     at the exchange boundary instead of the projection). The cheap
@@ -213,22 +216,28 @@ def shingle_table(
     if num_partitions(raw) < n:
         raw = raw.repartition(n, F.col(id_col))
     sh = word_shingles(F.col(text_col), k=shingle_k)
-    _md = {"shingles_nonempty": True} if drop_empty else None
     if not hashed:
-        return raw.select(F.col(id_col), sh.alias("sh", metadata=_md))
-    hashed_sh = hashed_shingles(sh)
-    projected = raw.select(F.col(id_col), hashed_sh.alias("sh", metadata=_md))
-    if not materialize:
+        out = raw.select(F.col(id_col), sh.alias("sh"))
+    elif not materialize:
         # The caller will stack MORE per-row projections (e.g. the
         # lsh_index signature fold) on top and place ONE barrier above
         # the whole stack — a barrier here would be a redundant full
         # exchange of the shingle-bearing rows (CollapseProject keeps
         # the non-cheap shingle expression in its own stacked Project,
         # so `sh` is still computed once per row).
-        return projected
-    # factor=2, not 1: same key + same count would let EnsureRequirements
-    # drop this barrier and re-inline the hashing into every consumer.
-    return keyed_barrier(projected, id_col, factor=2)
+        out = raw.select(F.col(id_col), hashed_shingles(sh).alias("sh"))
+    else:
+        # factor=2, not 1: same key + same count would let
+        # EnsureRequirements drop this barrier and re-inline the
+        # hashing into every consumer.
+        out = keyed_barrier(
+            raw.select(F.col(id_col), hashed_shingles(sh).alias("sh")),
+            id_col,
+            factor=2,
+        )
+    if drop_empty:
+        _NONEMPTY_SHINGLES.add(out)
+    return out
 
 
 def hashed_shingles(sh: Column) -> Column:
@@ -360,18 +369,23 @@ def _shingles_pre_hashed(shingles: DataFrame) -> bool:
     return isinstance(dt, T.ArrayType) and isinstance(dt.elementType, T.LongType)
 
 
+#: the exact frames :func:`shingle_table` returned with ``drop_empty=True``
+_NONEMPTY_SHINGLES = weakref.WeakSet()
+
+
 def _shingles_nonempty(shingles: DataFrame) -> bool:
-    """True when the frame is tagged shingle-set-nonempty
-    (:func:`shingle_table` ``drop_empty=True``) — signature builds can
-    then skip their ``size(sh) > 0`` re-filter, which Catalyst would
-    otherwise push through the barrier exchange with the FULL shingle
-    construction substituted into the predicate (evaluated per row in
-    the single-task scan stage; r18 profiling). Any rewrite of the
-    ``sh`` column (e.g. :func:`remove_stop_shingles`, which can
-    re-introduce empties) drops the column metadata and with it this
-    marker, so the filter correctly reappears."""
-    md = shingles.schema["sh"].metadata
-    return bool(md and md.get("shingles_nonempty", False))
+    """True when the frame IS one that :func:`shingle_table` returned
+    with ``drop_empty=True`` — signature builds can then skip their
+    ``size(sh) > 0`` re-filter, which Catalyst would otherwise push
+    through the barrier exchange with the FULL shingle construction
+    substituted into the predicate (evaluated per row in the
+    single-task scan stage; r18 profiling). The marker is the frame
+    object, not column metadata: metadata survives ``union``, which
+    can bring in empty sets whose NULL signatures share a band key.
+    Any derived frame (a union, or a rewrite such as
+    :func:`remove_stop_shingles`, which can re-introduce empties) is
+    unmarked, so the filter correctly reappears."""
+    return shingles in _NONEMPTY_SHINGLES
 
 
 def minhash_lsh_pairs(

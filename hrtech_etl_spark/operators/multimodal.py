@@ -1,25 +1,12 @@
-"""Multimodal columns: typed binary assets + Arrow-batched transforms.
+"""Multimodal columns: typed binary assets + Arrow-batched features.
 
 Media travel as opaque ``binary`` columns wrapped in a typed struct
 (content + mime + metadata) — the pattern Spark's own ``binaryFile``
-source uses, extended with per-asset metadata. Decode is tiered:
-
-- Self-describing formats decode for REAL with pure numpy/stdlib
-  codecs (P6 PPM and 24-bit BMP images, BASELINE JPEG via the
-  from-spec codec in ``operators/jpeg.py``, PCM WAV audio,
-  concatenated-PPM raw video streams): ``real_media_features``,
-  ``real_resize``, ``real_frame_sample``.
-- Self-describing formats decode for REAL ... including PNG via the
-  pure-stdlib codec in ``operators/png.py`` (DEFLATE is stdlib zlib).
-- Remaining COMPRESSED formats (progressive JPEG/WebP/MP3/MP4/...)
-  need Pillow/ffmpeg, which this environment lacks: those paths raise
-  ``NotImplementedError`` behind the same injectable-kernel contract,
-  so a real model/codec swaps in without touching the plumbing.
-- The oracle-checked default kernels remain the deterministic fakes
-  (they accept arbitrary bytes, which the DuckDB oracle replicates).
-
-The Spark-side plumbing (schema, ``mapInPandas`` batch shape, Arrow
-transfer, partition sizing) is identical for all three tiers.
+source uses, extended with per-asset metadata. Features are computed
+by one deterministic kernel, ``fake_image_features``: md5-seeded
+pseudo-features that accept arbitrary bytes, so the DuckDB oracle can
+replicate them exactly. There is no codec layer; a payload is never
+decoded.
 
 Design rules for 100 TB of media:
 
@@ -35,16 +22,12 @@ Design rules for 100 TB of media:
 from __future__ import annotations
 
 import hashlib
-from typing import Callable, Iterable, Iterator
+from typing import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-# ---------------------------------------------------------------------------
-# Schema
-# ---------------------------------------------------------------------------
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -89,239 +72,6 @@ def attach_fake_media(
     )
 
 
-# ---------------------------------------------------------------------------
-# Real codecs — pure numpy/stdlib, for self-describing formats
-# (P6 PPM, 24-bit BMP, baseline JPEG — operators/jpeg.py — PNG —
-# operators/png.py — and PCM WAV). Remaining compressed formats
-# (progressive JPEG/WebP/MP3/MP4/...)
-# genuinely need Pillow/ffmpeg, which this environment lacks: those
-# still raise NotImplementedError, with the injectable-kernel contract
-# unchanged. Everything below is deterministic byte math, so features
-# are reproducible across engines and processes.
-# ---------------------------------------------------------------------------
-
-def _parse_ppm_header(content: bytes, offset: int = 0) -> tuple[int, int, int]:
-    """(width, height, data_offset) of a binary PPM (P6, maxval ≤ 255,
-    no comment lines) starting at ``offset``."""
-    if content[offset : offset + 2] != b"P6":
-        raise ValueError("not a binary PPM (P6) payload")
-    vals: list[int] = []
-    i = offset + 2
-    while len(vals) < 3:
-        while content[i : i + 1].isspace():
-            i += 1
-        j = i
-        while j < len(content) and not content[j : j + 1].isspace():
-            j += 1
-        vals.append(int(content[i:j]))
-        i = j
-    i += 1  # exactly one whitespace byte separates header from raster
-    w, h, maxval = vals
-    if maxval > 255:
-        raise NotImplementedError("16-bit PPM not supported")
-    return w, h, i
-
-
-def decode_ppm(content: bytes):
-    """P6 PPM → uint8 ndarray (h, w, 3)."""
-    import numpy as np
-
-    w, h, start = _parse_ppm_header(content)
-    data = np.frombuffer(content, dtype=np.uint8, count=w * h * 3, offset=start)
-    return data.reshape(h, w, 3)
-
-
-def encode_ppm(img) -> bytes:
-    """uint8 ndarray (h, w, 3) → P6 PPM bytes."""
-    import numpy as np
-
-    arr = np.ascontiguousarray(img, dtype=np.uint8)
-    h, w = arr.shape[0], arr.shape[1]
-    return b"P6\n%d %d\n255\n" % (w, h) + arr.tobytes()
-
-
-def decode_bmp(content: bytes):
-    """Uncompressed 24-bit BMP → uint8 ndarray (h, w, 3) in RGB order
-    (handles 4-byte row padding and bottom-up storage)."""
-    import struct
-
-    import numpy as np
-
-    if content[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    data_offset = struct.unpack_from("<I", content, 10)[0]
-    w, h = struct.unpack_from("<ii", content, 18)
-    bpp = struct.unpack_from("<H", content, 28)[0]
-    compression = struct.unpack_from("<I", content, 30)[0]
-    if bpp != 24 or compression != 0:
-        raise NotImplementedError("only uncompressed 24-bit BMP supported")
-    bottom_up = h > 0
-    h = abs(h)
-    row_size = (w * 3 + 3) & ~3
-    rows = np.frombuffer(
-        content, np.uint8, count=row_size * h, offset=data_offset
-    ).reshape(h, row_size)
-    img = rows[:, : w * 3].reshape(h, w, 3)[..., ::-1]  # BGR → RGB
-    if bottom_up:
-        img = img[::-1]
-    return np.ascontiguousarray(img)
-
-
-def decode_wav(content: bytes):
-    """PCM WAV → (mono float64 samples in [-1, 1], sample_rate); 8- and
-    16-bit PCM via the stdlib ``wave`` parser, channels averaged."""
-    import io
-    import wave
-
-    import numpy as np
-
-    with wave.open(io.BytesIO(content)) as wf:
-        n, sr, ch, sw = (
-            wf.getnframes(),
-            wf.getframerate(),
-            wf.getnchannels(),
-            wf.getsampwidth(),
-        )
-        raw = wf.readframes(n)
-    if sw == 2:
-        arr = np.frombuffer(raw, "<i2").astype(np.float64) / 32768.0
-    elif sw == 1:
-        arr = (np.frombuffer(raw, "u1").astype(np.float64) - 128.0) / 128.0
-    else:
-        raise NotImplementedError("only 8/16-bit PCM WAV supported")
-    if ch > 1:
-        arr = arr.reshape(-1, ch).mean(axis=1)
-    return arr, sr
-
-
-def decode_image(content: bytes):
-    """Decode a self-describing image payload (magic-byte sniffed):
-    P6 PPM, 24-bit BMP, baseline JPEG (pure-numpy codec in
-    operators/jpeg.py — sequential DCT, any sampling up to 2×2,
-    restart intervals), or PNG (pure-stdlib codec in
-    operators/png.py — all filters, palette/tRNS). Progressive JPEG
-    and other compressed formats (WebP/...) still need an injected
-    kernel."""
-    if content[:2] == b"P6":
-        return decode_ppm(content)
-    if content[:2] == b"BM":
-        return decode_bmp(content)
-    if content[:2] == b"\xff\xd8":
-        from hrtech_etl_spark.operators.jpeg import decode_jpeg
-
-        return decode_jpeg(content)
-    if content[:8] == b"\x89PNG\r\n\x1a\n":
-        from hrtech_etl_spark.operators.png import decode_png
-
-        return decode_png(content)
-    raise NotImplementedError(
-        "undecodable image format (WebP/progressive JPEG need a "
-        "real codec); inject a kernel via media_features(..., kernel=...)"
-    )
-
-
-def real_media_features(content: bytes, dim: int = 8) -> list[float]:
-    """REAL feature kernel for uncompressed media, magic-byte sniffed:
-
-    - image (P6 PPM / 24-bit BMP): per-channel means and stds, luma
-      mean, log aspect ratio — 8 dims;
-    - audio (PCM WAV): duration, RMS, peak, mean |x|, zero-crossing
-      rate, spectral-centroid fraction (rfft), normalized sample rate,
-      log duration — 8 dims.
-
-    Deterministic numpy math, rounded to 6 decimals; swap in a learned
-    embedding kernel (CLIP/wav2vec) with the same signature at will.
-    """
-    import numpy as np
-
-    if content[:4] == b"RIFF" and content[8:12] == b"WAVE":
-        x, sr = decode_wav(content)
-        n = len(x)
-        if n == 0:
-            # structurally valid but empty data chunk (truncated
-            # recordings): all-zero features except the rate — rfft and
-            # max() would both raise on an empty array
-            feats = [0.0] * 6 + [sr / 48000.0, 0.0]
-            return ([round(f, 6) for f in feats] + [0.0] * dim)[:dim]
-        dur = n / sr
-        spec = np.abs(np.fft.rfft(x))
-        total = float(spec.sum())
-        centroid = float((spec * np.arange(len(spec))).sum() / total / len(spec)) if total > 0 else 0.0
-        zcr = float((np.diff(np.signbit(x)) != 0).sum()) / n
-        feats = [
-            dur,
-            float(np.sqrt((x**2).mean())),
-            float(np.abs(x).max()),
-            float(np.abs(x).mean()),
-            zcr,
-            centroid,
-            sr / 48000.0,
-            float(np.log1p(dur)),
-        ]
-    else:
-        img = decode_image(content).astype(np.float64) / 255.0
-        h, w = img.shape[0], img.shape[1]
-        luma = img @ np.array([0.2126, 0.7152, 0.0722])
-        feats = [
-            float(img[..., 0].mean()),
-            float(img[..., 1].mean()),
-            float(img[..., 2].mean()),
-            float(img[..., 0].std()),
-            float(img[..., 1].std()),
-            float(img[..., 2].std()),
-            float(luma.mean()),
-            float(np.log(w / h)),
-        ]
-    feats = [round(f, 6) for f in feats]
-    return (feats + [0.0] * dim)[:dim]
-
-
-def real_resize(content: bytes, width: int, height: int) -> bytes:
-    """REAL nearest-neighbor resize for uncompressed images; output is
-    always P6 PPM (the canonical uncompressed interchange here)."""
-    import numpy as np
-
-    img = decode_image(content)
-    yi = (np.arange(height) * img.shape[0]) // height
-    xi = (np.arange(width) * img.shape[1]) // width
-    return encode_ppm(img[yi][:, xi])
-
-
-def split_ppm_stream(content: bytes) -> list[bytes]:
-    """Split a concatenated-P6 raw video stream into frame payloads —
-    the uncompressed analog of demuxing (container formats need
-    ffmpeg; inject a kernel for those). A stream cut off mid-raster
-    fails HERE with a clear error instead of silently emitting a short
-    final frame that only blows up later inside a decode (or worse,
-    propagates as a corrupt frame if never decoded)."""
-    frames = []
-    i = 0
-    while i < len(content):
-        w, h, start = _parse_ppm_header(content, i)
-        end = start + w * h * 3
-        if end > len(content):
-            raise ValueError(
-                f"truncated PPM stream: frame {len(frames)} declares "
-                f"{w}x{h} ({w * h * 3} raster bytes) but only "
-                f"{len(content) - start} remain"
-            )
-        frames.append(content[i:end])
-        i = end
-    return frames
-
-
-def real_frame_sample(content: bytes, every_n: int) -> list[bytes]:
-    """REAL frame sampling over a concatenated-PPM stream: every n-th
-    frame, each a standalone decodable P6 payload."""
-    return split_ppm_stream(content)[::every_n]
-
-
-# ---------------------------------------------------------------------------
-# Kernels (deterministic fakes — the oracle-checked default: they need
-# no decodable payload, so they run on arbitrary bytes)
-# ---------------------------------------------------------------------------
-
-
 def fake_image_features(content: bytes, dim: int = 8) -> list[float]:
     """Deterministic stand-in for an image-embedding kernel: md5-seeded
     pseudo-features in [0, 1). Stable across engines and processes, so
@@ -333,39 +83,19 @@ def fake_image_features(content: bytes, dim: int = 8) -> list[float]:
     return out
 
 
-def fake_resize(content: bytes, width: int, height: int) -> bytes:
-    """Deterministic stand-in for a resize kernel: tags the payload so
-    lineage is observable without a codec."""
-    return b"resized:%dx%d:" % (width, height) + content[:64]
-
-
-def fake_frame_sample(content: bytes, every_n: int) -> list[bytes]:
-    """Deterministic stand-in for video frame sampling: byte-stride
-    slices standing in for decoded frames."""
-    return [content[i : i + 16] for i in range(0, len(content), 16 * every_n)][:8]
-
-
-# ---------------------------------------------------------------------------
-# Arrow-batched operators
-# ---------------------------------------------------------------------------
-
 def media_features(
     df: DataFrame,
     *,
     media_col: str = "media",
     id_col: str = "doc_id",
     dim: int = 8,
-    kernel: Callable[[bytes], list[float]] | None = None,
 ) -> DataFrame:
     """Feature extraction: (id, media) → (id, mime, n_bytes, features).
 
     ``mapInPandas`` contract: each batch arrives as a pandas DataFrame
     whose binary column holds Python ``bytes``; the kernel runs once
     per asset inside the Arrow batch (no per-row Python round trip).
-    Swap ``kernel`` for a real model (e.g. CLIP) without touching the
-    plumbing — output schema stays (id, mime, n_bytes, array<double>).
     """
-    kern = kernel or (lambda b: fake_image_features(b, dim))
     out_schema = T.StructType(
         [
             T.StructField(id_col, df.schema[id_col].dataType),
@@ -383,221 +113,11 @@ def media_features(
                     id_col: pdf[id_col],
                     "mime": [m["mime"] for m in media],
                     "n_bytes": [len(m["content"]) for m in media],
-                    "features": [kern(bytes(m["content"])) for m in media],
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(run, schema=out_schema)
-
-
-def media_resize(
-    df: DataFrame,
-    *,
-    width: int,
-    height: int,
-    media_col: str = "media",
-    kernel: Callable[[bytes, int, int], bytes] | None = None,
-) -> DataFrame:
-    """Resize: rewrites ``media.content`` in place (struct rebuilt so
-    meta.n_bytes/checksum stay consistent with the new payload)."""
-    kern = kernel or fake_resize
-
-    @F.pandas_udf(T.BinaryType())
-    def resize_udf(content: pd.Series) -> pd.Series:
-        return content.map(lambda b: kern(bytes(b), width, height))
-
-    new_content = resize_udf(F.col(f"{media_col}.content"))
-    return df.withColumn(
-        media_col,
-        media_column(
-            new_content,
-            F.col(f"{media_col}.mime"),
-            F.col(f"{media_col}.meta.source_id"),
-        ),
-    )
-
-
-def media_frame_sample(
-    df: DataFrame,
-    *,
-    every_n: int = 4,
-    media_col: str = "media",
-    id_col: str = "doc_id",
-    kernel: Callable[[bytes, int], list[bytes]] | None = None,
-) -> DataFrame:
-    """Frame sampling: one output row per sampled frame (id, frame_idx,
-    frame) — the explode-shaped transform video pipelines need. Frames
-    are emitted from inside the Arrow batch, so a long video never
-    materializes all its frames in one Python list per partition."""
-    kern = kernel or fake_frame_sample
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("frame", T.BinaryType()),
-        ]
-    )
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for rid, m in zip(pdf[id_col], pdf[media_col]):
-                for i, fr in enumerate(kern(bytes(m["content"]), every_n)):
-                    ids.append(rid)
-                    idxs.append(i)
-                    frames.append(fr)
-            yield pd.DataFrame({id_col: ids, "frame_idx": idxs, "frame": frames})
-
-    return df.select(id_col, media_col).mapInPandas(run, schema=out_schema)
-
-
-# ---------------------------------------------------------------------------
-# Perceptual hashing (image near-dup)
-# ---------------------------------------------------------------------------
-
-def ahash64(content: bytes) -> int:
-    """64-bit average hash (aHash) of a decodable image: Rec.709 luma
-    → 8×8 BLOCK MEANS (true block averaging over floor-partitioned
-    extents, not nearest-neighbor sampling — robust to small jitter)
-    → threshold at the grid mean → row-major bit string, returned as a
-    SIGNED 64-bit int (two's complement) so it lands in a Spark
-    LongType without overflow. Deterministic numpy double math."""
-    import numpy as np
-
-    img = decode_image(content).astype(np.float64)
-    luma = img @ np.array([0.2126, 0.7152, 0.0722])
-    h, w = luma.shape
-    yb = (np.arange(9) * h) // 8
-    xb = (np.arange(9) * w) // 8
-    g = np.empty((8, 8))
-    for i in range(8):
-        for j in range(8):
-            g[i, j] = luma[yb[i] : yb[i + 1], xb[j] : xb[j + 1]].mean()
-    bits = (g > g.mean()).flatten()
-    v = 0
-    for b in bits:
-        v = (v << 1) | int(b)
-    return v - (1 << 64) if v >= (1 << 63) else v
-
-
-def media_phash(
-    df: DataFrame,
-    *,
-    media_col: str = "media",
-    id_col: str = "doc_id",
-    kernel: Callable[[bytes], int] | None = None,
-) -> DataFrame:
-    """(id, media) → (id, phash): Arrow-batched perceptual hashing.
-    Same injectable-kernel contract as media_features — swap in a
-    learned hash with the identical ``bytes → int64`` signature."""
-    kern = kernel or ahash64
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType),
-            T.StructField("phash", T.LongType()),
-        ]
-    )
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "phash": [
-                        kern(bytes(m["content"])) for m in pdf[media_col]
+                    "features": [
+                        fake_image_features(bytes(m["content"]), dim)
+                        for m in media
                     ],
                 }
             )
 
     return df.select(id_col, media_col).mapInPandas(run, schema=out_schema)
-
-
-def phash_near_dup_pairs(
-    hashes: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    hash_col: str = "phash",
-    max_hamming: int = 10,
-) -> DataFrame:
-    """Near-duplicate image pairs by Hamming distance over 64-bit
-    perceptual hashes — the BANDED form, never all-pairs: the hash
-    splits into ``max_hamming + 1`` contiguous bit segments; by
-    pigeonhole a pair within the threshold has at least one segment
-    with ZERO differing bits — a shared band — so the band-bucket
-    self-join has EXACT recall (the guarantee needs strictly more
-    bands than flipped bits: four 16-bit bands would silently lose
-    hamming-4..10 pairs whose flips spread across all four). Only
-    collided candidates pay the popcount verify. Everything after the
-    Python hashing kernel is JVM expressions (shift/mask/xor/
-    bit_count).
-
-    Scale shape: explode ×(h+1) on the (id, hash) table — 2 longs per
-    row, tiny — one exchange on (band_idx, band_val), verify on the
-    collided pairs only, distinct'd. Identical to the MinHash-LSH
-    band design in functions/dedup.py, specialized to fixed-width
-    integer sketches with a deterministic (not probabilistic) recall
-    floor."""
-    n_bands = max_hamming + 1
-    widths = [64 // n_bands + (1 if k < 64 % n_bands else 0) for k in range(n_bands)]
-    offsets = [sum(widths[:k]) for k in range(n_bands)]
-    b = hashes.select(
-        F.col(id_col).alias("id"),
-        F.col(hash_col).alias("h"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("band_idx"),
-                        F.shiftrightunsigned(F.col(hash_col), offsets[k])
-                        .bitwiseAND(F.lit((1 << widths[k]) - 1))
-                        .alias("band_val"),
-                    )
-                    for k in range(n_bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("id", "h", "band.band_idx", "band.band_val")
-    a, c = b.alias("a"), b.alias("b")
-    cand = (
-        a.join(
-            c,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.h").alias("h_a"),
-            F.col("b.h").alias("h_b"),
-        )
-        .distinct()
-    )
-    ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    return (
-        cand.where(ham <= max_hamming)
-        .select("id_a", "id_b", ham.cast("int").alias("hamming"))
-    )
-
-
-def afp64(content: bytes) -> int:
-    """64-bit audio spectral fingerprint (the aHash of audio): PCM WAV
-    → rFFT magnitude spectrum → 64 equal-width band energies →
-    threshold at the mean band energy → signed 64-bit int. Mean
-    thresholding (not neighbor deltas) keeps harmonic content stable:
-    a tonal signal sets only the bands holding its partials, so a
-    faint added overtone flips ~1 bit while different pitches or a
-    chirp move many. Same ``bytes → int64`` kernel contract as
-    :func:`ahash64` — :func:`phash_near_dup_pairs` consumes either."""
-    import numpy as np
-
-    x, _sr = decode_wav(content)
-    spec = np.abs(np.fft.rfft(np.asarray(x, dtype=np.float64)))
-    n = len(spec)
-    bounds = (np.arange(65) * n) // 64
-    e = np.array([spec[bounds[i] : bounds[i + 1]].sum() for i in range(64)])
-    bits = e > e.mean()
-    v = 0
-    for b in bits:
-        v = (v << 1) | int(b)
-    return v - (1 << 64) if v >= (1 << 63) else v

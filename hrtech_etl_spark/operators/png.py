@@ -1,11 +1,11 @@
 """Pure-stdlib+numpy PNG codec (RFC 2083 / ISO 15948).
 
-Closes the LOSSLESS compressed-image tier of
-``operators/multimodal.py`` (the sibling of the baseline JPEG codec in
-:mod:`hrtech_etl_spark.operators.jpeg`): this environment has no
+A standalone lossless image codec: this environment has no
 Pillow/libpng, but PNG needs only DEFLATE — which is ``zlib`` in the
 standard library — so the container, filters, and CRCs are implemented
-from the public spec directly.
+from the public spec directly. No operator or registry entry calls it;
+the media column in ``operators/multimodal.py`` never decodes its
+payload.
 
 Decoder (``decode_png``): 8-bit greyscale (color type 0), truecolor
 (2), indexed/PLTE (3), grey+alpha (4) and RGBA (6); all five scanline
@@ -18,16 +18,11 @@ Encoder (``encode_png``): 8-bit grey / RGB / RGBA, per-row filter
 choice ``none``/``sub``/``up``/``paeth`` or ``adaptive`` (the spec's
 minimum-sum-of-absolute-differences heuristic — deterministic).
 
-PNG is lossless: ``decode_png(encode_png(img)) == img`` exactly, which
-is what the registry gate asserts. Golden values in the gate avoid
-zlib-version-dependent fields (byte counts) — only dimensions and
-decoded-pixel hashes are pinned, and those are pure functions of the
-input. Performance shape: filtering and unfiltering are vectorized
+PNG is lossless: ``decode_png(encode_png(img)) == img`` exactly. The
+encoder's byte counts depend on the zlib version; decoded pixels are a
+pure function of the input. Filtering and unfiltering are vectorized
 per row (Sub via per-channel cumsum mod 256; only Average/Paeth walk
-pixels, and rows are short in fixture use); like JPEG, media decode
-runs inside Arrow-batched ``mapInPandas`` kernels where per-asset
-cost amortizes per batch, and production swaps in a native codec
-through the same injectable-kernel contract.
+pixels).
 """
 
 from __future__ import annotations

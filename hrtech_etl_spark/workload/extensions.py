@@ -2765,96 +2765,6 @@ def stream_scd2_sink(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Baseline JPEG codec conformance (golden-value gate, executor-side decode)
-# ---------------------------------------------------------------------------
-
-@query(
-    "multimodal_jpeg_roundtrip",
-    sql="""
-    SELECT d.doc_id, g.n_bytes, g.max_abs_err, g.decoded_md5
-    FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 8) d
-    JOIN (VALUES
-      (0, 672, 5, '9fac0c83254b7e19cd2780de4d6b24a5'),
-      (1, 696, 4, '9bdea54707c00f0b66d65456f747e1bf'),
-      (2, 700, 4, '96295ad57f3b16886e861b27f622b0be'),
-      (3, 705, 4, '1d5e66353f3f61083a753d4fefb4e2a3'),
-      (4, 705, 4, '9bb2d59c55b5cb2bc85f8731f490ac3f'),
-      (5, 690, 4, 'd28331b0ca604da51c08034bca14431f'),
-      (6, 728, 5, 'c60ef88585c77adf7d4b82a7677e52f5'),
-      (7, 695, 4, '38b49ad8a6920f9da03ef2a4c358bea5')
-    ) AS g(doc_id, n_bytes, max_abs_err, decoded_md5)
-    ON d.doc_id = g.doc_id
-    """,
-)
-def multimodal_jpeg_roundtrip(spark, sf_dir):
-    """Conformance gate for the pure-numpy baseline JPEG codec
-    (operators/jpeg.py — the compressed tier of the multimodal decode
-    path, previously env-gated behind kernel injection): for the 8
-    lowest doc_ids, a deterministic slope-bounded RGB image derived
-    from the id is ENCODED (quality 85, 4:2:0 subsampling, restart
-    interval 4 — exercising chroma averaging, MCU padding, and RST
-    resync) and DECODED back inside an Arrow mapInPandas kernel on the
-    executors — the same plumbing real media batches use. Declared
-    output per doc: encoded byte count, max |decoded − source| (bounded
-    by quantization + subsampling loss), and the md5 of the decoded
-    pixel buffer. The oracle is the GOLDEN fixed point (a VALUES
-    relation) — legitimate here because every value is a pure
-    function of doc_id, independent of scale factor and engine; any
-    drift in DCT math, Huffman tables, quantization, upsampling, or
-    byte stuffing flips the hash. Codec behavior itself (odd sizes,
-    grayscale, progressive rejection, truncation errors, Spark batch
-    path) is unit-tested in tests/test_jpeg.py. Green at
-    sf0.001/0.01/0.1."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    out_schema = (
-        "doc_id long, n_bytes long, max_abs_err int, decoded_md5 string"
-    )
-
-    def run(batches):
-        from hrtech_etl_spark.operators.jpeg import decode_jpeg, encode_jpeg
-
-        for pdf in batches:
-            recs = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                h = 16 + d % 5
-                w = 24 + 2 * (d % 7)
-                yy, xx = np.mgrid[0:h, 0:w]
-                img = np.stack(
-                    [
-                        np.clip(40 + 2 * xx + 3 * d, 0, 255),
-                        np.clip(40 + 2 * yy + 5 * d, 0, 255),
-                        np.clip(30 + xx + yy + 7 * d, 0, 255),
-                    ],
-                    axis=2,
-                ).astype(np.uint8)
-                data = encode_jpeg(
-                    img, quality=85, subsample="4:2:0", restart_interval=4
-                )
-                dec = decode_jpeg(data)
-                err = int(np.abs(dec.astype(int) - img.astype(int)).max())
-                recs.append(
-                    (d, len(data), err, hashlib.md5(dec.tobytes()).hexdigest())
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=["doc_id", "n_bytes", "max_abs_err", "decoded_md5"],
-            )
-
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(8)
-    )
-    return docs.mapInPandas(run, schema=out_schema)
-
-
-# ---------------------------------------------------------------------------
 # Cross-document paragraph dedup (CCNet keep-first), planted-structure gate
 # ---------------------------------------------------------------------------
 
@@ -3770,291 +3680,6 @@ def etl_schema_evolution(spark, sf_dir):
         dsum("o_totalprice").alias("total_price"),
         F.count("o_orderpriority").alias("priority_present"),
     )
-
-
-# ---------------------------------------------------------------------------
-# PNG lossless codec conformance (operators/png.py)
-# ---------------------------------------------------------------------------
-
-@query(
-    "multimodal_png_roundtrip",
-    sql="""
-    SELECT d.doc_id, g.width, g.height, g.lossless, g.decoded_md5
-    FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 8) d
-    JOIN (VALUES
-      (0, 11, 9, true, 'e11475de188fbe61d45254765c1be842'),
-      (1, 14, 10, true, '48170d19f88e51290d0d35c1d2bb4127'),
-      (2, 17, 11, true, '58e51b9ffeeb2be4dc1e85e9d24573ab'),
-      (3, 20, 12, true, '7eae37ccc665a13217c7a67004c74ffb'),
-      (4, 23, 9, true, '1c59debbcda9c545f0cb12e0d514ba7d'),
-      (5, 11, 10, true, '31d2cd48cd1b9be3aaaa1f04c194cc3d'),
-      (6, 14, 11, true, '5927abe7f86ea51c623f0fe8b61a6ed5'),
-      (7, 17, 12, true, 'ae33eb7ba156f1f5ad86950b20e93299')
-    ) AS g(doc_id, width, height, lossless, decoded_md5)
-    ON d.doc_id = g.doc_id
-    """,
-)
-def multimodal_png_roundtrip(spark, sf_dir):
-    """Conformance gate for the pure-stdlib PNG codec
-    (operators/png.py — the LOSSLESS compressed-image tier, sibling of
-    the JPEG gate): for the 8 lowest doc_ids, a deterministic RGB
-    gradient derived from the id is ENCODED (adaptive per-row filter
-    choice over None/Sub/Up/Paeth) and DECODED back inside an Arrow
-    mapInPandas kernel on the executors. PNG is lossless, so the gate
-    asserts decode(encode(img)) == img EXACTLY (`lossless`) and pins
-    the md5 of the decoded pixels — which equals the md5 of the
-    source, a pure function of doc_id. Unlike the JPEG gate, NO
-    compressed byte count is pinned: DEFLATE output is
-    zlib-version-dependent, while every pinned value here is
-    container-independent. Filters, palette/tRNS expansion, chunk
-    CRCs, hand-built foreign streams, and error paths are unit-tested
-    in tests/test_png.py. Green at sf0.001/0.01/0.1."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    out_schema = (
-        "doc_id long, width int, height int, lossless boolean, "
-        "decoded_md5 string"
-    )
-
-    def run(batches):
-        from hrtech_etl_spark.operators.png import decode_png, encode_png
-
-        for pdf in batches:
-            recs = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                h = 9 + d % 4
-                w = 11 + 3 * (d % 5)
-                yy, xx = np.mgrid[0:h, 0:w]
-                img = np.stack(
-                    [
-                        np.clip(20 + 3 * xx + 5 * d, 0, 255),
-                        np.clip(60 + 2 * yy + 3 * d, 0, 255),
-                        np.clip(10 + xx * yy // 4 + 2 * d, 0, 255),
-                    ],
-                    axis=2,
-                ).astype(np.uint8)
-                dec = decode_png(encode_png(img))
-                recs.append(
-                    (
-                        d,
-                        w,
-                        h,
-                        bool(np.array_equal(dec, img)),
-                        hashlib.md5(dec.tobytes()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "lossless",
-                    "decoded_md5",
-                ],
-            )
-
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .orderBy("doc_id")
-        .limit(8)
-        .select("doc_id")
-    )
-    return docs.mapInPandas(run, schema=out_schema)
-
-
-# ---------------------------------------------------------------------------
-# PCM WAV audio features conformance (the audio tier of multimodal)
-# ---------------------------------------------------------------------------
-
-@query(
-    "multimodal_wav_features",
-    sql="""
-    SELECT d.doc_id, g.n_samples, g.rms, g.peak, g.zcr, g.pcm_md5
-    FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 8) d
-    JOIN (VALUES
-      (0, 800, 0.459605, 0.737, 0.05375, 'f098c532123349cf3f0e684120f9bdb1'),
-      (1, 840, 0.460292, 0.794189, 0.061905, '7bf953e6c156498f09bdcf06bfc32ce3'),
-      (2, 880, 0.458956, 0.834656, 0.069318, 'da821a7f0dad1d8ce90140dc304f9982'),
-      (3, 920, 0.457871, 0.849731, 0.077174, 'b64e77444727b35d3c81327be2e975aa'),
-      (4, 960, 0.459816, 0.841309, 0.084375, '8520e6836c76ccbca6344fd7759c9df7'),
-      (5, 1000, 0.458846, 0.809784, 0.054, '42c97bebf2321d1351b7e20d74f9c788'),
-      (6, 1040, 0.459457, 0.754272, 0.061538, '5b0b221bfc8c13bb50c6912047fa07b5'),
-      (7, 800, 0.459606, 0.782043, 0.07, 'bf49a4832ef866a0a549b251a6207178')
-    ) AS g(doc_id, n_samples, rms, peak, zcr, pcm_md5)
-    ON d.doc_id = g.doc_id
-    """,
-)
-def multimodal_wav_features(spark, sf_dir):
-    """Conformance gate for the AUDIO tier (PCM WAV through the
-    stdlib `wave` decoder + the real feature kernel in
-    operators/multimodal.py): for the 8 lowest doc_ids, a
-    deterministic two-harmonic 16-bit PCM tone derived from the id is
-    written as a WAV container, decoded, and featured inside the
-    Arrow mapInPandas kernel. Pinned golden values are chosen for
-    environment robustness: the decoded-PCM md5 (pure integer math —
-    proves container parse + sample scaling exactly) plus rms / peak
-    / zero-crossing rate rounded to 6 (elementary IEEE arithmetic
-    with numpy's stable pairwise summation); the rfft-based spectral
-    centroid is deliberately NOT pinned (FFT last-ulp drift across
-    numpy builds). Green at sf0.001/0.01/0.1."""
-    import hashlib
-    import io
-    import wave as wavmod
-
-    import numpy as np
-    import pandas as pd
-
-    out_schema = (
-        "doc_id long, n_samples int, rms double, peak double, "
-        "zcr double, pcm_md5 string"
-    )
-
-    def run(batches):
-        from hrtech_etl_spark.operators.multimodal import (
-            decode_wav,
-            real_media_features,
-        )
-
-        for pdf in batches:
-            recs = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                sr = 8000
-                n = 800 + 40 * (d % 7)
-                t = np.arange(n) / sr
-                f0 = 220.0 + 30 * (d % 5)
-                x = 0.6 * np.sin(2 * np.pi * f0 * t) + 0.25 * np.sin(
-                    2 * np.pi * 2 * f0 * t + 0.5 * d
-                )
-                pcm = np.clip(np.round(x * 32767), -32768, 32767).astype(
-                    "<i2"
-                )
-                buf = io.BytesIO()
-                with wavmod.open(buf, "wb") as wf:
-                    wf.setnchannels(1)
-                    wf.setsampwidth(2)
-                    wf.setframerate(sr)
-                    wf.writeframes(pcm.tobytes())
-                data = buf.getvalue()
-                xs, _sr = decode_wav(data)
-                feats = real_media_features(data)
-                md5 = hashlib.md5(
-                    np.round(xs * 32768.0).astype("<i2").tobytes()
-                ).hexdigest()
-                recs.append((d, n, feats[1], feats[2], feats[4], md5))
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "doc_id",
-                    "n_samples",
-                    "rms",
-                    "peak",
-                    "zcr",
-                    "pcm_md5",
-                ],
-            )
-
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .orderBy("doc_id")
-        .limit(8)
-        .select("doc_id")
-    )
-    return docs.mapInPandas(run, schema=out_schema)
-
-
-# ---------------------------------------------------------------------------
-# Raw-video frame sampling conformance (the video tier of multimodal)
-# ---------------------------------------------------------------------------
-
-@query(
-    "multimodal_video_frames",
-    sql="""
-    SELECT d.doc_id, g.n_frames, g.n_sampled, g.frames_md5
-    FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 8) d
-    JOIN (VALUES
-      (0, 6, 2, '7a7dce8298c8b92b154ad73006bb1ca5'),
-      (1, 7, 3, '426e167a735c223cef88cea35bd56de3'),
-      (2, 8, 3, '12da26791eb27e1f4fbcd939488bccce'),
-      (3, 9, 3, '9be293907a946366e07b3ed586ed5c83'),
-      (4, 10, 4, 'cad610b1bfc649dee010f1b250ac512c'),
-      (5, 6, 2, 'a6e02b5fadd3cd437b01b98fe86afd78'),
-      (6, 7, 3, 'bd443d9c570b99b2490e022008c34630'),
-      (7, 8, 3, '3dcec455be0781117b811ff88027f4d4')
-    ) AS g(doc_id, n_frames, n_sampled, frames_md5)
-    ON d.doc_id = g.doc_id
-    """,
-)
-def multimodal_video_frames(spark, sf_dir):
-    """Conformance gate for the VIDEO tier (concatenated-PPM raw
-    streams through operators/multimodal.py::real_frame_sample): per
-    doc_id, a deterministic multi-frame stream (6-10 frames of
-    id-derived gradients) is assembled, every 3rd frame is sampled,
-    each sampled frame is DECODED back, and the md5-of-frame-md5s is
-    pinned — pure integer math, environment-independent. This closes
-    the gated coverage of all four media tiers (uncompressed image,
-    lossy JPEG, lossless PNG, PCM audio, raw video — each with its
-    own registry gate running the identical Arrow mapInPandas
-    plumbing real media batches use). Green at sf0.001/0.01/0.1."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    out_schema = (
-        "doc_id long, n_frames int, n_sampled int, frames_md5 string"
-    )
-
-    def run(batches):
-        from hrtech_etl_spark.operators.multimodal import (
-            decode_ppm,
-            encode_ppm,
-            real_frame_sample,
-        )
-
-        for pdf in batches:
-            recs = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                n_frames = 6 + d % 5
-                h, w = 6 + d % 3, 8 + d % 4
-                frames = []
-                for f in range(n_frames):
-                    yy, xx = np.mgrid[0:h, 0:w]
-                    img = np.stack(
-                        [
-                            (10 * f + xx + 2 * d) % 256,
-                            (20 + 5 * f + yy) % 256,
-                            (xx * yy + f + d) % 256,
-                        ],
-                        axis=2,
-                    ).astype(np.uint8)
-                    frames.append(encode_ppm(img))
-                sampled = real_frame_sample(b"".join(frames), 3)
-                md5 = hashlib.md5(
-                    b"".join(
-                        hashlib.md5(decode_ppm(fr).tobytes()).digest()
-                        for fr in sampled
-                    )
-                ).hexdigest()
-                recs.append((d, n_frames, len(sampled), md5))
-            yield pd.DataFrame(
-                recs,
-                columns=["doc_id", "n_frames", "n_sampled", "frames_md5"],
-            )
-
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .orderBy("doc_id")
-        .limit(8)
-        .select("doc_id")
-    )
-    return docs.mapInPandas(run, schema=out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -5237,106 +4862,6 @@ def ts_ewma(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Image near-dup via perceptual hash (aHash + banded hamming join)
-# ---------------------------------------------------------------------------
-
-@query(
-    "multimodal_phash_dedup",
-    sql="""
-    WITH ids AS (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 12)
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b, g.hamming
-    FROM (VALUES (0, 4, 1), (1, 5, 3), (2, 6, 0), (3, 7, 1))
-         AS g(ia, ib, hamming)
-    JOIN ids a ON a.doc_id = g.ia
-    JOIN ids b ON b.doc_id = g.ib
-    ORDER BY id_a
-    """,
-)
-def multimodal_phash_dedup(spark, sf_dir):
-    """Image near-duplicate detection end to end: 12 deterministic
-    P6 PPM fixtures (4 base gradient patterns × 3 variants — exact
-    base, a locally-darkened near-dup, and an inverted far image) are
-    ENCODED to real binary media on the executors, perceptually
-    hashed (operators/multimodal.py::ahash64 — Rec.709 luma → 8×8
-    block means → mean threshold → 64-bit hash) inside an Arrow
-    mapInPandas kernel, and paired by the BANDED hamming join
-    (phash_near_dup_pairs: max_hamming+1 = 11 bit segments, so by
-    pigeonhole recall at the ≤10 threshold is EXACT, popcount verify
-    on collided pairs only — never all-pairs). The gate is
-    discriminative in both directions: the
-    four near-dup pairs land at hamming 0–3 and pass, while ten other
-    band-colliding candidates at hamming 12–16 must be REJECTED by
-    the verify (an all-candidates bug fails the oracle). Pinned pairs
-    are a pure function of doc_id. Green at sf0.001/0.01/0.1."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from hrtech_etl_spark.operators.multimodal import (
-        encode_ppm,
-        media_column,
-        media_phash,
-        phash_near_dup_pairs,
-    )
-
-    def gen_img(d: int) -> "np.ndarray":
-        base = d % 4
-        var = d // 4
-        h, w = 40 + 4 * base, 48 + 4 * base
-        yy, xx = np.mgrid[0:h, 0:w]
-        r = (30 + 5 * base + xx * 4) % 256
-        g = (70 + 9 * base + yy * 5) % 256
-        b = (base * 40 + (xx + yy) * 3) % 256
-        img = np.stack([r, g, b], axis=2).astype(np.float64)
-        if var == 1:
-            img[: h // 5, : w // 5] = img[: h // 5, : w // 5] * 0.55
-        elif var == 2:
-            img = np.clip(255 - img + 10 * np.sin(xx[..., None] / 3.0), 0, 255)
-        return img.astype(np.uint8)
-
-    def attach(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "content": [
-                        encode_ppm(gen_img(int(d))) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    d = (
-        load_table(spark, "documents", sf_dir)
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(12)
-    )
-    with_content = d.mapInPandas(
-        attach,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("content", T.BinaryType()),
-            ]
-        ),
-    )
-    media = with_content.select(
-        "doc_id",
-        media_column(
-            F.col("content"), F.lit("image/x-portable-pixmap"), F.col("doc_id")
-        ).alias("media"),
-    )
-    hashes = media_phash(media)
-    return (
-        phash_near_dup_pairs(hashes, max_hamming=10)
-        .select(
-            F.col("id_a"), F.col("id_b"), F.col("hamming")
-        )
-        .orderBy("id_a")
-    )
-
-
-# ---------------------------------------------------------------------------
 # RFM segmentation (quantile scoring over entity aggregates)
 # ---------------------------------------------------------------------------
 
@@ -6412,111 +5937,6 @@ def stream_ewma_sink(spark, sf_dir):
         spark.read.parquet(state_path)
         .select("user_id", "n_events", F.round("ewma", 6).alias("ewma"))
         .orderBy("user_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Audio near-dup via spectral fingerprint (banded hamming join)
-# ---------------------------------------------------------------------------
-
-@query(
-    "multimodal_audio_phash_dedup",
-    sql="""
-    WITH ids AS (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 12)
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b, g.hamming
-    FROM (VALUES (0, 4, 1), (1, 5, 1), (2, 6, 1), (3, 7, 1))
-         AS g(ia, ib, hamming)
-    JOIN ids a ON a.doc_id = g.ia
-    JOIN ids b ON b.doc_id = g.ib
-    ORDER BY id_a
-    """,
-)
-def multimodal_audio_phash_dedup(spark, sf_dir):
-    """Audio near-duplicate detection end to end — the acoustic
-    sibling of multimodal_phash_dedup: 12 deterministic PCM WAV
-    fixtures (4 two-tone chords × 3 variants — exact base, a faint
-    +overtone near-dup, and a base-keyed chirp) are synthesized and
-    RIFF-encoded on the executors, fingerprinted
-    (operators/multimodal.py::afp64 — rFFT → 64 band energies → mean
-    threshold) in an Arrow mapInPandas kernel, and paired by the SAME
-    banded hamming join as the image path (max_hamming 2 → 3 segments,
-    pigeonhole-exact recall). Discriminative both ways: the four
-    overtone pairs land at hamming 1 and pass; the nearest impostors
-    (adjacent chords, hamming 3-6; chirps, 9-10) band-collide as
-    candidates and must be REJECTED by the popcount verify. Green at
-    sf0.001/0.01/0.1."""
-    import io
-    import wave
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from hrtech_etl_spark.operators.multimodal import (
-        afp64,
-        media_column,
-        media_phash,
-        phash_near_dup_pairs,
-    )
-
-    def gen_wav(d: int) -> bytes:
-        sr = 8000
-        t = np.arange(int(sr * 0.5)) / sr
-        base, var = d % 4, d // 4
-        f1, f2 = 220.0 * (base + 1), 330.0 * (base + 1)
-        x = 0.6 * np.sin(2 * np.pi * f1 * t) + 0.3 * np.sin(
-            2 * np.pi * f2 * t
-        )
-        x = x + 0.1 * np.sin(2 * np.pi * (800.0 + 55.0 * base) * t)
-        if var == 1:
-            x = x + 0.12 * np.sin(2 * np.pi * 1900.0 * t)
-        elif var == 2:
-            x = 0.7 * np.sin(
-                2 * np.pi * (300.0 * (base + 1) + 1800.0 * t) * t
-            )
-        pcm = np.clip(x * 32767, -32768, 32767).astype("<i2")
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(2)
-            w.setframerate(sr)
-            w.writeframes(pcm.tobytes())
-        return buf.getvalue()
-
-    def attach(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "content": [gen_wav(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    d = (
-        load_table(spark, "documents", sf_dir)
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(12)
-    )
-    with_content = d.mapInPandas(
-        attach,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("content", T.BinaryType()),
-            ]
-        ),
-    )
-    media = with_content.select(
-        "doc_id",
-        media_column(
-            F.col("content"), F.lit("audio/wav"), F.col("doc_id")
-        ).alias("media"),
-    )
-    hashes = media_phash(media, kernel=afp64)
-    return (
-        phash_near_dup_pairs(hashes, max_hamming=2)
-        .orderBy("id_a")
     )
 
 

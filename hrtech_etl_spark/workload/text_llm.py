@@ -667,7 +667,7 @@ def sim_ivf_topk(spark, sf_dir):
 def multimodal_binary_meta(spark, sf_dir):
     """Opaque binary content column + typed metadata (the multimodal
     pattern: content bytes travel as BINARY, metadata as typed columns;
-    decode/feature-extract runs in Arrow-batched UDFs — see
+    feature extraction runs in Arrow-batched UDFs — see
     operators/multimodal.py). Here: byte-length accounting per lang."""
     d = load_table(spark, "documents", sf_dir)
     blob = F.col("text").cast("binary")

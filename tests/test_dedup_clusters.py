@@ -376,3 +376,32 @@ def test_drop_empty_shingle_prefilter_exact_and_not_scan_side(spark):
     assert sorted(map(tuple, base.collect())) == sorted(
         map(tuple, shared.collect())
     )
+
+
+def test_union_with_empty_shingle_sets_drops_nonempty_marker(spark):
+    """A ``drop_empty=True`` shingle table unioned with rows whose
+    shingle sets are empty is no longer known to be non-empty: the
+    signature build must re-filter, or the empty documents get NULL
+    signatures whose band keys collide and they pair with each other."""
+    from hrtech_etl_spark.functions.dedup import (
+        _shingles_nonempty,
+        shingle_table,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, "alpha beta gamma"), (3, "x y z")],
+        "doc_id long, text string",
+    )
+    sh = shingle_table(df, "text", "doc_id", drop_empty=True)
+    empties = spark.createDataFrame(
+        [(10, []), (11, [])], "doc_id long, sh array<string>"
+    )
+    u = sh.unionByName(empties)
+    assert not _shingles_nonempty(u)
+    pairs = sorted(
+        map(tuple, minhash_lsh_pairs(df, "text", "doc_id", shingles=u).collect())
+    )
+    assert (10, 11) not in pairs
+    assert pairs == sorted(
+        map(tuple, minhash_lsh_pairs(df, "text", "doc_id", shingles=sh).collect())
+    )

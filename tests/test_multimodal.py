@@ -1,12 +1,11 @@
-"""Multimodal column plumbing: schema, Arrow batch shapes, kernel
-injection, deterministic fakes."""
+"""Multimodal column plumbing: the typed media struct and the
+Arrow-batched feature kernel."""
 
 from __future__ import annotations
 
 import hashlib
 
 import pytest
-from pyspark.sql import functions as F
 
 from hrtech_etl_spark.operators import multimodal as mm
 
@@ -47,233 +46,3 @@ def test_media_features_batch_shape_and_values(spark, docs):
         assert got[r["doc_id"]]["features"] == want
         assert got[r["doc_id"]]["n_bytes"] == len(r["text"].encode())
         assert got[r["doc_id"]]["mime"] == "image/fake"
-
-
-def test_media_features_kernel_injection(spark, docs):
-    m = mm.attach_fake_media(docs)
-    feats = mm.media_features(m, kernel=lambda b: [float(len(b))])
-    row = feats.first()
-    assert row["features"] == [float(row["n_bytes"])]
-
-
-def test_media_resize_rebuilds_meta(spark, docs):
-    m = mm.attach_fake_media(docs)
-    resized = mm.media_resize(m, width=32, height=16)
-    row = resized.select("media").first()
-    content = bytes(row["media"]["content"])
-    assert content.startswith(b"resized:32x16:")
-    # meta recomputed against the NEW payload
-    assert row["media"]["meta"]["n_bytes"] == len(content)
-    assert row["media"]["meta"]["checksum"] == hashlib.md5(content).hexdigest()
-
-
-def test_media_frame_sample_explodes(spark, docs):
-    m = mm.attach_fake_media(docs)
-    frames = mm.media_frame_sample(m, every_n=4)
-    one = docs.select("doc_id", "text").first()
-    want = mm.fake_frame_sample(one["text"].encode(), 4)
-    got = (
-        frames.where(F.col("doc_id") == one["doc_id"])
-        .orderBy("frame_idx")
-        .collect()
-    )
-    assert [bytes(r["frame"]) for r in got] == want
-    assert [r["frame_idx"] for r in got] == list(range(len(want)))
-
-
-def test_decode_stub_raises():
-    with pytest.raises(NotImplementedError):
-        mm.decode_image(b"\x89PNG")
-
-
-# ---------------------------------------------------------------------------
-# Real pure-numpy codecs (uncompressed formats)
-# ---------------------------------------------------------------------------
-
-
-def _solid_ppm(w, h, rgb):
-    import numpy as np
-
-    return mm.encode_ppm(np.full((h, w, 3), rgb, dtype=np.uint8))
-
-
-def _bmp_bytes(img):
-    """Minimal 24-bit bottom-up BMP encoder (test-side only)."""
-    import struct
-
-    import numpy as np
-
-    img = np.asarray(img, dtype=np.uint8)
-    h, w = img.shape[:2]
-    row = w * 3
-    pad = (4 - row % 4) % 4
-    body = b"".join(
-        img[y, :, ::-1].tobytes() + b"\x00" * pad for y in range(h - 1, -1, -1)
-    )
-    header = struct.pack("<2sIHHI", b"BM", 54 + len(body), 0, 0, 54)
-    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 0, 0, 0, 0)
-    return header + info + body
-
-
-def _wav_bytes(freq=440.0, dur=0.1, sr=16000, amp=0.5):
-    import io
-    import math
-    import struct
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(sr)
-        n = int(sr * dur)
-        frames = b"".join(
-            struct.pack("<h", int(amp * 32767 * math.sin(2 * math.pi * freq * i / sr)))
-            for i in range(n)
-        )
-        wf.writeframes(frames)
-    return buf.getvalue()
-
-
-def test_ppm_roundtrip_and_features():
-    import numpy as np
-
-    img = np.zeros((4, 8, 3), dtype=np.uint8)
-    img[..., 0] = 255  # solid red, wide
-    content = mm.encode_ppm(img)
-    assert np.array_equal(mm.decode_ppm(content), img)
-    feats = mm.real_media_features(content)
-    assert feats[0] == 1.0 and feats[1] == 0.0 and feats[2] == 0.0  # RGB means
-    assert feats[3] == feats[4] == feats[5] == 0.0  # solid -> zero std
-    assert feats[7] == round(float(np.log(8 / 4)), 6)  # log aspect
-
-
-def test_bmp_decode_matches_source_array():
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, size=(3, 5, 3), dtype=np.uint8)  # odd width -> padding
-    assert np.array_equal(mm.decode_bmp(_bmp_bytes(img)), img)
-    # BMP and PPM of the same pixels give identical features
-    assert mm.real_media_features(_bmp_bytes(img)) == mm.real_media_features(
-        mm.encode_ppm(img)
-    )
-
-
-def test_wav_features_physics():
-    import math
-
-    content = _wav_bytes(freq=440.0, dur=0.1, sr=16000, amp=0.5)
-    dur, rms, peak, mean_abs, zcr, centroid, sr_norm, logdur = mm.real_media_features(
-        content
-    )
-    assert abs(dur - 0.1) < 1e-6 and sr_norm == round(16000 / 48000, 6)
-    assert abs(rms - 0.5 / math.sqrt(2)) < 0.01  # sine RMS = amp/sqrt(2)
-    assert abs(peak - 0.5) < 0.01
-    # ~2 zero crossings per cycle: 2 * 440 * 0.1 = 88 over 1600 samples
-    assert abs(zcr - 88 / 1600) < 0.01
-    assert 0.0 < centroid < 0.2  # 440 Hz of an 8 kHz band -> low centroid
-
-
-def test_real_resize_nearest_neighbor():
-    import numpy as np
-
-    img = np.arange(4 * 4 * 3, dtype=np.uint8).reshape(4, 4, 3)
-    out = mm.decode_ppm(mm.real_resize(mm.encode_ppm(img), 2, 2))
-    assert np.array_equal(out, img[::2, ::2])
-
-
-def test_real_frame_sample_concatenated_ppm():
-    frames = [_solid_ppm(2, 2, (i, 0, 0)) for i in range(6)]
-    stream = b"".join(frames)
-    got = mm.real_frame_sample(stream, 2)
-    assert got == frames[::2]
-    assert all(mm.decode_ppm(f).shape == (2, 2, 3) for f in got)
-
-
-def test_real_kernels_through_spark_plumbing(spark):
-    """The REAL kernels ride the same mapInPandas plumbing as the
-    fakes: features + frame sampling over a 3-row media DataFrame."""
-    import numpy as np
-
-    rows = [
-        (0, _solid_ppm(4, 4, (255, 0, 0)), "image/x-portable-pixmap"),
-        (1, _bmp_bytes(np.full((2, 2, 3), 9, dtype=np.uint8)), "image/bmp"),
-        (2, _wav_bytes(), "audio/wav"),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "content", "mime"]).withColumn(
-        "media",
-        mm.media_column(F.col("content"), F.col("mime"), F.col("doc_id")),
-    )
-    feats = {
-        r["doc_id"]: r["features"]
-        for r in mm.media_features(df, kernel=mm.real_media_features).collect()
-    }
-    assert feats[0][0] == 1.0  # red image
-    assert feats[1][:3] == [round(9 / 255, 6)] * 3
-    assert abs(feats[2][0] - 0.1) < 1e-6  # wav duration
-
-    stream = b"".join(_solid_ppm(2, 2, (i, i, i)) for i in range(4))
-    vdf = spark.createDataFrame([(0, stream)], ["doc_id", "content"]).withColumn(
-        "media", mm.media_column(F.col("content"), F.lit("video/x-ppm-stream"), F.col("doc_id"))
-    )
-    sampled = mm.media_frame_sample(vdf, every_n=2, kernel=mm.real_frame_sample)
-    assert [bytes(r["frame"]) for r in sampled.orderBy("frame_idx").collect()] == [
-        _solid_ppm(2, 2, (0, 0, 0)),
-        _solid_ppm(2, 2, (2, 2, 2)),
-    ]
-
-
-def test_compressed_formats_still_gated():
-    """WebP (and other undecodable formats) stay behind the
-    injectable-kernel gate; baseline JPEG and PNG now decode natively
-    (operators/jpeg.py, operators/png.py), so truncated streams are
-    DATA errors (ValueError), not missing-codec errors."""
-    with pytest.raises(NotImplementedError):
-        mm.real_media_features(b"RIFF\x00\x00\x00\x00WEBPVP8 ")
-    with pytest.raises(ValueError):
-        mm.real_resize(b"\xff\xd8\xff\xe0JFIF", 2, 2)  # truncated JPEG
-    with pytest.raises(ValueError):
-        mm.real_resize(b"\x89PNG\r\n\x1a\n....", 2, 2)  # truncated PNG
-
-
-def test_png_decodes_natively():
-    import numpy as np
-
-    from hrtech_etl_spark.operators.png import encode_png
-
-    img = np.full((8, 10, 3), 120, dtype=np.uint8)
-    out = mm.real_resize(encode_png(img), 5, 4)
-    decoded = mm.decode_ppm(out)
-    assert decoded.shape == (4, 5, 3)
-    # PNG is lossless: resize of a constant image stays exact
-    assert np.abs(decoded.astype(int) - 120).max() == 0
-
-
-def test_jpeg_resizes_natively():
-    import numpy as np
-
-    from hrtech_etl_spark.operators.jpeg import encode_jpeg
-
-    img = np.full((12, 20, 3), 90, dtype=np.uint8)
-    out = mm.real_resize(encode_jpeg(img, quality=95), 10, 6)
-    decoded = mm.decode_ppm(out)
-    assert decoded.shape == (6, 10, 3)
-    assert np.abs(decoded.astype(int) - 90).max() <= 2
-
-
-def test_empty_wav_yields_zero_features():
-    """A structurally valid WAV with zero frames (truncated recording)
-    must produce zero features, not crash rfft/max on an empty array."""
-    import io
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(16000)
-        wf.writeframes(b"")
-    feats = mm.real_media_features(buf.getvalue())
-    assert feats[6] == round(16000 / 48000, 6)  # rate still reported
-    assert all(f == 0.0 for i, f in enumerate(feats) if i != 6)

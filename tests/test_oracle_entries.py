@@ -1,8 +1,9 @@
 """Registry entries checked against their DuckDB oracles at sf0.001 —
 the same comparison as ``tools/oracle_check.py`` (row count, sorted
 column names, order-insensitive value hash), run inside the suite for
-the entries whose operators lost an option: the store readers, the
-cluster rounds and the global-rank plan."""
+the entries whose operators lost an option or a code path: the store
+readers, the cluster rounds, the global-rank plan and the media
+feature kernel."""
 
 from __future__ import annotations
 
@@ -20,6 +21,8 @@ ENTRIES = [
     "sim_pq_serve_codes_from_store",
     "events_rfm_segments",
     "window_rank_suite",
+    "multimodal_binary_meta",
+    "multimodal_features",
 ]
 
 

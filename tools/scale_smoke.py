@@ -46,8 +46,6 @@ partition rows grow ~linearly (no single-partition collapse).
 
 ``--only`` selects stage groups (``docs`` = 1-5, ``ann`` = 6,
 ``cdc`` = content-defined chunking over the replicated corpus,
-``phash`` = the banded hamming near-dup join over ``--phash-rows``
-synthetic 64-bit perceptual hashes (planted near-dup clusters),
 ``graph`` = PageRank over a replicated co-occurrence graph,
 ``skew`` = the salted agg/join paths under a 30% single-key hot spot
 at ``--skew-rows``, asserted against their uniform twins,
@@ -142,7 +140,6 @@ def main() -> None:
     ap.add_argument("--vec-copies", type=int, default=50)
     ap.add_argument("--graph-copies", type=int, default=5)
     ap.add_argument("--only", default="docs,ann")
-    ap.add_argument("--phash-rows", type=int, default=1_000_000)
     ap.add_argument("--skew-rows", type=int, default=10_000_000)
     ap.add_argument("--rank-rows", type=int, default=10_000_000)
     ap.add_argument("--sem-copies", type=int, default=50)
@@ -164,8 +161,6 @@ def main() -> None:
             run_cdc_stage(spark, meter, args, root)
         if "graph" in groups:
             run_graph_stages(spark, meter, args, root)
-        if "phash" in groups:
-            run_phash_stage(spark, meter, args, root)
         if "skew" in groups:
             run_skew_stages(spark, meter, args, root)
         if "rank" in groups:
@@ -529,71 +524,6 @@ def run_graph_stages(spark, meter, args, root) -> None:
         f"peak partition rows={peak:,})",
         flush=True,
     )
-
-
-
-
-def run_phash_stage(spark, meter, args, root) -> None:
-    # --- banded hamming near-dup join at --phash-rows hashes ---------
-    # Synthetic 64-bit sketches: every group of 10 ids shares a base
-    # hash; members 0-2 carry <=2 planted bit flips (a near-dup
-    # cluster), members 3-9 get id-scrambled distinct hashes. The
-    # assertion is the usual one — job/stage counts FLAT in rows, pair
-    # output linear in the planted clusters — plus wall-clock, which
-    # measures the explode x(h+1) + band-join + popcount-verify path
-    # (all JVM; the Python hashing kernel is deliberately absent so
-    # the join is the only thing measured).
-    from hrtech_etl_spark.operators.multimodal import phash_near_dup_pairs
-
-    # Round down to a whole number of 10-id groups: a trailing partial
-    # group plants <3 near-dup members, which would make the exact
-    # 3*(n//10) pair-count assertion fail spuriously.
-    n = max(10, (args.phash_rows // 10) * 10)
-    # 15 hex chars = 60 bits: always fits a signed long (ANSI-safe)
-    base = (
-        F.conv(F.substring(F.md5(F.col("grp").cast("string")), 1, 15), 16, 10)
-        .cast("long")
-    )
-    scramble = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("s:"), F.col("id").cast("string"))),
-                1, 15,
-            ), 16, 10,
-        ).cast("long")
-    )
-    member = F.col("id") % 10
-    flips = (
-        F.when(member == 0, F.lit(0))
-        .when(member == 1, F.lit(1))  # flip bit 0
-        .when(member == 2, F.lit(2))  # flip bit 1 (1^2 -> pair at ham 2)
-        .otherwise(F.lit(None))
-    )
-    hashes = (
-        spark.range(n)
-        .withColumn("grp", F.floor(F.col("id") / 10))
-        .withColumn(
-            "phash",
-            F.when(member <= 2, base.bitwiseXOR(flips)).otherwise(scramble),
-        )
-        .select(F.col("id").alias("doc_id"), "phash")
-    )
-
-    def pairs():
-        out = phash_near_dup_pairs(hashes, max_hamming=2)
-        return out.count()
-
-    n_pairs, dt = meter.run(f"phash banded hamming join x{n:,}", pairs)
-    expect = 3 * (n // 10)  # 3 pairs per planted triple
-    print(
-        f"  {n:,} hashes -> {n_pairs:,} near-dup pairs "
-        f"(expected ~{expect:,}; {n / dt:,.0f} hashes/s)",
-        flush=True,
-    )
-    if n_pairs != expect:
-        raise AssertionError(
-            f"planted-pair recall broken: {n_pairs} != {expect}"
-        )
 
 
 def run_skew_stages(spark, meter, args, root) -> None:
