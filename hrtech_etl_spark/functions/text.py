@@ -499,7 +499,7 @@ def bigram_lm_scores(
     # scale-conditional width: tokenize+explode is the corpus-heavy
     # stage and a narrow local scan (the sf0.1 fixture is ONE parquet
     # partition) would run it on one core; a wide cluster scan passes
-    # through unchanged (round-11, same finding as pq_encode)
+    # through unchanged (see core/partitioning.py::spread)
     bg = _spread(docs).select(
         F.col(id_col),
         *carry,

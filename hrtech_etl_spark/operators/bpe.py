@@ -8,8 +8,8 @@ Scale shape (the part that matters at 100 TB):
   the word-TYPE frequency table (vocabulary-sized — millions of rows,
   not billions); every merge round then runs on that small table:
   adjacent-pair counts (one keyed aggregate with map-side partials),
-  a single-ROW bounded collect for the argmax (like the PQ codebook —
-  a trained artifact lives on the driver), and a JVM-side fold that
+  a single-ROW bounded collect for the argmax (the trained merge
+  list is small enough to collect), and a JVM-side fold that
   applies the merge to each word's symbol array (``F.aggregate``, no
   Python). The word table is re-checkpointed each round so plan depth
   stays O(1) instead of O(rounds).
@@ -213,7 +213,7 @@ def bpe_train(
     Deterministic: the argmax tie-break is (count DESC, a ASC, b ASC).
     Stops early when no adjacent pair reaches ``min_count``. Returns
     the ordered merge list — a bounded driver-side artifact (the
-    tokenizer model), exactly like the PQ codebook contract.
+    tokenizer model).
 
     Two physical strategies, same merges either way:
 

@@ -878,7 +878,7 @@ def temperature_mixture(
 
     The stratum histogram is a BOUNDED artifact (#strata rows — one
     tiny aggregate collects to the driver, the recipe computes there;
-    same contract as the PQ codebook / BPE merge table). With
+    same contract as the BPE merge table). With
     ``cap=True`` a stratum never over-draws its population (targets
     clamp to the stratum size; no redistribution — see
     :func:`mixture_sample`). ``alpha=0.5`` uses ``sqrt``, which is

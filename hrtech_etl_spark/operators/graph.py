@@ -104,7 +104,7 @@ def pagerank(
         .localCheckpoint(eager=False)
     )
     n_nodes = nodes.count()  # bounded driver-side scalar (|V| is the
-    # algorithm's N — one count, same contract as the PQ codebook)
+    # algorithm's N — one count)
     teleport = (1.0 - damping) / float(n_nodes)
 
     # materialize the bare edge list ONCE: without a checkpoint every

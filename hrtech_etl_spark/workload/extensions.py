@@ -1,6 +1,6 @@
 """Declared queries: engine extensions — table profiling, z-order
 layout keys, incremental corpus dedup, stream-stream interval joins,
-product-quantization ANN, SCD2 history + point-in-time snapshot,
+SCD2 history + point-in-time snapshot,
 bloom-prefiltered semi-join, fuzzy edit-distance join, table diff,
 Variant JSON, UDTF+LATERAL, ordered-sequence funnels (fixed- and
 sliding-anchor), cross-document boilerplate removal, and the seeded
@@ -274,72 +274,6 @@ def stream_interval_join(spark, sf_dir):
             memory_table=name,
         )
     return spark.table(name)
-
-
-# ---------------------------------------------------------------------------
-# Product quantization ANN (oracle-exact: seed codebooks, unrolled sums)
-# ---------------------------------------------------------------------------
-
-_PQ_M, _PQ_DSUB, _PQ_KSUB = 8, 8, 16
-
-
-def _pq_l2_sql(a: str, b: str, s: int) -> str:
-    """Unrolled squared-L2 over subspace s — a left-associated chain of
-    squared diffs, term-for-term the order of the Spark-side fold."""
-    return " + ".join(
-        f"(({a}[{s * _PQ_DSUB + i}] - {b}[{s * _PQ_DSUB + i}]) * "
-        f"({a}[{s * _PQ_DSUB + i}] - {b}[{s * _PQ_DSUB + i}]))"
-        for i in range(1, _PQ_DSUB + 1)
-    )
-
-
-_PQ_VD = VEC_DOUBLE.format(v="embedding")
-_PQ_CANDS = ", ".join(
-    f"round({_pq_l2_sql('e.v', 'seeds.v', s)}, 6) AS d{s}" for s in range(_PQ_M)
-)
-_PQ_CODES = ", ".join(
-    "min({'d': d%d, 'j': j})['j'] AS code%d" % (s, s) for s in range(_PQ_M)
-)
-_PQ_JOINS = " ".join(
-    f"JOIN seeds s{s} ON s{s}.j = c.code{s}" for s in range(_PQ_M)
-)
-_PQ_DIST = " + ".join(
-    f"({_pq_l2_sql('q.v', f's{s}.v', s)})" for s in range(_PQ_M)
-)
-
-
-@query(
-    "sim_pq_topk",
-    sql=f"""
-    WITH e AS (SELECT vec_id, {_PQ_VD} AS v FROM embeddings),
-    seeds AS (SELECT vec_id AS j, v FROM e WHERE vec_id < {_PQ_KSUB}),
-    cands AS (
-      SELECT e.vec_id, seeds.j, {_PQ_CANDS}
-      FROM e CROSS JOIN seeds
-    ),
-    codes AS (SELECT vec_id, {_PQ_CODES} FROM cands GROUP BY vec_id),
-    q AS (SELECT v FROM e WHERE vec_id = 0)
-    SELECT c.vec_id, round({_PQ_DIST}, 6) AS dist2
-    FROM codes c {_PQ_JOINS} CROSS JOIN q
-    ORDER BY dist2, c.vec_id
-    LIMIT 10
-    """,
-)
-def sim_pq_topk(spark, sf_dir):
-    """Product-quantization ANN: 64-dim vectors compressed to 8
-    codes (16 centroids per subspace, seed-vector codebook for
-    oracle determinism), asymmetric-distance top-10 for query
-    vec_id=0. The ADC scan reads ONLY the code column — the 16×
-    memory compression that makes billion-vector ANN memory-bound
-    feasible (see functions/similarity.py::pq_encode/pq_adc_topk;
-    swap in per-subspace k-means codebooks at scale, same plans)."""
-    from hrtech_etl_spark.functions import similarity as sim
-
-    e = load_table(spark, "embeddings", sf_dir)
-    cb = sim.pq_codebook(e, m=_PQ_M, ksub=_PQ_KSUB)
-    enc = sim.pq_encode(e, cb, m=_PQ_M, ksub=_PQ_KSUB)
-    q = e.where(F.col("vec_id") == 0)
-    return sim.pq_adc_topk(enc, cb, q, k=10, m=_PQ_M)
 
 
 # ---------------------------------------------------------------------------
@@ -2096,121 +2030,6 @@ def text_repetition_signals(spark, sf_dir):
     return repetition_signals(docs, "text", "doc_id", ngram=2)
 
 
-def _srp_margin_pairs_sql(vec: str, bits: int = 4, dim: int = 64) -> str:
-    """[|projection|, bit] pairs for the multiprobe oracle — the same
-    ±1 sign table and left-fold dot product srp_bucket_sql parity-
-    proves, with the bit index carried as an exact small double so
-    DuckDB's lexicographic list sort matches Spark's struct sort."""
-    from hrtech_etl_spark.functions import similarity as sim
-
-    pairs = []
-    for b in range(bits):
-        signs = ",".join(
-            "1.0" if sim._PROJ_SIGNS[(b, d)] else "-1.0" for d in range(dim)
-        )
-        pairs.append(
-            f"[abs(list_dot_product({vec}, [{signs}])), CAST({b} AS DOUBLE)]"
-        )
-    return "[" + ", ".join(pairs) + "]"
-
-
-from hrtech_etl_spark.workload.text_llm import srp_bucket_sql as _srp_sql
-
-_MULTIPROBE_SQL = f"""
-    WITH e AS (SELECT vec_id, {VEC_DOUBLE.format(v='embedding')} AS v FROM embeddings),
-    b AS (SELECT vec_id, v, {_srp_sql('v')} AS bucket FROM e),
-    q AS (
-      SELECT v AS qv, bucket AS qbucket,
-             list_transform(
-               list_sort({_srp_margin_pairs_sql('v')}),
-               p -> CAST(p[2] AS BIGINT)
-             )[1:2] AS flips
-      FROM b WHERE vec_id = 0
-    ),
-    p AS (
-      SELECT qv,
-             list_concat(
-               [qbucket],
-               list_transform(flips, f -> xor(qbucket, (CAST(1 AS BIGINT) << f)))
-             ) AS buckets
-      FROM q
-    )
-    SELECT b.vec_id AS vec_id, {cosine_sql('b.v', 'p.qv')} AS score
-    FROM b, p WHERE list_contains(p.buckets, b.bucket)
-    ORDER BY score DESC, b.vec_id
-    LIMIT 10
-"""
-
-
-@query("sim_lsh_multiprobe_topk", sql=_MULTIPROBE_SQL)
-def sim_lsh_multiprobe_topk(spark, sf_dir):
-    """Multiprobe SRP top-k under the oracle gate
-    (functions/similarity.py::lsh_multiprobe_topk): probe the query's
-    bucket PLUS the buckets reached by flipping its two lowest-margin
-    sign bits (n_probes=3 of 16 buckets) — the standard recall fix for
-    bucket-limited LSH without extra hash tables. Probe selection is
-    fully deterministic (per-bit projection magnitudes, the same
-    left-fold dot product the bucket oracle parity-proves), the probe
-    list broadcasts with the 1-row query, and the oracle replays
-    margin sorting, bit flips, and the bucket-membership join exactly.
-    At scale the corpus is written bucketed by srp_bucket, so each
-    probe is a partition-pruned scan of n_probes/2^bits of the data."""
-    from hrtech_etl_spark.functions import similarity as sim
-
-    e = load_table(spark, "embeddings", sf_dir)
-    q = e.where(F.col("vec_id") == 0)
-    return sim.lsh_multiprobe_topk(e, q, k=10, n_probes=3)
-
-
-#: Flat 64-term squared-L2 chain (NO per-subspace parens): term-for-term
-#: the left fold _l2sq runs over the full vector in the exact re-rank.
-_PQ_FLAT_L2 = " + ".join(_pq_l2_sql("e.v", "q.v", s) for s in range(_PQ_M))
-
-
-@query(
-    "sim_pq_rerank_topk",
-    sql=f"""
-    WITH e AS (SELECT vec_id, {_PQ_VD} AS v FROM embeddings),
-    seeds AS (SELECT vec_id AS j, v FROM e WHERE vec_id < {_PQ_KSUB}),
-    cands AS (
-      SELECT e.vec_id, seeds.j, {_PQ_CANDS}
-      FROM e CROSS JOIN seeds
-    ),
-    codes AS (SELECT vec_id, {_PQ_CODES} FROM cands GROUP BY vec_id),
-    q AS (SELECT v FROM e WHERE vec_id = 0),
-    adc AS (
-      SELECT c.vec_id, round({_PQ_DIST}, 6) AS adist
-      FROM codes c {_PQ_JOINS} CROSS JOIN q
-    ),
-    short AS (SELECT vec_id FROM adc ORDER BY adist, vec_id LIMIT 100)
-    SELECT e.vec_id, round({_PQ_FLAT_L2}, 6) AS dist2
-    FROM e JOIN short USING (vec_id) CROSS JOIN q
-    ORDER BY dist2, e.vec_id
-    LIMIT 10
-    """,
-)
-def sim_pq_rerank_topk(spark, sf_dir):
-    """The deployed PQ serving path under the oracle gate
-    (functions/similarity.py::pq_rerank_topk): the cheap ADC scan over
-    8-byte codes shortlists 100 candidates, then ONLY those rows' raw
-    vectors are fetched (broadcast semi-join — a point-lookup pattern,
-    partition-pruned when the corpus is stored bucketed by id) for the
-    exact squared-L2 re-rank to top-10. The oracle replays the whole
-    cascade: seed codebook, code assignment, rounded ADC ordering with
-    the id tiebreak (a deterministic shortlist boundary), and the
-    exact distance as the SAME flat left-fold term chain — so the gate
-    certifies not just the final ranking but the shortlist the cheap
-    scan produced. sim_pq_topk gates the ADC-only path; this entry
-    closes the shortlist+rerank half the deployment actually serves."""
-    from hrtech_etl_spark.functions import similarity as sim
-
-    e = load_table(spark, "embeddings", sf_dir)
-    cb = sim.pq_codebook(e, m=_PQ_M, ksub=_PQ_KSUB)
-    enc = sim.pq_encode(e, cb, m=_PQ_M, ksub=_PQ_KSUB)
-    q = e.where(F.col("vec_id") == 0)
-    return sim.pq_rerank_topk(e, enc, cb, q, k=10, shortlist=100, m=_PQ_M)
-
-
 # ---------------------------------------------------------------------------
 # prepare_training_corpus capstone: the full composition under ONE gate
 # ---------------------------------------------------------------------------
@@ -2587,71 +2406,6 @@ def stream_upsert_sink(spark, sf_dir):
         F.col("event_type").alias("last_type"),
         F.col("value").alias("last_value"),
         F.unix_micros("ts").alias("last_ts_us"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Trained PQ codebook recall (rows-only gate: k-means is engine-specific)
-# ---------------------------------------------------------------------------
-
-@query("sim_pq_trained_recall")
-def sim_pq_trained_recall(spark, sf_dir):
-    """Recall gate for the TRAINED per-subspace k-means PQ codebook
-    (functions/similarity.py::pq_codebook_trained) — the production
-    quantizer whose seed-codebook siblings are value-gated
-    (`sim_pq_topk`, `sim_pq_rerank_topk`). K-means centroids are
-    engine-specific (Spark ML initialization), so like
-    `agg_approx_distinct` this entry is DELIBERATELY rows-only: no
-    DuckDB oracle can restate the centroids, but the query asserts
-    its own quality bar in-plan and FAILS — not degrades — below it:
-    for three fixed query vectors, recall@10 of the full
-    trained-codebook ADC-shortlist(100)→exact-rerank cascade against
-    the brute-force exact L2 top-10 must average >= 0.5 with every
-    query >= 0.3 (random 64-d embeddings are ANN's worst case — no
-    cluster structure; measured recall here is 0.7-1.0, the floors
-    are safety margins, same bounds as
-    tests/test_pq.py::test_trained_codebook_rerank_recall). Output is
-    one row per query (query_id, n_hits, recall), so the driver's
-    rows-only record still pins the row set shape."""
-    from hrtech_etl_spark.functions import similarity as sim
-    from hrtech_etl_spark.functions.similarity import _l2sq
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    cbt = sim.pq_codebook_trained(emb)
-    enc = sim.pq_encode(emb, cbt)
-    rows = []
-    for qid in (0, 101, 333):
-        q = emb.where(F.col("vec_id") == qid)
-        got = {
-            r["vec_id"]
-            for r in sim.pq_rerank_topk(
-                emb, enc, cbt, q, k=10, shortlist=100
-            ).collect()
-        }
-        qb = F.broadcast(
-            q.select(F.col("embedding").cast("array<double>").alias("__qv"))
-        )
-        exact = {
-            r["vec_id"]
-            for r in emb.crossJoin(qb)
-            .select(
-                "vec_id",
-                _l2sq(
-                    F.col("embedding").cast("array<double>"), F.col("__qv")
-                ).alias("d2"),
-            )
-            .orderBy(F.col("d2").asc(), F.col("vec_id"))
-            .limit(10)
-            .collect()
-        }
-        hits = len(got & exact)
-        rows.append((qid, hits, hits / 10.0))
-    if any(r[2] < 0.3 for r in rows):
-        raise AssertionError(f"per-query recall floor violated: {rows}")
-    if sum(r[2] for r in rows) / len(rows) < 0.5:
-        raise AssertionError(f"mean recall floor violated: {rows}")
-    return spark.createDataFrame(
-        rows, "query_id long, n_hits int, recall double"
     )
 
 
@@ -3068,8 +2822,8 @@ GROUP BY d.lang""")
 def corpus_bpe_tokenize(spark, sf_dir):
     """Distributed BPE tokenizer end to end (operators/bpe.py):
     train merge rules on the corpus (ONE corpus pass to the word-TYPE
-    table, then vocabulary-sized merge rounds — the trained-artifact
-    contract of pq_codebook), then encode every document by
+    table, then vocabulary-sized merge rounds — a small trained
+    artifact), then encode every document by
     VOCABULARY JOIN (bpe_encode_with_vocab): training's word table
     already holds each word type's final segmentation, so encoding is
     a posexplode ⋈ vocab + grouped reassembly — all JVM-side, no
@@ -3533,51 +3287,6 @@ def text_ccnet_buckets(spark, sf_dir):
     return ccnet_quality_buckets(d, "text", "doc_id", "lang").select(
         "doc_id", "lang", "n_bigrams", "avg_logp", "bucket"
     )
-
-
-# ---------------------------------------------------------------------------
-# Sparse random projection (Johnson-Lindenstrauss / Achlioptas)
-# ---------------------------------------------------------------------------
-
-def _rp_oracle_sql() -> str:
-    import math
-
-    from hrtech_etl_spark.functions.similarity import achlioptas_matrix
-
-    m = achlioptas_matrix(out_dim=8, dim=64, seed=5)
-    scale = repr(math.sqrt(3.0 / 8))
-    outs = []
-    for j in range(8):
-        terms = "0.0"
-        for d in range(64):
-            if m[j][d] == 1:
-                terms += f" + v[{d + 1}]"
-            elif m[j][d] == -1:
-                terms += f" - v[{d + 1}]"
-        outs.append(f"round({scale} * ({terms}), 6) AS y{j}")
-    sel = ",\n           ".join(outs)
-    vd = VEC_DOUBLE.format(v="embedding")
-    return f"""
-    SELECT vec_id,
-           {sel}
-    FROM (SELECT vec_id, {vd} AS v FROM embeddings)
-    """
-
-@query("sim_random_projection", sql=_rp_oracle_sql())
-def sim_random_projection(spark, sf_dir):
-    """Sparse random projection 64-d -> 8-d
-    (functions/similarity.py::random_projection — Achlioptas 2003
-    Johnson-Lindenstrauss): seed-derived {+1,-1,0} matrix (2/3 of
-    entries vanish), y_j = sqrt(3/8) * the explicit left-associated
-    sum over the non-zero coordinates — a pure per-row expression,
-    one scan, ZERO shuffles, no stored model. The oracle renders the
-    identical constants and term order, so values match bit-for-bit.
-    This is the cheap pre-clustering/pre-ANN reduction for
-    billion-vector corpora. Green at sf0.001/0.01/0.1."""
-    from hrtech_etl_spark.functions.similarity import random_projection
-
-    e = load_table(spark, "embeddings", sf_dir)
-    return random_projection(e, "embedding", "vec_id", out_dim=8, dim=64, seed=5)
 
 
 # ---------------------------------------------------------------------------
@@ -5293,43 +5002,6 @@ def corpus_span_corruption(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Diversity-constrained retrieval (per-label quota top-k)
-# ---------------------------------------------------------------------------
-
-_VD_EXT = VEC_DOUBLE.format(v="embedding")
-
-@query(
-    "sim_diverse_topk",
-    sql=f"""
-    WITH q AS (SELECT {_VD_EXT} AS qv FROM embeddings WHERE vec_id = 0),
-    e AS (SELECT vec_id, label, {_VD_EXT} AS v FROM embeddings),
-    s AS (SELECT e.vec_id, e.label, {cosine_sql('e.v', 'q.qv')} AS score
-          FROM e, q),
-    r AS (SELECT *, row_number() OVER (PARTITION BY label
-                                       ORDER BY score DESC, vec_id) AS rk
-          FROM s)
-    SELECT vec_id, label, score FROM r WHERE rk <= 2
-    ORDER BY score DESC, vec_id LIMIT 10
-    """,
-)
-def sim_diverse_topk(spark, sf_dir):
-    """Diversity-constrained cosine retrieval
-    (functions/similarity.py::diverse_topk): exact top-10 vs the
-    vec_id=0 query under an at-most-2-per-label quota — the
-    declarative (quota) form of MMR result diversification; the
-    sequential marginal-relevance argmax becomes a label-partitioned
-    rank window that Spark executes as WindowGroupLimit (running
-    top-2 per label, no full rank materialized) followed by
-    TakeOrderedAndProject. One corpus scan, the 1-row query side
-    broadcast with its norm hoisted. Green at sf0.001/0.01/0.1."""
-    from hrtech_etl_spark.functions import similarity as sim
-
-    e = load_table(spark, "embeddings", sf_dir)
-    q = e.where(F.col("vec_id") == 0)
-    return sim.diverse_topk(e, q, per_label=2, k=10)
-
-
-# ---------------------------------------------------------------------------
 # DAU / MAU engagement (distinct-user activity ratios)
 # ---------------------------------------------------------------------------
 
@@ -6249,71 +5921,6 @@ def agg_benford_profile(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# True MMR re-ranking (greedy marginal relevance vs recursive-CTE replay)
-# ---------------------------------------------------------------------------
-
-def _mmr_oracle_sql() -> str:
-    vd = VEC_DOUBLE.format(v="embedding")
-    return f"""
-    WITH RECURSIVE
-    e AS MATERIALIZED (SELECT vec_id, {vd} AS v FROM embeddings),
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    cand AS MATERIALIZED (
-      SELECT e.vec_id, e.v, {cosine_sql('e.v', 'q.qv')} AS rel
-      FROM e, q ORDER BY rel DESC, e.vec_id LIMIT 30
-    ),
-    sims AS MATERIALIZED (
-      SELECT a.vec_id AS ia, b.vec_id AS ib, {cosine_sql('a.v', 'b.v')} AS s
-      FROM cand a, cand b WHERE a.vec_id <> b.vec_id
-    ),
-    r AS (
-      (SELECT 1 AS step, [vec_id] AS sel, vec_id AS chosen,
-              round(rel, 6) AS mmr
-       FROM cand ORDER BY rel DESC, vec_id LIMIT 1)
-      UNION ALL
-      SELECT step + 1, list_append(sel, vec_id), vec_id, round(score, 6)
-      FROM (
-        SELECT r.step AS step, r.sel AS sel, c.vec_id AS vec_id,
-               CAST(0.7 AS DOUBLE) * c.rel
-                 - (CAST(1.0 AS DOUBLE) - CAST(0.7 AS DOUBLE)) * max(s.s)
-                 AS score,
-               row_number() OVER (
-                 ORDER BY CAST(0.7 AS DOUBLE) * c.rel
-                            - (CAST(1.0 AS DOUBLE) - CAST(0.7 AS DOUBLE))
-                              * max(s.s) DESC,
-                          c.vec_id) AS rk
-        FROM r
-        JOIN cand c ON NOT list_contains(r.sel, c.vec_id)
-        JOIN sims s ON s.ia = c.vec_id AND list_contains(r.sel, s.ib)
-        GROUP BY r.step, r.sel, c.vec_id, c.rel
-      ) WHERE rk = 1 AND step < 10
-    )
-    SELECT step, chosen AS vec_id, mmr FROM r ORDER BY step
-    """
-
-
-@query("sim_mmr_rerank", sql=_mmr_oracle_sql())
-def sim_mmr_rerank(spark, sf_dir):
-    """TRUE sequential MMR (functions/similarity.py::mmr_topk): greedy
-    k=10 selection maximizing 0.7·relevance − 0.3·max-sim-to-selected
-    over the exact top-30 cosine shortlist — the retrieve-then-rerank
-    diversity pass, complementing the declarative quota form
-    (sim_diverse_topk). All float-bearing math (relevance, pairwise
-    sims) is the SAME JVM cosine expression as every other gated sim
-    entry, rounded before leaving the plan; the greedy argmax runs
-    over the bounded shortlist² table driver-side (the PQ-codebook
-    pattern) as trivial arithmetic on rounded doubles, which is why a
-    DuckDB recursive CTE carrying the selected-set list replays the
-    entire selection bit-for-bit — including ties, broken by id in
-    both. Green at sf0.001/0.01/0.1."""
-    from hrtech_etl_spark.functions import similarity as sim
-
-    e = load_table(spark, "embeddings", sf_dir)
-    q = e.where(F.col("vec_id") == 0)
-    return sim.mmr_topk(e, q, k=10, shortlist=30, lam=0.7)
-
-
-# ---------------------------------------------------------------------------
 # Forward as-of join (earliest following match)
 # ---------------------------------------------------------------------------
 
@@ -6758,9 +6365,8 @@ def sketch_hll_accuracy(spark, sf_dir):
     sketch beyond the bound, within_10pct flips to false and the
     value hash fails the gate. Both aggregates share one exchange
     (the distinct expansion carries the HLL buffer alongside). This
-    is the estimator-regression canary pattern used for
-    sim_pq_trained_recall, applied to cardinality sketches. Green at
-    sf0.001/0.01/0.1."""
+    is an estimator-regression canary for cardinality sketches. Green
+    at sf0.001/0.01/0.1."""
     e = load_table(spark, "events", sf_dir).where(
         F.col("event_type").isNotNull() & F.col("user_id").isNotNull()
     )
@@ -7355,230 +6961,6 @@ def dedup_signature_merge(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Deterministic portable Lloyd k-means: iterative training under a gate
-# ---------------------------------------------------------------------------
-
-_KM_M, _KM_KSUB, _KM_DIM, _KM_ITERS = 8, 16, 64, 5
-
-
-def _kmeans_lloyd_ctes(
-    m: int = _KM_M,
-    ksub: int = _KM_KSUB,
-    dim: int = _KM_DIM,
-    iters: int = _KM_ITERS,
-) -> tuple[list[str], str]:
-    """Shared CTE chain replaying functions/similarity.py::kmeans_lloyd
-    in DuckDB — the training unrolled as ``iters`` CTE rounds (the
-    corpus_bpe_tokenize technique applied to an iterative NUMERIC
-    algorithm): per round, argmin assignment over fixed-order round-6
-    IEEE distances with the min(struct) tie-break, then DECIMAL(18,6)
-    component sums divided back to round-6 double centroids; empty
-    clusters keep the previous centroid via the LEFT JOIN coalesce.
-    Returns ``(ctes, argmin)`` ending at the trained-centroid table
-    ``it{iters}`` so both the training gate (`sim_kmeans_lloyd`) and
-    the serving-cascade gate (`sim_pq_lloyd_serve`) build on ONE
-    statement of the training math."""
-    dsub = dim // m
-    vd = VEC_DOUBLE.format(v="embedding")
-    pts_branches = " UNION ALL ".join(
-        f"SELECT vec_id AS id, {s} AS s, ["
-        + ", ".join(f"round(v[{s * dsub + i + 1}], 6)" for i in range(dsub))
-        + "] AS x FROM e"
-        for s in range(m)
-    )
-    dist = " + ".join(
-        f"(p.x[{i + 1}] - t.c[{i + 1}]) * (p.x[{i + 1}] - t.c[{i + 1}])"
-        for i in range(dsub)
-    )
-    argmin = "min({'d': round(" + dist + ", 6), 'j': t.cid})['j']"
-    mean_arr = "[" + ", ".join(
-        f"round(CAST(sum(CAST(p.x[{i + 1}] AS DECIMAL(18,6))) AS DOUBLE)"
-        f" / count(*), 6)"
-        for i in range(dsub)
-    ) + "]"
-    ctes = [
-        f"e AS (SELECT vec_id, {vd} AS v FROM embeddings)",
-        f"pts AS MATERIALIZED ({pts_branches})",
-        f"it0 AS (SELECT s, CAST(id AS INT) AS cid, x AS c FROM pts "
-        f"WHERE id < {ksub})",
-    ]
-    for t in range(1, iters + 1):
-        ctes.append(
-            f"a{t} AS MATERIALIZED (SELECT p.id, p.s, {argmin} AS cid "
-            f"FROM pts p JOIN it{t - 1} t ON p.s = t.s GROUP BY p.id, p.s)"
-        )
-        ctes.append(
-            f"m{t} AS (SELECT a.s, a.cid, count(*) AS n, {mean_arr} AS c "
-            f"FROM a{t} a JOIN pts p ON a.id = p.id AND a.s = p.s "
-            f"GROUP BY a.s, a.cid)"
-        )
-        ctes.append(
-            f"it{t} AS MATERIALIZED (SELECT t.s, t.cid, "
-            f"coalesce(m.c, t.c) AS c FROM it{t - 1} t "
-            f"LEFT JOIN m{t} m ON t.s = m.s AND t.cid = m.cid)"
-        )
-    return ctes, argmin
-
-
-def _kmeans_lloyd_sql(
-    m: int = _KM_M,
-    ksub: int = _KM_KSUB,
-    dim: int = _KM_DIM,
-    iters: int = _KM_ITERS,
-) -> str:
-    """The training gate's full statement: the shared CTE chain plus a
-    final assignment pass counting ``n_assigned`` under the FINAL
-    centroids (empty clusters coalesce to 0)."""
-    ctes, argmin = _kmeans_lloyd_ctes(m, ksub, dim, iters)
-    ctes = ctes + [
-        f"af AS (SELECT p.id, p.s, {argmin} AS cid FROM pts p "
-        f"JOIN it{iters} t ON p.s = t.s GROUP BY p.id, p.s)",
-        "cf AS (SELECT s, cid, CAST(count(*) AS BIGINT) AS n_assigned "
-        "FROM af GROUP BY s, cid)",
-    ]
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"\nSELECT CAST(t.s AS INT) AS s, t.cid AS cid, t.c AS centroid, "
-        f"coalesce(cf.n_assigned, 0) AS n_assigned "
-        f"FROM it{iters} t LEFT JOIN cf ON t.s = cf.s AND t.cid = cf.cid "
-        f"ORDER BY s, cid"
-    )
-
-
-@query("sim_kmeans_lloyd", sql=_kmeans_lloyd_sql())
-def sim_kmeans_lloyd(spark, sf_dir):
-    """Deterministic portable Lloyd k-means over the PQ subspace
-    layout (functions/similarity.py::kmeans_lloyd): 8 subspaces x 16
-    centroids x 5 iterations, seed-vector init, trained on the
-    embeddings table and VALUE-GATED end to end — the oracle replays
-    every iteration (assignment argmin over fixed-order round-6
-    distances, DECIMAL-exact component means, empty-cluster
-    retention) as unrolled SQL rounds, the corpus_bpe_tokenize
-    technique applied to iterative NUMERIC training. This closes the
-    'iterative algorithms are oracle-hard' caveat for clustering the
-    way BPE closed it for tokenizer training; the Spark-ML
-    kmeans||-initialized production trainer keeps its rows-only
-    recall canary (`sim_pq_trained_recall`) — this entry proves the
-    engine can train a codebook an independent engine reproduces
-    bit-for-bit. Green at sf0.001/0.01/0.1."""
-    from hrtech_etl_spark.functions.similarity import kmeans_lloyd
-
-    e = load_table(spark, "embeddings", sf_dir)
-    return kmeans_lloyd(
-        e, m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM, iters=_KM_ITERS
-    )
-
-
-# ---------------------------------------------------------------------------
-# Lloyd-trained PQ serving cascade: train -> adapt -> encode -> ADC -> rerank
-# under ONE value gate (round 15 — closes the train-to-serve ANN path)
-# ---------------------------------------------------------------------------
-
-def _pq_lloyd_serve_sql(
-    m: int = _KM_M,
-    ksub: int = _KM_KSUB,
-    dim: int = _KM_DIM,
-    iters: int = _KM_ITERS,
-    shortlist: int = 100,
-    k: int = 10,
-) -> str:
-    """DuckDB replay of the WHOLE trained-PQ serving cascade: the
-    shared `_kmeans_lloyd_ctes` training rounds produce the centroid
-    table, which then drives the sim_pq_topk/sim_pq_rerank_topk
-    serving fragments — encode (argmin of round-6 L2 between the RAW
-    subvector and the round-6 trained centroid, lowest-cid tie-break),
-    ADC ordering with the id tiebreak, shortlist boundary, and the
-    exact flat-chain re-rank. The only new SQL vs the two parent
-    oracles is the join shape: centroids live as (s, cid, c) rows (the
-    trainer's output grid), so codes pivot to columns via max(CASE)
-    and each subspace joins its own cb alias — value-identical to the
-    seed-codebook fragments' full-vector indexing."""
-    dsub = dim // m
-    if dsub != _PQ_DSUB:
-        raise ValueError("serve cascade reuses _PQ_FLAT_L2: dsub must match")
-    ctes, _ = _kmeans_lloyd_ctes(m, ksub, dim, iters)
-    # encode reads the UNROUNDED subvector (pq_encode slices the raw
-    # cast-double vector; only the TRAINING points are round-6)
-    rp_branches = " UNION ALL ".join(
-        f"SELECT vec_id AS id, {s} AS s, ["
-        + ", ".join(f"v[{s * dsub + i + 1}]" for i in range(dsub))
-        + "] AS x FROM e"
-        for s in range(m)
-    )
-    enc_dist = " + ".join(
-        f"(p.x[{i + 1}] - t.c[{i + 1}]) * (p.x[{i + 1}] - t.c[{i + 1}])"
-        for i in range(dsub)
-    )
-    enc_argmin = "min({'d': round(" + enc_dist + ", 6), 'j': t.cid})['j']"
-    code_cols = ", ".join(
-        f"max(CASE WHEN s = {s} THEN code END) AS code{s}" for s in range(m)
-    )
-    cb_joins = " ".join(
-        f"JOIN it{iters} c{s} ON c{s}.s = {s} AND c{s}.cid = c.code{s}"
-        for s in range(m)
-    )
-    # per-subspace parens match pq_adc_topk's accumulation: each
-    # subspace's left-fold L2 completes before joining the outer sum
-    adc_groups = " + ".join(
-        "("
-        + " + ".join(
-            f"(q.v[{s * dsub + i + 1}] - c{s}.c[{i + 1}]) * "
-            f"(q.v[{s * dsub + i + 1}] - c{s}.c[{i + 1}])"
-            for i in range(dsub)
-        )
-        + ")"
-        for s in range(m)
-    )
-    ctes = ctes + [
-        f"rp AS MATERIALIZED ({rp_branches})",
-        f"asg AS MATERIALIZED (SELECT p.id, p.s, {enc_argmin} AS code "
-        f"FROM rp p JOIN it{iters} t ON p.s = t.s GROUP BY p.id, p.s)",
-        f"codes AS (SELECT id AS vec_id, {code_cols} FROM asg GROUP BY id)",
-        "q AS (SELECT v FROM e WHERE vec_id = 0)",
-        f"adc AS (SELECT c.vec_id, round({adc_groups}, 6) AS adist "
-        f"FROM codes c {cb_joins} CROSS JOIN q)",
-        f"short AS (SELECT vec_id FROM adc ORDER BY adist, vec_id "
-        f"LIMIT {shortlist})",
-    ]
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"\nSELECT e.vec_id, round({_PQ_FLAT_L2}, 6) AS dist2 "
-        f"FROM e JOIN short USING (vec_id) CROSS JOIN q "
-        f"ORDER BY dist2, e.vec_id LIMIT {k}"
-    )
-
-
-@query("sim_pq_lloyd_serve", sql=_pq_lloyd_serve_sql())
-def sim_pq_lloyd_serve(spark, sf_dir):
-    """The fully value-locked train→serve ANN path: kmeans_lloyd
-    trains the per-subspace centroids deterministically,
-    pq_codebook_from_kmeans adapts them into the broadcast ``__cb``
-    artifact, and the UNCHANGED compressed-scan cascade serves the
-    query — pq_encode (8 codes/vector), pq_adc_topk shortlist of 100
-    over codes alone, exact re-rank to top-10
-    (functions/similarity.py:1089,1249,487,552,641). sim_pq_topk and
-    sim_pq_rerank_topk gate the serving math under the deterministic
-    seed codebook; sim_kmeans_lloyd gates the trainer; this entry
-    composes them so a TRAINED quantizer's end-to-end answer is
-    reproduced bit-for-bit by an independent engine — the final close
-    of the 'trained ANN can't be value-gated' caveat
-    (`sim_pq_trained_recall` stays as the Spark-ML production
-    canary). Green at sf0.001/0.01/0.1."""
-    from hrtech_etl_spark.functions import similarity as sim
-
-    e = load_table(spark, "embeddings", sf_dir)
-    cents = sim.kmeans_lloyd(
-        e, m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM, iters=_KM_ITERS
-    )
-    cb = sim.pq_codebook_from_kmeans(cents, m=_KM_M, ksub=_KM_KSUB)
-    enc = sim.pq_encode(e, cb, m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM)
-    q = e.where(F.col("vec_id") == 0)
-    return sim.pq_rerank_topk(
-        e, enc, cb, q, k=10, shortlist=100, m=_KM_M, dim=_KM_DIM
-    )
-
-
-# ---------------------------------------------------------------------------
 # Streaming signature-store ingest: micro-batches sign, probe, and grow
 # the persisted signature table (round 15 — the streaming sibling of
 # drop_near_duplicates_incremental for the federated signature regime)
@@ -7595,7 +6977,7 @@ def _stream_sigdedup_ctes(
     round, a doc drops iff it est-matches any KEPT doc of an earlier
     round (the store probe) or any lower-id store-probe SURVIVOR of
     its own round (the within-batch rule — non-transitive by design,
-    matching the sink). The rounds unroll as CTEs (the BPE/kmeans
+    matching the sink). The rounds unroll as CTEs (the BPE training
     technique applied to order-dependent streaming state); pair
     candidacy and the matching-fraction estimator replay the
     dedup_signature_merge fragments verbatim. Returns ``(ctes,
@@ -7988,96 +7370,6 @@ def corpus_prepare_training_v3(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Trained-PQ serving from a PERSISTED codebook (round 16 — the
-# production train-once/serve-many shape behind sim_pq_lloyd_serve)
-# ---------------------------------------------------------------------------
-
-#: (applicationId, sf_dir, m, ksub, dim, iters) → persisted codebook
-#: table path. Same per-app artifact-cache contract as _LSH_INDEX_DIRS
-#: (own lock, built once, removed at interpreter exit, inputs
-#: immutable per app): the 5-iteration Lloyd training is the expensive
-#: step the serving gates exist to NOT repeat, so warm invocations
-#: must go straight to the store. Geometry is part of the key — the
-#: PQ serve (m=8 subspace quantizer) and the IVF serve (m=1
-#: full-vector coarse quantizer) each train and persist their own
-#: artifact.
-_CB_DIRS: dict[tuple, str] = {}
-_CB_LOCK = _threading.Lock()
-
-
-def _trained_codebook_path(
-    spark, sf_dir: str, *, m: int, ksub: int, dim: int, iters: int
-) -> str:
-    """Train-once half of the serving gates: the first call per
-    (applicationId, sf_dir, geometry) runs the deterministic Lloyd
-    trainer, adapts the centroid grid into the ``__cb`` artifact, and
-    persists it through :func:`~hrtech_etl_spark.functions.similarity.
-    write_codebook_table` (geometry tag pinned per row); every later
-    call returns the stored path untouched — exactly the lifecycle a
-    production fleet runs, where training is a scheduled job and
-    serving only ever reads the artifact."""
-    key = (spark.sparkContext.applicationId, sf_dir, m, ksub, dim, iters)
-    with _CB_LOCK:
-        path = _CB_DIRS.get(key)
-        if path is None:
-            import atexit
-            import os
-            import shutil
-            import tempfile
-
-            from hrtech_etl_spark.functions import similarity as sim
-
-            root = tempfile.mkdtemp(prefix="trained_codebook_")
-            # register cleanup BEFORE building: a failed write must
-            # not leak the directory past process exit
-            atexit.register(shutil.rmtree, root, ignore_errors=True)
-            path = os.path.join(root, "cb")
-            e = load_table(spark, "embeddings", sf_dir)
-            cents = sim.kmeans_lloyd(
-                e, m=m, ksub=ksub, dim=dim, iters=iters
-            )
-            cb = sim.pq_codebook_from_kmeans(cents, m=m, ksub=ksub)
-            sim.write_codebook_table(cb, path)
-            _CB_DIRS[key] = path
-    return path
-
-
-@query("sim_pq_serve_from_store", sql=_pq_lloyd_serve_sql())
-def sim_pq_serve_from_store(spark, sf_dir):
-    """The PRODUCTION shape of the trained-PQ cascade: train once,
-    persist the codebook, serve many — `sim_pq_lloyd_serve`'s exact
-    answer produced WITHOUT retraining. The Lloyd fit runs a single
-    time per session and lands as a parquet codebook table
-    (functions/similarity.py::write_codebook_table — version+geometry
-    tag pinned per row, the signature-table contract applied to the
-    quantizer artifact); every invocation of THIS query then
-    read_codebook_table's the stored grid back (tag guard riding the
-    scan, full-grid + centroid-width validation) and runs the
-    unchanged serving cascade: pq_encode → pq_adc_topk shortlist →
-    exact re-rank. The oracle is the SAME statement as
-    sim_pq_lloyd_serve — training replayed in SQL — which is the
-    point: the gate proves the persisted artifact serves the answer
-    the training math defines, while the query's own cost is the
-    serve path alone (~1s warm vs ~5s retraining). Closes the r15
-    'gate-shaped vs production-shaped' gap (VERDICT r15 next-round
-    #1). Green at sf0.001/0.01/0.1."""
-    from hrtech_etl_spark.functions import similarity as sim
-
-    path = _trained_codebook_path(
-        spark, sf_dir, m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM, iters=_KM_ITERS
-    )
-    cb = sim.read_codebook_table(
-        spark, path, m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM
-    )
-    e = load_table(spark, "embeddings", sf_dir)
-    enc = sim.pq_encode(e, cb, m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM)
-    q = e.where(F.col("vec_id") == 0)
-    return sim.pq_rerank_topk(
-        e, enc, cb, q, k=10, shortlist=100, m=_KM_M, dim=_KM_DIM
-    )
-
-
-# ---------------------------------------------------------------------------
 # Streaming capstone slice: micro-batch corpus ingest over the growing
 # signature store (round 16 — the capstone family's streaming story)
 # ---------------------------------------------------------------------------
@@ -8168,96 +7460,6 @@ def stream_corpus_ingest(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Trained-IVF serving from the PERSISTED codebook store (round 16 —
-# the train-once/serve-many shape for the coarse quantizer, closing
-# the r15 optional: IVF train -> persist -> serve, value-gated)
-# ---------------------------------------------------------------------------
-
-#: IVF coarse quantizer = kmeans_lloyd with ONE subspace (m=1): the
-#: "subspace" is the full 64-dim vector, so the trained grid IS the
-#: centroid table train_ivf_centroids produces with Spark-ML — but
-#: deterministic and engine-portable, hence value-gateable end to end.
-_IVF_KSUB, _IVF_NPROBE = 16, 2
-
-
-def _ivf_lloyd_serve_sql(
-    ksub: int = _IVF_KSUB,
-    dim: int = _KM_DIM,
-    iters: int = _KM_ITERS,
-    nprobe: int = _IVF_NPROBE,
-    k: int = 10,
-) -> str:
-    """DuckDB replay of the trained-IVF serving cascade: the shared
-    `_kmeans_lloyd_ctes` rounds at m=1 train the full-vector coarse
-    centroids (it{iters} — 16 x 64-dim round-6 arrays), which then
-    drive the sim_ivf_topk serving fragments VERBATIM with the seed
-    table swapped for the trained one: rounded-cosine argmax
-    assignment (row_number tie-break on cid), the query's nprobe
-    nearest lists, exact cosine + top-k inside them."""
-    ctes, _ = _kmeans_lloyd_ctes(1, ksub, dim, iters)
-    cos_c = cosine_sql("e.v", "cq.cvec")
-    ctes = ctes + [
-        f"cq AS MATERIALIZED (SELECT cid, c AS cvec FROM it{iters})",
-        f"asg AS (SELECT vec_id, v, cid FROM ("
-        f"SELECT e.vec_id, e.v, cq.cid, row_number() OVER ("
-        f"PARTITION BY e.vec_id ORDER BY {cos_c} DESC, cq.cid) AS rn "
-        f"FROM e CROSS JOIN cq) WHERE rn = 1)",
-        f"qlists AS (SELECT cid, v AS qv FROM ("
-        f"SELECT cq.cid, e.v, row_number() OVER ("
-        f"ORDER BY {cos_c} DESC, cq.cid) AS rn "
-        f"FROM e CROSS JOIN cq WHERE e.vec_id = 0) WHERE rn <= {nprobe})",
-    ]
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"\nSELECT a.vec_id AS vec_id, {cosine_sql('a.v', 'q.qv')} AS "
-        f"score FROM asg a JOIN qlists q ON a.cid = q.cid "
-        f"ORDER BY score DESC, a.vec_id LIMIT {k}"
-    )
-
-
-@query("sim_ivf_serve_from_store", sql=_ivf_lloyd_serve_sql())
-def sim_ivf_serve_from_store(spark, sf_dir):
-    """Trained-IVF ANN served from the PERSISTED codebook store —
-    the r15 optional closed with the round's two new contracts
-    composed: kmeans_lloyd at m=1 trains the full-vector coarse
-    quantizer ONCE per session (deterministic Lloyd — the
-    engine-portable sibling of train_ivf_centroids' Spark-ML fit),
-    the 16 x 64-dim grid persists through write_codebook_table
-    (tag ``cbv1:m1:k16:d64`` — the same artifact contract as the PQ
-    serve, different geometry), and every invocation reads it back
-    (tag guard riding the scan) into ivf_cosine_topk's ``centroids=``
-    table: rounded-cosine argmax assignment as a pure projection
-    (zero corpus shuffle), the query's 2 nearest lists probed, exact
-    cosine top-10 inside them. The oracle replays training at m=1
-    through the SHARED Lloyd CTE chain and the sim_ivf_topk serving
-    fragments with the seed table swapped for the trained grid — the
-    whole train→persist→serve path reproduced bit-for-bit by an
-    independent engine (sim_ivf_topk keeps gating the seed-quantizer
-    plan shape). Green at sf0.001/0.01/0.1."""
-    from hrtech_etl_spark.functions import similarity as sim
-
-    path = _trained_codebook_path(
-        spark, sf_dir, m=1, ksub=_IVF_KSUB, dim=_KM_DIM, iters=_KM_ITERS
-    )
-    cb = sim.read_codebook_table(
-        spark, path, m=1, ksub=_IVF_KSUB, dim=_KM_DIM
-    )
-    # the stored m=1 grid IS the (__cid, __cvec) quantizer table —
-    # a driver-side adapt of the few-KiB artifact, like the __cb build
-    grid = cb.collect()[0]["__cb"][0]
-    cents = spark.createDataFrame(
-        [(j, grid[j]) for j in range(_IVF_KSUB)],
-        "`__cid` INT, `__cvec` ARRAY<DOUBLE>",
-    )
-    e = load_table(spark, "embeddings", sf_dir)
-    q = e.where(F.col("vec_id") == 0)
-    return sim.ivf_cosine_topk(
-        e, q, k=10, n_centroids=_IVF_KSUB, nprobe=_IVF_NPROBE,
-        centroids=cents,
-    )
-
-
-# ---------------------------------------------------------------------------
 # Cross-stream federated merge: two independently-grown streaming
 # signature stores merged peer-to-peer (round 16 — the second r15
 # optional: the streaming ingest loop composed INTO the federated
@@ -8338,112 +7540,3 @@ def stream_federated_merge(spark, sf_dir):
     return dd.merged_signature_pairs(
         parts, "doc_id", threshold=0.5
     ).orderBy("id_a", "id_b")
-
-
-# ---------------------------------------------------------------------------
-# Trained-PQ serving from PERSISTED codes + codebook (round 16 — the
-# complete production serving store: train once, encode once, serve
-# many; the encode is the per-query cost sim_pq_serve_from_store
-# still pays)
-# ---------------------------------------------------------------------------
-
-def _trained_codes_path(spark, sf_dir: str) -> str:
-    """Encode-once half of the full serving store: reuses the trained
-    persisted codebook (:func:`_trained_codebook_path` — trains at
-    most once per session), encodes the corpus through it a single
-    time, and persists the codes via :func:`~hrtech_etl_spark.
-    functions.similarity.write_code_table` (same ``cb_meta`` family
-    tag as the codebook, so the serve-time reads prove the pair
-    belongs together). Cached per (applicationId, sf_dir, geometry)
-    in the shared `_CB_DIRS` registry under a 'codes' key."""
-    key = (
-        "codes", spark.sparkContext.applicationId, sf_dir,
-        _KM_M, _KM_KSUB, _KM_DIM, _KM_ITERS,
-    )
-    with _CB_LOCK:
-        path = _CB_DIRS.get(key)
-    if path is not None:
-        return path
-    # build OUTSIDE the lock: the encode is a full corpus pass, and
-    # _trained_codebook_path takes the same lock internally
-    cb_path = _trained_codebook_path(
-        spark, sf_dir, m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM,
-        iters=_KM_ITERS,
-    )
-    from hrtech_etl_spark.functions import similarity as sim
-
-    cb = sim.read_codebook_table(
-        spark, cb_path, m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM
-    )
-    e = load_table(spark, "embeddings", sf_dir)
-    # materialize the encode EAGERLY before re-taking the lock: the
-    # full-corpus argmin pass is the multi-second stage, and running
-    # it under the global registry lock would serialize unrelated
-    # keys' first builds behind it (the codes are vec_id + m ints per
-    # row — small even materialized). Inside the lock only the cheap
-    # dump of the checkpointed partitions and the registration run.
-    enc = (
-        sim.pq_encode(e, cb, m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM)
-        .select("vec_id", "__codes")
-        .localCheckpoint(eager=True)
-    )
-    candidate = cb_path + "_codes"
-    with _CB_LOCK:
-        path = _CB_DIRS.get(key)
-        if path is None:
-            try:
-                sim.write_code_table(
-                    enc, candidate, id_col="vec_id",
-                    m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM,
-                )
-            except Exception:
-                # a failed write can leave partial output at the
-                # candidate path; under the default mode="error" every
-                # later retry in the session would then wedge on "path
-                # already exists" — clean the debris so retries work
-                import shutil
-
-                shutil.rmtree(candidate, ignore_errors=True)
-                raise
-            _CB_DIRS[key] = path = candidate
-    return path
-
-
-@query("sim_pq_serve_codes_from_store", sql=_pq_lloyd_serve_sql())
-def sim_pq_serve_codes_from_store(spark, sf_dir):
-    """The COMPLETE production PQ serving store: train once, ENCODE
-    ONCE, serve many. `sim_pq_serve_from_store` eliminated the
-    per-query training but still re-encodes the whole corpus on
-    every call — at billions of vectors that encode pass IS the
-    query cost. Here the corpus codes are persisted next to the
-    codebook (functions/similarity.py::write_code_table — 4 bytes of
-    codes per vector at m=8/nbits=4, the same version+geometry
-    ``cb_meta`` tag pinned per row so the serve-time reads prove the
-    codes and codebook belong to one trained family), and a query
-    is exactly what a serving fleet runs: read the codebook
-    artifact, scan ONLY ``(vec_id, __codes)`` of the stored code
-    table (column-pruned — m bytes/row, never the raw vectors),
-    ADC-shortlist, then fetch just the shortlist's raw vectors for
-    the exact re-rank. Same oracle as the other two serve gates —
-    the training and encode replay in SQL — so the stored artifacts
-    are proven to serve the answer the math defines. Green at
-    sf0.001/0.01/0.1."""
-    from hrtech_etl_spark.functions import similarity as sim
-
-    cb_path = _trained_codebook_path(
-        spark, sf_dir, m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM,
-        iters=_KM_ITERS,
-    )
-    codes_path = _trained_codes_path(spark, sf_dir)
-    cb = sim.read_codebook_table(
-        spark, cb_path, m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM
-    )
-    codes = sim.read_code_table(
-        spark, codes_path, id_col="vec_id",
-        m=_KM_M, ksub=_KM_KSUB, dim=_KM_DIM,
-    )
-    e = load_table(spark, "embeddings", sf_dir)
-    q = e.where(F.col("vec_id") == 0)
-    return sim.pq_rerank_topk(
-        e, codes, cb, q, k=10, shortlist=100, m=_KM_M, dim=_KM_DIM
-    )

@@ -1,9 +1,9 @@
 """Registry entries checked against their DuckDB oracles at sf0.001 —
 the same comparison as ``tools/oracle_check.py`` (row count, sorted
 column names, order-insensitive value hash), run inside the suite for
-the entries whose operators lost an option or a code path: the store
-readers, the cluster rounds, the global-rank plan and the media
-feature kernel."""
+the entries whose operators lost an option or a code path: the cluster
+rounds, the global-rank plan, the media feature kernel and the
+similarity module (cosine scoring and the shared coarse quantizer)."""
 
 from __future__ import annotations
 
@@ -16,9 +16,9 @@ from tools.oracle_check import result_hash
 ENTRIES = [
     "dedup_clusters",
     "corpus_leakage_safe_split",
-    "sim_pq_serve_from_store",
-    "sim_ivf_serve_from_store",
-    "sim_pq_serve_codes_from_store",
+    "sim_cosine_topk_batch",
+    "dedup_semantic_prune",
+    "corpus_prepare_training_v2",
     "events_rfm_segments",
     "window_rank_suite",
     "multimodal_binary_meta",

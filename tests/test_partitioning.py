@@ -160,7 +160,6 @@ def test_cosine_topk_still_spreads_narrow_scan(spark):
 def test_lsh_topk_no_roundrobin_on_wide_scan(spark, wide_emb):
     q = wide_emb.where(F.col("vec_id") == 0)
     assert _roundrobins(sim.lsh_cosine_topk(wide_emb, q, k=10)) == 0
-    assert _roundrobins(sim.lsh_multiprobe_topk(wide_emb, q, k=10)) == 0
 
 
 def test_ivf_topk_no_roundrobin_on_wide_scan(spark, wide_emb):

@@ -30,18 +30,20 @@ from hrtech_etl_spark.workload import REGISTRY
 # (recorded per-round in commit messages; VERDICT r7-r9 verify it).
 FIRST50_MD5 = "a312d1e4b34339ba6573db257c4f2694"
 
-# Hash of the full 93-entry prefix at the end of round 9. Appending
-# entry 94+ keeps positions 0..92 stable, so this never needs to
-# change; it only fails if an existing entry is renamed, removed, or
-# reordered.
-R9_PREFIX_LEN = 93
-R9_PREFIX_MD5 = "899ee0173155e7559b7ee7a40b4e18fb"
+# Hash of the round-9 prefix: the 93 entries registered by the end of
+# round 9, minus the four ANN-serving entries removed since (named in
+# CHANGES.md); the surviving 89 keep their order. Appending new entries
+# leaves it unchanged; it fails if an entry in it is renamed, removed
+# or reordered without a deliberate re-pin.
+R9_PREFIX_LEN = 89
+R9_PREFIX_MD5 = "924af5c735b3ca50a853a1ffbac967c7"
 
 # Same contract, advanced to the end of round 10: 156 entries, minus
-# the six media-codec and perceptual-hash entries removed since (named
-# in CHANGES.md); the surviving 150 keep their order.
-R10_PREFIX_LEN = 150
-R10_PREFIX_MD5 = "e021109dbb65374aac000e4111443b54"
+# the six media-codec and perceptual-hash entries and the eleven
+# ANN-serving entries removed since (named in CHANGES.md); the
+# surviving 143 keep their order.
+R10_PREFIX_LEN = 143
+R10_PREFIX_MD5 = "144bd69189a07c29e92fea0a52177cbb"
 
 
 def _names() -> list[str]:
@@ -116,6 +118,16 @@ def test_registry_names_unique_and_nonempty():
 
 
 TOOLS_DIR = pathlib.Path(__file__).resolve().parent.parent / "tools"
+
+
+def test_explain_audit_defaults_are_registered():
+    """tools/explain_audit.py's default query list names live entries,
+    so retiring an entry cannot leave the tool's default run failing
+    on a missing name."""
+    from tools.explain_audit import DEFAULT
+
+    missing = [n for n in DEFAULT if n not in REGISTRY]
+    assert not missing, f"explain_audit DEFAULT names unknown entries: {missing}"
 
 
 @pytest.mark.parametrize(

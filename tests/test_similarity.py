@@ -48,162 +48,37 @@ def test_ivf_probes_fraction_of_corpus(spark):
     assert full == exact
 
 
-def test_ivf_trained_centroids(spark):
-    """Trained k-means quantizer swaps into the same plan: the query's
-    own list is probed (self-match survives at similarity 1.0), and
-    probing ALL trained lists recovers the exact brute-force answer."""
-    import pytest
-
-    pytest.importorskip("pyspark.ml")
-    e = _emb(spark)
-    q = e.where(F.col("vec_id") == 0)
-    cents = sim.train_ivf_centroids(e, n_centroids=8)
-    assert cents.count() == 8
-    rows = sim.ivf_cosine_topk(e, q, k=10, nprobe=2, centroids=cents).collect()
-    assert rows[0]["vec_id"] == 0 and abs(rows[0]["score"] - 1.0) < 1e-6
-    exact = [r["vec_id"] for r in sim.cosine_topk(e, q, k=10).collect()]
-    full = [
-        r["vec_id"]
-        for r in sim.ivf_cosine_topk(e, q, k=10, nprobe=8, centroids=cents).collect()
+def test_zero_norm_vector_scores_null(spark):
+    """A zero-norm embedding has no direction: its cosine is NULL (the
+    DuckDB oracle's 0.0/0.0), not a DIVIDE_BY_ZERO under ANSI mode. It
+    ranks after every scored row and pairs with nothing."""
+    rows = [
+        (0, "a", [1.0, 0.0, 0.0]),
+        (1, "a", [0.0, 0.0, 0.0]),
+        (2, "a", [1.0, 0.1, 0.0]),
+        (3, "a", [0.0, 1.0, 0.0]),
     ]
-    assert full == exact
-
-
-def test_lsh_multiprobe_improves_recall(spark):
-    """Multiprobe recall@k vs brute force is monotone in the probe
-    count (each extra probe only adds candidates), never below the
-    single-bucket baseline, and deterministic. n_probes=1 must equal
-    the single-bucket operator exactly."""
-    e = _emb(spark)
-    q = e.where(F.col("vec_id") == 0)
-    exact = [r["vec_id"] for r in sim.cosine_topk(e, q, k=10).collect()]
-
-    def recall(ids):
-        return len(set(ids) & set(exact)) / len(exact)
-
-    single = [r["vec_id"] for r in sim.lsh_cosine_topk(e, q, k=10).collect()]
-    one = [r["vec_id"] for r in sim.lsh_multiprobe_topk(e, q, k=10, n_probes=1).collect()]
-    assert one == single
-    recalls = []
-    for n in (1, 3, 5):  # bits=4 → up to base + 4 single-bit flips
-        got = [
-            r["vec_id"]
-            for r in sim.lsh_multiprobe_topk(e, q, k=10, n_probes=n).collect()
-        ]
-        recalls.append(recall(got))
-        assert got[0] == 0  # self-match always survives (own bucket probed)
-    assert recalls == sorted(recalls)  # monotone in probe count
-    assert recalls[-1] >= recall(single)
-
-    multi = [r["vec_id"] for r in sim.lsh_multiprobe_topk(e, q, k=10, n_probes=3).collect()]
-    again = [r["vec_id"] for r in sim.lsh_multiprobe_topk(e, q, k=10, n_probes=3).collect()]
-    assert multi == again
-
-
-def test_random_projection_matches_numpy(spark):
-    """Exact replication of the seeded Achlioptas projection in numpy
-    — the strongest possible check of matrix derivation, fold order,
-    and scaling."""
-    import math
-
-    import numpy as np
-
-    from hrtech_etl_spark.functions.similarity import (
-        achlioptas_matrix,
-        random_projection,
-    )
-
-    rng = np.random.RandomState(42)
-    vecs = [(i, [float(np.float32(x)) for x in rng.randn(64)]) for i in range(20)]
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
-    out = {r["vec_id"]: [r[f"y{j}"] for j in range(8)]
-           for r in random_projection(df, "embedding", "vec_id").collect()}
-    m = achlioptas_matrix(out_dim=8, dim=64, seed=5)
-    scale = math.sqrt(3.0 / 8)
-    for i, v in vecs:
-        for j in range(8):
-            acc = 0.0
-            for d in range(64):
-                if m[j][d] == 1:
-                    acc += v[d]
-                elif m[j][d] == -1:
-                    acc -= v[d]
-            assert out[i][j] == round(scale * acc, 6), (i, j)
-    # sparsity is near the 1/3 design point
-    nz = sum(1 for row in m for e in row if e != 0)
-    assert 0.2 < nz / (8 * 64) < 0.5
-
-
-def test_random_projection_preserves_distances_roughly(spark):
-    """JL property smoke: projected pairwise distances correlate with
-    the originals (k=16 for a tighter bound)."""
-    import numpy as np
-
-    from hrtech_etl_spark.functions.similarity import random_projection
-
-    # clustered data: iid Gaussian distances CONCENTRATE in 64-d (all
-    # pairs ~sqrt(2d)), leaving nothing to correlate — real corpora
-    # (and this test) have cluster structure with varying distances
-    rng = np.random.RandomState(7)
-    centers = rng.randn(5, 64) * np.arange(1, 6)[:, None]
-    X = np.array([centers[i % 5] + 0.3 * rng.randn(64) for i in range(30)])
     df = spark.createDataFrame(
-        [(i, [float(x) for x in X[i]]) for i in range(30)],
-        "vec_id long, embedding array<float>",
+        rows, "vec_id long, label string, embedding array<float>"
     )
-    out = random_projection(df, "embedding", "vec_id", out_dim=16).collect()
-    Y = np.array([[r[f"y{j}"] for j in range(16)]
-                  for r in sorted(out, key=lambda r: r["vec_id"])])
-    d_orig, d_proj = [], []
-    for a in range(0, 30, 3):
-        for b in range(a + 1, 30, 7):
-            d_orig.append(np.linalg.norm(X[a] - X[b]))
-            d_proj.append(np.linalg.norm(Y[a] - Y[b]))
-    corr = np.corrcoef(d_orig, d_proj)[0, 1]
-    assert corr > 0.5, corr
+    q = df.where(F.col("vec_id") == 0)
+    top = [(r["vec_id"], r["score"]) for r in sim.cosine_topk(df, q, k=4).collect()]
+    assert [i for i, _ in top] == [0, 2, 3, 1]
+    assert top[0][1] == 1.0 and top[-1][1] is None
 
+    batch = sim.cosine_topk_batch(df, df.where(F.col("vec_id") < 2), k=4)
+    by_q: dict[int, list] = {}
+    for r in batch.orderBy("query_id", F.col("score").desc(), "vec_id").collect():
+        by_q.setdefault(r["query_id"], []).append((r["vec_id"], r["score"]))
+    assert [i for i, _ in by_q[0]] == [0, 2, 3, 1] and by_q[0][-1][1] is None
+    # the zero vector as the query scores NULL against everything
+    assert by_q[1] == [(0, None), (1, None), (2, None), (3, None)]
 
-def test_random_projection_zero_shuffle_plan(spark):
-    from hrtech_etl_spark.functions.similarity import random_projection
-
-    df = spark.createDataFrame(
-        [(1, [float(i) for i in range(64)])],
-        "vec_id long, embedding array<float>",
-    )
-    plan = (
-        random_projection(df, "embedding", "vec_id")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan
-
-
-def test_mmr_pool_smaller_than_k_returns_partial(spark):
-    # regression (round-11 ADVICE): shortlist/corpus < k used to crash
-    # with TypeError (best is None) in the greedy loop
-    e = _emb(spark).where(F.col("vec_id") < 4)  # pool of 4
-    q = e.where(F.col("vec_id") == 0)
-    rows = sim.mmr_topk(e, q, k=10, shortlist=30).collect()
-    assert len(rows) == 4
-    assert [r["step"] for r in rows] == [1, 2, 3, 4]
-    assert len({r["vec_id"] for r in rows}) == 4
-
-
-def test_mmr_shortlist_caps_pool(spark):
-    e = _emb(spark)
-    q = e.where(F.col("vec_id") == 0)
-    rows = sim.mmr_topk(e, q, k=10, shortlist=3).collect()
-    assert len(rows) == 3
-
-
-def test_mmr_empty_corpus_raises(spark):
-    import pytest
-
-    e = _emb(spark).where(F.col("vec_id") < 0)
-    q = _emb(spark).where(F.col("vec_id") == 0)
-    with pytest.raises(ValueError, match="empty"):
-        sim.mmr_topk(e, q, k=5)
+    pairs = {
+        (r["id_a"], r["id_b"])
+        for r in sim.embedding_near_dup_pairs(df, threshold=0.0).collect()
+    }
+    assert pairs == {(0, 2), (0, 3), (2, 3)}
 
 
 def test_semantic_dedup_hand_checked(spark):
@@ -256,7 +131,7 @@ def test_semantic_dedup_empty_quantizer_raises(spark):
         semantic_dedup(df, n_centroids=8, threshold=0.9).collect()
 
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 
@@ -270,7 +145,8 @@ def _r6(x: float) -> float:
 
 
 def _cos(a, b):
-    """cosine() twin: LEFT-fold dot/norms (F.aggregate order), round 6."""
+    """cosine() twin: LEFT-fold dot/norms (F.aggregate order), round 6;
+    None (SQL NULL) when either vector has zero norm."""
     import math
 
     dot = 0.0
@@ -282,10 +158,17 @@ def _cos(a, b):
     nb = 0.0
     for y in b:
         nb = nb + y * y
-    return _r6(dot / (math.sqrt(na) * math.sqrt(nb)))
+    den = math.sqrt(na) * math.sqrt(nb)
+    return None if den == 0.0 else _r6(dot / den)
+
+
+def _null_first(x):
+    """Spark's struct order for a possibly-NULL field: NULL sorts first."""
+    return (x is not None, x)
 
 
 @settings(max_examples=8, deadline=None)
+@example(data=[[0, 0, 0], [1, 2, 0], [1, 2, 1], [0, 0, 0]], k=2, tau_i=5)
 @given(
     data=st.lists(
         st.lists(st.integers(-3, 3), min_size=3, max_size=3),
@@ -298,12 +181,13 @@ def _cos(a, b):
 def test_semantic_dedup_matches_bruteforce(spark, data, k, tau_i):
     """Property: semantic_dedup == a pure-Python union-find reference
     (same rounded-6 cosine, same argmax/keep tie-breaks) on arbitrary
-    small integer vectors (a constant 1-dim appended so no vector is
-    zero-norm)."""
+    small integer vectors, zero vectors included: a NULL cosine passes
+    no threshold and, in the struct-ordered argmax and keep rule, sorts
+    before every real one."""
     from hrtech_etl_spark.functions.similarity import semantic_dedup
 
     tau = tau_i / 10.0
-    vecs = {i: [float(x) for x in v] + [1.0] for i, v in enumerate(data)}
+    vecs = {i: [float(x) for x in v] for i, v in enumerate(data)}
     rows = [(i, v) for i, v in vecs.items()]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     got = {
@@ -316,9 +200,9 @@ def test_semantic_dedup_matches_bruteforce(spark, data, k, tau_i):
     assign, csim = {}, {}
     for i, v in vecs.items():
         best = max(
-            ((_cos(v, cv), -c) for c, cv in cents.items())
+            ((_null_first(_cos(v, cv)), -c) for c, cv in cents.items())
         )
-        assign[i], csim[i] = -best[1], best[0]
+        assign[i], csim[i] = -best[1], best[0][1]
     parent = {i: i for i in vecs}
 
     def find(x):
@@ -329,13 +213,15 @@ def test_semantic_dedup_matches_bruteforce(spark, data, k, tau_i):
 
     for i in vecs:
         for j in vecs:
-            if i < j and assign[i] == assign[j] and _cos(vecs[i], vecs[j]) >= tau:
-                parent[find(j)] = find(i)
+            if i < j and assign[i] == assign[j]:
+                s = _cos(vecs[i], vecs[j])
+                if s is not None and s >= tau:
+                    parent[find(j)] = find(i)
     comp = {i: min(j for j in vecs if find(j) == find(i)) for i in vecs}
     keep_of = {}
     for c in set(comp.values()):
         members = [i for i in vecs if comp[i] == c]
-        keep_of[c] = min(members, key=lambda i: (csim[i], i))
+        keep_of[c] = min(members, key=lambda i: (_null_first(csim[i]), i))
     want = {i: (assign[i], comp[i], i == keep_of[comp[i]]) for i in vecs}
     assert got == want
 

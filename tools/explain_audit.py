@@ -55,7 +55,6 @@ DEFAULT = [
     "profile_documents",
     "layout_zorder_key",
     "dedup_incremental",
-    "sim_pq_topk",
     "etl_scd2_history",
     "join_bloom_semi",
     "join_fuzzy_editdist",
@@ -67,7 +66,6 @@ DEFAULT = [
     "corpus_temperature_mix",
     "text_kl_divergence",
     "text_ccnet_buckets",
-    "sim_random_projection",
     "agg_correlated_subquery",
     "corpus_weighted_sample",
     # round 10, session 3

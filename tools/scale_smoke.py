@@ -24,15 +24,7 @@ and drive the corpus-scale pipeline end to end with all knobs on:
 4. ``remove_boilerplate`` over the full corpus (the C4/CCNet segment
    pass, same knobs as the gated query);
 5. ``shuffled_shards`` — the seeded reproducible corpus shuffle+shard,
-   with per-shard skew reported;
-6. the ANN SERVING PATH over a replicated embedding corpus
-   (``--vec-copies``, default 50 → 100k vectors at sf0.1; 500 → the
-   1M-vector run recorded in README): SRP multiprobe top-k, PQ
-   codebook + encode with the code table persisted to parquet (the
-   stored-codes deployment), and the ADC-shortlist → exact-rerank
-   cascade over the stored codes. Replicas carry a deterministic
-   per-copy jitter so the vector space has real structure instead of
-   500-deep exact ties.
+   with per-shard skew reported.
 
 Each stage prints wall time plus the Spark job/stage count it ran
 (via job groups + the status tracker) and, where the output is a
@@ -42,9 +34,9 @@ that adds stages with data volume is broken at 100 TB), and peak
 partition rows grow ~linearly (no single-partition collapse).
 
     python tools/scale_smoke.py [--sf-dir DIR] [--copies N]
-        [--vec-copies N] [--graph-copies N] [--only docs,ann,cdc,graph]
+        [--graph-copies N] [--only docs,cdc,graph]
 
-``--only`` selects stage groups (``docs`` = 1-5, ``ann`` = 6,
+``--only`` selects stage groups (``docs`` = 1-5,
 ``cdc`` = content-defined chunking over the replicated corpus,
 ``graph`` = PageRank over a replicated co-occurrence graph,
 ``skew`` = the salted agg/join paths under a 30% single-key hot spot
@@ -137,9 +129,8 @@ def main() -> None:
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--copies", type=int, default=20)
     ap.add_argument("--batch-size", type=int, default=5_000)
-    ap.add_argument("--vec-copies", type=int, default=50)
     ap.add_argument("--graph-copies", type=int, default=5)
-    ap.add_argument("--only", default="docs,ann")
+    ap.add_argument("--only", default="docs")
     ap.add_argument("--skew-rows", type=int, default=10_000_000)
     ap.add_argument("--rank-rows", type=int, default=10_000_000)
     ap.add_argument("--sem-copies", type=int, default=50)
@@ -155,8 +146,6 @@ def main() -> None:
     try:
         if "docs" in groups:
             run_doc_stages(spark, meter, args, root)
-        if "ann" in groups:
-            run_ann_stages(spark, meter, args, root)
         if "cdc" in groups:
             run_cdc_stage(spark, meter, args, root)
         if "graph" in groups:
@@ -337,89 +326,6 @@ def run_doc_stages(spark, meter, args, root) -> None:
         f"  {sum(sizes)} rows over {len(sizes)} shards, "
         f"min={sizes[0]:,} max={sizes[-1]:,} "
         f"(skew {sizes[-1] / max(1, sizes[0]):.2f}x)",
-        flush=True,
-    )
-
-
-def run_ann_stages(spark, meter, args, root) -> None:
-    # --- ANN serving path over a replicated vector corpus ------------
-    from hrtech_etl_spark.functions import similarity as sim
-
-    base_emb = load_table(spark, "embeddings", args.sf_dir).select(
-        "vec_id", "embedding"
-    )
-    n_vec_base = base_emb.count()
-    # deterministic per-copy, per-dim jitter: replicas get real
-    # spatial structure (exact ties would make every replica set one
-    # degenerate ANN cluster); sin(copy*(i+1))*0.01 is tiny next to
-    # unit-scale components and identical across runs
-    vecs = (
-        base_emb.crossJoin(
-            spark.range(args.vec_copies).select(
-                F.col("id").alias("__copy")
-            )
-        )
-        .select(
-            (F.col("vec_id") + F.col("__copy") * STRIDE).alias("vec_id"),
-            F.transform(
-                "embedding",
-                lambda x, i: (
-                    x.cast("double")
-                    + F.sin(F.col("__copy") * (i + 1)) * F.lit(0.01)
-                ).cast("float"),
-            ).alias("embedding"),
-        )
-    )
-    # A real stored corpus arrives as MANY parquet splits (one task
-    # each); the synthetic crossJoin inherits the single base-file
-    # split, which would serialize the per-vector encode kernel.
-    # Spread it like stored data before measuring.
-    vecs = vecs.repartition(64, "vec_id")
-    n_vecs = n_vec_base * args.vec_copies
-    print(
-        f"vectors: {n_vec_base} base x {args.vec_copies} = {n_vecs:,}",
-        flush=True,
-    )
-    q = vecs.where(F.col("vec_id") == 0)
-
-    top, dt = meter.run(
-        "ann srp-multiprobe topk",
-        lambda: sim.lsh_multiprobe_topk(
-            vecs, q, k=10, n_probes=3
-        ).collect(),
-    )
-    print(
-        f"  top-10 over {n_vecs:,} vectors, 3 of 16 buckets probed "
-        f"({n_vecs / dt:,.0f} vec/s incl. bucket scan)",
-        flush=True,
-    )
-
-    cb = sim.pq_codebook(vecs)
-
-    def encode_write() -> tuple[int, int]:
-        sim.pq_encode(vecs, cb).write.parquet(f"{root}/codes")
-        return partition_stats(spark.read.parquet(f"{root}/codes"))
-
-    (enc_rows, enc_peak), dt = meter.run(
-        "ann pq encode+write", encode_write
-    )
-    print(
-        f"  {enc_rows:,} vectors -> 8-byte codes on parquet "
-        f"({enc_rows / dt:,.0f} vec/s; peak partition rows="
-        f"{enc_peak:,})",
-        flush=True,
-    )
-    codes = spark.read.parquet(f"{root}/codes")
-
-    _, dt = meter.run(
-        "ann pq adc+rerank",
-        lambda: sim.pq_rerank_topk(
-            vecs, codes, cb, q, k=10, shortlist=100
-        ).collect(),
-    )
-    print(
-        f"  ADC scan of {n_vecs:,} stored codes -> shortlist 100 -> "
-        f"exact rerank top-10 ({n_vecs / dt:,.0f} vec/s)",
         flush=True,
     )
 
