@@ -1047,448 +1047,6 @@ def drop_near_duplicates_incremental(
 
 
 # ---------------------------------------------------------------------------
-# Mergeable signature tables (cross-corpus / federated dedup)
-# ---------------------------------------------------------------------------
-
-def minhash_signature_table(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    num_hashes: int = 8,
-    shingle_k: int = 2,
-) -> DataFrame:
-    """The MERGEABLE dedup artifact: one row per document carrying just
-    ``(id, sig array<long>)`` — ``num_hashes`` longs (64 bytes at the
-    default 8) regardless of document size. A signature is a pure
-    function of the text (the portable md5+affine minhash family, same
-    values as :func:`minhash_lsh_pairs`), so per-shard tables computed
-    INDEPENDENTLY — different clusters, different ingest days,
-    different organizations — union into one logical index with zero
-    recomputation and zero text exchange; cross-corpus near-dup
-    detection then runs over the stored tables alone
-    (:func:`merged_signature_pairs`). This is the projection you ship
-    when even the hashed shingle sets (:func:`lsh_index`) are too
-    heavy to move; the price is ESTIMATED Jaccard (matching-minhash
-    fraction) instead of exact shingle verification. Empty-shingle
-    docs are dropped BEFORE the signature fold — they could never
-    match anyway, and the cheap ``size(sh) > 0`` predicate here is
-    what keeps any downstream null-guard from being pushed back into
-    the projection and re-running the interpreted minhash fold per
-    row (the round-13 minhash_lsh_pairs profiling find, −41%).
-
-    Reference parity: none — the reference engine has no dedup; this
-    extends the §2.10 dedup family to the federated/multi-corpus case
-    the incremental `lsh_index` covers for single-corpus ingest.
-    """
-    sh = shingle_table(
-        df, text_col, id_col, shingle_k=shingle_k, hashed=True,
-        materialize=False, drop_empty=True,
-    )
-    # drop_empty guarantees non-empty sets below the exchange, so no
-    # size(sh) > 0 re-filter — which Catalyst would push back down
-    # with the full shingle construction substituted in (r18)
-    sig = sh.select(
-        F.col(id_col),
-        minhash_signature(F.col("sh"), num_hashes, pre_hashed=True).alias(
-            "sig"
-        ),
-    )
-    return keyed_barrier(sig, id_col, factor=2)
-
-
-#: hash-family/schema version stamped into persisted signature tables —
-#: bump if the portable minhash math or the table layout ever changes
-#: incompatibly, so old stored shards fail loudly instead of silently
-#: merging under different signature semantics
-SIGNATURE_TABLE_VERSION = 1
-
-
-def _sig_meta_tag(num_hashes: int, shingle_k: int) -> str:
-    """The self-describing per-row tag a persisted signature table
-    carries: version + hash-family width + shingle size. Constant per
-    table, so parquet dictionary/RLE encodes it to ~nothing."""
-    return f"sigv{SIGNATURE_TABLE_VERSION}:h{num_hashes}:k{shingle_k}"
-
-
-def write_signature_table(
-    sig: DataFrame,
-    path: str,
-    *,
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    shingle_k: int = 2,
-    mode: str = "error",
-) -> None:
-    """Persist a :func:`minhash_signature_table` frame as parquet with
-    its hash-family parameters PINNED IN the data (a ``sig_meta``
-    string column — constant, so it compresses to nothing). This is
-    the federated contract's write half: shards sign locally, store
-    64 bytes/doc, and any later :func:`read_signature_table` of the
-    stored table must state the SAME (version, num_hashes, shingle_k)
-    or fail loudly. Without the pin, a shard signed under shingle_k=3
-    merged against k=2 tables would produce silently-garbage Jaccard
-    estimates — same width, different shingle space, nothing else to
-    catch it. Schema is asserted eagerly: exactly ``(id_col, sig
-    array<bigint>)``."""
-    from pyspark.sql import types as T
-
-    if set(sig.columns) != {id_col, "sig"}:
-        raise ValueError(
-            "write_signature_table: expected exactly columns "
-            f"({id_col!r}, 'sig'), got {sig.columns}"
-        )
-    stype = sig.schema["sig"].dataType
-    if not (
-        isinstance(stype, T.ArrayType)
-        and isinstance(stype.elementType, T.LongType)
-    ):
-        raise ValueError(
-            "write_signature_table: 'sig' must be array<bigint> "
-            f"(minhash_signature_table output), got {stype.simpleString()}"
-        )
-    # width guard ON THE WRITE: stamping h8 over 16-long arrays — a
-    # writer that forgot num_hashes= — would create a permanently
-    # mis-pinned table where NO read declaration works (the tag guard
-    # and the band width guard each point at the other parameter, a
-    # catch-22). TWO layers: the per-row raise_error below rides the
-    # write itself as the full net for mixed-width rows, and — ONLY
-    # under mode="overwrite", which DELETES the existing target before
-    # the job runs — an EAGER driver-side probe of the first non-NULL
-    # signature catches the forgot-the-param case BEFORE the old table
-    # is destroyed (one bounded first(), but it replays the full
-    # upstream signature lineage as an extra job — under the default
-    # mode="error"/"append" a failed write destroys nothing and the
-    # per-row net alone suffices, so skipping the probe saves a whole
-    # signature-lineage job on those writes; the streaming sinks write
-    # mode="overwrite", so their per-micro-batch probe still runs —
-    # cheap there only because the batch signature frame is
-    # localCheckpointed). NULL sigs stay writable (hand-built tables carry
-    # them; the merge paths defend them), only a wrong width raises.
-    if mode == "overwrite":
-        probe = (
-            sig.where(F.col("sig").isNotNull())
-            .select(F.size("sig").alias("__n"))
-            .first()
-        )
-        if probe is not None and probe["__n"] != num_hashes:
-            raise ValueError(
-                f"write_signature_table: signatures are {probe['__n']} "
-                f"long but num_hashes={num_hashes} was declared — pass "
-                "the num_hashes the signatures were built with (checked "
-                "BEFORE the write so an overwrite cannot destroy the "
-                "existing table)"
-            )
-    guarded_sig = F.when(
-        F.col("sig").isNull() | (F.size("sig") == num_hashes),
-        F.col("sig"),
-    ).otherwise(
-        F.array(
-            F.raise_error(
-                F.format_string(
-                    "write_signature_table: signature length %s != "
-                    f"declared num_hashes={num_hashes} — pass the "
-                    "num_hashes the signatures were built with, or "
-                    "the stored tag would mis-pin the table forever",
-                    F.size("sig").cast("string"),
-                )
-            ).cast("long")
-        )
-    )
-    sig.select(
-        F.col(id_col),
-        guarded_sig.alias("sig"),
-        F.lit(_sig_meta_tag(num_hashes, shingle_k)).alias("sig_meta"),
-    ).write.mode(mode).parquet(path)
-
-
-def read_signature_table(
-    spark,
-    path: str,
-    *,
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    shingle_k: int = 2,
-    extra_cols: tuple = (),
-) -> DataFrame:
-    """Read a persisted signature table back for merging — the
-    federated contract's read half. The declared (version, num_hashes,
-    shingle_k) must match what :func:`write_signature_table` stamped:
-    the schema (presence + types of ``sig``/``sig_meta``) is checked
-    EAGERLY at the call, and the tag value is guarded per row on the
-    scan itself (the raise_error-on-projection pattern — no extra job,
-    fires on the first mismatched row). Returns ``(id_col, sig)``
-    ready for :func:`merged_signature_pairs`. ``extra_cols`` carries
-    named additional columns through (e.g. a ``batch=`` partition
-    column a store laid out per-ingest-batch discovers — the streaming
-    sink filters on it to probe only strictly-earlier batches)."""
-    from pyspark.sql import types as T
-
-    df = spark.read.parquet(path)
-    missing = {id_col, "sig", "sig_meta", *extra_cols} - set(df.columns)
-    if missing:
-        raise ValueError(
-            f"read_signature_table: {sorted(missing)} missing from "
-            f"{path} — not a write_signature_table output (pre-"
-            "versioned or foreign parquet; re-sign the shard)"
-        )
-    stype = df.schema["sig"].dataType
-    if not (
-        isinstance(stype, T.ArrayType)
-        and isinstance(stype.elementType, T.LongType)
-    ):
-        raise ValueError(
-            f"read_signature_table: 'sig' in {path} is "
-            f"{stype.simpleString()}, expected array<bigint>"
-        )
-    tag = _sig_meta_tag(num_hashes, shingle_k)
-    guarded = F.when(F.col("sig_meta") == tag, F.col("sig")).otherwise(
-        F.array(
-            F.raise_error(
-                F.format_string(
-                    "read_signature_table: stored tag %s != declared "
-                    f"{tag} — this table was signed under a different "
-                    "hash family; pass the num_hashes/shingle_k it "
-                    "was written with",
-                    F.coalesce(F.col("sig_meta"), F.lit("<null>")),
-                )
-            ).cast("long")
-        )
-    )
-    return df.select(
-        F.col(id_col), guarded.alias("sig"), *[F.col(c) for c in extra_cols]
-    )
-
-
-def _guarded_band_explode(num_hashes: int, rows_per_band: int):
-    """The shared band projection for STORED/persisted signature
-    columns: posexplode of the band buckets with (a) the NULL-sig
-    defense (posexplode of NULL emits no rows — without it concat_ws
-    would collapse every NULL signature into one shared md5('')
-    bucket) and (b) the width guard (a table persisted under a
-    different num_hashes banding only a prefix while the estimator
-    sums all positions would mis-scale est_jaccard past 1.0 — raise
-    loudly instead). Both ride the projection, never a filter — a
-    filter would be pushed into a live signature projection and
-    re-run the minhash fold per row (the round-13 trap)."""
-    return F.posexplode(
-        F.when(
-            F.col("sig").isNotNull()
-            & (F.size("sig") != F.lit(num_hashes)),
-            F.array(
-                F.raise_error(
-                    F.format_string(
-                        "signature table: stored signature length %s "
-                        f"!= num_hashes={num_hashes} — this table was "
-                        "built under a different hash-family width; "
-                        "pass num_hashes= matching the stored "
-                        "signatures (minhash_signature_table default "
-                        "is 8)",
-                        F.size("sig").cast("string"),
-                    )
-                ).cast("string")
-            ),
-        )
-        .when(
-            F.col("sig").isNotNull(),
-            F.array(*lsh_bands("sig", num_hashes, rows_per_band)),
-        )
-    )
-
-
-def _sig_match_fraction(num_hashes: int) -> Column:
-    """est_jaccard from two signature columns ``__sa``/``__sb``: the
-    fraction of matching minhash positions, the textbook unbiased
-    Jaccard estimator, round-4 (the oracle states the same sum of
-    position-equality flags over ``num_hashes``)."""
-    return F.round(
-        F.aggregate(
-            F.zip_with(
-                "__sa",
-                "__sb",
-                lambda x, y: F.when(x == y, F.lit(1)).otherwise(F.lit(0)),
-            ),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        ).cast("double")
-        / F.lit(float(num_hashes)),
-        4,
-    )
-
-
-def merged_signature_pairs(
-    parts: list[DataFrame],
-    id_col: str,
-    *,
-    threshold: float = 0.5,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    cross_shard_only: bool = True,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Cross-corpus near-duplicate pairs from persisted signature
-    tables ALONE — union the per-shard :func:`minhash_signature_table`
-    outputs, band the stored signatures, bucket-join, and score every
-    candidate by signature agreement: ``est_jaccard`` = fraction of
-    matching minhash positions, the textbook unbiased Jaccard
-    estimator. No text, no shingles, no rescans — the whole join moves
-    ``num_hashes`` longs per doc.
-
-    ``parts`` is the list of signature frames in shard order (each
-    gets its position as its shard tag); ``cross_shard_only`` keeps
-    only pairs spanning two shards (the federated question — each
-    shard already deduped itself). A doc stored in two shards under
-    the SAME id still pairs (ordered by shard), so re-ingested exact
-    copies surface with est 1.0. ``max_bucket_size`` is the same
-    hot-bucket valve as :func:`minhash_lsh_pairs`: a band bucket
-    holding more rows is shed (documented recall trade for
-    degenerate templates).
-
-    Returns ``(id_a, id_b, shard_a, shard_b, est_jaccard)`` with
-    ``est_jaccard >= threshold``, distinct.
-    """
-    tagged = [
-        p.select(
-            F.col(id_col), F.col("sig"), F.lit(i).cast("int").alias("__shard")
-        )
-        for i, p in enumerate(parts)
-    ]
-    merged = tagged[0]
-    for t in tagged[1:]:
-        merged = merged.unionByName(t)
-    # NULL-sig defense for hand-built/persisted tables rides the band
-    # projection, not a filter: posexplode of a NULL array emits no
-    # rows, so NULL-sig docs never band (without this, concat_ws would
-    # collapse every NULL signature into one shared md5('') bucket).
-    # A filter on sig here would be pushed into the signature
-    # projection and re-run the minhash fold per row — the round-13
-    # minhash_lsh_pairs trap; minhash_signature_table already emits no
-    # NULLs, so for in-plan composition this branch never fires.
-    banded = merged.select(
-        F.col(id_col),
-        "__shard",
-        "sig",
-        _guarded_band_explode(num_hashes, rows_per_band).alias(
-            "band_idx", "bucket"
-        ),
-    )
-    if max_bucket_size is not None:
-        sizes = banded.groupBy("band_idx", "bucket").count()
-        keep = sizes.where(F.col("count") <= max_bucket_size).drop("count")
-        banded = banded.join(keep, ["band_idx", "bucket"], "left_semi")
-    a, b = banded.alias("a"), banded.alias("b")
-    same_band = (F.col("a.band_idx") == F.col("b.band_idx")) & (
-        F.col("a.bucket") == F.col("b.bucket")
-    )
-    ordered = (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")) | (
-        (F.col(f"a.{id_col}") == F.col(f"b.{id_col}"))
-        & (F.col("a.__shard") < F.col("b.__shard"))
-    )
-    cand = (
-        a.join(b, same_band & ordered)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.__shard").alias("shard_a"),
-            F.col("b.__shard").alias("shard_b"),
-            F.col("a.sig").alias("__sa"),
-            F.col("b.sig").alias("__sb"),
-        )
-        .dropDuplicates(["id_a", "id_b", "shard_a", "shard_b"])
-    )
-    if cross_shard_only:
-        cand = cand.where(F.col("shard_a") != F.col("shard_b"))
-    return (
-        cand.withColumn("est_jaccard", _sig_match_fraction(num_hashes))
-        .where(F.col("est_jaccard") >= threshold)
-        .drop("__sa", "__sb")
-    )
-
-
-def signature_probe_pairs(
-    store_sig: DataFrame,
-    batch_sig: DataFrame,
-    id_col: str,
-    *,
-    threshold: float = 0.5,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    broadcast: str = "batch",
-) -> DataFrame:
-    """ASYMMETRIC signature probe: near-dup pairs between an ingest
-    batch and a persisted signature store. Under the default
-    ``broadcast="batch"`` the STORE IS NEVER SHUFFLED — its banded
-    projection stays a scan-side map, and the batch's bands (a few
-    buckets per doc) broadcast into the join, the same
-    zero-corpus-shuffle contract as
-    :func:`drop_near_duplicates_incremental`'s index probe.
-    :func:`merged_signature_pairs` is the symmetric peer-to-peer merge
-    (both sides band-shuffled); this is the 1000-batches-a-day path
-    where re-shuffling a 100 TB store per micro-batch would be the
-    bottleneck. Same hash-family guards, same estimator.
-
-    ``broadcast`` picks the join strategy by which side is actually
-    small — the default assumes a micro-batch, and a caller probing a
-    LARGE batch side (e.g. an entire corpus against a released-set
-    store) must not force its bands through the driver:
-
-    - ``"batch"`` (default): batch bands broadcast, store stays a
-      scan-side map — the streaming micro-batch shape.
-    - ``"store"``: store bands broadcast, the batch stays a scan-side
-      map — a huge corpus probed against a small external table.
-    - ``"none"``: plain shuffled band join (both sides hash-exchange
-      on ``(band_idx, bucket)``) — neither side fits the broadcast
-      limit; always safe, never driver-bound.
-
-    All three produce identical pairs; only the physical plan moves.
-
-    Returns ``(store_id, batch_id, est_jaccard)`` with ``est_jaccard
-    >= threshold``, one row per id pair. Ids may overlap between store
-    and batch (a re-ingested doc pairs with its stored self at est
-    1.0), and the store may legitimately hold SEVERAL rows under one
-    id (a re-ingest whose new text scored below threshold is kept
-    again under the same id by the streaming sink) — so every
-    candidate row is SCORED first and the pair takes the MAX estimate
-    across store rows. Deduplicating candidates by id pair before
-    scoring (the first cut of this function) let an arbitrary store
-    row's signature win and could nondeterministically miss a true
-    near-duplicate."""
-    if broadcast not in ("batch", "store", "none"):
-        raise ValueError(
-            f"broadcast must be 'batch', 'store' or 'none', got "
-            f"{broadcast!r}"
-        )
-    sb = store_sig.select(
-        F.col(id_col).alias("store_id"),
-        F.col("sig").alias("__sa"),
-        _guarded_band_explode(num_hashes, rows_per_band).alias(
-            "band_idx", "bucket"
-        ),
-    )
-    bb = batch_sig.select(
-        F.col(id_col).alias("batch_id"),
-        F.col("sig").alias("__sb"),
-        _guarded_band_explode(num_hashes, rows_per_band).alias(
-            "band_idx", "bucket"
-        ),
-    )
-    if broadcast == "batch":
-        bb = F.broadcast(bb)
-    elif broadcast == "store":
-        sb = F.broadcast(sb)
-    scored = sb.join(bb, ["band_idx", "bucket"]).select(
-        "store_id",
-        "batch_id",
-        _sig_match_fraction(num_hashes).alias("__est"),
-    )
-    return (
-        scored.groupBy("store_id", "batch_id")
-        .agg(F.max("__est").alias("est_jaccard"))
-        .where(F.col("est_jaccard") >= threshold)
-    )
-
-
-# ---------------------------------------------------------------------------
 # Test-set decontamination
 # ---------------------------------------------------------------------------
 

@@ -458,8 +458,6 @@ def prepare_training_corpus(
     dsir_knobs: dict | None = None,
     embeddings: DataFrame | None = None,
     semantic_knobs: dict | None = None,
-    external_signatures: DataFrame | None = None,
-    external_sig_knobs: dict | None = None,
 ) -> DataFrame:
     """The capstone one-call corpus-prep pipeline, composing the
     engine's LLM-data operators in their canonical order:
@@ -496,28 +494,6 @@ def prepare_training_corpus(
        One-level rule: no keeper re-election among survivors. Docs
        with no embedding row are kept (nothing to judge them
        against).
-    2c. (optional, ``external_signatures``) cross-corpus signature
-       drop — the federated stage: ``external_signatures`` is a
-       persisted :func:`~hrtech_etl_spark.functions.dedup.
-       minhash_signature_table` of a corpus you do NOT hold the text
-       of (a previously-released training set, another org's shard —
-       64 bytes/doc is all that moves). The survivors of the lexical
-       stages sign themselves and probe the store through
-       :func:`~hrtech_etl_spark.functions.dedup.
-       signature_probe_pairs`; any doc estimating ``>= threshold``
-       against a stored signature drops. The probe's join strategy
-       defaults to the always-safe shuffled band join here — the
-       "batch" side is the whole surviving corpus, unbounded at
-       production scale, so the function's micro-batch
-       broadcast-the-batch default would be driver-fatal; pass
-       ``broadcast="store"`` in ``external_sig_knobs`` when the
-       external table is known-small to keep the corpus entirely
-       scan-side (zero corpus shuffle). ``external_sig_knobs``
-       forwards ``threshold`` / ``num_hashes`` / ``rows_per_band`` /
-       ``shingle_k`` (which must match what the store was signed
-       with — persisted tables pin them, see
-       :func:`~hrtech_etl_spark.functions.dedup.read_signature_table`)
-       / ``broadcast``
     3. benchmark decontamination vs ``test_set`` (13-gram overlap by
        default; ``decon_knobs`` forwards ``shingle_k`` /
        ``min_overlap`` / ``test_text_col`` for corpora where the
@@ -559,14 +535,12 @@ def prepare_training_corpus(
     from hrtech_etl_spark.functions import text as tx
 
     # knobs without their enabling argument are a silent no-op — the
-    # stage the caller configured simply never runs (released data
+    # stage the caller configured simply never runs (benchmark text
     # stays in the corpus, the semantic prune never fires). Fail
     # loudly instead.
     for kname, kval, enabler, earg in (
         ("dsir_knobs", dsir_knobs, dsir_target, "dsir_target"),
         ("semantic_knobs", semantic_knobs, embeddings, "embeddings"),
-        ("external_sig_knobs", external_sig_knobs, external_signatures,
-         "external_signatures"),
         ("decon_knobs", decon_knobs, test_set, "test_set"),
     ):
         if kval and enabler is None:
@@ -646,47 +620,6 @@ def prepare_training_corpus(
             .select(id_col)
         )
         cleaned = cleaned.join(drop, id_col, "left_anti")
-    if external_signatures is not None:
-        ek = dict(external_sig_knobs or {})
-        ext_threshold = ek.pop("threshold", 0.5)
-        ext_num_hashes = ek.pop("num_hashes", 8)
-        ext_rows_per_band = ek.pop("rows_per_band", 2)
-        ext_shingle_k = ek.pop("shingle_k", 2)
-        # join strategy for the probe: HERE the "batch" side is the
-        # ENTIRE lexical-survivor corpus — unbounded at production
-        # scale — so signature_probe_pairs' micro-batch default
-        # (broadcast the batch bands) would push billions of banded
-        # rows through the driver and fail on the broadcast limit.
-        # Default to the always-safe shuffled band join; a deployment
-        # that KNOWS its external store is small passes
-        # broadcast="store" to keep the corpus scan-side (zero corpus
-        # shuffle), exactly the asymmetric shape with the roles
-        # swapped. Pair values are identical under all strategies.
-        ext_broadcast = ek.pop("broadcast", "none")
-        if ek:
-            raise TypeError(
-                f"unknown external_sig_knobs: {sorted(ek)} — supported: "
-                "threshold, num_hashes, rows_per_band, shingle_k, "
-                "broadcast"
-            )
-        # the survivors both sign themselves and anti-join the hits —
-        # pin the lineage or the whole dedup subtree re-executes per
-        # read (the same boundary discipline as the semantic stage)
-        cleaned = cleaned.localCheckpoint(eager=False)
-        bsig = dd.minhash_signature_table(
-            cleaned, text_col, id_col,
-            num_hashes=ext_num_hashes, shingle_k=ext_shingle_k,
-        )
-        hit = dd.signature_probe_pairs(
-            external_signatures, bsig, id_col,
-            threshold=ext_threshold, num_hashes=ext_num_hashes,
-            rows_per_band=ext_rows_per_band, broadcast=ext_broadcast,
-        )
-        cleaned = cleaned.join(
-            hit.select(F.col("batch_id").alias(id_col)).distinct(),
-            id_col,
-            "left_anti",
-        )
     if test_set is not None:
         cleaned = dd.remove_contaminated(
             cleaned, test_set, text_col, id_col, **(decon_knobs or {})

@@ -18,9 +18,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hrtech_etl_spark.core.expressions import apply_conditions, conditions_to_column
+from hrtech_etl_spark.core.expressions import conditions_to_column
 from hrtech_etl_spark.core.types import Condition
-from hrtech_etl_spark.operators.joins import event_lookup_join, last_wins_dedup
+from hrtech_etl_spark.operators.joins import last_wins_dedup
 
 # Raw source event type → unified type. Unknown types map to
 # "upserted" (reference connectors/warehouse_a/models.py:199-206).

@@ -8,9 +8,9 @@ Streaming: ``readStream`` → parse/normalize → stateful transformations
 the upsert sink + per-batch error containment the reference got from
 its try/except loop.
 
-Batch/stream parity: the window aggregations below are the SAME
-expressions as the batch-declared queries in
-:mod:`hrtech_etl_spark.workload.streaming` — ``window()`` /
+Batch/stream parity: the declared window queries in
+:mod:`hrtech_etl_spark.workload.streaming` call the window
+aggregations below with ``watermark=None`` — ``window()`` /
 ``session_window()`` semantics are identical over batch and streaming
 DataFrames, so tests assert a streaming run (availableNow trigger)
 equals the batch result on the same input.
@@ -99,7 +99,7 @@ def parse_event_stream(
 
 
 # ---------------------------------------------------------------------------
-# Windowed aggregations (same expressions as the batch twins)
+# Windowed aggregations (batch and streaming alike)
 # ---------------------------------------------------------------------------
 
 def tumbling_counts(
@@ -212,8 +212,6 @@ def _running_stats_schema(key_col: str) -> T.StructType:
     )
 
 
-RUNNING_STATS_SCHEMA = _running_stats_schema("user_id")
-
 _RUNNING_STATE_SCHEMA = T.StructType(
     [
         T.StructField("n", T.LongType()),
@@ -276,74 +274,6 @@ def user_running_stats(
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-def user_running_stats_tws(
-    events: DataFrame,
-    *,
-    ts_col: str = "ts",
-    watermark: str | None = "2 hours",
-    key_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """The same running-stats contract as :func:`user_running_stats`,
-    on Spark 4's ``transformWithStateInPandas`` — the current-generation
-    arbitrary-stateful API (``StatefulProcessor`` + typed ``ValueState``,
-    with timers/TTL available on the handle) that supersedes
-    ``applyInPandasWithState``. Kept alongside the legacy operator so
-    both stateful surfaces stay exercised.
-
-    Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``) and the
-    ``protobuf`` package (the transformWithState state protocol speaks
-    protobuf between the JVM and the Python workers). This sandbox has
-    neither protobuf nor pip, so the test suite skips the drive when
-    ``google.protobuf`` is missing — on a real cluster both ship with
-    the standard PySpark requirements.
-    """
-    import pandas as pd  # local import: executors only
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("stats", _RUNNING_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total, last_ts = 0, 0.0, None
-            if self._state.exists():
-                n, total, last_ts = self._state.get()
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf[value_col].sum())
-                # NaT guard — same rationale as user_running_stats
-                batch_max = pdf[ts_col].max()
-                if pd.notna(batch_max) and (last_ts is None or batch_max > last_ts):
-                    last_ts = batch_max
-            self._state.update((n, total, last_ts))
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 2)],
-                    "last_ts": [last_ts],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    if watermark:
-        events = ensure_watermarkable(events, ts_col).withWatermark(ts_col, watermark)
-    return events.groupBy(key_col).transformWithStateInPandas(
-        RunningStats(),
-        outputStructType=_running_stats_schema(key_col),
-        outputMode="Update",
-        timeMode="None",
     )
 
 
@@ -654,311 +584,5 @@ def foreach_batch_ewma(
         staged = target + ".__tmp"
         updated.write.mode("overwrite").parquet(staged)
         _swap_in(spark, staged, target)
-
-    return sink
-
-
-def _sign_probe_dedup_batch(
-    spark,
-    batch_df: DataFrame,
-    batch_id: int,
-    sig_store_path: str,
-    *,
-    text_col: str,
-    id_col: str,
-    threshold: float,
-    num_hashes: int,
-    rows_per_band: int,
-    shingle_k: int,
-):
-    """Shared per-micro-batch core of the signature-store ingest
-    sinks (:func:`foreach_batch_signature_dedup` and
-    :func:`foreach_batch_corpus_ingest`): sign the batch, probe the
-    persisted store's strictly-earlier batches through the asymmetric
-    :func:`~hrtech_etl_spark.functions.dedup.signature_probe_pairs`
-    (store never shuffled, batch bands broadcast), then near-dedup
-    the survivors among themselves (a doc drops iff it estimates
-    ``>= threshold`` against a LOWER-ID store-probe survivor —
-    deterministic, non-transitive by design). Returns ``(kept_docs,
-    kept_sig, all_drop)``; ``all_drop`` (the dropped ids, eagerly
-    checkpointed, bounded by batch size) feeds both anti-joins and
-    the callers' metrics; ``kept_sig`` is the batch's SURVIVING
-    signatures — what the callers append to the store, so dropped
-    dups never land. ``batch_df`` must already be persisted by the
-    caller."""
-    from pyspark.errors import AnalysisException
-
-    from hrtech_etl_spark.functions.dedup import (
-        merged_signature_pairs,
-        minhash_signature_table,
-        read_signature_table,
-        signature_probe_pairs,
-    )
-
-    bsig = minhash_signature_table(
-        batch_df, text_col, id_col,
-        num_hashes=num_hashes, shingle_k=shingle_k,
-    ).localCheckpoint(eager=True)
-    dropped = None
-    try:
-        stored = read_signature_table(
-            spark, sig_store_path, id_col=id_col,
-            num_hashes=num_hashes, shingle_k=shingle_k,
-            extra_cols=("batch",),
-        ).where(F.col("batch") < batch_id).drop("batch")
-    except AnalysisException as e:
-        # bootstrap: the store path is absent (PATH_NOT_FOUND),
-        # OR it holds only the _temporary debris of a crashed
-        # FIRST write (no committed parquet footer anywhere ->
-        # UNABLE_TO_INFER_SCHEMA). Both mean "no earlier batch
-        # committed" and the probe is skipped; once ANY batch
-        # has committed, later-crash debris is a _-prefixed dir
-        # the reader's file index hides, so this branch can
-        # never swallow a store that has real data. A
-        # directory-existence check here was the round-15
-        # review's confirmed wedge: the debris dir counted as
-        # data and every replay failed on schema inference.
-        # ONLY those two conditions bootstrap — any other
-        # analysis failure (permissions, a corrupted or foreign
-        # schema, a mis-set extra_cols) re-raises so the batch
-        # fails loudly instead of silently ingesting
-        # near-duplicates with the probe skipped.
-        cond = (
-            getattr(e, "getCondition", None)
-            or getattr(e, "getErrorClass", None)
-        )
-        cond = cond() if cond is not None else None
-        if cond not in (
-            "PATH_NOT_FOUND",
-            "UNABLE_TO_INFER_SCHEMA",
-        ) and not (
-            cond is None
-            and (
-                "PATH_NOT_FOUND" in str(e)
-                or "UNABLE_TO_INFER_SCHEMA" in str(e)
-            )
-        ):
-            raise
-        stored = None
-    if stored is not None:
-        hit = signature_probe_pairs(
-            stored, bsig, id_col, threshold=threshold,
-            num_hashes=num_hashes, rows_per_band=rows_per_band,
-        )
-        dropped = hit.select(
-            F.col("batch_id").alias(id_col)
-        ).distinct()
-        surv = bsig.join(dropped, id_col, "left_anti")
-    else:
-        surv = bsig
-    within = merged_signature_pairs(
-        [surv], id_col, threshold=threshold,
-        num_hashes=num_hashes, rows_per_band=rows_per_band,
-        cross_shard_only=False,
-    )
-    drop2 = within.select(F.col("id_b").alias(id_col)).distinct()
-    all_drop = (
-        drop2 if dropped is None
-        else dropped.unionByName(drop2).distinct()
-    ).localCheckpoint(eager=True)  # bounded by batch size
-    kept_docs = batch_df.join(all_drop, id_col, "left_anti")
-    kept_sig = bsig.join(all_drop, id_col, "left_anti")
-    return kept_docs, kept_sig, all_drop
-
-
-def foreach_batch_signature_dedup(
-    sig_store_path: str,
-    clean_path: str,
-    text_col: str,
-    id_col: str,
-    *,
-    threshold: float = 0.5,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    shingle_k: int = 2,
-    metrics: StreamMetrics | None = None,
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch sink: STREAMING near-dup ingest over the mergeable
-    signature tables — the streaming sibling of
-    ``functions/dedup.py::drop_near_duplicates_incremental``, for the
-    federated regime where even hashed shingle sets are too heavy to
-    keep and only the 64-byte-per-doc signature store persists.
-
-    Per micro-batch: (1) sign the batch
-    (:func:`~hrtech_etl_spark.functions.dedup.minhash_signature_table`);
-    (2) probe the PERSISTED signature store through the asymmetric
-    :func:`~hrtech_etl_spark.functions.dedup.signature_probe_pairs` —
-    the store-side band projection stays a scan-side map and the
-    batch's bands broadcast, so the store is NEVER shuffled (the
-    zero-corpus-shuffle contract, per batch); any batch doc estimating
-    ``>= threshold`` against a stored doc drops; (3) within-batch
-    dedup among the survivors: a doc drops iff it estimates
-    ``>= threshold`` against a LOWER-ID survivor (banded candidates,
-    same estimator — deterministic, non-transitive by design: B
-    dropping for A does not resurrect C who only matched B); (4) the
-    kept docs and their signatures (via
-    :func:`~hrtech_etl_spark.functions.dedup.write_signature_table`)
-    land as the batch's own ``batch=<id>`` partition under
-    ``clean_path`` / ``sig_store_path``, so the NEXT batch probes
-    against them — the growing-index lifecycle. Docs with no shingles
-    (hence no signature) can never match and are always kept.
-
-    Batch order is the dedup order — earlier-ingested docs win keeps —
-    which is exactly the file-source oldest-first feed discipline
-    ``foreach_batch_ewma`` documents. Replay safety (appends are not
-    idempotent, so neither naive layout survives a crash between the
-    two writes): both outputs are laid out PER BATCH
-    (``.../batch=<id>/``, written with overwrite — a replay rewrites
-    its own subdirectories bit-identically) and the probe reads ONLY
-    strictly-earlier batches through the discovered partition column,
-    so a replayed batch re-sees exactly the pre-batch store no matter
-    where the crash landed. Exceptions re-raise so the checkpoint does
-    not commit and the batch replays.
-
-    ``id_col`` is IDENTITY, and each micro-batch is expected to carry
-    ONE row per id. Same-id rows within a batch are deliberately never
-    deduped against each other (the ordered pair rule needs ``id_a <
-    id_b``, so same-id rows cannot form a pair) — they are kept or
-    dropped together by the store-probe/within-batch verdict on that
-    id, and ``metrics.rows_written`` (physical batch rows minus
-    DISTINCT dropped ids) is exact only under the one-row-per-id
-    contract. A source whose ids can repeat within a batch must
-    pre-aggregate to one row per id upstream — two texts under one id
-    is an upstream identity bug this sink must not paper over by
-    silently keeping one.
-    """
-    from hrtech_etl_spark.functions.dedup import write_signature_table
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_df.persist()
-        try:
-            kept_docs, kept_sig, all_drop = _sign_probe_dedup_batch(
-                spark, batch_df, batch_id, sig_store_path,
-                text_col=text_col, id_col=id_col, threshold=threshold,
-                num_hashes=num_hashes, rows_per_band=rows_per_band,
-                shingle_k=shingle_k,
-            )
-            kept_docs.write.mode("overwrite").parquet(
-                f"{clean_path}/batch={batch_id}"
-            )
-            write_signature_table(
-                kept_sig, f"{sig_store_path}/batch={batch_id}",
-                id_col=id_col, num_hashes=num_hashes,
-                shingle_k=shingle_k, mode="overwrite",
-            )
-            if metrics is not None:
-                metrics.batches += 1
-                # kept = batch - drops, from the two already-
-                # materialized frames (batch_df persisted, all_drop
-                # eagerly checkpointed; all_drop is a distinct subset
-                # of batch ids) — re-counting kept_docs would re-run
-                # the anti-join the write just executed
-                metrics.rows_written += batch_df.count() - all_drop.count()
-        finally:
-            batch_df.unpersist()
-
-    return sink
-
-
-def foreach_batch_corpus_ingest(
-    sig_store_path: str,
-    clean_path: str,
-    text_col: str,
-    id_col: str,
-    *,
-    threshold: float = 0.5,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    shingle_k: int = 2,
-    quality_min: float = 0.0,
-    redact: bool = True,
-    chunk_chars: int = 2000,
-    chunk_overlap: int = 200,
-    metrics: StreamMetrics | None = None,
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch sink: a STREAMING slice of the training-corpus
-    capstone (``operators/corpus.py::prepare_training_corpus``) — the
-    micro-batch ingest loop a crawl feed runs continuously, where the
-    batch pipeline runs once over a finished snapshot. Per micro-batch
-    it composes the capstone's per-row-commutative stages around the
-    growing signature store:
-
-    1. sign → probe strictly-earlier batches → within-batch dedup —
-       the :func:`foreach_batch_signature_dedup` core (shared
-       ``_sign_probe_dedup_batch``: store never shuffled, batch bands
-       broadcast, greedy non-transitive within-batch rule);
-    2. the signature store grows with ALL dedup survivors — BEFORE
-       the quality gate, matching the batch capstone's stage order
-       (near-dup → external drop → … → quality): a quality-rejected
-       doc's near-copies must not re-enter through a later batch;
-    3. kept docs then flow through the capstone's per-doc stages:
-       ``quality_score >= quality_min`` → PII redaction →
-       ``chunk_documents`` windows with whitespace ``token_count``;
-    4. chunks land as the batch's own ``batch=<id>`` partition under
-       ``clean_path``.
-
-    The per-row stages (quality/redact/chunk) commute with the batch
-    split — running them per micro-batch yields exactly the rows the
-    batch pipeline would produce over the union of kept docs — so the
-    only order-dependent state is the signature store, and that is
-    the part the greedy-rounds oracle locks. Packing/sharding is
-    deliberately NOT here: it is a global arrangement over a finished
-    corpus (an offline pass over the accumulated ``clean_path``), not
-    a property of any one micro-batch.
-
-    Replay safety is the signature sink's, unchanged: BOTH outputs
-    are per-batch ``batch=<id>`` partitions written with overwrite,
-    the probe reads only strictly-earlier batches, and the bootstrap
-    catch is narrowed to PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA.
-    ``id_col`` is identity with one row per id per batch (see
-    :func:`foreach_batch_signature_dedup`); ``metrics.rows_written``
-    counts CHUNKS written (the sink's actual output rows).
-    """
-    from hrtech_etl_spark.functions import text as tx
-    from hrtech_etl_spark.functions.dedup import write_signature_table
-    from hrtech_etl_spark.operators.corpus import chunk_documents
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_df.persist()
-        try:
-            kept_docs, kept_sig, _drop = _sign_probe_dedup_batch(
-                spark, batch_df, batch_id, sig_store_path,
-                text_col=text_col, id_col=id_col, threshold=threshold,
-                num_hashes=num_hashes, rows_per_band=rows_per_band,
-                shingle_k=shingle_k,
-            )
-            write_signature_table(
-                kept_sig, f"{sig_store_path}/batch={batch_id}",
-                id_col=id_col, num_hashes=num_hashes,
-                shingle_k=shingle_k, mode="overwrite",
-            )
-            docs = kept_docs.where(
-                tx.quality_score(F.col(text_col)) >= quality_min
-            )
-            if redact:
-                docs = docs.withColumn(
-                    text_col, tx.redact_pii(F.col(text_col))
-                )
-            chunks = chunk_documents(
-                docs, text_col, id_col,
-                max_chars=chunk_chars, overlap=chunk_overlap,
-            ).withColumn("n_tokens", tx.token_count(F.col("chunk_text")))
-            if metrics is not None:
-                # materialize ONCE (bounded by batch size x chunks/
-                # doc): the write AND the rows_written count below
-                # would otherwise each re-run the probe/dedup/quality/
-                # chunk lineage. Without metrics the write is the only
-                # consumer — skip the extra materialization.
-                chunks = chunks.localCheckpoint(eager=True)
-            chunks.write.mode("overwrite").parquet(
-                f"{clean_path}/batch={batch_id}"
-            )
-            if metrics is not None:
-                metrics.batches += 1
-                metrics.rows_written += chunks.count()
-        finally:
-            batch_df.unpersist()
 
     return sink

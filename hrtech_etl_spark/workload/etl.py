@@ -6,7 +6,6 @@ the incremental-pull role, events plays resource_events).
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from hrtech_etl_spark.core.expressions import apply_conditions
 from hrtech_etl_spark.core.types import Condition, Cursor, Operator

@@ -32,7 +32,6 @@ from hrtech_etl_spark.workload.text_llm import (
     bands_sql,
     cosine_sql,
     lsh_cluster_edges_ctes,
-    minhash_sql,
     quality_score_sql,
     shingles_from_tokens_sql,
     shingles_sql,
@@ -6868,675 +6867,3 @@ def corpus_prepare_training_v2(spark, sf_dir):
         embeddings=emb,
         semantic_knobs=dict(n_centroids=8, threshold=0.4),
     )
-
-
-# ---------------------------------------------------------------------------
-# Mergeable signature tables: cross-corpus dedup without rescanning
-# ---------------------------------------------------------------------------
-
-from hrtech_etl_spark.workload.text_llm import _NUM_HASHES as _SIG_NH
-
-_SIGM_EST = "round((" + " + ".join(
-    f"CAST(x.mh{j} = y.mh{j} AS INT)" for j in range(_SIG_NH)
-) + f") / {_SIG_NH}.0, 4)"
-
-
-def _sig_merge_frag_ctes(sig: str, names: tuple[str, str, str]) -> list[str]:
-    """The signature-merge oracle fragments stated ONCE — banded
-    bucket join with the ordered-id rule plus the matching-fraction
-    estimate — shared by the fresh-table merge gate
-    (`dedup_signature_merge`) and the cross-stream store merge gate
-    (`stream_federated_merge`), so the two oracles can never assert
-    different merge semantics. ``sig`` names a CTE carrying
-    ``(doc_id, shard, mh0..mh{N-1})``; ``names`` are the (banded,
-    cand, est) CTE names to emit (the callers' chains coexist in one
-    statement)."""
-    banded, cand, est = names
-    return [
-        f"{banded} AS MATERIALIZED ({bands_sql(sig)})",
-        f"{cand} AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b "
-        f"FROM {banded} a JOIN {banded} b ON a.band_idx = b.band_idx "
-        f"AND a.bucket = b.bucket AND a.doc_id < b.doc_id)",
-        f"{est} AS (SELECT c.id_a, c.id_b, x.shard AS shard_a, "
-        f"y.shard AS shard_b, {_SIGM_EST} AS est_jaccard "
-        f"FROM {cand} c JOIN {sig} x ON c.id_a = x.doc_id "
-        f"JOIN {sig} y ON c.id_b = y.doc_id)",
-    ]
-
-
-_SIGM_MERGE_CTES = ",\n    ".join(
-    [
-        "w AS MATERIALIZED (SELECT doc_id, CAST(doc_id % 2 AS INT) AS "
-        f"shard, {TOKENS_SQL.format(t='text')} AS w FROM documents)",
-        f"sh AS MATERIALIZED (SELECT doc_id, shard, "
-        f"{shingles_from_tokens_sql('w')} AS sh FROM w)",
-        f"sig AS MATERIALIZED (SELECT doc_id, shard, {_CAP_SIG} FROM sh)",
-        *_sig_merge_frag_ctes("sig", ("banded", "cand", "est")),
-    ]
-)
-
-
-@query(
-    "dedup_signature_merge",
-    sql=f"""
-    WITH {_SIGM_MERGE_CTES}
-    SELECT id_a, id_b, shard_a, shard_b, est_jaccard
-    FROM est
-    WHERE shard_a <> shard_b AND est_jaccard >= 0.5
-    ORDER BY id_a, id_b
-    """,
-)
-def dedup_signature_merge(spark, sf_dir):
-    """Cross-corpus dedup from MERGEABLE signature tables
-    (functions/dedup.py::minhash_signature_table /
-    merged_signature_pairs): the corpus split into two "shards" (by
-    doc_id parity, standing in for two independently-ingested
-    corpora), each signed separately into a 64-byte-per-doc
-    (id, sig) table, then near-dup pairs SPANNING the shards found
-    from the stored signatures alone — banded bucket join plus the
-    matching-minhash-fraction Jaccard estimator, threshold 0.5 (>= 4
-    of 8 positions agree). No text is rescanned or exchanged: this is
-    the federated sibling of the incremental `lsh_index` path, for
-    when even hashed shingle sets are too heavy to move between
-    clusters. The oracle replays the identical md5+affine hash
-    family, banding, estimator arithmetic, and threshold. Green at
-    sf0.001/0.01/0.1.
-
-    Round-17 note: a sign-once variant (one spread fold over the full
-    corpus, lazily checkpointed, parity-filtered into the two shard
-    frames) was A/B'd at sf0.1 and REGRESSED (3.8s vs 2.6s min,
-    interleaved): the checkpoint materialization serializes the whole
-    sign chain before the band join can start, while the two per-shard
-    chains' scan+fold stages already run concurrently under AQE. Keep
-    the per-shard signing — it is also the shape the federated
-    narrative ships."""
-    d = load_table(spark, "documents", sf_dir)
-    even = d.where(F.col("doc_id") % 2 == 0)
-    odd = d.where(F.col("doc_id") % 2 == 1)
-    sig_a = dd.minhash_signature_table(even, "text", "doc_id")
-    sig_b = dd.minhash_signature_table(odd, "text", "doc_id")
-    return dd.merged_signature_pairs(
-        [sig_a, sig_b], "doc_id", threshold=0.5
-    ).orderBy("id_a", "id_b")
-
-
-# ---------------------------------------------------------------------------
-# Streaming signature-store ingest: micro-batches sign, probe, and grow
-# the persisted signature table (round 15 — the streaming sibling of
-# drop_near_duplicates_incremental for the federated signature regime)
-# ---------------------------------------------------------------------------
-
-def _stream_sigdedup_ctes(
-    threshold: float = 0.5,
-    n_batches: int = 3,
-    suffix: str = "",
-    population: str = "TRUE",
-) -> tuple[list[str], list[str]]:
-    """Shared CTE chain replaying the greedy sequential signature-
-    dedup fixed point: batches (doc_id % n) arrive in index order; per
-    round, a doc drops iff it est-matches any KEPT doc of an earlier
-    round (the store probe) or any lower-id store-probe SURVIVOR of
-    its own round (the within-batch rule — non-transitive by design,
-    matching the sink). The rounds unroll as CTEs (the BPE training
-    technique applied to order-dependent streaming state); pair
-    candidacy and the matching-fraction estimator replay the
-    dedup_signature_merge fragments verbatim. Returns ``(ctes,
-    kept_union)`` — the chain plus the union-over-kept-rounds
-    subquery that IS the fixed point's output — so the signature-
-    store ingest gate (`stream_signature_dedup`), the streaming
-    corpus-ingest gate (`stream_corpus_ingest`), and the cross-stream
-    merge gate (`stream_federated_merge`, which instantiates the
-    chain TWICE via ``suffix``/``population`` over disjoint slices)
-    all build on ONE statement of the dedup fixed point, output
-    contract included."""
-    w, sh, sig = f"w{suffix}", f"sh{suffix}", f"sig{suffix}"
-    banded, cand, pe = f"banded{suffix}", f"cand{suffix}", f"pe{suffix}"
-    ctes = [
-        f"{w} AS MATERIALIZED (SELECT doc_id, CAST(doc_id % {n_batches} AS "
-        f"INT) AS bt, {TOKENS_SQL.format(t='text')} AS w FROM documents "
-        f"WHERE {population})",
-        f"{sh} AS MATERIALIZED (SELECT doc_id, bt, "
-        f"{shingles_from_tokens_sql('w')} AS sh FROM {w})",
-        f"{sig} AS MATERIALIZED (SELECT doc_id, bt, {SIG_COLS} FROM {sh})",
-        f"{banded} AS MATERIALIZED ({bands_sql(sig)})",
-        f"{cand} AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b "
-        f"FROM {banded} a JOIN {banded} b ON a.band_idx = b.band_idx "
-        f"AND a.bucket = b.bucket AND a.doc_id < b.doc_id)",
-        f"{pe} AS MATERIALIZED (SELECT c.id_a, c.id_b, x.bt AS bt_a, "
-        f"y.bt AS bt_b FROM {cand} c JOIN {sig} x ON c.id_a = x.doc_id "
-        f"JOIN {sig} y ON c.id_b = y.doc_id "
-        f"WHERE {_SIGM_EST} >= {threshold})",
-    ]
-    kept_names = []
-    for b in range(n_batches):
-        sb, kb, stb = f"s{b}{suffix}", f"k{b}{suffix}", f"st{b}{suffix}"
-        if kept_names:
-            store = " UNION ALL ".join(
-                f"SELECT doc_id FROM {k}" for k in kept_names
-            )
-            ctes.append(f"{stb} AS MATERIALIZED ({store})")
-            surv = (
-                f"{sb} AS MATERIALIZED (SELECT doc_id FROM {w} "
-                f"WHERE bt = {b} "
-                f"AND NOT EXISTS (SELECT 1 FROM {pe} JOIN {stb} k "
-                f"ON {pe}.id_a = k.doc_id WHERE {pe}.id_b = {w}.doc_id) "
-                f"AND NOT EXISTS (SELECT 1 FROM {pe} JOIN {stb} k "
-                f"ON {pe}.id_b = k.doc_id WHERE {pe}.id_a = {w}.doc_id))"
-            )
-        else:
-            surv = (
-                f"{sb} AS MATERIALIZED "
-                f"(SELECT doc_id FROM {w} WHERE bt = {b})"
-            )
-        ctes.append(surv)
-        ctes.append(
-            f"{kb} AS MATERIALIZED (SELECT doc_id FROM {sb} "
-            f"WHERE NOT EXISTS (SELECT 1 FROM {pe} JOIN {sb} a "
-            f"ON {pe}.id_a = a.doc_id WHERE {pe}.id_b = {sb}.doc_id))"
-        )
-        kept_names.append(kb)
-    union = " UNION ALL ".join(f"SELECT doc_id FROM {k}" for k in kept_names)
-    return ctes, union
-
-
-def _stream_sigdedup_sql(threshold: float = 0.5, n_batches: int = 3) -> str:
-    """The signature-store ingest gate's full statement: the shared
-    greedy-rounds chain, declared output = kept docs with their
-    arrival batch."""
-    ctes, union = _stream_sigdedup_ctes(threshold, n_batches)
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"\nSELECT w.doc_id, w.bt AS batch FROM w JOIN ({union}) kept "
-        f"USING (doc_id) ORDER BY w.doc_id"
-    )
-
-
-def _drive_sliced_ingest(
-    spark, sf_dir: str, prefix: str, make_sink, population=None
-) -> tuple[str, str]:
-    """Shared end-to-end driver for the streaming-ingest gates
-    (`stream_signature_dedup`, `stream_corpus_ingest`,
-    `stream_federated_merge`): stage the documents table (optionally
-    filtered to a ``population`` predicate — the federated gate runs
-    one stream per parity slice) as three slice files (doc_id % 3) with
-    choreographed mtimes — batch ORDER is the dedup order here
-    (unlike the upsert sink's order-independent merge), so
-    oldest-first is pinned explicitly instead of trusting write
-    latency to order the mtimes — then drain a REAL readStream
-    (maxFilesPerTrigger=1 → three genuine micro-batches under
-    availableNow) through ``make_sink(sig_store_path, out_path,
-    metrics)`` and assert exactly three batches ran (the generous
-    600s drain budget: these are the heaviest foreachBatch gates, 3
-    sign+probe+merge+write cycles, and the default 120s would
-    surface on a contended host as a bogus batch-count failure).
-    Returns ``(out_path, sig_store_path)`` — the merge gate reads the
-    grown STORE back, the ingest gates read their output."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
-    from hrtech_etl_spark.streaming.pipelines import (
-        StreamMetrics,
-        run_available_now,
-    )
-
-    d = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    if population is not None:
-        d = d.where(population)
-    root = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    stage = os.path.join(root, "stage")
-    now = _time.time()
-    for i in range(3):
-        sdir = os.path.join(stage, f"slice_{i}.parquet")
-        # sign-following % (matches the DuckDB oracle's doc_id % 3).
-        # Both sides therefore EXCLUDE negative doc_ids whose remainder
-        # is negative (only i==0 catches negative multiples of 3) —
-        # consistently, so the gate stays exact; pmod would have staged
-        # rows the oracle's batch derivation never assigns. The
-        # documents fixture is non-negative at every SF.
-        d.where((F.col("doc_id") % 3) == i).coalesce(
-            1
-        ).write.parquet(sdir)
-        for fn in os.listdir(sdir):
-            os.utime(
-                os.path.join(sdir, fn), (now - 300 + i * 60,) * 2
-            )
-    stream = (
-        spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(stage)
-    )
-    out = os.path.join(root, "out")
-    store = os.path.join(root, "sigs")
-    metrics = StreamMetrics()
-    run_available_now(
-        stream,
-        checkpoint=os.path.join(root, "ck"),
-        foreach_batch=make_sink(store, out, metrics),
-        timeout_sec=600,
-    )
-    if metrics.batches != 3:
-        raise AssertionError(
-            f"expected 3 micro-batches through the sink, got "
-            f"{metrics.batches}"
-        )
-    return out, store
-
-
-@query("stream_signature_dedup", sql=_stream_sigdedup_sql())
-def stream_signature_dedup(spark, sf_dir):
-    """The STREAMING signature-store ingest loop driven end to end
-    under the oracle gate (streaming/pipelines.py::
-    foreach_batch_signature_dedup): the documents table staged as
-    three slice files (doc_id % 3) with choreographed mtimes, read
-    back as a REAL readStream (maxFilesPerTrigger=1 → three genuine
-    micro-batches under availableNow). Each batch signs itself
-    (64 B/doc), probes the PERSISTED signature store through the
-    asymmetric signature_probe_pairs (store never shuffled — batch
-    bands broadcast), near-dedups the survivors among themselves,
-    then appends kept docs and kept signatures as its own
-    ``batch=<id>`` partition — the growing-index lifecycle in which
-    batch 2 is deduped against what batches 0 and 1 actually KEPT.
-    The declared output is the final clean corpus with each doc's
-    arrival batch (the discovered partition column — locking both
-    the dedup fixed point AND the arrival order); the oracle unrolls
-    the three greedy rounds as CTEs over the shared signature/band/
-    estimator fragments. A batches==3 assertion locks the
-    multi-micro-batch claim. Green at sf0.001/0.01/0.1."""
-    from hrtech_etl_spark.streaming.pipelines import (
-        foreach_batch_signature_dedup,
-    )
-
-    clean, _store = _drive_sliced_ingest(
-        spark, sf_dir, "stream_sigdedup_",
-        lambda store, out, metrics: foreach_batch_signature_dedup(
-            store, out, "text", "doc_id", threshold=0.5, metrics=metrics,
-        ),
-    )
-    return (
-        spark.read.parquet(clean)
-        .select("doc_id", F.col("batch").cast("int").alias("batch"))
-        .orderBy("doc_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Capstone v3: the federated cross-corpus signature stage inside the
-# full composition (round 15 — the last r14 optional)
-# ---------------------------------------------------------------------------
-
-@query(
-    "corpus_prepare_training_v3",
-    sql=f"""
-    WITH RECURSIVE
-    base AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 0),
-    train0 AS (
-      SELECT doc_id, text FROM base
-      UNION ALL
-      SELECT doc_id + 1000000, text FROM base WHERE doc_id % 7 = 0
-    ),
-    test0 AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
-    -- 1. exact dedup: min-id keep per canonical fingerprint
-    -- (AS MATERIALIZED throughout: every CTE the recursive closure or
-    -- a later stage references more than once is pinned, so recursion
-    -- rounds no longer re-evaluate the whole upstream pipeline; the
-    -- token lists are split ONCE per doc in t1w/t2w — inlining the
-    -- split into the k-gram lambda re-evaluates it per element.
-    -- Value-identical to the previous statement at sf0.01/0.1
-    -- (A/B'd round 12), 90.7s -> 4.4s at sf0.1.)
-    fp AS MATERIALIZED (SELECT doc_id, text, {FINGERPRINT_SQL.format(expr='text')} AS fp FROM train0),
-    keepx AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY fp),
-    t1 AS MATERIALIZED (SELECT f.doc_id, f.text FROM fp f JOIN keepx USING (doc_id)),
-    -- 2. near-dup: minhash(8)+LSH(4x2) -> jaccard verify -> CC -> min-id keep
-    t1w AS MATERIALIZED (SELECT doc_id, {TOKENS_SQL.format(t='text')} AS w FROM t1),
-    sh AS MATERIALIZED (SELECT doc_id, {shingles_from_tokens_sql('w')} AS sh FROM t1w),
-    hs AS MATERIALIZED (SELECT doc_id, list_distinct(list_transform(sh, s -> {_PH_S})) AS sh FROM sh),
-    sig AS MATERIALIZED (SELECT doc_id, {_CAP_SIG} FROM sh),
-    banded AS MATERIALIZED ({bands_sql('sig')}),
-    cand AS MATERIALIZED (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM banded a JOIN banded b
-        ON a.band_idx = b.band_idx AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ),
-    pairs AS MATERIALIZED (
-      SELECT c.id_a, c.id_b
-      FROM cand c JOIN hs x ON c.id_a = x.doc_id JOIN hs y ON c.id_b = y.doc_id
-      WHERE round(CASE WHEN len(list_distinct(x.sh || y.sh)) > 0
-                  THEN CAST(len(list_intersect(x.sh, y.sh)) AS DOUBLE) / len(list_distinct(x.sh || y.sh))
-                  ELSE 0.0 END, 4) >= {_CAP_NEAR_T}
-    ),
-    edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs UNION SELECT id_b, id_a FROM pairs),
-    reach(id, root) AS (
-      SELECT doc_id, doc_id FROM t1
-      UNION
-      SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.id
-    ),
-    labels AS (SELECT id, min(root) AS cluster FROM reach GROUP BY id),
-    t2 AS MATERIALIZED (SELECT t.doc_id, t.text FROM t1 t
-           WHERE t.doc_id IN (SELECT DISTINCT cluster FROM labels)),
-    -- 2c. cross-corpus signature drop: the released slice's PERSISTED
-    -- signature table (doc_id % 10 = 5 -- docs that are ALSO in the
-    -- train universe, the "never re-train on released data" shape)
-    -- probed by the lexical survivors' own signatures; any t2 doc
-    -- estimating >= 0.5 (>= 4 of 8 matching minhash positions)
-    -- against a stored signature drops. t2's signatures are the
-    -- ALREADY-COMPUTED near-dup sig rows (t2 is a subset of t1).
-    relw AS (SELECT doc_id, {TOKENS_SQL.format(t='text')} AS w
-             FROM documents WHERE doc_id % 10 = 5),
-    relsh AS (SELECT doc_id, {shingles_from_tokens_sql('w')} AS sh FROM relw),
-    relsig AS MATERIALIZED (SELECT doc_id, {_CAP_SIG} FROM relsh),
-    relband AS MATERIALIZED ({bands_sql('relsig')}),
-    t2sig AS MATERIALIZED (SELECT s.* FROM sig s JOIN t2 USING (doc_id)),
-    t2band AS MATERIALIZED ({bands_sql('t2sig')}),
-    extc AS (
-      SELECT DISTINCT a.doc_id AS rid, b.doc_id AS tid
-      FROM relband a JOIN t2band b
-        ON a.band_idx = b.band_idx AND a.bucket = b.bucket
-    ),
-    exthit AS (
-      SELECT DISTINCT c.tid AS doc_id
-      FROM extc c JOIN relsig x ON c.rid = x.doc_id
-                  JOIN t2sig y ON c.tid = y.doc_id
-      WHERE {_SIGM_EST} >= 0.5
-    ),
-    t2x AS MATERIALIZED (
-      SELECT * FROM t2 WHERE doc_id NOT IN (SELECT doc_id FROM exthit)
-    ),
-    -- 3. decontaminate: hashed word-5-gram overlap >= 2 vs the test slice
-    tsh AS MATERIALIZED (
-      SELECT DISTINCT unnest(list_distinct(list_transform({shingles_from_tokens_sql('w', 5)}, s -> {_PH_S}))) AS h
-      FROM (SELECT {TOKENS_SQL.format(t='text')} AS w FROM test0)
-    ),
-    trsh AS MATERIALIZED (
-      SELECT doc_id, unnest(list_distinct(list_transform({shingles_from_tokens_sql('w', 5)}, s -> {_PH_S}))) AS h
-      FROM (SELECT doc_id, {TOKENS_SQL.format(t='text')} AS w FROM t2x)
-    ),
-    contaminated AS (
-      SELECT doc_id FROM trsh JOIN tsh USING (h) GROUP BY doc_id HAVING count(*) >= 2
-    ),
-    t3 AS (SELECT * FROM t2x WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)),
-    -- 4. quality filter
-    t4 AS (SELECT * FROM t3 WHERE {quality_score_sql()} >= {_CAP_QMIN}),
-    -- 5. PII redaction (identity on this corpus; the chain is stated anyway
-    -- so a corpus WITH matches would still gate)
-    t5 AS (SELECT doc_id, {_pii_chain_sql('text')} AS text FROM t4),
-    -- 6. chunk into overlapping windows (offsets step {_CAP_STEP})
-    ch AS (
-      SELECT doc_id, CAST(off / {_CAP_STEP} AS INT) AS chunk_idx,
-             substring(text, CAST(off AS INT) + 1, {_CAP_CHUNK}) AS chunk_text
-      FROM (
-        SELECT doc_id, text,
-               unnest(generate_series(0, greatest(length(text) - {_CAP_OVERLAP} - 1, 0), {_CAP_STEP})) AS off
-        FROM t5
-      )
-    ),
-    -- 7. whitespace token count + chunk identity
-    tok AS (
-      SELECT doc_id, chunk_idx, chunk_text,
-             CAST(len({_CAP_TOKENS}) AS INT) AS n_tokens,
-             CAST(doc_id AS VARCHAR) || ':' || CAST(chunk_idx AS VARCHAR) AS chunk_id
-      FROM ch
-    ),
-    -- 8. concat-split packing: exclusive cumsum over (shard, shuffle_key, id)
-    keyed AS (
-      SELECT *, {_CAP_PH_CHUNK} AS shuffle_key,
-             CAST({_CAP_PH_CHUNK} % {_CAP_NSH} AS INT) AS shard
-      FROM tok
-    ),
-    packed AS (
-      SELECT *,
-             CAST(COALESCE(SUM(n_tokens) OVER (
-               ORDER BY shard, shuffle_key, chunk_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-             ), 0) AS BIGINT) AS tok_offset
-      FROM keyed
-    )
-    SELECT doc_id, chunk_idx, chunk_text, n_tokens, tok_offset,
-           CAST(floor(tok_offset / {_CAP_SEQ}) AS BIGINT) AS block_first,
-           CAST(CASE WHEN n_tokens = 0 THEN 0
-                ELSE floor((tok_offset + n_tokens - 1) / {_CAP_SEQ}) - floor(tok_offset / {_CAP_SEQ}) + 1
-                END AS BIGINT) AS n_blocks,
-           shard, shuffle_key
-    FROM packed
-    """,
-)
-def corpus_prepare_training_v3(spark, sf_dir):
-    """The capstone with the FEDERATED stage switched on:
-    `prepare_training_corpus(external_signatures=...)` drops lexical-
-    dedup survivors whose signatures estimate >= 0.5 against a
-    PERSISTED minhash_signature_table of a corpus whose text is not
-    held (here: the doc_id % 10 == 5 slice, standing in for a
-    previously-RELEASED training set whose members also circulate in
-    the crawl — the stage must remove them from the new corpus). The
-    probe is signature_probe_pairs under the corpus stage's
-    always-safe shuffled band join (the "batch" side here is the
-    whole surviving corpus — see prepare_training_corpus' broadcast
-    knob), run between near-dup dedup and
-    decontamination; every other stage and knob matches the v1 gate,
-    so the oracle is the v1 statement plus one CTE block (sign the
-    released slice, reuse t2's ALREADY-COMPUTED near-dup signature
-    rows, band-join, estimate, drop) with downstream stages reading
-    the filtered survivors. The external table goes through the REAL
-    persistence round trip (write_signature_table to parquet,
-    read_signature_table back — tag guard riding the scan), so the
-    gate locks the composition order, the stored-table contract, the
-    reuse of the lexical signature family by the federated stage, and
-    the column plumbing. Green at sf0.001/0.01/0.1."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from hrtech_etl_spark.operators.corpus import prepare_training_corpus
-
-    docs = load_table(spark, "documents", sf_dir)
-    base = docs.where(F.col("doc_id") % 10 != 0).select("doc_id", "text")
-    train = base.unionByName(
-        base.where(F.col("doc_id") % 7 == 0).withColumn(
-            "doc_id", F.col("doc_id") + 1000000
-        )
-    )
-    test = docs.where(F.col("doc_id") % 10 == 0).select("doc_id", "text")
-    released = docs.where(F.col("doc_id") % 10 == 5).select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="capstone_v3_sigs_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    store = os.path.join(root, "released_sigs")
-    dd.write_signature_table(
-        dd.minhash_signature_table(released, "text", "doc_id"), store
-    )
-    ext = dd.read_signature_table(spark, store)
-    return prepare_training_corpus(
-        train,
-        "text",
-        "doc_id",
-        test_set=test,
-        quality_min=_CAP_QMIN,
-        near_dup_threshold=_CAP_NEAR_T,
-        chunk_chars=_CAP_CHUNK,
-        chunk_overlap=_CAP_OVERLAP,
-        pack_max_len=_CAP_SEQ,
-        redact=True,
-        decon_knobs=dict(shingle_k=5, min_overlap=2),
-        packing="concat_split",
-        shuffle_seed=_CAP_SEED,
-        n_shards=_CAP_NSH,
-        external_signatures=ext,
-        external_sig_knobs=dict(threshold=0.5),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming capstone slice: micro-batch corpus ingest over the growing
-# signature store (round 16 — the capstone family's streaming story)
-# ---------------------------------------------------------------------------
-
-def _stream_corpus_ingest_sql(
-    threshold: float = 0.5, n_batches: int = 3
-) -> str:
-    """DuckDB replay of the streaming corpus-ingest slice: the shared
-    `_stream_sigdedup_ctes` greedy rounds pin WHICH docs each batch
-    keeps (the only order-dependent state), then the kept docs flow
-    through the v1 capstone's per-row stage fragments VERBATIM —
-    quality floor, PII chain, overlapping chunk windows, whitespace
-    token count — since those commute with the batch split. One
-    statement: the dedup fixed point AND the per-batch stage plumbing
-    are both value-locked."""
-    ctes, union = _stream_sigdedup_ctes(threshold, n_batches)
-    ctes = ctes + [
-        f"keptd AS MATERIALIZED (SELECT w.doc_id, w.bt AS batch, d.text "
-        f"FROM w JOIN ({union}) u USING (doc_id) "
-        f"JOIN documents d USING (doc_id))",
-        f"qd AS (SELECT doc_id, batch, text FROM keptd "
-        f"WHERE {quality_score_sql()} >= {_CAP_QMIN})",
-        f"rd AS (SELECT doc_id, batch, {_pii_chain_sql('text')} AS text "
-        f"FROM qd)",
-        f"chk AS (SELECT doc_id, batch, CAST(off / {_CAP_STEP} AS INT) AS "
-        f"chunk_idx, substring(text, CAST(off AS INT) + 1, {_CAP_CHUNK}) "
-        f"AS chunk_text FROM (SELECT doc_id, batch, text, "
-        f"unnest(generate_series(0, greatest(length(text) - "
-        f"{_CAP_OVERLAP} - 1, 0), {_CAP_STEP})) AS off FROM rd))",
-    ]
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"\nSELECT doc_id, batch, chunk_idx, chunk_text, "
-        f"CAST(len({_CAP_TOKENS}) AS INT) AS n_tokens "
-        f"FROM chk ORDER BY doc_id, chunk_idx"
-    )
-
-
-@query("stream_corpus_ingest", sql=_stream_corpus_ingest_sql())
-def stream_corpus_ingest(spark, sf_dir):
-    """The capstone family's STREAMING slice driven end to end
-    (streaming/pipelines.py::foreach_batch_corpus_ingest): the
-    documents table staged as three slice files (doc_id % 3, mtimes
-    choreographed oldest-first), read back as a REAL readStream
-    (maxFilesPerTrigger=1 → three genuine micro-batches under
-    availableNow). Each batch runs the capstone's ingest composition:
-    sign → probe the PERSISTED signature store of strictly-earlier
-    batches (asymmetric signature_probe_pairs, store never shuffled)
-    → within-batch dedup → grow the store as a ``batch=<id>``
-    partition (BEFORE the quality gate, the batch capstone's stage
-    order) → quality floor → PII redaction → overlapping chunk
-    windows + whitespace token counts, landing as the batch's own
-    chunk partition. Declared output is every chunk with its doc's
-    arrival batch — locking the dedup fixed point, the stage order,
-    AND the per-batch chunk plumbing in one gate; the oracle unrolls
-    the three greedy rounds as CTEs and feeds the kept docs through
-    the v1 capstone's stage fragments (see _stream_corpus_ingest_sql).
-    A batches==3 assertion locks the multi-micro-batch claim. The
-    per-row stages commute with the batch split, so THIS gate's rows
-    are exactly what the batch capstone's quality/redact/chunk stages
-    would produce over the union of kept docs — proving the streaming
-    and batch paths converge, which is the capstone slice's whole
-    claim. Green at sf0.001/0.01/0.1."""
-    from hrtech_etl_spark.streaming.pipelines import (
-        foreach_batch_corpus_ingest,
-    )
-
-    clean, _store = _drive_sliced_ingest(
-        spark, sf_dir, "stream_corpusingest_",
-        lambda store, out, metrics: foreach_batch_corpus_ingest(
-            store, out, "text", "doc_id",
-            threshold=0.5, quality_min=_CAP_QMIN, redact=True,
-            chunk_chars=_CAP_CHUNK, chunk_overlap=_CAP_OVERLAP,
-            metrics=metrics,
-        ),
-    )
-    return (
-        spark.read.parquet(clean)
-        .select(
-            "doc_id",
-            F.col("batch").cast("int").alias("batch"),
-            "chunk_idx",
-            "chunk_text",
-            "n_tokens",
-        )
-        .orderBy("doc_id", "chunk_idx")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Cross-stream federated merge: two independently-grown streaming
-# signature stores merged peer-to-peer (round 16 — the second r15
-# optional: the streaming ingest loop composed INTO the federated
-# merge, closing the "streams grow stores, stores merge" lifecycle)
-# ---------------------------------------------------------------------------
-
-def _stream_fedmerge_sql(threshold: float = 0.5) -> str:
-    """DuckDB replay of the cross-stream merge: TWO instantiations of
-    the shared greedy-rounds chain (suffix a/b over the disjoint
-    parity slices — each stream's kept set is its own sequential
-    fixed point), then the dedup_signature_merge fragments VERBATIM
-    over the kept signatures: union with shard tags, band, bucket-
-    join with the ordered-id rule, matching-fraction estimate,
-    cross-shard filter."""
-    ctes_a, union_a = _stream_sigdedup_ctes(
-        threshold, 3, suffix="a", population="doc_id % 2 = 0"
-    )
-    ctes_b, union_b = _stream_sigdedup_ctes(
-        threshold, 3, suffix="b", population="doc_id % 2 = 1"
-    )
-    mh = ", ".join(f"s.mh{j}" for j in range(_SIG_NH))
-    ctes = ctes_a + ctes_b + [
-        f"fs AS MATERIALIZED ("
-        f"SELECT s.doc_id, {mh}, 0 AS shard FROM siga s "
-        f"WHERE s.doc_id IN ({union_a}) "
-        f"UNION ALL "
-        f"SELECT s.doc_id, {mh}, 1 AS shard FROM sigb s "
-        f"WHERE s.doc_id IN ({union_b}))",
-        *_sig_merge_frag_ctes("fs", ("fb", "fc", "fe")),
-    ]
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f"\nSELECT id_a, id_b, shard_a, shard_b, est_jaccard FROM fe "
-        f"WHERE shard_a <> shard_b AND est_jaccard >= {threshold} "
-        f"ORDER BY id_a, id_b"
-    )
-
-
-@query("stream_federated_merge", sql=_stream_fedmerge_sql())
-def stream_federated_merge(spark, sf_dir):
-    """The full federated lifecycle under ONE gate: TWO streaming
-    ingest loops (the `stream_signature_dedup` sink, one per parity
-    slice of the documents table — standing in for two independently-
-    operated ingest clusters) each drain three real micro-batches,
-    each growing its OWN persisted signature store with its own
-    greedy dedup fixed point; then the two stores are read back
-    (read_signature_table — tag guard riding both scans) and merged
-    peer-to-peer with merged_signature_pairs over the 64-byte
-    signatures alone — no text ever crosses the "cluster" boundary.
-    dedup_signature_merge gates the merge over freshly-signed tables;
-    THIS entry proves the merge is correct over STORES THAT GREW
-    batch by batch through the streaming sink, i.e. that the ingest
-    loop's persisted state is exactly what the federated merge
-    contract expects (columns, hash family, kept-set semantics). The
-    oracle instantiates the shared greedy-rounds chain twice over the
-    disjoint slices and feeds both kept sets through the
-    dedup_signature_merge fragments. Green at sf0.001/0.01/0.1."""
-    from hrtech_etl_spark.streaming.pipelines import (
-        foreach_batch_signature_dedup,
-    )
-
-    stores = []
-    for tag, parity in (("a", 0), ("b", 1)):
-        _clean, store = _drive_sliced_ingest(
-            spark, sf_dir, f"stream_fedmerge_{tag}_",
-            lambda store, out, metrics: foreach_batch_signature_dedup(
-                store, out, "text", "doc_id",
-                threshold=0.5, metrics=metrics,
-            ),
-            # % (sign-following rem), not pmod: matches the oracle's
-            # DuckDB `doc_id % 2` exactly, even for negative ids
-            population=(F.col("doc_id") % 2) == parity,
-        )
-        stores.append(store)
-    parts = [
-        dd.read_signature_table(spark, s) for s in stores
-    ]
-    return dd.merged_signature_pairs(
-        parts, "doc_id", threshold=0.5
-    ).orderBy("id_a", "id_b")

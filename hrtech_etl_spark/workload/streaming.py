@@ -1,10 +1,11 @@
 """Declared queries: streaming-window operators, batch-evaluated.
 
 Spark's ``window()`` / ``session_window()`` work identically over
-batch DataFrames — the declared queries run batch (so the DuckDB
-oracle can check values) while :mod:`hrtech_etl_spark.streaming`
-wires the same expressions into readStream/writeStream with
-watermarks (covered by streaming tests, not oracle-checkable).
+batch DataFrames — the declared window queries call the engine's
+aggregations in :mod:`hrtech_etl_spark.streaming.pipelines` without a
+watermark, batch (so the DuckDB oracle can check values) except
+``stream_session_window``, which drains a real stream; the streaming
+tests drive the same functions through readStream/writeStream.
 """
 
 from __future__ import annotations
@@ -15,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from hrtech_etl_spark.sources.testdata import load_table
-from hrtech_etl_spark.workload.registry import dec, dsum, query, sql_dsum
+from hrtech_etl_spark.workload.registry import dec, query, sql_dsum
 
 
 #: Far-future event time written by the flush sentinel (2030-01-01
@@ -114,26 +115,16 @@ def _staged_event_stream(
     """,
 )
 def stream_tumbling_window(spark, sf_dir):
-    """1-hour tumbling windows (aligned ⇒ start == date_trunc('hour')).
-    THE SAME aggregation (:func:`tumbling_window_agg`) runs as a real
-    readStream→availableNow drain in tests/test_streaming.py
-    (complete-mode parity with this batch result); the declared query
-    stays batch so the oracle can hash values and the bench measures
-    the aggregation, not checkpoint IO."""
-    return tumbling_window_agg(load_table(spark, "events", sf_dir))
+    """1-hour tumbling windows (aligned ⇒ start == date_trunc('hour')),
+    computed by the engine's :func:`~hrtech_etl_spark.streaming.
+    pipelines.tumbling_counts` without a watermark. The same function
+    runs as a real readStream→availableNow drain in
+    tests/test_streaming.py (complete-mode parity with this batch
+    result); the declared query stays batch so the oracle can hash
+    values and the bench measures the aggregation, not checkpoint IO."""
+    from hrtech_etl_spark.streaming.pipelines import tumbling_counts
 
-
-def tumbling_window_agg(e):
-    """The stream_tumbling_window aggregation over a batch OR streaming
-    DataFrame — window() semantics are defined to agree across both."""
-    win = F.window("ts", "1 hour")
-    return (
-        e.groupBy(win.alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("total_value"))
-        .select(
-            F.col("w.start").alias("window_start"), "event_type", "n", "total_value"
-        )
-    )
+    return tumbling_counts(load_table(spark, "events", sf_dir), watermark=None)
 
 
 @query(
@@ -153,20 +144,12 @@ def tumbling_window_agg(e):
 def stream_sliding_window(spark, sf_dir):
     """1-hour windows sliding every 30 min: each event lands in exactly
     two windows (the oracle spells out the two alignments window()
-    generates). The identical aggregation (:func:`sliding_window_agg`)
-    is parity-proven as a real stream drain in tests/test_streaming.py."""
-    return sliding_window_agg(load_table(spark, "events", sf_dir))
+    generates). Computed by the engine's :func:`~hrtech_etl_spark.
+    streaming.pipelines.sliding_counts` without a watermark, the
+    function tests/test_streaming.py parity-proves as a stream drain."""
+    from hrtech_etl_spark.streaming.pipelines import sliding_counts
 
-
-def sliding_window_agg(e):
-    """The stream_sliding_window aggregation over a batch OR streaming
-    DataFrame."""
-    win = F.window("ts", "1 hour", "30 minutes")
-    return (
-        e.groupBy(win.alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("total_value"))
-        .select(F.col("w.start").alias("window_start"), "n", "total_value")
-    )
+    return sliding_counts(load_table(spark, "events", sf_dir), watermark=None)
 
 
 @query(
@@ -198,28 +181,22 @@ def stream_session_window(spark, sf_dir):
     availableNow drain into a memory sink in COMPLETE mode (session
     windows without watermark are complete-mode-only; the final table
     is the full merged-session set, equal to the batch aggregation the
-    gaps-and-islands oracle computes). session_window() merges events
-    strictly less than one gap apart; session end = last event + gap."""
+    gaps-and-islands oracle computes). The aggregation is the engine's
+    :func:`~hrtech_etl_spark.streaming.pipelines.session_counts` without
+    a watermark. session_window() merges events strictly less than one
+    gap apart; session end = last event + gap."""
     import tempfile
     import uuid
 
-    from hrtech_etl_spark.streaming.pipelines import run_available_now
+    from hrtech_etl_spark.streaming.pipelines import (
+        run_available_now,
+        session_counts,
+    )
 
     name = f"session_windows_{uuid.uuid4().hex[:8]}"
-    sw = F.session_window("ts", "30 minutes")
     with _staged_event_stream(spark, sf_dir) as stream:
-        agg = (
-            stream.groupBy(F.col("user_id"), sw.alias("w"))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                "user_id",
-                F.col("w.start").alias("session_start"),
-                F.col("w.end").alias("session_end"),
-                "n_events",
-            )
-        )
         run_available_now(
-            agg,
+            session_counts(stream, watermark=None),
             checkpoint=tempfile.mkdtemp(prefix="ck_session_"),
             output_mode="complete",
             memory_table=name,

@@ -301,73 +301,17 @@ def test_dsir_and_semantic_stage_ablations(spark):
     assert 11 in ids and 12 in ids and 14 in ids
 
 
-def test_external_signature_stage(spark, tmp_path):
-    """The federated stage: a train doc whose signature matches a
-    PERSISTED external table (real write/read round trip) drops; with
-    the stage off it survives (attribution); unknown or dangling
-    knobs raise."""
-    import pytest
-
-    from hrtech_etl_spark.functions.dedup import (
-        minhash_signature_table,
-        read_signature_table,
-        write_signature_table,
-    )
-
-    released_text = (
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa "
-        "lambda mu nu xi omicron pi rho sigma tau upsilon"
-    )
-    docs = spark.createDataFrame(
-        [
-            (0, released_text),  # circulates in the crawl AND was released
-            (1, "entirely novel prose about watermark state bounds and "
-                "late data semantics in streaming aggregations"),
-            (2, "another unique document describing parquet row group "
-                "statistics and footer pruning decisions in detail"),
-        ],
-        "doc_id long, text string",
-    )
-    released = spark.createDataFrame(
-        [(100, released_text)], "doc_id long, text string"
-    )
-    store = str(tmp_path / "released_sigs")
-    write_signature_table(
-        minhash_signature_table(released, "text", "doc_id"), store
-    )
-    ext = read_signature_table(spark, store)
-    knobs = dict(
-        quality_min=0.0,
-        near_dup_threshold=0.9,
-        chunk_chars=400,
-        chunk_overlap=50,
-        pack_max_len=128,
-        redact=False,
-    )
-    with_stage = prepare_training_corpus(
-        docs, "text", "doc_id",
-        external_signatures=ext,
-        external_sig_knobs=dict(threshold=0.5),
-        **knobs,
-    )
-    ids = {r["doc_id"] for r in with_stage.select("doc_id").collect()}
-    assert ids == {1, 2}, f"released twin must drop: {ids}"
-
-    without = prepare_training_corpus(docs, "text", "doc_id", **knobs)
-    ids = {r["doc_id"] for r in without.select("doc_id").collect()}
-    assert ids == {0, 1, 2}
-
-    with pytest.raises(TypeError, match="external_sig_knobs"):
-        prepare_training_corpus(
-            docs, "text", "doc_id",
-            external_signatures=ext,
-            external_sig_knobs=dict(thresold=0.5),  # typo'd knob
-            **knobs,
-        )
-    # knobs WITHOUT the enabling frame would silently skip the stage
-    with pytest.raises(ValueError, match="external_signatures is None"):
-        prepare_training_corpus(
-            docs, "text", "doc_id",
-            external_sig_knobs=dict(threshold=0.5),
-            **knobs,
-        )
+@pytest.mark.parametrize(
+    "knob, enabler",
+    [
+        ("dsir_knobs", "dsir_target"),
+        ("semantic_knobs", "embeddings"),
+        ("decon_knobs", "test_set"),
+    ],
+)
+def test_knobs_without_their_stage_raise(spark, knob, enabler):
+    """Knobs whose enabling argument is None would silently skip the
+    stage they configure; the guard raises before any plan is built."""
+    docs = spark.createDataFrame([(1, GOOD)], "doc_id long, text string")
+    with pytest.raises(ValueError, match=f"{enabler} is None"):
+        prepare_training_corpus(docs, "text", "doc_id", **{knob: {"k": 1}})

@@ -3,7 +3,6 @@ safety, and the broadcast (zero-corpus-shuffle) join shape."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from hrtech_etl_spark.functions import dedup as dd
@@ -140,125 +139,3 @@ def test_bucket_cap_sheds_corpus_mega_bucket(spark):
         bi, idx, "doc_id", threshold=0.5, max_bucket_size=0
     )
     assert none.count() == 0
-
-
-# ---------------------------------------------------------------------------
-# Mergeable signature tables (round 14): cross-corpus dedup without text
-# ---------------------------------------------------------------------------
-
-
-def test_merged_signature_pairs_cross_corpus(spark):
-    from hrtech_etl_spark.functions.dedup import (
-        merged_signature_pairs,
-        minhash_signature_table,
-    )
-
-    text = (
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa "
-        "lambda mu nu xi omicron pi rho sigma tau upsilon"
-    )
-    shard0 = spark.createDataFrame(
-        [
-            (1, text),
-            (3, "completely different content about orchard"
-                " irrigation schedules and pump maintenance windows"),
-            (5, ""),  # empty -> NULL sig, must never match
-        ],
-        "doc_id long, text string",
-    )
-    shard1 = spark.createDataFrame(
-        [
-            (2, text),                      # exact cross-shard twin of 1
-            (4, text + " extra tail word"),  # near twin
-            (1, text),                      # SAME id re-ingested in shard 1
-        ],
-        "doc_id long, text string",
-    )
-    sa = minhash_signature_table(shard0, "text", "doc_id")
-    sb = minhash_signature_table(shard1, "text", "doc_id")
-    got = {
-        (r["id_a"], r["id_b"], r["shard_a"], r["shard_b"]): r["est_jaccard"]
-        for r in merged_signature_pairs(
-            [sa, sb], "doc_id", threshold=0.5
-        ).collect()
-    }
-    assert got[(1, 2, 0, 1)] == 1.0        # exact twin, full agreement
-    assert got[(1, 1, 0, 1)] == 1.0        # same-id re-ingest surfaces
-    near = got.get((1, 4, 0, 1)) or got.get((4, 1, 1, 0))
-    assert near is not None and 0.5 <= near <= 1.0
-    assert all(5 not in (a, b) for a, b, _, _ in got)  # NULL sig never pairs
-    assert all(s0 != s1 for _, _, s0, s1 in got)       # cross-shard only
-
-
-def test_merged_signature_pairs_bucket_valve_and_within(spark):
-    from hrtech_etl_spark.functions.dedup import (
-        merged_signature_pairs,
-        minhash_signature_table,
-    )
-
-    text = "one two three four five six seven eight nine ten"
-    docs = spark.createDataFrame(
-        [(i, text) for i in range(6)], "doc_id long, text string"
-    )
-    sig = minhash_signature_table(docs, "text", "doc_id")
-    # within-shard pairs appear when cross_shard_only=False
-    allp = merged_signature_pairs(
-        [sig], "doc_id", threshold=0.5, cross_shard_only=False
-    )
-    assert allp.count() == 15  # C(6,2) identical docs
-    # every band bucket holds all 6 docs -> valve at 5 sheds everything
-    valved = merged_signature_pairs(
-        [sig], "doc_id", threshold=0.5, cross_shard_only=False,
-        max_bucket_size=5,
-    )
-    assert valved.count() == 0
-
-
-def test_merged_signature_pairs_null_sig_hand_built(spark):
-    """A hand-built/persisted signature table CAN carry NULL sigs;
-    they must emit no band rows (posexplode-of-NULL guard) — without
-    it every NULL sig collapses into one shared md5('') bucket and
-    manufactures bogus pairs."""
-    from hrtech_etl_spark.functions.dedup import merged_signature_pairs
-
-    sigs = spark.createDataFrame(
-        [
-            (1, [7, 7, 7, 7, 7, 7, 7, 7]),
-            (2, [7, 7, 7, 7, 7, 7, 7, 7]),
-            (3, None),
-            (4, None),
-        ],
-        "doc_id long, sig array<long>",
-    )
-    got = merged_signature_pairs(
-        [sigs], "doc_id", threshold=0.0, cross_shard_only=False
-    ).collect()
-    assert {(r["id_a"], r["id_b"]) for r in got} == {(1, 2)}
-
-
-def test_merged_signature_pairs_wrong_width_raises(spark):
-    """A table persisted under a DIFFERENT num_hashes (here 16) scored
-    under the default 8 would band only the first 8 positions while the
-    estimator divides by 8 over 16 summed matches — est_jaccard > 1.0,
-    silently. The width guard must raise instead."""
-    from hrtech_etl_spark.functions.dedup import merged_signature_pairs
-
-    wide = spark.createDataFrame(
-        [(1, list(range(16))), (2, list(range(16)))],
-        "doc_id long, sig array<long>",
-    )
-    with pytest.raises(Exception, match="num_hashes"):
-        merged_signature_pairs(
-            [wide], "doc_id", threshold=0.0, cross_shard_only=False
-        ).collect()
-    # matching width passes the guard untouched
-    ok = spark.createDataFrame(
-        [(1, list(range(16))), (2, list(range(16)))],
-        "doc_id long, sig array<long>",
-    )
-    got = merged_signature_pairs(
-        [ok], "doc_id", threshold=0.0, cross_shard_only=False,
-        num_hashes=16,
-    ).collect()
-    assert {(r["id_a"], r["id_b"]) for r in got} == {(1, 2)}
-    assert got[0]["est_jaccard"] == 1.0

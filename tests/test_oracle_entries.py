@@ -2,8 +2,11 @@
 the same comparison as ``tools/oracle_check.py`` (row count, sorted
 column names, order-insensitive value hash), run inside the suite for
 the entries whose operators lost an option or a code path: the cluster
-rounds, the global-rank plan, the media feature kernel and the
-similarity module (cosine scoring and the shared coarse quantizer)."""
+rounds, the global-rank plan, the media feature kernel, the
+similarity module (cosine scoring and the shared coarse quantizer),
+the streaming window aggregates (the declared windows call the
+engine's ``tumbling_counts``/``sliding_counts``/``session_counts``)
+and the incremental dedup path left in the cut-down dedup module."""
 
 from __future__ import annotations
 
@@ -23,6 +26,10 @@ ENTRIES = [
     "window_rank_suite",
     "multimodal_binary_meta",
     "multimodal_features",
+    "stream_tumbling_window",
+    "stream_sliding_window",
+    "stream_session_window",
+    "dedup_incremental",
 ]
 
 

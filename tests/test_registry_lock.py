@@ -1,4 +1,5 @@
-"""Registry-order lock, tools/ compile smoke and doc-command check.
+"""Registry-order lock, tools/ compile smoke, unused-import check and
+doc-command check.
 
 The driver's correctness gate reads the FIRST 50 registry entries in
 registration order (see ``workload/__init__.py``). Registration order
@@ -17,6 +18,7 @@ everything.
 
 from __future__ import annotations
 
+import ast
 import hashlib
 import pathlib
 import py_compile
@@ -140,6 +142,32 @@ def test_tools_compile(path):
     by the suite, so a half-committed refactor would otherwise ship a
     SyntaxError unnoticed — happened to scale_smoke.py in round 9)."""
     py_compile.compile(str(path), doraise=True)
+
+
+PACKAGE_DIR = TOOLS_DIR.parent / "hrtech_etl_spark"
+
+
+@pytest.mark.parametrize(
+    "path",
+    sorted(p for p in PACKAGE_DIR.rglob("*.py") if p.name != "__init__.py"),
+    ids=lambda p: str(p.relative_to(PACKAGE_DIR)),
+)
+def test_module_imports_are_used(path):
+    """Every name a module imports at top level is referenced in it.
+    A retired family leaves its imports behind, and an unused import
+    still loads its module (and that module's imports) at start-up."""
+    tree = ast.parse(path.read_text())
+    imported = {}
+    for node in tree.body:
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            for alias in node.names:
+                name = (alias.asname or alias.name).split(".")[0]
+                imported[name] = node.lineno
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    unused = sorted(f"{n} (line {ln})" for n, ln in imported.items() if n not in used)
+    assert not unused, f"unused top-level imports: {unused}"
 
 
 REPO_ROOT = TOOLS_DIR.parent

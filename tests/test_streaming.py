@@ -86,59 +86,6 @@ def test_sliding_parity(spark, event_stream_dir, events_batch, tmp_path):
     assert _rows(got, "window_start") == _rows(want, "window_start")
 
 
-def test_declared_tumbling_query_streams(spark, sf_dir, tmp_path):
-    """The DECLARED stream_tumbling_window aggregation — not a
-    paraphrase of it — run as a real readStream over the actual events
-    parquet (nanos-normalized via _staged_event_stream) and drained
-    with availableNow in complete mode must equal the declared batch
-    query row-for-row."""
-    import uuid
-
-    from hrtech_etl_spark.workload.streaming import (
-        _staged_event_stream,
-        stream_tumbling_window,
-        tumbling_window_agg,
-    )
-
-    name = f"tumbling_declared_{uuid.uuid4().hex[:8]}"
-    with _staged_event_stream(spark, sf_dir) as stream:
-        run_available_now(
-            tumbling_window_agg(stream),
-            checkpoint=str(tmp_path / "ck"),
-            output_mode="complete",
-            memory_table=name,
-        )
-    got = spark.table(name)
-    want = stream_tumbling_window(spark, sf_dir)
-    assert _rows(got, "window_start", "event_type") == _rows(
-        want, "window_start", "event_type"
-    )
-
-
-def test_declared_sliding_query_streams(spark, sf_dir, tmp_path):
-    """Same contract for stream_sliding_window: the declared sliding
-    aggregation drained as a real stream equals its batch result."""
-    import uuid
-
-    from hrtech_etl_spark.workload.streaming import (
-        _staged_event_stream,
-        sliding_window_agg,
-        stream_sliding_window,
-    )
-
-    name = f"sliding_declared_{uuid.uuid4().hex[:8]}"
-    with _staged_event_stream(spark, sf_dir) as stream:
-        run_available_now(
-            sliding_window_agg(stream),
-            checkpoint=str(tmp_path / "ck"),
-            output_mode="complete",
-            memory_table=name,
-        )
-    got = spark.table(name)
-    want = stream_sliding_window(spark, sf_dir)
-    assert _rows(got, "window_start") == _rows(want, "window_start")
-
-
 def test_session_parity(spark, event_stream_dir, events_batch, tmp_path):
     stream = _stream_events(spark, event_stream_dir, events_batch)
     run_available_now(
@@ -826,63 +773,6 @@ def test_ensure_event_time_requires_utc(spark, ntz_events_dir):
         assert ensure_event_time(ltz, "ts") is ltz
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
-
-
-def test_user_running_stats_transform_with_state(
-    spark, event_stream_dir, events_batch, tmp_path
-):
-    """Spark 4 transformWithStateInPandas twin of user_running_stats:
-    same final per-user state as the batch aggregation. Requires the
-    RocksDB state store provider (set for this stream, restored after)
-    and protobuf (the TWS state protocol). PERMANENT-ENV SKIP in this
-    sandbox (checked each round through r11; the r11 probe also
-    confirmed `pip download protobuf` hangs on the blocked network, so
-    vendoring a wheel is impossible, not merely out of scope): there
-    is no google.protobuf and no way to fetch one — the drive skips
-    here and runs on a real cluster. The applyInPandasWithState twin of this exact
-    pipeline IS driven end to end (test_user_running_stats above and
-    the gated stream_running_stats query). See README
-    'Environment-blocked scope'."""
-    pytest.importorskip(
-        "google.protobuf", reason="transformWithState state protocol needs protobuf"
-    )
-    from hrtech_etl_spark.streaming.pipelines import user_running_stats_tws
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = _stream_events(spark, event_stream_dir, events_batch)
-        run_available_now(
-            user_running_stats_tws(stream, watermark=None),
-            checkpoint=str(tmp_path / "ck"),
-            output_mode="update",
-            memory_table="tws_running",
-        )
-        got = {
-            r["user_id"]: (r["n_events"], r["total_value"])
-            for r in spark.table("tws_running")
-            .orderBy(F.col("last_ts").desc())
-            .dropDuplicates(["user_id"])
-            .collect()
-        }
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    want = {
-        r["user_id"]: (r["n"], r["tv"])
-        for r in events_batch.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("tv"),
-        )
-        .collect()
-    }
-    assert got == want
 
 
 def test_declared_static_enrich_query_streams(spark, sf_dir, tmp_path):

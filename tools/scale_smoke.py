@@ -47,18 +47,7 @@ WindowExec, bounded peak partition, closed-form exactness invariants,
 ``semantic`` = SemDeDup over ``--sem-copies`` replicated embedding
 corpora with planted semantic twin pairs — n_centroids SCALED with
 the corpus under the default max_cluster_size valve, planted-twin
-recall and flat job counts asserted,
-``signature`` = the federated dedup lifecycle over ``--sig-rows``
-synthetic signatures split across 4 shards: each shard PERSISTS its
-signature table (write_signature_table), the merge reads the stored
-parquet back (read_signature_table) and runs merged_signature_pairs
-over signatures alone — planted cross-shard twins recalled 100% at
-est 1.0, flat job counts, and a no-hot-bucket fixture assert,
-``probe`` = the ASYMMETRIC store probe (signature_probe_pairs): a
-``--sig-rows`` persisted store probed by a ``--batch-docs`` batch
-with planted store hits — 100% recall at est 1.0, jobs flat in STORE
-size, and zero band-key exchange + batch-side broadcast asserted on
-the executed plan)
+recall and flat job counts asserted)
 so each path can be scaled independently of the 1M-doc dedup stages.
 """
 
@@ -135,8 +124,6 @@ def main() -> None:
     ap.add_argument("--rank-rows", type=int, default=10_000_000)
     ap.add_argument("--sem-copies", type=int, default=50)
     ap.add_argument("--sem-dim", type=int, default=16)
-    ap.add_argument("--sig-rows", type=int, default=10_000_000)
-    ap.add_argument("--batch-docs", type=int, default=10_000)
     args = ap.parse_args()
     groups = {g.strip() for g in args.only.split(",") if g.strip()}
 
@@ -156,10 +143,6 @@ def main() -> None:
             run_rank_stage(spark, meter, args, root)
         if "semantic" in groups:
             run_semantic_stage(spark, meter, args, root)
-        if "signature" in groups:
-            run_signature_stage(spark, meter, args, root)
-        if "probe" in groups:
-            run_probe_stage(spark, meter, args, root)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -846,256 +829,6 @@ def run_semantic_stage(spark, meter, args, root) -> None:
         f"kept {kept:,}; max cluster {peak:,} members ({peak / total:.1%} "
         f"of corpus, under the 20k valve); "
         f"jobs {jobs_small} -> {jobs_big} ({total / dt:,.0f} vec/s)",
-        flush=True,
-    )
-
-
-def run_signature_stage(spark, meter, args, root) -> None:
-    # --- federated signature merge over persisted shard tables --------
-    # The round-15 stage proving the mergeable-signature-table story's
-    # scale shape END TO END: 4 shards each persist --sig-rows/4
-    # synthetic 8-long signatures (write_signature_table), the merge
-    # READS THE STORED PARQUET BACK (read_signature_table — tag guard
-    # riding the scan) and runs merged_signature_pairs over signatures
-    # alone, exactly the deployment lifecycle ("shards sign locally,
-    # only signatures move"). Signatures are xxhash64 streams keyed by
-    # (effective shard, id): unique per doc EXCEPT every 1000th doc of
-    # shard 3, which reuses shard 0's key — the planted cross-shard
-    # twins. Random 64-bit band values make accidental bucket
-    # collisions ~2^-128, so the fixture's bucket histogram is pairs
-    # of twins and singletons, which run 2 asserts directly.
-    # Assertions:
-    #   1. the pair set is EXACTLY the planted twins (count match +
-    #      anti-join empty), every pair est 1.0 spanning shards 0->3;
-    #   2. job count FLAT in corpus size (rows/10 vs rows) — union,
-    #      band projection, bucket join, and estimator never add plan
-    #      stages with volume;
-    #   3. peak band-bucket population == 2 on the big run (twin
-    #      buckets only — no degenerate hot bucket in the fixture, the
-    #      quadratic-control metric of every banded join).
-    from hrtech_etl_spark.functions.dedup import (
-        lsh_bands,
-        merged_signature_pairs,
-        read_signature_table,
-        write_signature_table,
-    )
-
-    n_shards = 4
-
-    def shard(s: int, n: int):
-        if s == 3:
-            eff_s = F.when(F.col("id") % 1000 == 7, F.lit(0)).otherwise(
-                F.lit(3)
-            )
-        else:
-            eff_s = F.lit(s)
-        return spark.range(n).select(
-            (F.col("id") + s * STRIDE).alias("doc_id"),
-            F.array(
-                *[F.xxhash64(eff_s, F.col("id"), F.lit(p)) for p in range(8)]
-            ).alias("sig"),
-        )
-
-    def run_once(n_per_shard: int, check_buckets: bool):
-        paths = []
-        for s in range(n_shards):
-            p = os.path.join(root, f"sig_{n_per_shard}_{s}")
-            write_signature_table(
-                shard(s, n_per_shard), p, mode="overwrite"
-            )
-            paths.append(p)
-        parts = [read_signature_table(spark, p) for p in paths]
-        pairs = merged_signature_pairs(
-            parts, "doc_id", threshold=0.5
-        ).localCheckpoint(eager=True)  # ~n/1000 rows — bounded
-        expected = spark.range(n_per_shard).where("id % 1000 = 7").select(
-            F.col("id").alias("id_a"),
-            (F.col("id") + 3 * STRIDE).alias("id_b"),
-        )
-        n_exp = expected.count()
-        total = pairs.count()
-        assert total == n_exp, f"{total:,} pairs != {n_exp:,} planted"
-        missing = expected.join(pairs, ["id_a", "id_b"], "left_anti").count()
-        assert missing == 0, f"{missing} planted twins NOT recalled"
-        bad = pairs.where(
-            (F.col("est_jaccard") != 1.0)
-            | (F.col("shard_a") != 0)
-            | (F.col("shard_b") != 3)
-        ).count()
-        assert bad == 0, f"{bad} pairs mis-scored or mis-sharded"
-        peak_bucket = 0
-        if check_buckets:
-            merged = parts[0]
-            for t in parts[1:]:
-                merged = merged.unionByName(t)
-            banded = merged.select(
-                F.posexplode(F.array(*lsh_bands("sig"))).alias(
-                    "bi", "bucket"
-                )
-            )
-            peak_bucket = (
-                banded.groupBy("bi", "bucket")
-                .count()
-                .agg(F.max("count"))
-                .collect()[0][0]
-            )
-            assert peak_bucket == 2, (
-                f"peak band bucket {peak_bucket} — fixture should only "
-                "collide twin pairs"
-            )
-        return total, peak_bucket
-
-    small = max(1000, args.sig_rows // 10 // n_shards)
-    big = args.sig_rows // n_shards
-    (n_small, _), _ = meter.run(
-        f"signature merge {small * n_shards:,} sigs (4 shards, persisted)",
-        lambda: run_once(small, check_buckets=False),
-    )
-    jobs_small = meter.last_jobs
-    (n_big, peak_bucket), dt = meter.run(
-        f"signature merge {big * n_shards:,} sigs (4 shards, persisted)",
-        lambda: run_once(big, check_buckets=True),
-    )
-    jobs_big = meter.last_jobs
-    # +3: the big run adds the bucket-histogram audit (its own jobs),
-    # nothing else may grow
-    assert jobs_big <= jobs_small + 3, (
-        f"job count grows with volume: {jobs_small} -> {jobs_big}"
-    )
-    print(
-        f"  planted cross-shard twin recall 100% at {small * n_shards:,} "
-        f"and {big * n_shards:,} signatures ({n_small:,}/{n_big:,} pairs, "
-        f"all est 1.0); peak band bucket {peak_bucket} (twins only); "
-        f"jobs {jobs_small} -> {jobs_big} "
-        f"({big * n_shards / dt:,.0f} sig/s end to end incl. persist)",
-        flush=True,
-    )
-
-
-def run_probe_stage(spark, meter, args, root) -> None:
-    # --- asymmetric store probe: the 1000-batches-a-day path ----------
-    # The round-16 stage locking signature_probe_pairs' scale shape
-    # (the symmetric merge smoke above covers dedup_signature_merge;
-    # THIS is the streaming sink's per-micro-batch probe): a --sig-rows
-    # persisted store is probed by a --batch-docs batch whose every
-    # 100th doc reuses a stored hash key — planted hits spread across
-    # the WHOLE store id range. Signatures are xxhash64 streams keyed
-    # by (namespace, key): store rows are namespace 0 keyed by their
-    # own id, planted batch rows reuse namespace 0 with a stored key,
-    # filler batch rows live in namespace 1 and can never collide
-    # (random 64-bit band values, ~2^-128 accidental bucket match).
-    # Assertions:
-    #   1. recall: the pair set is EXACTLY the planted hits (count
-    #      match + anti-join empty), every pair est 1.0;
-    #   2. jobs FLAT in STORE size (rows/10 vs rows) — the probe's
-    #      plan must not grow stages with the store, or 1000
-    #      batches/day against a 100 TB store compounds the growth;
-    #   3. the executed plan carries ZERO hash exchange on the band
-    #      keys and a BroadcastHashJoin building the batch side — the
-    #      store-never-shuffled claim read off the REAL plan, not job
-    #      counts (tests/test_probe_plan_contract.py pins the same
-    #      shape at unit scale; this repeats it at 10M).
-    from hrtech_etl_spark.functions.dedup import (
-        read_signature_table,
-        signature_probe_pairs,
-        write_signature_table,
-    )
-
-    n_batch = args.batch_docs
-
-    def store_df(n):
-        return spark.range(n).select(
-            F.col("id").alias("doc_id"),
-            F.array(
-                *[F.xxhash64(F.lit(0), F.col("id"), F.lit(p)) for p in range(8)]
-            ).alias("sig"),
-        )
-
-    def batch_df(step):
-        planted = F.col("id") % 100 == 7
-        ns = F.when(planted, F.lit(0)).otherwise(F.lit(1))
-        key = F.when(planted, F.col("id") * step).otherwise(F.col("id"))
-        return spark.range(n_batch).select(
-            (F.col("id") + 100 * STRIDE).alias("doc_id"),
-            F.array(
-                *[F.xxhash64(ns, key, F.lit(p)) for p in range(8)]
-            ).alias("sig"),
-        )
-
-    def run_once(n_store: int, check_plan: bool):
-        # ONE step value drives both the planted keys and the expected
-        # set — computing it twice let the fixture and its expectation
-        # silently diverge under a future edit
-        step = n_store // n_batch
-        path = os.path.join(root, f"probe_store_{n_store}")
-        write_signature_table(store_df(n_store), path, mode="overwrite")
-        stored = read_signature_table(spark, path)
-        batch = batch_df(step).localCheckpoint(eager=True)
-        pairs_df = signature_probe_pairs(
-            stored, batch, "doc_id", threshold=0.5
-        )
-        pairs = pairs_df.localCheckpoint(eager=True)  # ~n_batch/100 rows
-        expected = (
-            spark.range(n_batch)
-            .where("id % 100 = 7")
-            .select(
-                (F.col("id") * step).alias("store_id"),
-                (F.col("id") + 100 * STRIDE).alias("batch_id"),
-            )
-        )
-        n_exp = expected.count()
-        total = pairs.count()
-        assert total == n_exp, f"{total:,} pairs != {n_exp:,} planted"
-        missing = expected.join(
-            pairs, ["store_id", "batch_id"], "left_anti"
-        ).count()
-        assert missing == 0, f"{missing} planted store hits NOT recalled"
-        bad = pairs.where(F.col("est_jaccard") != 1.0).count()
-        assert bad == 0, f"{bad} pairs mis-scored"
-        if check_plan:
-            import re
-
-            plan = pairs_df._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange hashpartitioning(band_idx" not in plan, (
-                "store bands were shuffled:\n" + plan
-            )
-            joins = re.findall(r"BroadcastHashJoin \[band_idx[^\n]*", plan)
-            # BuildRight = the BATCH side is the build/broadcast side;
-            # a BuildLeft here would be collecting the banded STORE to
-            # the driver — exactly the regression this smoke guards
-            assert joins and all("BuildRight" in j for j in joins), (
-                joins or plan
-            )
-        return total
-
-    small = max(10_000, args.sig_rows // 10)
-    big = args.sig_rows
-    if big <= small or small < n_batch:
-        raise SystemExit(
-            "probe stage needs --sig-rows >= 10x --batch-docs and > "
-            f"{small:,} (got --sig-rows {big:,}, --batch-docs "
-            f"{n_batch:,}): the planted keys id*step must land inside "
-            "the store and the flat-jobs compare needs small < big"
-        )
-    n_small, _ = meter.run(
-        f"store probe {small:,} store x {n_batch:,} batch",
-        lambda: run_once(small, check_plan=False),
-    )
-    jobs_small = meter.last_jobs
-    n_big, dt = meter.run(
-        f"store probe {big:,} store x {n_batch:,} batch",
-        lambda: run_once(big, check_plan=True),
-    )
-    jobs_big = meter.last_jobs
-    assert jobs_big <= jobs_small, (
-        f"probe job count grows with store size: {jobs_small} -> {jobs_big}"
-    )
-    print(
-        f"  planted store-hit recall 100% at {small:,} and {big:,} stored "
-        f"signatures ({n_small:,}/{n_big:,} pairs, all est 1.0); zero "
-        f"band-key exchange + batch-side BroadcastHashJoin in the "
-        f"executed plan; jobs {jobs_small} -> {jobs_big} "
-        f"({big / dt:,.0f} stored sig/s probed incl. store persist)",
         flush=True,
     )
 
