@@ -189,22 +189,6 @@ UNIFIED_PROFILE_SCHEMA = T.StructType(
 )
 
 # ---------------------------------------------------------------------------
-# Event layer
-# ---------------------------------------------------------------------------
-
-RESOURCE_EVENT_SCHEMA = T.StructType(
-    [
-        _f("event_id", T.StringType(), False),
-        _f("resource", T.StringType(), False),  # 'job' | 'profile'
-        _f("resource_id", T.StringType(), False),
-        _f("type", T.StringType(), False),  # created|updated|deleted|archived|upserted
-        _f("occurred_at", T.TimestampType()),
-        _f("payload", T.StringType()),
-        _f("metadata", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
-
-# ---------------------------------------------------------------------------
 # Driver testdata tables (FIXTURES.md §2)
 # ---------------------------------------------------------------------------
 
@@ -243,14 +227,6 @@ def export_schema_fields(schema: T.StructType) -> list[dict]:
             }
         )
     return out
-
-
-def cursor_column(schema: T.StructType, mode: str) -> str:
-    """Resolve which column a CursorMode maps to, from field metadata."""
-    for f_ in schema.fields:
-        if (f_.metadata or {}).get(META_CURSOR) == mode:
-            return f_.name
-    raise ValueError(f"no field with cursor mode {mode!r} in schema")
 
 
 def prefilter_operators(schema: T.StructType, field: str) -> list[str] | None:

@@ -11,6 +11,24 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: driver heap a session asks for when the host has room for it
+_DEFAULT_DRIVER_MEMORY_MB = 48 * 1024
+
+
+def _driver_memory() -> str:
+    """``spark.driver.memory`` for a new session: ``SPARK_GRAFT_DRIVER_MEM``
+    when set, otherwise ``_DEFAULT_DRIVER_MEMORY_MB`` capped at half of
+    the host's physical memory, so a second local session on a small
+    host does not lose its JVM to the first one's heap."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return f"{_DEFAULT_DRIVER_MEMORY_MB}m"
+    return f"{min(_DEFAULT_DRIVER_MEMORY_MB, phys // 2 // 2**20)}m"
+
 
 def get_spark(
     app_name: str = "hrtech_etl_spark",
@@ -37,6 +55,8 @@ def get_spark(
       to change or drop it, pass your own
       ``spark.driver.defaultJavaOptions`` in ``extra_conf``. Like every
       driver JVM option it only applies when this call launches the JVM.
+    - Driver heap: ``SPARK_GRAFT_DRIVER_MEM`` when set, otherwise 48g
+      capped at half of the host's physical memory.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -53,7 +73,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
     )

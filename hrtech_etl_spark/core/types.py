@@ -21,14 +21,6 @@ class Resource(str, enum.Enum):
     PROFILE = "profile"
 
 
-class WarehouseType(str, enum.Enum):
-    ATS = "ats"
-    CRM = "crm"
-    JOBBOARD = "jobboard"
-    HCM = "hcm"
-    AUTOMATION = "automation"
-
-
 class CursorMode(str, enum.Enum):
     """Which column drives an incremental range scan."""
 

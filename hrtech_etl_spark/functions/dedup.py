@@ -20,11 +20,14 @@ Shapes
 
 from __future__ import annotations
 
+import logging
 import weakref
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from hrtech_etl_spark.core.partitioning import keyed_barrier, num_partitions, spread
 from hrtech_etl_spark.functions.hashing import (
@@ -34,6 +37,8 @@ from hrtech_etl_spark.functions.hashing import (
     portable_hash,
 )
 from hrtech_etl_spark.functions.text import tokens
+
+_log = logging.getLogger(__name__)
 
 
 # ---------------------------------------------------------------------------
@@ -363,8 +368,6 @@ def _broadcast_array_except(
 
 def _shingles_pre_hashed(shingles: DataFrame) -> bool:
     """True when a shingle table carries hashed (array<long>) sets."""
-    from pyspark.sql import types as T
-
     dt = shingles.schema["sh"].dataType
     return isinstance(dt, T.ArrayType) and isinstance(dt.elementType, T.LongType)
 
@@ -561,6 +564,32 @@ def jaccard_verify(
 #: near_dup_clusters truncates the label lineage every this many rounds
 _CHECKPOINT_EVERY = 3
 
+#: near_dup_clusters finishes on the driver when the pair graph has at
+#: most this many edges; a larger graph runs the distributed rounds
+_DRIVER_FINISH_MAX_EDGES = 100_000
+
+
+def _min_id_components(edges) -> dict:
+    """Union-find over ``(a, b)`` edges: every endpoint → the minimum id
+    of its component (the fixed point of min-label propagation)."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in edges:
+        ra = find(parent.setdefault(a, a))
+        rb = find(parent.setdefault(b, b))
+        if ra != rb:
+            # the smaller root wins, so every root is its component's min
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
 
 def near_dup_clusters(
     pairs: DataFrame,
@@ -575,7 +604,30 @@ def near_dup_clusters(
     label per id (the minimum id in its component; singletons label
     themselves). The step between "pairs" and "drop duplicates" in a
     dedup pipeline: transitive matches (a~b, b~c) must collapse into
-    ONE cluster even though (a,c) was never compared.
+    ONE cluster even though (a,c) was never compared. Returns
+    ``(id, cluster)`` for every row of ``ids``.
+
+    Edge endpoints absent from ``ids`` neither receive labels nor
+    contribute neighbours: only pairs whose two endpoints are both in
+    ``ids`` form the graph.
+
+    Two paths, one fixed point. ONE action first collects at most
+    ``_DRIVER_FINISH_MAX_EDGES + 1`` of those edges (the pairs are
+    pinned by a lazy checkpoint, so the rounds below do not recompute
+    them):
+
+    - **Driver finish** (at most ``_DRIVER_FINISH_MAX_EDGES`` edges, the
+      near-dup graph of a corpus shard): union-find on the driver, as
+      *Connected Components in MapReduce and Beyond* (Kiveris et al.,
+      SoCC 2014) finishes once the graph is small. The labels go back
+      to Spark through Arrow, typed like the id column, with no Python
+      worker. No rounds run.
+    - **Distributed rounds** (more edges): the iterative min-label
+      propagation below. ``max_iterations`` and ``accelerate`` govern
+      only this path.
+
+    Which path ran, and the edge count it saw, is logged at INFO on
+    this module's logger.
 
     Iterative min-label propagation: each round every node takes the
     minimum label among itself and its neighbors; converges in
@@ -595,43 +647,39 @@ def near_dup_clusters(
     convergence still means neighbor-stable AND idempotent, which
     forces labels constant per component).
 
-    Driver coordination is ONE job per round: the round's labels are
-    persisted and materialized by a single ``count()`` whose plan
+    Driver coordination is ONE action per round: the round's labels
+    are persisted and materialized by a single ``count()`` whose plan
     carries an ``Observation`` counting changed labels — the
-    convergence probe rides the materialization job instead of running
-    a second driver action (``Observation`` does NOT fire on a
+    convergence probe rides the materialization instead of running a
+    second driver action (``Observation`` does NOT fire on a
     ``localCheckpoint`` materialization, which is why the round action
-    is a real count). Lineage is truncated by an eager
+    is a real count). Under AQE that one action still launches several
+    Spark jobs, one per query stage. Lineage is truncated by an eager
     ``localCheckpoint`` only every ``_CHECKPOINT_EVERY`` rounds (a cheap
     cache read); between checkpoints the persisted round outputs keep
     execution flat while plans grow by one join per round.
 
-    The iteration runs over PAIR-TOUCHED ids only (round 12): nodes
-    without edges can never change their self-label, so carrying them
-    through every round's three joins is pure waste — at corpus scale
-    the near-dup subgraph is a small fraction of the table (sf0.1
-    fixture: 154 touched of 5,000 docs; a 100-TB corpus iterates over
-    the duplicate fringe, not the corpus). Singletons are restored by
-    ONE final left join with ``coalesce(cluster, id)`` — the fixed
-    point is identical because edgeless nodes are fixed points of the
-    propagation by construction. Edge endpoints absent from ``ids``
-    are excluded from the touched set (semi-join), preserving the
-    previous inner-join semantics where unknown ids neither receive
-    labels nor contribute neighbor minima.
+    The rounds run over PAIR-TOUCHED ids only: nodes without edges can
+    never change their self-label, so carrying them through every
+    round's three joins is pure waste — at corpus scale the near-dup
+    subgraph is a small fraction of the table (sf0.1 fixture: 154
+    touched of 5,000 docs). Singletons are restored on both paths by
+    ONE final left join with ``coalesce(cluster, id)``.
 
     ``checkpoint_dir``: lineage truncation defaults to
     ``localCheckpoint``, which stores blocks on EXECUTORS — fast, but
     on a real cluster one executor loss mid-convergence makes the
     truncated lineage unrecoverable and kills the job. Pass a reliable
-    path (HDFS/S3/shared FS) to switch every truncation to
-    ``checkpoint()`` against that directory: rounds then survive
-    executor loss at the cost of a filesystem write per checkpoint.
-    Convergence semantics are identical either way (the convergence
-    probe rides a real ``count()`` on the persisted frame, never a
-    checkpoint materialization, so the Observation caveat above does
-    not change).
+    path (HDFS/S3/shared FS) to switch every truncation, the pinned
+    pairs and the returned frame included, to ``checkpoint()`` against
+    that directory: rounds then survive executor loss at the cost of a
+    filesystem write per checkpoint. Convergence semantics are
+    identical either way (the convergence probe rides a real
+    ``count()`` on the persisted frame, never a checkpoint
+    materialization, so the Observation caveat above does not change).
     """
     from pyspark.sql import Observation
+    from pyspark.sql.pandas.types import to_arrow_type
 
     prev_ckpt_dir = None
     if checkpoint_dir is not None:
@@ -640,9 +688,9 @@ def near_dup_clusters(
         # application may have pointed it at a curated location with
         # retention rules — one operator call must not repoint every
         # later checkpoint() in the session. (All of THIS function's
-        # checkpoints materialize before it returns — the lazy edges
-        # checkpoint runs inside round 1's count — so restoring in the
-        # finally below is safe.) When nothing was set before, there
+        # checkpoints materialize before it returns — the lazy ones run
+        # inside the edge collect or round 1's count — so restoring in
+        # the finally below is safe.) When nothing was set before, there
         # is no Spark API to unset; the directory then remains ours,
         # documented here.
         prev_ckpt_dir = sc.getCheckpointDir()
@@ -653,14 +701,59 @@ def near_dup_clusters(
             return df.localCheckpoint(eager=eager)
         return df.checkpoint(eager=eager)
 
-    def _run() -> DataFrame:
+    id_set = ids.select(F.col(id_col).alias("id"))
+
+    def _with_singletons(labels: DataFrame) -> DataFrame:
+        # restore singletons: one left join against the full id set,
+        # edgeless ids label themselves. Eagerly truncated: the function
+        # has ALWAYS returned a lineage-free frame, and callers rely on
+        # it — returning the live join would re-execute the caller's
+        # entire upstream pipeline (ids' lineage) on every consumption,
+        # racing already-unpersisted caches (observed as
+        # orphaned-accumulator errors in the 100k-doc smoke).
+        return _truncate(
+            id_set.join(labels, "id", "left").select(
+                "id",
+                F.coalesce("cluster", F.col("id")).alias("cluster"),
+            ),
+            eager=True,
+        )
+
+    def _known(name: str) -> DataFrame:
+        # shuffle-hash hint: a LEFT SEMI join can only build its RIGHT
+        # side, and id_set is corpus-sized — without the hint Catalyst
+        # would happily BROADCAST the whole corpus's ids under the
+        # (usually tiny) pair or touched set
+        return id_set.withColumnRenamed("id", name).hint("shuffle_hash")
+
+    def _finish_on_driver(edge_rows: list) -> DataFrame:
+        comp = _min_id_components(edge_rows)
+        id_type = id_set.schema["id"].dataType
+        at = to_arrow_type(id_type)
+        # pandas, not a row list: createDataFrame ships a pandas frame
+        # through Arrow, while a list goes the pickled path and starts
+        # Python workers
+        labels = pa.table(
+            {
+                "id": pa.array(list(comp), type=at),
+                "cluster": pa.array(list(comp.values()), type=at),
+            }
+        ).to_pandas()
+        schema = T.StructType(
+            [T.StructField("id", id_type), T.StructField("cluster", id_type)]
+        )
+        return _with_singletons(
+            ids.sparkSession.createDataFrame(labels, schema=schema)
+        )
+
+    def _rounds(pinned: DataFrame) -> DataFrame:
         # symmetrize with ONE explode, not a self-union: a union embeds
         # the pairs subtree twice, and the heavy verified-pair lineage
         # (the LSH verify join / the quadratic cosine block) re-executes
         # per branch — ReusedExchange only covers subtrees that END in
         # an exchange, which a join+filter pair plan does not
         edges = _truncate(
-            pairs.select(
+            pinned.select(
                 F.explode(
                     F.array(
                         F.struct(
@@ -678,17 +771,12 @@ def near_dup_clusters(
             .distinct(),
             eager=False,
         )
-        id_set = ids.select(F.col(id_col).alias("id"))
         # iterate over the near-dup subgraph only — edges are
-        # symmetrized, so the src column alone covers every endpoint.
-        # shuffle-hash hint: a LEFT SEMI join can only build its RIGHT
-        # side, and id_set is corpus-sized — without the hint Catalyst
-        # would happily BROADCAST the whole corpus's ids under the
-        # (usually tiny) touched set
+        # symmetrized, so the src column alone covers every endpoint
         labels = _truncate(
             edges.select(F.col("src").alias("id"))
             .distinct()
-            .join(id_set.hint("shuffle_hash"), "id", "semi")
+            .join(_known("id"), "id", "semi")
             .select("id", F.col("id").alias("cluster")),
             eager=False,
         )
@@ -719,7 +807,7 @@ def near_dup_clusters(
                 .drop("__changed")
                 .persist()
             )
-            cached.count()  # the round's ONE job: materialize + fire the probe
+            cached.count()  # the round's ONE action: materialize + fire the probe
             n_changed = obs.get["n_changed"]
             labels = cached
             if (it + 1) % _CHECKPOINT_EVERY == 0:
@@ -736,22 +824,7 @@ def near_dup_clusters(
                     # checkpoint is one cheap cache-read job.
                     labels = _truncate(cached, eager=True)
                     cached.unpersist()
-                # restore singletons: one left join against the full id
-                # set, edgeless ids label themselves. Eagerly truncated:
-                # the function has ALWAYS returned a lineage-free frame
-                # (the old per-round checkpoint of all ids), and callers
-                # rely on it — returning the live join would re-execute
-                # the caller's entire upstream pipeline (ids' lineage) on
-                # every consumption, racing already-unpersisted caches
-                # (observed as orphaned-accumulator errors in the
-                # 100k-doc smoke).
-                return _truncate(
-                    id_set.join(labels, "id", "left").select(
-                        "id",
-                        F.coalesce("cluster", F.col("id")).alias("cluster"),
-                    ),
-                    eager=True,
-                )
+                return _with_singletons(labels)
         if prev_cached is not None:
             prev_cached.unpersist()
         raise RuntimeError(
@@ -759,6 +832,29 @@ def near_dup_clusters(
             "component diameter exceeds the bound — rerun with accelerate=True "
             "(pointer-jumping, O(log diameter) rounds) or raise max_iterations"
         )
+
+    def _run() -> DataFrame:
+        # the lazy pin keeps the pair lineage (the LSH verify join / the
+        # quadratic cosine block) from running twice when the rounds
+        # follow the edge collect
+        pinned = _truncate(pairs.select("id_a", "id_b"), eager=False)
+        edge_rows = (
+            pinned.join(_known("id_a"), "id_a", "semi")
+            .join(_known("id_b"), "id_b", "semi")
+            .select("id_a", "id_b")
+            .limit(_DRIVER_FINISH_MAX_EDGES + 1)
+            .collect()
+        )
+        if len(edge_rows) <= _DRIVER_FINISH_MAX_EDGES:
+            _log.info(
+                "near_dup_clusters: %d edges, driver union-find", len(edge_rows)
+            )
+            return _finish_on_driver(edge_rows)
+        _log.info(
+            "near_dup_clusters: more than %d edges, distributed rounds",
+            _DRIVER_FINISH_MAX_EDGES,
+        )
+        return _rounds(pinned)
 
     try:
         return _run()
@@ -796,6 +892,11 @@ def drop_near_duplicates(
     pair graphs (:func:`near_dup_clusters`); ``checkpoint_dir`` makes
     the clustering's lineage truncation reliable (survives executor
     loss) instead of executor-local (:func:`near_dup_clusters`).
+
+    Clustering finishes on the driver with one union-find when the
+    verified graph has at most ``_DRIVER_FINISH_MAX_EDGES`` edges;
+    ``max_iterations`` and ``accelerate`` then have no effect. Larger
+    graphs run the distributed min-label rounds they govern.
     """
     # drop_empty: shingle-less docs can never band, verify, or appear
     # as a candidate id — pruned below the exchange on the cheap exact

@@ -398,9 +398,11 @@ def semantic_dedup(
     broadcast row and assignment is a per-row argmax fold, zero
     shuffle. A zero-norm vector has a NULL cosine to every centroid
     and every other vector, so it pairs with nothing and is kept as
-    its own component. Components come from the same
-    iterative min-label machinery as text dedup
-    (functions/dedup.py::near_dup_clusters).
+    its own component. Components come from the same clustering as
+    text dedup (functions/dedup.py::near_dup_clusters): a pair graph
+    of at most ``_DRIVER_FINISH_MAX_EDGES`` edges finishes in one
+    driver-side union-find, a larger one runs the accelerated
+    distributed min-label rounds.
 
     ``max_cluster_size`` is the LOUD VALVE on that quadratic block —
     the semantic twin of the stop-shingle valve

@@ -168,29 +168,6 @@ def bucketed_range_join(
     return joined.drop("__bucket")
 
 
-def event_lookup_join(
-    events: DataFrame,
-    resources: DataFrame,
-    *,
-    event_key: str,
-    resource_key: str,
-    broadcast_resources: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """The reference's event→resource lookup (``core/pipeline.py:127-167``)
-    as one left join split into (matched, missing):
-
-    - matched = events with their resource row attached (inner part),
-    - missing = events with no resource (the ``skipped_missing`` side).
-
-    One shuffle (or none, broadcast) serves both branches.
-    """
-    r = F.broadcast(resources) if broadcast_resources else resources
-    joined = events.join(r, events[event_key] == r[resource_key], "left")
-    matched = joined.where(F.col(resource_key).isNotNull())
-    missing = joined.where(F.col(resource_key).isNull()).select(*[events[c] for c in events.columns])
-    return matched, missing
-
-
 def last_wins_dedup(df: DataFrame, key: str, order_cols: Sequence[Column]) -> DataFrame:
     """Keep the last row per key under a total order — the reference's
     implicit dict-overwrite dedup (``core/pipeline.py:141-143``) made

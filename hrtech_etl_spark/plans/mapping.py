@@ -55,10 +55,6 @@ def apply_mapping(df: DataFrame, mapping: MappingSpec) -> DataFrame:
     return df.select(*build_mapping_projection(mapping))
 
 
-def apply_registered(df: DataFrame, formatter_id: str) -> DataFrame:
-    return apply_mapping(df, FORMATTER_REGISTRY[formatter_id])
-
-
 def pandas_formatter(
     fn: Callable[[pd.DataFrame], pd.DataFrame],
     schema: T.StructType,

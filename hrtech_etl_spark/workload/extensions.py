@@ -1308,11 +1308,14 @@ def dedup_clusters(spark, sf_dir):
     (functions/dedup.py::near_dup_clusters) — the transitive-closure
     step between "pairs" and "drop duplicates" (a~b, b~c must collapse
     into ONE cluster even though (a,c) was never compared). The Spark
-    side is the production iterative min-label propagation with the
-    pointer-jumping accelerant (O(log diameter) rounds, one persisted
-    frame + one count per round, no driver-side graph); the oracle
-    states the SAME fixed point declaratively as a recursive CTE (min
-    reachable id over the undirected closure). Pairs come from the
+    side is the production clustering: a graph of at most
+    ``_DRIVER_FINISH_MAX_EDGES`` edges (every fixture scale here)
+    finishes in one driver-side union-find; a larger one runs the
+    iterative min-label propagation with the pointer-jumping
+    accelerant (O(log diameter) rounds, one persisted frame + one
+    count per round). The oracle states the SAME fixed point
+    declaratively as a recursive CTE (min reachable id over the
+    undirected closure). Pairs come from the
     SCALE path: banded MinHash LSH candidates (never all-pairs — a
     band bucket only collides similar docs) exact-Jaccard-verified at
     threshold 0.3, sharing ONE shingle exchange between signature and
@@ -1329,7 +1332,10 @@ def _lsh_cluster_labels(spark, sf_dir):
     """Shared Spark-side clustering cascade for the two gates above
     and below (ONE definition, mirroring text_llm.lsh_cluster_edges_
     ctes on the oracle side): shingle once, banded MinHash candidates,
-    exact-Jaccard verify at 0.3, min-label clusters."""
+    exact-Jaccard verify at 0.3, min-id clusters. The verified graph
+    is small at every fixture scale, so ``near_dup_clusters`` finishes
+    it on the driver; ``accelerate=True`` only matters on a graph
+    large enough to take the distributed rounds."""
     d = load_table(spark, "documents", sf_dir)
     # drop_empty (r18): see dedup_minhash_lsh — prunes shingle-less
     # docs below the shared exchange; candidates/verify invariant
@@ -2689,8 +2695,8 @@ def corpus_leakage_safe_split(spark, sf_dir):
     """Leakage-safe train/validation split
     (operators/corpus.py::leakage_safe_split): near-dup clusters from
     the SAME verified-pair machinery as `dedup_clusters` (banded
-    MinHash LSH candidates → exact-Jaccard verify >= 0.3, min-label
-    propagation — the scale path, never all-pairs; both gates
+    MinHash LSH candidates → exact-Jaccard verify >= 0.3, min-id
+    connected components — the scale path, never all-pairs; both gates
     switched off blocked all-pairs Jaccard in round 13), then the
     split is a seeded portable hash of the CLUSTER label mod 10 < 2
     -> 'val' (~20%) — a document and its near-twins land on the same
@@ -6514,7 +6520,8 @@ def dedup_semantic_prune(spark, sf_dir):
     coarse-cluster (deterministic seed-vector quantizer, the
     ivf_cosine_topk contract — swap in a trained one at scale), connect
     within-cluster pairs at cosine ≥ 0.4 into components with the SAME
-    iterative min-label machinery as text dedup, keep per component
+    clustering as text dedup (functions/dedup.py::near_dup_clusters),
+    keep per component
     the member FARTHEST from its centroid (the paper's keep rule: the
     least-prototypical example carries the most marginal information).
     Clustering IS the blocking — the pair join is quadratic only in

@@ -3,15 +3,41 @@ end-to-end drop_near_duplicates pipeline."""
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 from pyspark.sql import functions as F
 
+from hrtech_etl_spark.functions import dedup
 from hrtech_etl_spark.functions.dedup import (
     drop_near_duplicates,
     jaccard_verify,
     minhash_lsh_pairs,
     near_dup_clusters,
 )
+
+
+@pytest.fixture
+def force_rounds(monkeypatch):
+    """A zero edge bound sends every non-empty graph to the distributed
+    rounds; without it a graph this small finishes on the driver."""
+    monkeypatch.setattr(dedup, "_DRIVER_FINISH_MAX_EDGES", 0)
+
+
+#: the INFO line near_dup_clusters logs for each path
+PATH_LOG = {"driver": "driver union-find", "rounds": "distributed rounds"}
+
+
+@pytest.fixture(params=["driver", "rounds"])
+def cluster_path(request, monkeypatch, caplog):
+    """Run the test once per near_dup_clusters path, and check after it
+    that the path really ran."""
+    if request.param == "rounds":
+        monkeypatch.setattr(dedup, "_DRIVER_FINISH_MAX_EDGES", 0)
+    caplog.set_level(logging.INFO, logger=dedup.__name__)
+    yield request.param
+    logged = [r.getMessage() for r in caplog.get_records("call")]
+    assert any(PATH_LOG[request.param] in m for m in logged), logged
 
 
 def _union_find(ids, pairs):
@@ -44,7 +70,7 @@ def test_transitive_chain_collapses(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
 
 
-def test_long_chain_converges(spark):
+def test_long_chain_converges(spark, force_rounds):
     """A path graph needs O(diameter) rounds — make sure propagation
     actually iterates rather than stopping after one round."""
     n = 12
@@ -62,7 +88,7 @@ def test_long_chain_converges(spark):
         near_dup_clusters(pairs, ids, "doc_id", max_iterations=2)
 
 
-def test_clusters_match_union_find_on_documents(spark, sf_dir):
+def test_clusters_match_union_find_on_documents(spark, sf_dir, cluster_path):
     """On the real fixture: Spark components == driver-side union-find
     over the same verified pair set."""
     from hrtech_etl_spark.sources.testdata import load_table
@@ -80,7 +106,7 @@ def test_clusters_match_union_find_on_documents(spark, sf_dir):
     assert got == want
 
 
-def test_drop_near_duplicates_keeps_min_per_cluster(spark, sf_dir):
+def test_drop_near_duplicates_keeps_min_per_cluster(spark, sf_dir, cluster_path):
     from hrtech_etl_spark.sources.testdata import load_table
 
     d = load_table(spark, "documents", sf_dir)
@@ -97,9 +123,9 @@ def test_drop_near_duplicates_keeps_min_per_cluster(spark, sf_dir):
     assert kept.columns == d.columns
 
 
-def test_one_driver_action_per_round(spark, monkeypatch):
+def test_one_driver_action_per_round(spark, force_rounds, monkeypatch):
     """Round-5 structure: each round runs ONE count() (materialize +
-    Observation convergence probe in the same job); eager lineage
+    Observation convergence probe in the same action); eager lineage
     checkpoints happen only every _CHECKPOINT_EVERY rounds, not per
     round (the old shape was checkpoint + probe-count = 2 actions)."""
     # patch the CONCRETE class (pyspark.sql.classic under Spark 4
@@ -129,15 +155,17 @@ def test_one_driver_action_per_round(spark, monkeypatch):
         for r in near_dup_clusters(pairs, ids, "doc_id").collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
-    # 3 rounds to converge -> 3 counts. Checkpoints (round 12): edge
-    # list and pair-touched id set are lazy (materialized inside round
-    # 1's job); round 3 (i+1 == _CHECKPOINT_EVERY) truncates lineage
-    # eagerly, and the returned singleton-restoring join is eagerly
-    # truncated so the result stays lineage-free as callers rely on.
-    assert counts == {"count": 3, "ckpt_eager": 2, "ckpt_lazy": 2}
+    # 3 rounds to converge -> 3 counts. Checkpoints: the pinned pairs
+    # (materialized by the edge collect), the edge list and the
+    # pair-touched id set are lazy (the last two materialized inside
+    # round 1's job); round 3 (i+1 == _CHECKPOINT_EVERY) truncates
+    # lineage eagerly, and the returned singleton-restoring join is
+    # eagerly truncated so the result stays lineage-free as callers
+    # rely on.
+    assert counts == {"count": 3, "ckpt_eager": 2, "ckpt_lazy": 3}
 
 
-def test_accelerated_chain_converges_in_log_rounds(spark):
+def test_accelerated_chain_converges_in_log_rounds(spark, force_rounds):
     """accelerate=True composes labels through the previous round's
     mapping (pointer jump): a 40-node path — 39 rounds for plain
     propagation — converges within 9 rounds, same labels."""
@@ -158,7 +186,7 @@ def test_accelerated_chain_converges_in_log_rounds(spark):
         near_dup_clusters(pairs, ids, "doc_id", max_iterations=9)
 
 
-def test_accelerated_matches_plain_on_documents(spark, sf_dir):
+def test_accelerated_matches_plain_on_documents(spark, sf_dir, cluster_path):
     from hrtech_etl_spark.sources.testdata import load_table
 
     d = load_table(spark, "documents", sf_dir)
@@ -282,7 +310,7 @@ def test_broadcast_array_except_large_stop_set(spark):
     assert got == {1: [1, 2, 3], 2: [5, 6, 7], 3: [], 4: None}
 
 
-def test_reliable_checkpoint_dir(spark, tmp_path, monkeypatch):
+def test_reliable_checkpoint_dir(spark, force_rounds, tmp_path, monkeypatch):
     """checkpoint_dir switches EVERY lineage truncation from
     executor-local localCheckpoint to reliable checkpoint() against the
     given directory; labels are identical either way."""
@@ -312,6 +340,109 @@ def test_reliable_checkpoint_dir(spark, tmp_path, monkeypatch):
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
     assert calls["local"] == 0 and calls["reliable"] >= 2
     # the reliable files really landed under the given directory
+    assert any(tmp_path.rglob("*"))
+
+
+def test_over_bound_graph_runs_rounds(spark, monkeypatch, caplog):
+    """A graph with more edges than the bound takes the distributed
+    rounds: the collect sees bound + 1 edges, and the rounds converge
+    to the same labels."""
+    monkeypatch.setattr(dedup, "_DRIVER_FINISH_MAX_EDGES", 2)
+    caplog.set_level(logging.INFO, logger=dedup.__name__)
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], ["id_a", "id_b"])
+    ids = spark.createDataFrame([(i,) for i in range(1, 7)], ["doc_id"])
+    got = dict(map(tuple, near_dup_clusters(pairs, ids, "doc_id").collect()))
+    assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
+    assert "more than 2 edges, distributed rounds" in caplog.text
+    assert "driver union-find" not in caplog.text
+
+
+def test_endpoints_absent_from_ids_get_no_label(spark, cluster_path):
+    """An endpoint missing from ``ids`` neither gets a label nor joins
+    its two neighbours: 99 links 2 and 3, but only through itself."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 99), (3, 99), (4, 5)], ["id_a", "id_b"]
+    )
+    ids = spark.createDataFrame([(i,) for i in range(1, 6)], ["doc_id"])
+    got = dict(map(tuple, near_dup_clusters(pairs, ids, "doc_id").collect()))
+    assert got == {1: 1, 2: 1, 3: 3, 4: 4, 5: 4}
+
+
+def test_empty_pairs_label_every_id_itself(spark, caplog):
+    caplog.set_level(logging.INFO, logger=dedup.__name__)
+    pairs = spark.createDataFrame([], "id_a long, id_b long")
+    ids = spark.createDataFrame([(i,) for i in range(1, 4)], "doc_id long")
+    got = dict(map(tuple, near_dup_clusters(pairs, ids, "doc_id").collect()))
+    assert got == {1: 1, 2: 2, 3: 3}
+    assert "0 edges, driver union-find" in caplog.text
+
+
+@pytest.mark.parametrize("id_type", ["int", "string"])
+def test_both_paths_return_the_same_schema(spark, monkeypatch, id_type):
+    """The driver path builds its labels with the id column's own type,
+    so both paths return the same ``(id, cluster)`` schema."""
+    pairs = spark.createDataFrame(
+        [("1", "2"), ("2", "3")], "id_a string, id_b string"
+    ).selectExpr(f"cast(id_a as {id_type}) id_a", f"cast(id_b as {id_type}) id_b")
+    ids = spark.range(1, 5).selectExpr(f"cast(id as {id_type}) doc_id")
+    driver = near_dup_clusters(pairs, ids, "doc_id")
+    monkeypatch.setattr(dedup, "_DRIVER_FINISH_MAX_EDGES", 0)
+    rounds = near_dup_clusters(pairs, ids, "doc_id")
+    assert driver.schema == rounds.schema
+    assert driver.schema.fieldNames() == ["id", "cluster"]
+    assert sorted(driver.collect()) == sorted(rounds.collect())
+
+
+#: Spark jobs the driver path may launch on a 3-edge graph: the edge
+#: collect and the eager truncation of the result, one job per AQE
+#: query stage
+SMALL_PATH_MAX_JOBS = 6
+
+
+def test_small_path_job_budget(spark):
+    """The driver path runs no rounds: on a small graph it launches at
+    most ``SMALL_PATH_MAX_JOBS`` jobs, where the rounds take several
+    jobs per round."""
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], ["id_a", "id_b"])
+    ids = spark.createDataFrame([(i,) for i in range(1, 7)], ["doc_id"])
+    group = "test_small_path_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        labels = near_dup_clusters(pairs, ids, "doc_id")
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= SMALL_PATH_MAX_JOBS, jobs
+    assert dict(map(tuple, labels.collect())) == {
+        1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6
+    }
+
+
+def test_reliable_checkpoint_dir_on_the_driver_path(spark, tmp_path, monkeypatch):
+    """``checkpoint_dir`` also governs the driver path: the pinned pairs
+    and the returned frame are reliable checkpoints."""
+    DataFrame = type(spark.range(1))
+    calls = {"local": 0}
+    orig_local = DataFrame.localCheckpoint
+
+    def local_spy(self, eager=True):
+        calls["local"] += 1
+        return orig_local(self, eager=eager)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", local_spy)
+    pairs = spark.createDataFrame([(1, 2), (4, 5)], ["id_a", "id_b"])
+    ids = spark.createDataFrame([(i,) for i in range(1, 6)], ["doc_id"])
+    got = dict(
+        map(
+            tuple,
+            near_dup_clusters(
+                pairs, ids, "doc_id", checkpoint_dir=str(tmp_path)
+            ).collect(),
+        )
+    )
+    assert got == {1: 1, 2: 1, 3: 3, 4: 4, 5: 4}
+    assert calls["local"] == 0
     assert any(tmp_path.rglob("*"))
 
 

@@ -31,7 +31,10 @@ Each stage prints wall time plus the Spark job/stage count it ran
 corpus-shaped frame, the peak partition row count — the scale-up
 assertion is that stage counts stay FLAT as --copies grows (a plan
 that adds stages with data volume is broken at 100 TB), and peak
-partition rows grow ~linearly (no single-partition collapse).
+partition rows grow ~linearly (no single-partition collapse). The
+package's INFO log lines print above the stage they come from; for
+the dedup stages that names the clustering path (driver union-find
+or distributed rounds) and its edge count.
 
     python tools/scale_smoke.py [--sf-dir DIR] [--copies N]
         [--graph-copies N] [--only docs,cdc,graph]
@@ -54,6 +57,7 @@ so each path can be scaled independently of the 1M-doc dedup stages.
 from __future__ import annotations
 
 import argparse
+import logging
 import os
 import shutil
 import sys
@@ -126,6 +130,11 @@ def main() -> None:
     ap.add_argument("--sem-dim", type=int, default=16)
     args = ap.parse_args()
     groups = {g.strip() for g in args.only.split(",") if g.strip()}
+    pkg_log = logging.getLogger("hrtech_etl_spark")
+    pkg_log.setLevel(logging.INFO)
+    handler = logging.StreamHandler(sys.stdout)
+    handler.setFormatter(logging.Formatter("  %(message)s"))
+    pkg_log.addHandler(handler)
 
     spark = get_spark(app_name="hrtech-etl-spark-scale-smoke")
     meter = StageMeter(spark.sparkContext)
