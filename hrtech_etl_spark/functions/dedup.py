@@ -13,8 +13,9 @@ Shapes
 - MinHash:  shingle → k seeded min-hashes → band buckets → self-join
             *within buckets only* → exact Jaccard verify on survivors.
 - SimHash:  per-token hash bit-votes → 32-bit signature; candidates
-            share ≥1 of its disjoint bands (pigeonhole ⇒ exact recall
-            at the Hamming threshold), verified by Hamming dist.
+            share ≥1 of ``max_hamming + 1`` disjoint bands of near-equal
+            width (pigeonhole ⇒ exact recall at the Hamming threshold),
+            verified by Hamming dist.
 - n-gram:   blocking key (cheap) → exact Jaccard within block.
 """
 
@@ -251,8 +252,7 @@ def hashed_shingles(sh: Column) -> Column:
     once so the operators and the oracle renderings stay in lockstep
     (portable_hash is 32-bit — an N-shingle doc has ~N²/2³³ internal
     collision probability, e.g. ~1% at 10k shingles; both engines
-    collapse a collision identically, but set ``hashed=False`` where
-    literal string-set semantics matter)."""
+    collapse a collision identically)."""
     return F.array_distinct(F.transform(sh, lambda s: portable_hash(s)))
 
 
@@ -268,7 +268,6 @@ def remove_stop_shingles(
     *,
     max_doc_frac: float = 0.5,
     max_stop: int = 100_000,
-    literal_max: int = STOP_SHINGLE_LITERAL_MAX,
 ) -> DataFrame:
     """Drop boilerplate shingles — those appearing in more than
     ``max_doc_frac`` of documents — from a hashed shingle table.
@@ -284,10 +283,12 @@ def remove_stop_shingles(
     ``max_stop`` guards the driver against a mis-set threshold
     (e.g. ``max_doc_frac`` so low that half the vocabulary qualifies).
 
-    The filter ships in one of two row-preserving, shuffle-free forms:
+    The filter ships in one of two row-preserving, shuffle-free forms,
+    picked by the size of the stop set:
 
-    - ``len(stop) <= literal_max``: a literal ``array_except`` — the
-      common tiny case, pure codegen'd expression.
+    - ``len(stop) <= STOP_SHINGLE_LITERAL_MAX``: a literal
+      ``array_except`` — the common tiny case, pure codegen'd
+      expression.
     - larger: the stop set rides an ``sc.broadcast`` variable into an
       Arrow-batched pandas UDF that set-filters each array. A literal
       expression tree of 10k+ nodes chokes plan
@@ -325,7 +326,7 @@ def remove_stop_shingles(
         )
     if not stop_rows:
         return shingles
-    if len(stop_rows) <= literal_max:
+    if len(stop_rows) <= STOP_SHINGLE_LITERAL_MAX:
         stop = F.array(*[F.lit(r["h"]).cast("long") for r in stop_rows])
         return shingles.withColumn("sh", F.array_except(F.col("sh"), stop))
     return shingles.withColumn(
@@ -520,7 +521,6 @@ def jaccard_verify(
     shingle_k: int = 2,
     threshold: float = 0.5,
     shingles: DataFrame | None = None,
-    hashed: bool = True,
 ) -> DataFrame:
     """Exact shingle-set Jaccard on candidate pairs; keeps pairs with
     similarity >= threshold. Joins the (small) candidate set back to
@@ -528,19 +528,18 @@ def jaccard_verify(
     same ``shingles=shingle_table(...)`` used for candidate generation
     so both verify sides read the ReusedExchange.
 
-    ``hashed=True`` intersects 32-bit portable-hash values instead of the
-    strings: integer set ops are cheaper and the broadcast shrinks.
-    This is still oracle-exact — the oracle applies the identical hash,
-    so even the (vanishingly rare) collision collapses identically in
-    both engines — but it is a *different* measure from string Jaccard
-    exactly when a within-doc collision occurs; set ``hashed=False``
-    for literal string-set semantics."""
+    The sets intersected are the 32-bit portable-hash values of the
+    shingles (:func:`hashed_shingles`; a string shingle table is hashed
+    here): integer set ops are cheaper and the broadcast shrinks. This
+    is oracle-exact — the oracle applies the identical hash, so even
+    the (vanishingly rare) within-doc collision collapses identically
+    in both engines."""
     sets_ = (
         shingles
         if shingles is not None
         else shingle_table(df, text_col, id_col, shingle_k=shingle_k)
     )
-    if hashed and not _shingles_pre_hashed(sets_):
+    if not _shingles_pre_hashed(sets_):
         sets_ = sets_.select(id_col, hashed_shingles(F.col("sh")).alias("sh"))
     out = (
         pairs.join(sets_.withColumnsRenamed({id_col: "id_a", "sh": "sh_a"}), "id_a")
@@ -567,6 +566,10 @@ _CHECKPOINT_EVERY = 3
 #: near_dup_clusters finishes on the driver when the pair graph has at
 #: most this many edges; a larger graph runs the distributed rounds
 _DRIVER_FINISH_MAX_EDGES = 100_000
+
+#: near_dup_clusters raises when the distributed rounds have not
+#: converged after this many rounds
+_MAX_ROUNDS = 10
 
 
 def _min_id_components(edges) -> dict:
@@ -596,8 +599,6 @@ def near_dup_clusters(
     ids: DataFrame,
     id_col: str,
     *,
-    max_iterations: int = 10,
-    accelerate: bool = False,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components over verified near-dup pairs → one cluster
@@ -622,30 +623,23 @@ def near_dup_clusters(
       SoCC 2014) finishes once the graph is small. The labels go back
       to Spark through Arrow, typed like the id column, with no Python
       worker. No rounds run.
-    - **Distributed rounds** (more edges): the iterative min-label
-      propagation below. ``max_iterations`` and ``accelerate`` govern
-      only this path.
+    - **Distributed rounds** (more edges): the pointer-jumping
+      min-label propagation below.
 
     Which path ran, and the edge count it saw, is logged at INFO on
     this module's logger.
 
-    Iterative min-label propagation: each round every node takes the
-    minimum label among itself and its neighbors; converges in
-    O(component diameter) rounds — near-dup components are clique-like
-    (diameter ≤ ~2-3), so a handful of rounds suffice; bounded by
-    ``max_iterations`` (raises if not converged — the cue the pair
-    graph has pathological chains: rerun with ``accelerate=True``).
-
-    ``accelerate=True`` adds a pointer-jump to every round — the
-    star-contraction idea from the MapReduce connected-components
-    literature: the new label is the min of (own, neighbor labels,
-    label-of-label), the last term composing the previous round's
-    mapping with itself so pointer depth roughly halves per round.
-    Chains then converge in O(log diameter) rounds at the cost of one
-    extra join per round against the ALREADY-CACHED previous labels
-    (labels only ever decrease, so the fixed point is unchanged:
-    convergence still means neighbor-stable AND idempotent, which
-    forces labels constant per component).
+    Pointer-jumping min-label propagation (the star-contraction idea
+    of Kiveris et al.): each round every node takes the minimum of its
+    own label, its neighbors' labels and its label's label. The last
+    term composes the previous round's mapping with itself, so pointer
+    depth roughly halves per round and chains converge in
+    O(log diameter) rounds, at the cost of one extra join per round
+    against the ALREADY-CACHED previous labels. Labels only ever
+    decrease, so the fixed point is the component minimum: convergence
+    means neighbor-stable AND idempotent, which forces labels constant
+    per component. The rounds are bounded by ``_MAX_ROUNDS``; a graph
+    that has not converged by then raises.
 
     Driver coordination is ONE action per round: the round's labels
     are persisted and materialized by a single ``count()`` whose plan
@@ -781,21 +775,24 @@ def near_dup_clusters(
             eager=False,
         )
         prev_cached: DataFrame | None = None
-        for it in range(max_iterations):
+        for it in range(_MAX_ROUNDS):
             obs = Observation(f"near_dup_clusters_round_{it}")
             neigh = (
                 edges.join(labels, edges["dst"] == labels["id"])
                 .groupBy("src")
                 .agg(F.min("cluster").alias("neigh_min"))
             )
-            candidates = [F.col("cluster"), F.coalesce("neigh_min", F.col("cluster"))]
-            joined = labels.join(neigh, labels["id"] == neigh["src"], "left")
-            if accelerate:
-                jump = labels.select(
-                    F.col("id").alias("__jid"), F.col("cluster").alias("__jcluster")
-                )
-                joined = joined.join(jump, F.col("cluster") == F.col("__jid"), "left")
-                candidates.append(F.coalesce("__jcluster", F.col("cluster")))
+            jump = labels.select(
+                F.col("id").alias("__jid"), F.col("cluster").alias("__jcluster")
+            )
+            joined = labels.join(neigh, labels["id"] == neigh["src"], "left").join(
+                jump, F.col("cluster") == F.col("__jid"), "left"
+            )
+            candidates = [
+                F.col("cluster"),
+                F.coalesce("neigh_min", F.col("cluster")),
+                F.coalesce("__jcluster", F.col("cluster")),
+            ]
             cached = (
                 joined.select(
                     "id",
@@ -828,9 +825,9 @@ def near_dup_clusters(
         if prev_cached is not None:
             prev_cached.unpersist()
         raise RuntimeError(
-            f"near_dup_clusters did not converge in {max_iterations} rounds; "
-            "component diameter exceeds the bound — rerun with accelerate=True "
-            "(pointer-jumping, O(log diameter) rounds) or raise max_iterations"
+            f"near_dup_clusters did not converge in {_MAX_ROUNDS} rounds; "
+            "the pair graph's components are too long for the "
+            "pointer-jumping bound"
         )
 
     def _run() -> DataFrame:
@@ -872,10 +869,8 @@ def drop_near_duplicates(
     shingle_k: int = 2,
     num_hashes: int = 8,
     rows_per_band: int = 2,
-    max_iterations: int = 10,
     max_bucket_size: int | None = None,
     stop_shingle_frac: float | None = None,
-    accelerate: bool = False,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """End-to-end corpus dedup: MinHash-LSH candidates → exact Jaccard
@@ -888,15 +883,13 @@ def drop_near_duplicates(
     document frequency before signatures AND verify (one consistent
     measure — :func:`remove_stop_shingles`); ``max_bucket_size`` caps
     band buckets before the self-join (:func:`minhash_lsh_pairs`);
-    ``accelerate`` turns on pointer-jumping clustering for chain-shaped
-    pair graphs (:func:`near_dup_clusters`); ``checkpoint_dir`` makes
-    the clustering's lineage truncation reliable (survives executor
-    loss) instead of executor-local (:func:`near_dup_clusters`).
+    ``checkpoint_dir`` makes the clustering's lineage truncation
+    reliable (survives executor loss) instead of executor-local
+    (:func:`near_dup_clusters`).
 
     Clustering finishes on the driver with one union-find when the
     verified graph has at most ``_DRIVER_FINISH_MAX_EDGES`` edges;
-    ``max_iterations`` and ``accelerate`` then have no effect. Larger
-    graphs run the distributed min-label rounds they govern.
+    larger graphs run the distributed pointer-jumping rounds.
     """
     # drop_empty: shingle-less docs can never band, verify, or appear
     # as a candidate id — pruned below the exchange on the cheap exact
@@ -921,12 +914,7 @@ def drop_near_duplicates(
         cand, df, text_col, id_col, threshold=threshold, shingles=sh
     )
     clusters = near_dup_clusters(
-        verified,
-        df.select(id_col),
-        id_col,
-        max_iterations=max_iterations,
-        accelerate=accelerate,
-        checkpoint_dir=checkpoint_dir,
+        verified, df.select(id_col), id_col, checkpoint_dir=checkpoint_dir
     )
     # The converged label IS the component's minimum id, so the keep
     # set is just the distinct labels — no extra min() aggregation.
@@ -1091,13 +1079,11 @@ def drop_near_duplicates_incremental(
     num_hashes: int = 8,
     rows_per_band: int = 2,
     shingle_k: int = 2,
-    dedup_within_batch: bool = True,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Dedup an ingest batch against an existing corpus: drop batch
-    docs near-duplicating any indexed corpus doc, then (by default)
-    near-dedup the survivors among themselves via
-    :func:`drop_near_duplicates`.
+    docs near-duplicating any indexed corpus doc, then near-dedup the
+    survivors among themselves via :func:`drop_near_duplicates`.
 
     The corpus side is only ever touched through ``corpus_index``
     (:func:`lsh_index`, typically read back from parquet) — the
@@ -1121,30 +1107,28 @@ def drop_near_duplicates_incremental(
         max_bucket_size=max_bucket_size,
     )
     contaminated = hit.select(F.col("__bid").alias(id_col)).distinct()
-    survivors = batch.join(F.broadcast(contaminated), id_col, "left_anti")
-    if dedup_within_batch:
-        # Truncate the survivors' lineage ONCE before within-batch
-        # dedup: drop_near_duplicates re-reads its input several times
-        # (shingle sides, cluster ids, the final keep semi-join) — N
-        # cheap scans for the parquet-backed corpora it is designed
-        # around, but here the input lineage is the whole band-join +
-        # Jaccard-verify pipeline, and re-executing it per consumer
-        # multiplied the batch clean by ~4-5x at the 100k-doc smoke
-        # scale. Executor-local blocks suffice: losing one restarts
-        # this batch's clean, and the long-running convergence loop
-        # has its own reliable `checkpoint_dir` knob.
-        survivors = survivors.localCheckpoint(eager=False)
-        survivors = drop_near_duplicates(
-            survivors,
-            text_col,
-            id_col,
-            threshold=threshold,
-            shingle_k=shingle_k,
-            num_hashes=num_hashes,
-            rows_per_band=rows_per_band,
-            max_bucket_size=max_bucket_size,
-        )
-    return survivors
+    # Truncate the survivors' lineage ONCE before within-batch dedup:
+    # drop_near_duplicates re-reads its input several times (shingle
+    # sides, cluster ids, the final keep semi-join) — N cheap scans for
+    # the parquet-backed corpora it is designed around, but here the
+    # input lineage is the whole band-join + Jaccard-verify pipeline,
+    # and re-executing it per consumer multiplied the batch clean by
+    # ~4-5x at the 100k-doc smoke scale. Executor-local blocks suffice:
+    # losing one restarts this batch's clean, and the long-running
+    # convergence loop has its own reliable `checkpoint_dir` knob.
+    survivors = batch.join(
+        F.broadcast(contaminated), id_col, "left_anti"
+    ).localCheckpoint(eager=False)
+    return drop_near_duplicates(
+        survivors,
+        text_col,
+        id_col,
+        threshold=threshold,
+        shingle_k=shingle_k,
+        num_hashes=num_hashes,
+        rows_per_band=rows_per_band,
+        max_bucket_size=max_bucket_size,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1213,20 +1197,20 @@ def remove_contaminated(
 SIMHASH_BITS = 32
 
 
-def simhash(col: Column, bits: int = SIMHASH_BITS) -> Column:
+def simhash(col: Column) -> Column:
     """Bit-vote SimHash over distinct tokens (portable-hash based).
 
-    For each bit i: if more than half the token hashes have bit i set,
-    the signature has bit i set. Computed as ONE fold over the hashed
-    token array: the accumulator carries per-bit set-counts plus the
-    token count in its last slot, and the ``finish`` lambda turns the
-    materialized counts into the signature. The per-bit
-    ``size(filter(hashes, ...))`` formulation re-evaluated the md5
-    token hashing once per bit (32x) in interpreted HOF eval. 32 bits
-    is the full width of :func:`portable_hash`; 64-bit signatures run
-    the numpy packed-bit pandas UDF :func:`simhash64` (same contract —
-    :func:`simhash_signatures` dispatches on width).
+    For each of the ``SIMHASH_BITS`` bits i: if more than half the
+    token hashes have bit i set, the signature has bit i set. Computed
+    as ONE fold over the hashed token array: the accumulator carries
+    per-bit set-counts plus the token count in its last slot, and the
+    ``finish`` lambda turns the materialized counts into the signature.
+    The per-bit ``size(filter(hashes, ...))`` formulation re-evaluated
+    the md5 token hashing once per bit (32x) in interpreted HOF eval.
+    32 bits is the full width of :func:`portable_hash`. NULL text
+    yields a NULL signature.
     """
+    bits = SIMHASH_BITS
     toks = F.array_distinct(tokens(col))
     hashed = F.transform(toks, lambda t: portable_hash(t, seed=99))
     init = F.array(*[F.lit(0).cast("long")] * (bits + 1))
@@ -1250,127 +1234,6 @@ def simhash(col: Column, bits: int = SIMHASH_BITS) -> Column:
     return F.aggregate(hashed, init, merge, finish)
 
 
-def simhash64(text_col: Column, *, bits: int = 64, seed: int = 99) -> Column:
-    """64-bit SimHash as an Arrow-batched pandas UDF over numpy packed
-    bits — the scale path when 32-bit signatures get crowded (at ~1e9
-    documents, 32-bit bands of 8 bits hold ~2^24 docs/bucket-space;
-    64-bit bands of 16 bits spread 256× wider).
-
-    Same contract as :func:`simhash`: bit i of the signature is the
-    majority vote of bit i across the distinct tokens' seeded hashes;
-    NULL text yields a NULL signature (whose NULL band values never
-    join — null rows must not become hamming-0 "duplicates"). The
-    token hash widens from 32-bit md5-prefix to the first 16 md5 hex
-    chars (64 bits, same seeded payload ``{seed}:{token}``), so the
-    64-bit signature's upper half equals the 32-bit signature exactly.
-    Tokenization mirrors the JVM :func:`..functions.text.tokens`
-    precisely — ``trim`` strips only ASCII spaces, the split class is
-    Java's ASCII ``\\s`` (``[ \\t\\n\\x0b\\f\\r]``), and trailing empty
-    strings are kept (Java split with limit -1) — a Python
-    ``str.strip()`` + Unicode ``\\s`` would silently break the parity
-    invariant on text with trailing newlines or Unicode whitespace.
-    The signature is returned as a signed long via two's-complement bit
-    reinterpretation — band extraction (arithmetic shiftright + mask)
-    and XOR/bit_count Hamming are bit-pattern operations, indifferent
-    to the sign.
-
-    The batch pipeline is vectorized end-to-end: each DISTINCT token
-    of the Arrow batch is md5-hashed exactly once (natural-language
-    batches repeat their vocabulary heavily across documents, so this
-    cuts md5 calls by the cross-document repetition factor — measured
-    ~5× fewer on the documents fixture), the per-document bit votes
-    are ONE ``np.add.reduceat`` over the batch-wide bit matrix, and
-    the pack is a single broadcasted shift-sum. No per-document numpy
-    allocation, no per-token Python in the hot loop beyond the
-    vocabulary build.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    if bits > 64:
-        raise ValueError(f"bits={bits} exceeds the 64-bit packed path")
-
-    @pandas_udf("long")
-    def _sig(texts: pd.Series) -> pd.Series:
-        import hashlib
-        import re
-
-        import numpy as np
-
-        ascii_ws = re.compile(r"[ \t\n\x0b\f\r]+")  # Java \s, ASCII-only
-        shifts = np.arange(bits, dtype=np.uint64)
-        out = np.zeros(len(texts), dtype=np.uint64)
-        nulls = np.zeros(len(texts), dtype=bool)
-
-        # one vocabulary per batch: token -> dense index, hashed ONCE
-        vocab: dict = {}
-        flat: list = []  # concatenated vocab indices, doc after doc
-        bounds = [0]  # doc i's tokens are flat[bounds[i]:bounds[i+1]]
-        doc_rows = []  # output row of each non-null doc
-        for i, t in enumerate(texts):
-            if t is None:
-                nulls[i] = True
-                continue
-            # trim strips only ASCII spaces; split keeps trailing empty
-            # strings — both exactly as Spark's trim/split(limit=-1) do
-            for tok in set(ascii_ws.split(t.lower().strip(" "))):
-                j = vocab.get(tok)
-                if j is None:
-                    j = len(vocab)
-                    vocab[tok] = j
-                flat.append(j)
-            bounds.append(len(flat))
-            doc_rows.append(i)
-        if vocab:
-            vocab_hashes = np.fromiter(
-                (
-                    int(hashlib.md5(f"{seed}:{tok}".encode()).hexdigest()[:16], 16)
-                    for tok in vocab
-                ),
-                dtype=np.uint64,
-                count=len(vocab),
-            )
-            # (V, bits) 0/1 matrix; int64 so reduceat sums don't wrap
-            vocab_bits = (
-                (vocab_hashes[:, None] >> shifts[None, :]) & np.uint64(1)
-            ).astype(np.int64)
-            flat_idx = np.asarray(flat, dtype=np.int64)
-            seg_starts = np.asarray(bounds[:-1], dtype=np.int64)
-            # per-doc vote sums in ONE pass (every doc has >=1 token,
-            # so segments are non-empty and reduceat is well-defined)
-            votes = np.add.reduceat(vocab_bits[flat_idx], seg_starts, axis=0)
-            counts = np.diff(np.asarray(bounds, dtype=np.int64)).reshape(-1, 1)
-            sig_bits = (votes * 2 > counts).astype(np.uint64)
-            sigs = (sig_bits << shifts[None, :]).sum(axis=1, dtype=np.uint64)
-            out[np.asarray(doc_rows, dtype=np.int64)] = sigs
-        signed = pd.Series(
-            pd.array(out.view(np.int64), dtype="Int64")
-        )  # nullable Int64: NA survives without a float64 precision trip
-        signed[nulls] = pd.NA
-        return signed
-
-    return _sig(text_col)
-
-
-def simhash_signatures(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    bits: int = SIMHASH_BITS,
-) -> DataFrame:
-    """(id, sh) signature table, dispatching on width: ≤32 bits runs
-    the pure-expression JVM fold (:func:`simhash`, oracle-replicable),
-    wider runs the numpy packed-bit pandas UDF (:func:`simhash64`).
-    Conditional spread first — both paths are CPU-bound per row."""
-    wide = spread(df)
-    sig = (
-        simhash(F.col(text_col), bits)
-        if bits <= SIMHASH_BITS
-        else simhash64(F.col(text_col), bits=bits)
-    )
-    return wide.select(F.col(id_col), sig.alias("sh"))
-
-
 def hamming_distance(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
@@ -1380,38 +1243,35 @@ def simhash_pairs(
     text_col: str,
     id_col: str,
     *,
-    bits: int = SIMHASH_BITS,
     max_hamming: int = 3,
-    num_bands: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash with multi-band blocking — the MinHash
     band scheme applied to the signature's bit ranges.
 
-    The signature splits into ``num_bands`` disjoint bands (default
-    ``max_hamming + 1``); candidates are pairs agreeing on AT LEAST ONE
-    band, verified by Hamming distance. Pigeonhole: ``max_hamming``
-    differing bits can dirty at most ``max_hamming`` bands, so with
-    ``max_hamming + 1`` bands every within-threshold pair shares a
-    clean band — **exact recall**, unlike single-band top-bits blocking
-    (which silently missed pairs whose differing bits fell in the
-    band). Scale: candidate buckets are keyed by (band index, band
-    value) — ``num_bands × 2^(bits/num_bands)`` blocks (default
-    4 × 2^8), dialable upward via ``bits``; bucket sizes shrink as the
-    signature space spreads, and the per-band join is one shuffle on
-    the bucket key.
+    The 32-bit signature splits into ``n = max_hamming + 1`` disjoint
+    bands, band ``b`` covering bits ``[b*32//n, (b+1)*32//n)``;
+    candidates are pairs agreeing on AT LEAST ONE band, verified by
+    Hamming distance. Pigeonhole: ``max_hamming`` differing bits can
+    dirty at most ``max_hamming`` bands, so one of the ``n`` bands is
+    clean for every within-threshold pair — **exact recall** for any
+    ``max_hamming`` in ``0..31``, since the bands only have to be
+    disjoint and cover the signature, not be of equal width (Manku et
+    al., WWW 2007). Scale: candidate buckets are keyed by (band index,
+    band value) — 4 × 2^8 blocks at ``max_hamming=3`` — and the
+    per-band join is one shuffle on the bucket key.
     """
-    num_bands = num_bands or (max_hamming + 1)
-    if bits % num_bands:
-        raise ValueError(f"bits={bits} not divisible by num_bands={num_bands}")
-    band_bits = bits // num_bands
-    mask = (1 << band_bits) - 1
-    # Conditional spread parallelizes the signature pass beyond a
-    # narrow scan's file granularity (identity on a wide cluster scan);
-    # the keyed barrier then materializes ONE signature pass that both
-    # self-join sides reuse (ReusedExchange). Pinned counts: AQE must
-    # not coalesce CPU-heavy stages (see shingle_table). Width
-    # dispatch: ≤32 bits = JVM expression fold, 64 = numpy pandas UDF.
-    sig = simhash_signatures(df, text_col, id_col, bits=bits)
+    if not 0 <= max_hamming < SIMHASH_BITS:
+        raise ValueError(
+            f"max_hamming={max_hamming} must be in 0..{SIMHASH_BITS - 1}"
+        )
+    n = max_hamming + 1
+    edges = [b * SIMHASH_BITS // n for b in range(n + 1)]
+    # Conditional spread parallelizes the CPU-bound signature pass
+    # beyond a narrow scan's file granularity (identity on a wide
+    # cluster scan); the keyed barrier then materializes ONE signature
+    # pass that both self-join sides reuse (ReusedExchange). Pinned
+    # counts: AQE must not coalesce CPU-heavy stages (see shingle_table).
+    sig = spread(df).select(F.col(id_col), simhash(F.col(text_col)).alias("sh"))
     sig = keyed_barrier(sig, id_col)
     banded = sig.select(
         id_col,
@@ -1421,11 +1281,11 @@ def simhash_pairs(
                 *[
                     F.struct(
                         F.lit(b).alias("bi"),
-                        F.shiftright("sh", b * band_bits)
-                        .bitwiseAND(F.lit(mask))
+                        F.shiftright("sh", lo)
+                        .bitwiseAND(F.lit((1 << (hi - lo)) - 1))
                         .alias("bv"),
                     )
-                    for b in range(num_bands)
+                    for b, (lo, hi) in enumerate(zip(edges, edges[1:]))
                 ]
             )
         ).alias("band"),
@@ -1461,18 +1321,16 @@ def ngram_jaccard_pairs(
     block_cols: list[str],
     shingle_k: int = 2,
     threshold: float = 0.3,
-    hashed: bool = True,
 ) -> DataFrame:
     """Exact Jaccard near-dup within blocking-key groups. The block
     join bounds pair count; for unblocked corpora use minhash_lsh_pairs.
 
-    ``hashed=True`` intersects 32-bit portable-hash values instead of the
-    strings — integer set ops per pair are far cheaper and the shuffled
-    sets shrink (same contract and collision note as
-    :func:`jaccard_verify`; the oracle applies the identical hash)."""
-    sh = word_shingles(F.col(text_col), k=shingle_k)
-    if hashed:
-        sh = hashed_shingles(sh)
+    The sets are 32-bit portable-hash values of the shingles
+    (:func:`hashed_shingles`) — integer set ops per pair are far cheaper
+    than string ones and the shuffled sets shrink (same contract and
+    collision note as :func:`jaccard_verify`; the oracle applies the
+    identical hash)."""
+    sh = hashed_shingles(word_shingles(F.col(text_col), k=shingle_k))
     # Conditional spread → shingle → keyed barrier: shingle in
     # parallel, once; both join sides read the ReusedExchange (see
     # simhash_pairs).

@@ -9,7 +9,7 @@ Two paths, same contract:
 - **LSH-bucketed top-k** — sign-random-projection buckets computed
   with the portable hash, so buckets are deterministic and
   oracle-reproducible. Probes only the query's bucket: at 100TB the
-  scan touches 1/2^bits of the corpus (bucketing prunes at the
+  scan touches 1/16 of the corpus (bucketing prunes at the
   partition level when data is written bucketed by ``bucket``).
 
 Scores are computed in double precision and rounded to 6 decimals so
@@ -90,7 +90,7 @@ def cosine_topk(
 # products parallelize, and is an IDENTITY on an already-wide
 # cluster-scale scan, where the old unconditional round-robin exchange
 # was a full extra pass over the corpus that the LSH bucket filter then
-# discarded ~(2^bits−1)/2^bits of.
+# discarded ~15/16 of.
 
 
 def cosine_topk_batch(
@@ -139,17 +139,17 @@ def cosine_topk_batch(
     )
 
 
-def srp_bucket(vec: Column, *, bits: int = 4, dim: int = 64) -> Column:
-    """Sign-random-projection LSH bucket id.
+def srp_bucket(vec: Column) -> Column:
+    """Sign-random-projection LSH bucket id in ``0..15``.
 
-    Projection matrix entries are ±1 derived from md5 parity of
-    ``(bit, dimension)`` — fully deterministic, no stored model. Bucket
-    bit b = sign of <vec, r_b>, computed as one zip_with fold against a
-    literal sign array (a compact codegen'd expression per bit).
+    The projection matrix is the fixed 4 × 64 ±1 ``_PROJ_SIGNS`` table,
+    from md5 parity of ``(bit, dimension)`` — fully deterministic, no
+    stored model. Bucket bit b = [<vec, r_b> > 0], one zip_with fold
+    against a literal sign array per bit.
     """
     bucket = F.lit(0).cast("long")
-    for b in range(bits):
-        signs = F.array(*[F.lit(1.0 if _PROJ_SIGNS[(b, d)] else -1.0) for d in range(dim)])
+    for b, row in enumerate(_PROJ_SIGNS):
+        signs = F.array(*[F.lit(1.0 if s else -1.0) for s in row])
         proj = F.aggregate(
             F.zip_with(vec, signs, lambda x, s: x.cast("double") * s),
             F.lit(0.0),
@@ -159,19 +159,20 @@ def srp_bucket(vec: Column, *, bits: int = 4, dim: int = 64) -> Column:
     return bucket
 
 
-def _proj_sign_table(bits: int = 4, dim: int = 64) -> dict[tuple[int, int], bool]:
-    """Precompute ±1 signs from md5 parity — mirrors
-    ``portable_hash(f'{b}:{d}', seed=7) % 2`` and is rendered into the
-    oracle SQL the same way (constants, so both engines agree by
-    construction)."""
+def _proj_sign_table() -> tuple[tuple[bool, ...], ...]:
+    """The 4 × 64 projection signs (row b = bucket bit b, True = +1)
+    from md5 parity — mirrors ``portable_hash(f'{b}:{d}', seed=7) % 2``
+    and is rendered into the oracle SQL the same way (constants, so
+    both engines agree by construction)."""
     import hashlib
 
-    table = {}
-    for b in range(bits):
-        for d in range(dim):
-            h = hashlib.md5(f"7:{b}:{d}".encode()).hexdigest()[:8]
-            table[(b, d)] = (int(h, 16) % 2) == 1
-    return table
+    return tuple(
+        tuple(
+            int(hashlib.md5(f"7:{b}:{d}".encode()).hexdigest()[:8], 16) % 2 == 1
+            for d in range(64)
+        )
+        for b in range(4)
+    )
 
 
 _PROJ_SIGNS = _proj_sign_table()
@@ -184,8 +185,6 @@ def lsh_cosine_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     k: int = 10,
-    bits: int = 4,
-    dim: int = 64,
 ) -> DataFrame:
     """Approximate top-k: score only vectors in the query's SRP bucket.
 
@@ -194,14 +193,12 @@ def lsh_cosine_topk(
     corpus bucketed/partitioned by ``srp_bucket`` so the probe is a
     partition-pruned scan instead of a full pass.
     """
-    corpus = _spread(embeddings).withColumn(
-        "__bucket", srp_bucket(F.col(vec_col), bits=bits, dim=dim)
-    )
+    corpus = _spread(embeddings).withColumn("__bucket", srp_bucket(F.col(vec_col)))
     q = F.broadcast(
         query.select(
             F.col(vec_col).alias("__qvec"),
             _norm(F.col(vec_col)).alias("__qn"),
-            srp_bucket(F.col(vec_col), bits=bits, dim=dim).alias("__qbucket"),
+            srp_bucket(F.col(vec_col)).alias("__qbucket"),
         )
     )
     scored = (
@@ -401,7 +398,7 @@ def semantic_dedup(
     its own component. Components come from the same clustering as
     text dedup (functions/dedup.py::near_dup_clusters): a pair graph
     of at most ``_DRIVER_FINISH_MAX_EDGES`` edges finishes in one
-    driver-side union-find, a larger one runs the accelerated
+    driver-side union-find, a larger one runs the pointer-jumping
     distributed min-label rounds.
 
     ``max_cluster_size`` is the LOUD VALVE on that quadratic block —
@@ -505,9 +502,9 @@ def semantic_dedup(
         .where(cosine(F.col("a.v"), F.col("b.v")) >= threshold)
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     )
-    comp = near_dup_clusters(
-        pairs, assigned.select("id"), "id", accelerate=True
-    ).withColumnRenamed("cluster", "component")
+    comp = near_dup_clusters(pairs, assigned.select("id"), "id").withColumnRenamed(
+        "cluster", "component"
+    )
     scored = assigned.join(comp, "id")
     keepers = scored.groupBy("component").agg(
         F.min_by("id", F.struct("csim", "id")).alias("__keep_id")

@@ -282,7 +282,6 @@ def tf_idf(
     id_col: str,
     *,
     carry_cols: tuple[str, ...] = (),
-    broadcast_idf: bool = True,
 ):
     """Per-(document, term) TF-IDF over whitespace tokens — the classic
     corpus statistic (SURVEY §2.10 text-analysis row): ``tf`` = term
@@ -300,12 +299,9 @@ def tf_idf(
     the ``count_if`` guard below is what keeps the two consumer
     copies canonically identical. The corpus document count rides the
     plan as a broadcast 1-row aggregate (no separate driver action).
-    With ``broadcast_idf=True`` (default) the vocabulary-sized idf
-    table broadcasts — right while the vocabulary fits executor
-    memory (natural-language vocabularies are tiny next to the
-    corpus); set False for web-scale vocabularies (URLs, hashes
-    blowing up the term space) to use a shuffle join on ``term``
-    instead.
+    The vocabulary-sized idf table broadcasts into the final join,
+    which assumes the vocabulary fits executor memory
+    (natural-language vocabularies are tiny next to the corpus).
 
     ``carry_cols`` are document-LEVEL attributes (functionally
     dependent on ``id_col``, e.g. a language label) carried through to
@@ -314,8 +310,6 @@ def tf_idf(
 
     Returns (id, *carry, term, tf, tf_idf).
     """
-    from pyspark.sql import functions as F  # noqa: F811 — local alias
-
     total = df.agg(F.count(F.lit(1)).alias("__n_docs"))
     terms = df.select(
         F.col(id_col),
@@ -343,7 +337,7 @@ def tf_idf(
     idf = dfreq.join(F.broadcast(total)).select(
         "term", F.log(F.col("__n_docs") / F.col("__df")).alias("__idf")
     )
-    joined = tf.join(F.broadcast(idf) if broadcast_idf else idf, "term")
+    joined = tf.join(F.broadcast(idf), "term")
     return joined.select(
         id_col,
         *carry_cols,

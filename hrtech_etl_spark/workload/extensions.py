@@ -1311,11 +1311,10 @@ def dedup_clusters(spark, sf_dir):
     side is the production clustering: a graph of at most
     ``_DRIVER_FINISH_MAX_EDGES`` edges (every fixture scale here)
     finishes in one driver-side union-find; a larger one runs the
-    iterative min-label propagation with the pointer-jumping
-    accelerant (O(log diameter) rounds, one persisted frame + one
-    count per round). The oracle states the SAME fixed point
-    declaratively as a recursive CTE (min reachable id over the
-    undirected closure). Pairs come from the
+    pointer-jumping min-label rounds (O(log diameter) rounds, one
+    persisted frame + one count per round). The oracle states the SAME
+    fixed point declaratively as a recursive CTE (min reachable id over
+    the undirected closure). Pairs come from the
     SCALE path: banded MinHash LSH candidates (never all-pairs — a
     band bucket only collides similar docs) exact-Jaccard-verified at
     threshold 0.3, sharing ONE shingle exchange between signature and
@@ -1334,8 +1333,8 @@ def _lsh_cluster_labels(spark, sf_dir):
     ctes on the oracle side): shingle once, banded MinHash candidates,
     exact-Jaccard verify at 0.3, min-id clusters. The verified graph
     is small at every fixture scale, so ``near_dup_clusters`` finishes
-    it on the driver; ``accelerate=True`` only matters on a graph
-    large enough to take the distributed rounds."""
+    it on the driver; a graph large enough to take the distributed
+    rounds would run them with pointer-jumping."""
     d = load_table(spark, "documents", sf_dir)
     # drop_empty (r18): see dedup_minhash_lsh — prunes shingle-less
     # docs below the shared exchange; candidates/verify invariant
@@ -1346,7 +1345,7 @@ def _lsh_cluster_labels(spark, sf_dir):
     pairs = dd.jaccard_verify(
         cand, d, "text", "doc_id", threshold=0.3, shingles=sh
     )
-    return dd.near_dup_clusters(pairs, d, "doc_id", accelerate=True)
+    return dd.near_dup_clusters(pairs, d, "doc_id")
 
 
 @query(

@@ -83,13 +83,13 @@ def minhash_sql(j: int, shingles: str = "sh") -> str:
     )
 
 
-def simhash_sql(bits: int = dd.SIMHASH_BITS) -> str:
-    """Bit-vote simhash over distinct tokens, DuckDB dialect (default
-    32-bit, matching dedup.SIMHASH_BITS)."""
+def simhash_sql() -> str:
+    """Bit-vote simhash over distinct tokens, DuckDB dialect
+    (dedup.SIMHASH_BITS wide)."""
     toks = TOKENS_SQL.format(t="text")
     hashes = f"list_transform(list_distinct({toks}), t -> {portable_hash_sql('t', seed=99)})"
     terms = []
-    for i in range(bits):
+    for i in range(dd.SIMHASH_BITS):
         mask = 1 << i
         terms.append(
             f"(CASE WHEN 2 * len(list_filter(hs, h -> (h & {mask}) != 0)) > len(hs) THEN {mask} ELSE 0 END)"
@@ -97,13 +97,11 @@ def simhash_sql(bits: int = dd.SIMHASH_BITS) -> str:
     return f"(SELECT {' + '.join(terms)} FROM (SELECT {hashes} AS hs) __sh)"
 
 
-def srp_bucket_sql(vec_expr: str, bits: int = 4, dim: int = 64) -> str:
+def srp_bucket_sql(vec_expr: str) -> str:
     """SRP bucket from the same ±1 sign table the Spark side uses."""
     parts = []
-    for b in range(bits):
-        signs = ",".join(
-            "1.0" if sim._PROJ_SIGNS[(b, d)] else "-1.0" for d in range(dim)
-        )
+    for b, row in enumerate(sim._PROJ_SIGNS):
+        signs = ",".join("1.0" if s else "-1.0" for s in row)
         parts.append(
             f"(CASE WHEN list_dot_product({vec_expr}, [{signs}]) > 0 THEN {1 << b} ELSE 0 END)"
         )

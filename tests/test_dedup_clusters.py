@@ -70,22 +70,25 @@ def test_transitive_chain_collapses(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
 
 
-def test_long_chain_converges(spark, force_rounds):
-    """A path graph needs O(diameter) rounds — make sure propagation
-    actually iterates rather than stopping after one round."""
+def test_long_chain_converges(spark, force_rounds, monkeypatch):
+    """A path graph needs several rounds — make sure propagation
+    actually iterates rather than stopping after one round, and that
+    the round bound raises."""
     n = 12
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, n)], ["id_a", "id_b"]
     )
     ids = spark.createDataFrame([(i,) for i in range(1, n + 1)], ["doc_id"])
+    monkeypatch.setattr(dedup, "_MAX_ROUNDS", 20)
     got = {
         r["id"]: r["cluster"]
-        for r in near_dup_clusters(pairs, ids, "doc_id", max_iterations=20).collect()
+        for r in near_dup_clusters(pairs, ids, "doc_id").collect()
     }
     assert set(got.values()) == {1}
 
-    with pytest.raises(RuntimeError, match="did not converge"):
-        near_dup_clusters(pairs, ids, "doc_id", max_iterations=2)
+    monkeypatch.setattr(dedup, "_MAX_ROUNDS", 2)
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        near_dup_clusters(pairs, ids, "doc_id")
 
 
 def test_clusters_match_union_find_on_documents(spark, sf_dir, cluster_path):
@@ -165,44 +168,26 @@ def test_one_driver_action_per_round(spark, force_rounds, monkeypatch):
     assert counts == {"count": 3, "ckpt_eager": 2, "ckpt_lazy": 3}
 
 
-def test_accelerated_chain_converges_in_log_rounds(spark, force_rounds):
-    """accelerate=True composes labels through the previous round's
-    mapping (pointer jump): a 40-node path — 39 rounds for plain
-    propagation — converges within 9 rounds, same labels."""
+def test_accelerated_chain_converges_in_log_rounds(spark, force_rounds, monkeypatch):
+    """The rounds compose labels through the previous round's mapping
+    (pointer jump): a 40-node path — 39 rounds for plain min-label
+    propagation — converges within 9 rounds, same labels, and is still
+    unconverged after 5 (the reach doubles per round: 1, 2, 4, 8, 16)."""
     n = 40
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, n)], ["id_a", "id_b"]
     )
     ids = spark.createDataFrame([(i,) for i in range(1, n + 1)], ["doc_id"])
+    monkeypatch.setattr(dedup, "_MAX_ROUNDS", 9)
     got = {
         r["id"]: r["cluster"]
-        for r in near_dup_clusters(
-            pairs, ids, "doc_id", max_iterations=9, accelerate=True
-        ).collect()
+        for r in near_dup_clusters(pairs, ids, "doc_id").collect()
     }
     assert set(got.values()) == {1} and len(got) == n
 
+    monkeypatch.setattr(dedup, "_MAX_ROUNDS", 5)
     with pytest.raises(RuntimeError, match="did not converge"):
-        near_dup_clusters(pairs, ids, "doc_id", max_iterations=9)
-
-
-def test_accelerated_matches_plain_on_documents(spark, sf_dir, cluster_path):
-    from hrtech_etl_spark.sources.testdata import load_table
-
-    d = load_table(spark, "documents", sf_dir)
-    cand = minhash_lsh_pairs(d, "text", "doc_id")
-    verified = jaccard_verify(cand, d, "text", "doc_id", threshold=0.5)
-    plain = {
-        r["id"]: r["cluster"]
-        for r in near_dup_clusters(verified, d.select("doc_id"), "doc_id").collect()
-    }
-    fast = {
-        r["id"]: r["cluster"]
-        for r in near_dup_clusters(
-            verified, d.select("doc_id"), "doc_id", accelerate=True
-        ).collect()
-    }
-    assert plain == fast
+        near_dup_clusters(pairs, ids, "doc_id")
 
 
 def test_minhash_bucket_cap(spark):
@@ -269,10 +254,11 @@ def test_remove_stop_shingles(spark):
         remove_stop_shingles(sh, max_doc_frac=0.0, max_stop=3)
 
 
-def test_remove_stop_shingles_broadcast_path_matches_literal(spark):
-    """Above literal_max the filter switches from a literal array_except
-    to a broadcast-variable pandas filter; both paths must produce the
-    identical cleaned table (forced here with literal_max=0)."""
+def test_remove_stop_shingles_broadcast_path_matches_literal(spark, monkeypatch):
+    """Above STOP_SHINGLE_LITERAL_MAX stop shingles the filter switches
+    from a literal array_except to a broadcast-variable pandas filter;
+    both paths must produce the identical cleaned table (forced here
+    by patching the bound to 0)."""
     from hrtech_etl_spark.functions.dedup import (
         remove_stop_shingles,
         shingle_table,
@@ -283,9 +269,10 @@ def test_remove_stop_shingles_broadcast_path_matches_literal(spark):
     df = spark.createDataFrame(docs, ["doc_id", "text"])
     sh = shingle_table(df, "text", "doc_id", hashed=True)
     literal = {r["doc_id"]: r["sh"] for r in remove_stop_shingles(sh, max_doc_frac=0.5).collect()}
+    monkeypatch.setattr(dedup, "STOP_SHINGLE_LITERAL_MAX", 0)
     bcast = {
         r["doc_id"]: r["sh"]
-        for r in remove_stop_shingles(sh, max_doc_frac=0.5, literal_max=0).collect()
+        for r in remove_stop_shingles(sh, max_doc_frac=0.5).collect()
     }
     assert bcast == literal
     assert any(len(v) > 0 for v in bcast.values())

@@ -41,17 +41,6 @@ def test_incremental_drop(spark):
     assert kept == [103, 107, 109]
 
 
-def test_incremental_no_within_batch(spark):
-    corpus, batch = _dfs(spark)
-    idx = dd.lsh_index(corpus, "text", "doc_id")
-    out = dd.drop_near_duplicates_incremental(
-        batch, idx, "text", "doc_id", threshold=0.5, dedup_within_batch=False
-    )
-    kept = sorted(r["doc_id"] for r in out.collect())
-    # only the corpus hit is removed; the internal pair both survive
-    assert kept == [103, 105, 107, 109]
-
-
 def test_matches_union_dedup(spark):
     """Invariant vs the batch-free path: when corpus ids < batch ids,
     drop_near_duplicates over corpus ∪ batch keeps exactly corpus ∪

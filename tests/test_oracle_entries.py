@@ -6,7 +6,10 @@ rounds, the global-rank plan, the media feature kernel, the
 similarity module (cosine scoring and the shared coarse quantizer),
 the streaming window aggregates (the declared windows call the
 engine's ``tumbling_counts``/``sliding_counts``/``session_counts``)
-and the incremental dedup path left in the cut-down dedup module."""
+the incremental dedup path left in the cut-down dedup module, and the
+first-50 entries over the dedup, text and similarity functions whose
+one-value options were retired (tf-idf, MinHash verify, SimHash bands,
+n-gram Jaccard, SRP buckets)."""
 
 from __future__ import annotations
 
@@ -30,6 +33,11 @@ ENTRIES = [
     "stream_sliding_window",
     "stream_session_window",
     "dedup_incremental",
+    "text_token_stats",
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "dedup_ngram_jaccard",
+    "sim_lsh_topk",
 ]
 
 

@@ -1,5 +1,5 @@
-"""Registry-order lock, tools/ compile smoke, unused-import check and
-doc-command check.
+"""Registry-order lock, tools/ compile smoke, unused-import check,
+one-value bool option check and doc-command check.
 
 The driver's correctness gate reads the FIRST 50 registry entries in
 registration order (see ``workload/__init__.py``). Registration order
@@ -171,6 +171,75 @@ def test_module_imports_are_used(path):
 
 
 REPO_ROOT = TOOLS_DIR.parent
+
+
+def _bool_defaults(fn: ast.FunctionDef) -> dict:
+    """``{param: default}`` for the parameters of ``fn`` whose default
+    is a bool literal."""
+    a = fn.args
+    pairs = list(zip(a.args[len(a.args) - len(a.defaults):], a.defaults))
+    pairs += [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return {
+        p.arg: d.value
+        for p, d in pairs
+        if isinstance(d, ast.Constant) and isinstance(d.value, bool)
+    }
+
+
+def _non_default_uses(fname: str, params: list, defaults: dict) -> set:
+    """Parameters of ``fname`` that some call in the package, ``hrbench/``
+    or ``tools/`` passes a value other than the literal default (an
+    expression counts: it may be either value)."""
+    used = set()
+    roots = (PACKAGE_DIR, REPO_ROOT / "hrbench", TOOLS_DIR)
+    for path in (f for root in roots for f in root.rglob("*.py")):
+        for call in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name != fname:
+                continue
+            passed = {k.arg: k.value for k in call.keywords if k.arg}
+            passed.update(
+                (params[i], v)
+                for i, v in enumerate(call.args)
+                if i < len(params) and not isinstance(v, ast.Starred)
+            )
+            for p, v in passed.items():
+                if p in defaults and not (
+                    isinstance(v, ast.Constant) and v.value == defaults[p]
+                ):
+                    used.add(p)
+    return used
+
+
+@pytest.mark.parametrize(
+    "path",
+    sorted(
+        p for p in (PACKAGE_DIR / "functions").glob("*.py") if p.name != "__init__.py"
+    ),
+    ids=lambda p: str(p.relative_to(PACKAGE_DIR)),
+)
+def test_bool_options_have_a_non_default_caller(path):
+    """Every bool-defaulted parameter of a public ``functions/`` function
+    is passed its other value by some caller outside the tests. A flag
+    that no caller flips is a second code path that no workload runs:
+    make the used value the only behaviour instead."""
+    tree = ast.parse(path.read_text())
+    unused = []
+    for fn in tree.body:
+        if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
+            continue
+        defaults = _bool_defaults(fn)
+        if not defaults:
+            continue
+        params = [p.arg for p in fn.args.args]
+        used = _non_default_uses(fn.name, params, defaults)
+        unused += [f"{fn.name}({p}=)" for p in sorted(defaults) if p not in used]
+    assert not unused, f"bool options no caller sets to their other value: {unused}"
+
+
 DOCS = ("README.md", ".claude/skills/verify/SKILL.md")
 _PYTHON_CMD = re.compile(r"\bpython3?\s+([^\s`]+)")
 

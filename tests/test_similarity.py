@@ -48,6 +48,31 @@ def test_ivf_probes_fraction_of_corpus(spark):
     assert full == exact
 
 
+def test_srp_bucket_matches_numpy_reference(spark):
+    """srp_bucket equals sum_b [v . r_b > 0] * 2^b with r_b the b-th
+    row of the ±1 table, on seeded random 64-dim vectors and a zero
+    vector (no positive projection: bucket 0)."""
+    import numpy as np
+
+    rng = np.random.default_rng(13)
+    vecs = [rng.standard_normal(64).tolist() for _ in range(40)] + [[0.0] * 64]
+    df = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id int, embedding array<double>"
+    )
+    got = {
+        r["vec_id"]: r["bucket"]
+        for r in df.select(
+            "vec_id", sim.srp_bucket(F.col("embedding")).alias("bucket")
+        ).collect()
+    }
+    signs = np.where(np.array(sim._PROJ_SIGNS), 1.0, -1.0)
+    assert signs.shape == (4, 64)
+    proj = np.array(vecs) @ signs.T
+    want = {i: int(((proj[i] > 0) * (1 << np.arange(4))).sum()) for i in range(len(vecs))}
+    assert got == want
+    assert got[len(vecs) - 1] == 0 and len(set(got.values())) > 1
+
+
 def test_zero_norm_vector_scores_null(spark):
     """A zero-norm embedding has no direction: its cosine is NULL (the
     DuckDB oracle's 0.0/0.0), not a DIVIDE_BY_ZERO under ANSI mode. It

@@ -42,12 +42,12 @@ def test_tf_idf_hand_computed(spark, corpus):
 
 
 def test_tf_idf_carry_cols_and_join_modes(spark, corpus):
-    """carry_cols flow through; broadcast and shuffle idf joins agree."""
+    """carry_cols flow through without changing the scores."""
     a = tx.tf_idf(corpus, "text", "doc_id", carry_cols=("lang",))
     assert set(a.columns) == {"doc_id", "lang", "term", "tf", "tf_idf"}
     rows = {(r["doc_id"], r["term"]): r["lang"] for r in a.collect()}
     assert rows[(1, "apple")] == "en" and rows[(3, "cherry")] == "fr"
-    b = tx.tf_idf(corpus, "text", "doc_id", broadcast_idf=False)
+    b = tx.tf_idf(corpus, "text", "doc_id")
     av = {(r["doc_id"], r["term"]): r["tf_idf"] for r in a.collect()}
     bv = {(r["doc_id"], r["term"]): r["tf_idf"] for r in b.collect()}
     assert av == bv

@@ -4,23 +4,28 @@ these tests give the estimates teeth)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from hrtech_etl_spark.sources.testdata import load_table
 from hrtech_etl_spark.workload import REGISTRY
 
 
-def test_simhash_multiband_exact_recall(spark, sf_dir):
-    """Multi-band blocking (max_hamming+1 disjoint bands) must find
-    EXACTLY the pairs the unblocked all-pairs join finds — pigeonhole
-    guarantees no within-threshold pair is missed, and the Hamming
-    verify removes any extras."""
+@pytest.mark.parametrize("max_hamming", [2, 3, 5])
+def test_simhash_multiband_exact_recall(spark, sf_dir, max_hamming):
+    """Multi-band blocking (max_hamming+1 disjoint bands, of uneven
+    width when they do not divide 32) must find EXACTLY the pairs the
+    unblocked all-pairs join finds — pigeonhole guarantees no
+    within-threshold pair is missed, and the Hamming verify removes any
+    extras."""
     from hrtech_etl_spark.functions import dedup as dd
 
     d = load_table(spark, "documents", sf_dir)
     banded = {
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in dd.simhash_pairs(d, "text", "doc_id", max_hamming=3).collect()
+        for r in dd.simhash_pairs(
+            d, "text", "doc_id", max_hamming=max_hamming
+        ).collect()
     }
     sig = d.select(F.col("doc_id"), dd.simhash(F.col("text")).alias("sh"))
     a, b = sig.alias("a"), sig.alias("b")
@@ -32,10 +37,29 @@ def test_simhash_multiband_exact_recall(spark, sf_dir):
             F.col("b.doc_id").alias("id_b"),
             dd.hamming_distance(F.col("a.sh"), F.col("b.sh")).alias("hamming"),
         )
-        .where(F.col("hamming") <= 3)
+        .where(F.col("hamming") <= max_hamming)
         .collect()
     }
-    assert banded == brute
+    assert brute and banded == brute
+
+
+def test_simhash_null_text_produces_no_pairs(spark):
+    """Null-text rows get a NULL signature, whose NULL band values never
+    join: they must not pair as hamming-0 duplicates."""
+    from hrtech_etl_spark.functions import dedup as dd
+
+    rows = [(0, None), (1, None), (2, "real text content here"), (3, None)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    assert dd.simhash_pairs(df, "text", "doc_id").collect() == []
+
+
+@pytest.mark.parametrize("max_hamming", [-1, 32])
+def test_simhash_pairs_rejects_max_hamming_out_of_range(spark, max_hamming):
+    from hrtech_etl_spark.functions import dedup as dd
+
+    df = spark.createDataFrame([(0, "text")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="max_hamming"):
+        dd.simhash_pairs(df, "text", "doc_id", max_hamming=max_hamming)
 
 
 def test_approx_distinct_within_tolerance(spark, sf_medium):

@@ -9,9 +9,10 @@ and drive the corpus-scale pipeline end to end with all knobs on:
    ``drop_near_duplicates`` on the survivors — must collapse to ~the
    base-corpus cluster count with no driver blow-up;
 1b. raw ``drop_near_duplicates`` over the full replicated corpus
-   (stop-shingle removal, band-bucket cap, accelerated clustering) —
-   the THROUGHPUT probe. Its kept-count is cap-bound once the
-   duplicate multiplicity exceeds ``max_bucket_size``: exact copies
+   (stop-shingle removal, band-bucket cap, distributed pointer-jumping
+   clustering rounds) — the THROUGHPUT probe. Its kept-count is
+   cap-bound once the duplicate multiplicity exceeds
+   ``max_bucket_size``: exact copies
    share every band, so when copies x base-bucket-size overflows the
    cap, ALL of a clone-set's buckets are shed and those pairs are
    lost (the valve's documented recall trade — which is exactly why
@@ -189,7 +190,6 @@ def run_doc_stages(spark, meter, args, root) -> None:
             threshold=0.5,
             stop_shingle_frac=0.5,
             max_bucket_size=500,
-            accelerate=True,
         ).count()
 
     kept_designed, dt = meter.run("exact+near dedup", exact_then_near)
@@ -208,7 +208,6 @@ def run_doc_stages(spark, meter, args, root) -> None:
             threshold=0.5,
             stop_shingle_frac=0.5,
             max_bucket_size=500,
-            accelerate=True,
         ).count(),
     )
     print(
