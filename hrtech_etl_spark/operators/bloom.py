@@ -207,15 +207,6 @@ def bloom_prefilter(
     return df.where(bloom_might_contain(df, bloom, key_col))
 
 
-def bloom_anti_prefilter(
-    df: DataFrame, bloom: BloomFilter, key_col: str
-) -> DataFrame:
-    """Keep only rows whose key is DEFINITELY NOT in the filter — the
-    dedup-screening direction (definitely-new rows skip the exact
-    check entirely; no false negatives means nothing new is lost)."""
-    return df.where(~bloom_might_contain(df, bloom, key_col))
-
-
 def bloom_semi_join(
     big: DataFrame,
     small: DataFrame,

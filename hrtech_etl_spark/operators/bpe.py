@@ -39,6 +39,14 @@ from hrtech_etl_spark.functions.text import tokens
 #: chosen to be absent from whitespace-tokenized words in practice.
 END_OF_WORD = "</w>"
 
+# Training collects the word-TYPE table to the driver when it has at
+# most this many rows, and otherwise runs the distributed merge rounds.
+_MAX_COLLECT = 2_000_000
+
+# The distributed rounds re-checkpoint the word table every this many
+# merges, so plan depth stays bounded.
+_CHECKPOINT_EVERY = 8
+
 
 def _merge_fold(syms: Column, a: str, b: str) -> Column:
     """Apply ONE merge rule (a, b) → a+b exhaustively, left-to-right
@@ -89,9 +97,7 @@ def _adjacent_pairs(syms: Column) -> Column:
     )
 
 
-def bpe_word_table(
-    docs: DataFrame, text_col: str, *, end_of_word: str = END_OF_WORD
-) -> DataFrame:
+def bpe_word_table(docs: DataFrame, text_col: str) -> DataFrame:
     """The ONE corpus pass: whitespace-lowercase word-type frequency
     table with each word exploded into initial symbols
     (chars + end-of-word marker): ``(word, freq, syms)``."""
@@ -106,7 +112,7 @@ def bpe_word_table(
         "syms",
         F.concat(
             F.expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"),
-            F.array(F.lit(end_of_word)),
+            F.array(F.lit(END_OF_WORD)),
         ),
     )
 
@@ -130,7 +136,6 @@ def _train_local(
     word_freqs: list[tuple[str, int]],
     num_merges: int,
     min_count: int,
-    end_of_word: str,
 ) -> tuple[list[tuple[str, str]], list[tuple[str, int, list[str]]]]:
     """Driver-side trainer over the collected word-TYPE frequency
     table — byte-for-byte the same merges as the distributed loop
@@ -140,7 +145,7 @@ def _train_local(
     lazy-invalidation heap for the argmax."""
     import heapq
 
-    words = [(list(w) + [end_of_word], f) for w, f in word_freqs]
+    words = [(list(w) + [END_OF_WORD], f) for w, f in word_freqs]
     pair_counts: dict[tuple[str, str], int] = {}
     pair_words: dict[tuple[str, str], set[int]] = {}
     for idx, (syms, freq) in enumerate(words):
@@ -198,63 +203,11 @@ def _train_local(
     return merges, vocab
 
 
-def bpe_train(
-    docs: DataFrame,
-    text_col: str,
-    *,
-    num_merges: int = 50,
-    min_count: int = 2,
-    end_of_word: str = END_OF_WORD,
-    checkpoint_every: int = 8,
-    max_collect: int = 2_000_000,
-) -> list[tuple[str, str]]:
-    """Learn up to ``num_merges`` BPE merge rules from the corpus.
-
-    Deterministic: the argmax tie-break is (count DESC, a ASC, b ASC).
-    Stops early when no adjacent pair reaches ``min_count``. Returns
-    the ordered merge list — a bounded driver-side artifact (the
-    tokenizer model).
-
-    Two physical strategies, same merges either way:
-
-    - **collected** (word-type count ≤ ``max_collect``): ONE corpus
-      pass aggregates the word-TYPE table; the (word, freq) pairs —
-      vocabulary-sized, NOT corpus-sized — collect to the driver and
-      train there with incremental pair-count updates (only word
-      types containing the merged pair are touched per round) and a
-      lazy-invalidation heap. This is how production tokenizer
-      trainers run: the distributed engine does the corpus-scale
-      count, the bounded model fits on one node. 30 merge rounds cost
-      milliseconds instead of 30 Spark jobs.
-    - **distributed** (more word types than ``max_collect``, or
-      ``max_collect=0``): every round is one keyed aggregate with
-      map-side partials over the word table + a 1-ROW argmax collect,
-      and the merge applies as a JVM-side fold. Unbounded vocabulary,
-      O(rounds) jobs.
-
-    ``tests/test_bpe.py`` asserts both strategies produce identical
-    merge lists on the same corpus.
-    """
-    words = bpe_word_table(docs, text_col, end_of_word=end_of_word)
-    head = _collect_word_types(words, max_collect)
-    if head is not None:
-        merges, _ = _train_local(head, num_merges, min_count, end_of_word)
-        return merges
-    merges, _ = _train_distributed(
-        words, num_merges, min_count, checkpoint_every
-    )
-    return merges
-
-
-def _collect_word_types(
-    words: DataFrame, max_collect: int
-) -> list[tuple[str, int]] | None:
-    """Collect the word-TYPE table when it fits under ``max_collect``
+def _collect_word_types(words: DataFrame) -> list[tuple[str, int]] | None:
+    """Collect the word-TYPE table when it fits under ``_MAX_COLLECT``
     (the collected-trainer gate); None → stay distributed."""
-    if not max_collect:
-        return None
-    head = words.select("word", "freq").limit(max_collect + 1).collect()
-    if len(head) > max_collect:
+    head = words.select("word", "freq").limit(_MAX_COLLECT + 1).collect()
+    if len(head) > _MAX_COLLECT:
         return None
     return [(r["word"], r["freq"]) for r in head]
 
@@ -263,7 +216,6 @@ def _train_distributed(
     words: DataFrame,
     num_merges: int,
     min_count: int,
-    checkpoint_every: int,
 ) -> tuple[list[tuple[str, str]], DataFrame]:
     """The distributed merge-round loop; returns the merges and the
     word table carrying each type's final segmentation."""
@@ -285,7 +237,7 @@ def _train_distributed(
         a, b = best[0]["a"], best[0]["b"]
         merges.append((a, b))
         words = words.withColumn("syms", _merge_fold(F.col("syms"), a, b))
-        if (r + 1) % checkpoint_every == 0:
+        if (r + 1) % _CHECKPOINT_EVERY == 0:
             words = words.localCheckpoint()
     return merges, words
 
@@ -296,39 +248,58 @@ def bpe_train_with_vocab(
     *,
     num_merges: int = 50,
     min_count: int = 2,
-    end_of_word: str = END_OF_WORD,
-    checkpoint_every: int = 8,
-    max_collect: int = 2_000_000,
 ) -> tuple[list[tuple[str, str]], DataFrame]:
-    """:func:`bpe_train` that ALSO returns the trained vocabulary —
-    ``(word, freq, syms)`` with each word type's FINAL segmentation
-    after all merges. Training already computes this as a byproduct
-    (the word table IS the training state), so callers encoding the
-    same corpus can segment by a vocabulary JOIN instead of re-running
-    per-word merge loops in Python — the scale path
-    :func:`bpe_encode_with_vocab` uses."""
+    """Learn up to ``num_merges`` BPE merge rules from the corpus, and
+    the trained vocabulary.
+
+    Deterministic: the argmax tie-break is (count DESC, a ASC, b ASC).
+    Stops early when no adjacent pair reaches ``min_count``. Returns
+    the ordered merge list — a bounded driver-side artifact (the
+    tokenizer model) — and ``(word, freq, syms)`` with each word
+    type's FINAL segmentation after all merges. Training already
+    computes the vocabulary as a byproduct (the word table IS the
+    training state), so callers encoding the same corpus can segment
+    by a vocabulary JOIN instead of re-running per-word merge loops in
+    Python — the scale path :func:`bpe_encode_with_vocab` uses.
+
+    Two physical strategies, same merges either way, picked by the
+    word-type count:
+
+    - **collected** (at most ``_MAX_COLLECT`` word types): ONE corpus
+      pass aggregates the word-TYPE table; the (word, freq) pairs —
+      vocabulary-sized, NOT corpus-sized — collect to the driver and
+      train there with incremental pair-count updates (only word
+      types containing the merged pair are touched per round) and a
+      lazy-invalidation heap. This is how production tokenizer
+      trainers run: the distributed engine does the corpus-scale
+      count, the bounded model fits on one node. 30 merge rounds cost
+      milliseconds instead of 30 Spark jobs.
+    - **distributed** (more word types): every round is one keyed
+      aggregate with map-side partials over the word table + a 1-ROW
+      argmax collect, and the merge applies as a JVM-side fold.
+      Unbounded vocabulary, O(rounds) jobs.
+
+    ``tests/test_bpe.py`` asserts both strategies produce identical
+    merge lists on the same corpus.
+    """
     spark = docs.sparkSession
-    words = bpe_word_table(docs, text_col, end_of_word=end_of_word)
-    head = _collect_word_types(words, max_collect)
+    words = bpe_word_table(docs, text_col)
+    head = _collect_word_types(words)
     if head is not None:
-        merges, vocab_rows = _train_local(
-            head, num_merges, min_count, end_of_word
-        )
+        merges, vocab_rows = _train_local(head, num_merges, min_count)
         vocab = spark.createDataFrame(
             vocab_rows, "word string, freq long, syms array<string>"
         )
         return merges, vocab
-    merges, words = _train_distributed(
-        words, num_merges, min_count, checkpoint_every
-    )
+    merges, words = _train_distributed(words, num_merges, min_count)
     return merges, words.select("word", "freq", "syms")
 
 
-def _encode_word(word: str, ranks: dict, eow: str) -> list[str]:
+def _encode_word(word: str, ranks: dict) -> list[str]:
     """Greedy BPE encode of one word: repeatedly apply the
     lowest-ranked applicable merge, exhaustively left-to-right — the
     same application order training used."""
-    syms = list(word) + [eow]
+    syms = list(word) + [END_OF_WORD]
     while len(syms) > 1:
         best_rank, best_pair = None, None
         for i in range(len(syms) - 1):
@@ -356,8 +327,6 @@ def bpe_encode(
     text_col: str,
     id_col: str,
     merges: list[tuple[str, str]],
-    *,
-    end_of_word: str = END_OF_WORD,
 ) -> DataFrame:
     """Encode documents with a trained merge list → ``(id, tokens,
     n_tokens, n_words)``. One Arrow pass; merge ranks ride the UDF
@@ -382,7 +351,7 @@ def bpe_encode(
             for w in words:
                 t = cache.get(w)
                 if t is None:
-                    t = _encode_word(w, ranks, end_of_word)
+                    t = _encode_word(w, ranks)
                     cache[w] = t
                 toks.extend(t)
             return toks, len(toks), len(words)
@@ -408,7 +377,6 @@ def bpe_encode_with_vocab(
     vocab: DataFrame,
     *,
     with_tokens: bool = True,
-    end_of_word: str = END_OF_WORD,
 ) -> DataFrame:
     """Encode by VOCABULARY JOIN — the scale path when the encode
     corpus is (a superset of nothing but) the training corpus:
@@ -432,7 +400,7 @@ def bpe_encode_with_vocab(
     v = vocab.select(F.col("word").alias("__w"), F.col("syms").alias("__syms"))
     fallback = F.concat(
         F.expr("transform(sequence(1, length(__w)), i -> substring(__w, i, 1))"),
-        F.array(F.lit(end_of_word)),
+        F.array(F.lit(END_OF_WORD)),
     )
     j = word_rows.join(v, "__w", "left").select(
         id_col,
@@ -475,12 +443,12 @@ def bpe_encode_with_vocab(
     return out.select(*cols)
 
 
-def bpe_decode_column(tokens_col: Column, *, end_of_word: str = END_OF_WORD) -> Column:
+def bpe_decode_column(tokens_col: Column) -> Column:
     """Reconstruct whitespace-normalized text from BPE tokens (JVM
     expression): concatenate and turn end-of-word markers back into
     single spaces."""
     return F.trim(
         F.replace(
-            F.array_join(tokens_col, ""), F.lit(end_of_word), F.lit(" ")
+            F.array_join(tokens_col, ""), F.lit(END_OF_WORD), F.lit(" ")
         )
     )

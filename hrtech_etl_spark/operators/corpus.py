@@ -447,7 +447,6 @@ def prepare_training_corpus(
     chunk_chars: int = 2000,
     chunk_overlap: int = 200,
     pack_max_len: int = 512,
-    redact: bool = True,
     decon_knobs: dict | None = None,
     boilerplate_frac: float | None = None,
     packing: str = "ffd",
@@ -625,8 +624,7 @@ def prepare_training_corpus(
             cleaned, test_set, text_col, id_col, **(decon_knobs or {})
         )
     cleaned = cleaned.where(tx.quality_score(F.col(text_col)) >= quality_min)
-    if redact:
-        cleaned = cleaned.withColumn(text_col, tx.redact_pii(F.col(text_col)))
+    cleaned = cleaned.withColumn(text_col, tx.redact_pii(F.col(text_col)))
 
     chunks = chunk_documents(
         cleaned,
@@ -797,7 +795,6 @@ def temperature_mixture(
     alpha: float = 0.5,
     id_col: str = "doc_id",
     seed: int = 0,
-    cap: bool = True,
 ) -> DataFrame:
     """Temperature-based stratum mixing (the multilingual sampling of
     mT5 / XLM-R: sample stratum *l* with probability proportional to
@@ -811,13 +808,12 @@ def temperature_mixture(
 
     The stratum histogram is a BOUNDED artifact (#strata rows — one
     tiny aggregate collects to the driver, the recipe computes there;
-    same contract as the BPE merge table). With
-    ``cap=True`` a stratum never over-draws its population (targets
-    clamp to the stratum size; no redistribution — see
-    :func:`mixture_sample`). ``alpha=0.5`` uses ``sqrt``, which is
-    IEEE-correctly-rounded in every engine, so the integer targets —
-    and therefore the sampled row SET — are exactly reproducible in a
-    SQL oracle."""
+    same contract as the BPE merge table). A stratum never over-draws
+    its population (targets clamp to the stratum size; no
+    redistribution — see :func:`mixture_sample`). ``alpha=0.5`` uses
+    ``sqrt``, which is IEEE-correctly-rounded in every engine, so the
+    integer targets — and therefore the sampled row SET — are exactly
+    reproducible in a SQL oracle."""
     if total <= 0:
         raise ValueError(f"total must be positive, got {total}")
     if not 0.0 < alpha <= 1.0:
@@ -831,16 +827,17 @@ def temperature_mixture(
     n = {r[strata_col]: r["__c"] for r in hist}
     if not n:
         raise ValueError("temperature_mixture: no non-null strata")
-    targets = temperature_targets(n, total=total, alpha=alpha, cap=cap)
+    targets = {
+        s: min(t, n[s])
+        for s, t in temperature_targets(n, total=total, alpha=alpha).items()
+    }
     return mixture_sample(df, strata_col, targets, id_col=id_col, seed=seed)
 
 
-def temperature_targets(
-    n: dict, *, total: int, alpha: float = 0.5, cap: bool = True
-) -> dict:
+def temperature_targets(n: dict, *, total: int, alpha: float = 0.5) -> dict:
     """The pure recipe step of :func:`temperature_mixture`: stratum
-    histogram → integer per-stratum targets (property-tested on its
-    own in tests/test_corpus.py)."""
+    histogram → integer per-stratum targets, before the clamp to the
+    stratum size (property-tested on its own in tests/test_corpus.py)."""
     import math
 
     tot = sum(n.values())
@@ -852,8 +849,6 @@ def temperature_targets(
     targets = {
         s: int(math.floor(total * q[s] / z + 0.5)) for s in sorted(n)
     }
-    if cap:
-        targets = {s: min(t, n[s]) for s, t in targets.items()}
     return {s: t for s, t in targets.items() if t > 0}
 
 

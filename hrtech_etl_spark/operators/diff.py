@@ -3,7 +3,8 @@
 The reference's whole purpose is keeping two warehouses in sync
 (pull → format → push); ``table_diff`` is how you PROVE they are —
 one full-outer key join classifying every row as added / removed /
-changed / unchanged, with the exact set of changed columns per row.
+changed, with the exact set of changed columns per row; unchanged
+keys are dropped.
 Run it after a migration, a backfill, or an upsert batch to get a
 set-based reconciliation report instead of sampling.
 
@@ -19,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: status values, in output order
+#: status values; ``unchanged`` rows are classified, then dropped
 ADDED, REMOVED, CHANGED, UNCHANGED = "added", "removed", "changed", "unchanged"
 
 
@@ -28,8 +29,6 @@ def table_diff(
     b: DataFrame,
     key_cols: list[str],
     compare_cols: list[str] | None = None,
-    *,
-    include_unchanged: bool = False,
 ) -> DataFrame:
     """Classify every key of ``a`` (old) vs ``b`` (new):
 
@@ -37,13 +36,13 @@ def table_diff(
     - ``removed``  — key only in ``a``
     - ``changed``  — key in both, at least one compared column differs
       (null-safe: NULL→value and value→NULL both count as changes)
-    - ``unchanged``— key in both, all compared columns equal (emitted
-      only with ``include_unchanged=True``; at scale the unchanged
-      mass is the bulk and usually only its COUNT matters)
+
+    Keys in both whose compared columns are all equal are not emitted:
+    at scale the unchanged mass is the bulk of the join.
 
     Output: ``key_cols..., status, changed_cols array<string>``
-    (changed_cols in ``compare_cols`` order; empty for added/removed/
-    unchanged rows).
+    (changed_cols in ``compare_cols`` order; empty for added/removed
+    rows).
     """
     if compare_cols is None:  # explicit [] = key-presence-only diff
         compare_cols = [
@@ -97,12 +96,4 @@ def table_diff(
         .otherwise(F.array().cast("array<string>"))
         .alias("changed_cols"),
     )
-    if not include_unchanged:
-        out = out.where(F.col("status") != UNCHANGED)
-    return out
-
-
-def diff_summary(diff: DataFrame) -> DataFrame:
-    """Roll a :func:`table_diff` result up to ``(status, n_rows)`` —
-    the one-line reconciliation report."""
-    return diff.groupBy("status").agg(F.count(F.lit(1)).alias("n_rows"))
+    return out.where(F.col("status") != UNCHANGED)

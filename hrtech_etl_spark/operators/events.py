@@ -159,11 +159,8 @@ def push_events(
     order_cols: Sequence[Column],
     drop_after_dedup: Sequence[str] = (),
     having: Sequence[Condition] | None = None,
-    broadcast_resources: bool = False,
     prefilter_resources: bool = False,
     mapping=None,
-    sink_path: str | None = None,
-    sink_format: str = "parquet",
     sink_writer=None,
     dry_run: bool = False,
 ) -> dict:
@@ -189,7 +186,8 @@ def push_events(
     the pushed rows before the sink — the reference's
     ``safe_format_resources`` step; ``sink_writer`` routes the same
     observed pass into a connector's ``write_resource`` (the
-    ``push_resources`` contract).
+    ``push_resources`` contract). It is the only write; without it,
+    or on a dry run, the plan still executes once for the counters.
     """
     from pyspark.sql import Observation
 
@@ -202,7 +200,6 @@ def push_events(
         # tiebreak) must not leak into the pushed output
         deduped = deduped.drop(*drop_after_dedup)
 
-    r = F.broadcast(resources) if broadcast_resources else resources
     if prefilter_resources:
         # ids come from the UN-observed lineage: distinct raw event
         # keys == distinct deduped keys (dedup only drops duplicate
@@ -210,8 +207,10 @@ def push_events(
         # in exactly ONE executed subtree — the counter no longer
         # relies on both plan instances scanning the full feed
         ids = raw_events.select(F.col(event_key).alias(resource_key)).distinct()
-        r = r.join(F.broadcast(ids), resource_key, "left_semi")
-    joined = deduped.join(r, deduped[event_key] == r[resource_key], "left")
+        resources = resources.join(F.broadcast(ids), resource_key, "left_semi")
+    joined = deduped.join(
+        resources, deduped[event_key] == resources[resource_key], "left"
+    )
     matched_flag = F.col(resource_key).isNotNull()
     having_col = conditions_to_column(having or [])
 
@@ -228,12 +227,10 @@ def push_events(
 
         pushed_df = apply_mapping(pushed_df, mapping)
 
-    if dry_run or (sink_path is None and sink_writer is None):
+    if dry_run or sink_writer is None:
         pushed_df.count()  # dry-run still executes the plan once
-    elif sink_writer is not None:
-        sink_writer(pushed_df)
     else:
-        pushed_df.write.format(sink_format).mode("append").save(sink_path)
+        sink_writer(pushed_df)
 
     m_in, m = obs_in.get, obs.get
     return {

@@ -32,7 +32,6 @@ def pagerank(
     iterations: int = 8,
     damping: float = 0.85,
     round_to: int = 10,
-    final_checkpoint: bool = True,
 ) -> DataFrame:
     """PageRank over a directed edge list, fixed iteration count.
 
@@ -90,7 +89,22 @@ def pagerank(
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     if not 0.0 < damping < 1.0:
         raise ValueError(f"damping must be in (0, 1), got {damping}")
+    # pin the RESULT behind a lazy checkpoint too: the every-2 cadence
+    # leaves the final 1-2 iterations live in the plan, so without this
+    # a caller doing count() then write() would replay them — the first
+    # caller action materializes once, every later action reuses it
+    pr = _rank_vector(edges, src, dst, iterations, damping).localCheckpoint(
+        eager=False
+    )
+    return pr.select("node", F.round("pr", round_to).alias("pagerank"))
 
+
+def _rank_vector(
+    edges: DataFrame, src: str, dst: str, iterations: int, damping: float
+) -> DataFrame:
+    """The iterations of :func:`pagerank`: ``(node, pr, __deg)`` with
+    the final 1-2 iterations still live in the plan (the plan-shape
+    test inspects their joins)."""
     e = (
         edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull())
         .select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
@@ -172,20 +186,10 @@ def pagerank(
         )
         # fuse two join+agg rounds per materialization (A/B in the
         # docstring: every-1 6.14s, every-2 5.01s, every-4 blows up);
-        # the final iteration returns lazy — the caller's action
-        # materializes it
+        # the final iteration returns live — pagerank pins it
         if (i + 1) % 2 == 0 and i != iterations - 1:
             pr = pr.localCheckpoint(eager=False)
-    # pin the RESULT behind a lazy checkpoint too: the every-2 cadence
-    # leaves the final 1-2 iterations live in the plan, so without this
-    # a caller doing count() then write() would replay them — the first
-    # caller action materializes once, every later action reuses it
-    # (final_checkpoint=False keeps the plan inspectable for the
-    # shuffle-hash plan-contract test and for callers that fuse
-    # further transformations before their single action)
-    if final_checkpoint:
-        pr = pr.localCheckpoint(eager=False)
-    return pr.select("node", F.round("pr", round_to).alias("pagerank"))
+    return pr
 
 
 def hierarchy_closure(

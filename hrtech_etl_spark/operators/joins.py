@@ -1,4 +1,5 @@
-"""Join operators beyond plain ``df.join``: as-of, range, event-lookup.
+"""Join operators beyond plain ``df.join``: as-of, bucketed range,
+interval overlap and last-wins dedup.
 
 The reference's only join is a driver-side hash-map probe of events
 against fetched resources (``core/pipeline.py:127-167``); everything
@@ -7,9 +8,8 @@ here is its distributed generalization plus the §2.10 extension set.
 Scale notes
 -----------
 - Equi-joins shuffle both sides on the key unless one side is
-  broadcast; these helpers take a ``broadcast_right`` flag and default
-  to letting AQE decide (it converts to broadcast at runtime when the
-  built side is small).
+  broadcast; AQE converts to broadcast at runtime when the built side
+  is small.
 - The as-of join is implemented as *union + window* rather than a
   range join: a range join on ``l.ts >= r.ts`` explodes to O(n·m) per
   key before aggregation, while union+window is one shuffle on
@@ -24,24 +24,6 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
-
-
-def equi_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | Sequence[str] | Column,
-    how: str = "inner",
-    broadcast_right: bool = False,
-) -> DataFrame:
-    """Thin wrapper adding an explicit broadcast hint for small dims."""
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, on, how)
-
-
-def theta_join(left: DataFrame, right: DataFrame, condition: Column, how: str = "inner") -> DataFrame:
-    """Non-equi join. Catalyst picks BroadcastNestedLoopJoin when one
-    side is broadcastable; keep the smaller side right."""
-    return left.join(right, condition, how)
 
 
 def asof_join(
@@ -110,20 +92,6 @@ def asof_join(
         *[F.col(f"__rf_{v}").alias(v) for v in right_values],
     )
     return out
-
-
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    on: Column,
-    range_condition: Column,
-) -> DataFrame:
-    """Interval/range join: equi key + range predicate. Expressed as a
-    single join condition so Catalyst keeps the equi part as the
-    shuffle key and evaluates the range part as a post-join filter —
-    never a cartesian product."""
-    return left.join(right, on & range_condition)
 
 
 def bucketed_range_join(

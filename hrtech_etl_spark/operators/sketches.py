@@ -46,22 +46,19 @@ def hll_rollup(
     *,
     sketch_col: str = "hll_sketch",
     estimate_col: str = "n_distinct",
-    keep_sketch: bool = False,
 ) -> DataFrame:
     """Merge stored sketch blobs up to a coarser grouping and estimate.
-    ``group_cols=[]`` → one global row. ``keep_sketch=True`` also
-    returns the merged blob, so rollups chain (day → week → month)
-    without ever touching raw data again."""
+    ``group_cols=[]`` → one global row. The merged blob is dropped;
+    only the estimate is returned."""
     merged = F.hll_union_agg(F.col(sketch_col), F.lit(True)).alias(sketch_col)
     rolled = (
         sketches.groupBy(*group_cols).agg(merged)
         if group_cols
         else sketches.agg(merged)
     )
-    out = rolled.withColumn(
+    return rolled.withColumn(
         estimate_col, F.hll_sketch_estimate(F.col(sketch_col))
-    )
-    return out if keep_sketch else out.drop(sketch_col)
+    ).drop(sketch_col)
 
 
 # ---------------------------------------------------------------------------
@@ -147,29 +144,22 @@ def theta_rollup(
     group_cols: list[str],
     *,
     sketch_col: str = "theta_sketch",
-    keep_sketch: bool = True,
-    estimate_col: str | None = None,
 ) -> DataFrame:
-    """Merge stored Theta blobs up to a coarser grouping — the Theta
-    twin of :func:`hll_rollup` (day → week → month chains without
-    touching raw data), except the merged blob also stays usable for
-    set algebra (:func:`theta_overlap`), so ``keep_sketch`` defaults
-    True. A Theta sketch is EXACT below its nominal-entries cap
+    """Merge stored Theta blobs up to a coarser grouping (day → week →
+    month chains without touching raw data). Returns the merged blob,
+    not an estimate: it stays usable for set algebra
+    (:func:`theta_overlap`) and ``theta_sketch_estimate`` reads its
+    count. A Theta sketch is EXACT below its nominal-entries cap
     (default lgK=12 → 4096 distinct): rollups over groups under the
     cap reproduce exact distinct counts, and degrade to ~2% rsd
     estimates beyond it — the declared `sketch_theta_rollup` query
     gates the exact regime against the SQL oracle."""
     merged = F.theta_union_agg(F.col(sketch_col)).alias(sketch_col)
-    rolled = (
+    return (
         sketches.groupBy(*group_cols).agg(merged)
         if group_cols
         else sketches.agg(merged)
     )
-    if estimate_col:
-        rolled = rolled.withColumn(
-            estimate_col, F.theta_sketch_estimate(F.col(sketch_col))
-        )
-    return rolled if keep_sketch else rolled.drop(sketch_col)
 
 
 def theta_overlap(

@@ -9,8 +9,7 @@ checkpoint is an ``agg(max(...))`` over the scanned slice:
     read source
       → where(cursor-range ∧ prefilters)      # pushed by Catalyst
       → where(having residual)
-      → select(mapping)
-      → sink
+      → select(mapping)                       # returned; the caller writes it
     + max(cursor_col, uid) persisted as the next cursor.
 
 Intended reference semantics are kept (advance start to the last
@@ -41,8 +40,9 @@ from hrtech_etl_spark.plans.mapping import MappingSpec, apply_mapping
 @dataclass
 class PullResult:
     """Outcome of a pull run: the transformed DataFrame (lazily
-    evaluated — the caller or sink triggers execution) plus the
-    advanced cursor and row count."""
+    evaluated — the caller's write triggers execution) plus the
+    advanced cursor and row count (``-1`` unless a dry run counted
+    it)."""
 
     dataframe: DataFrame
     cursor: Cursor
@@ -121,13 +121,13 @@ def pull(
     where: Optional[Sequence[Condition]] = None,
     having: Optional[Sequence[Condition]] = None,
     mapping: Optional[MappingSpec] = None,
-    sink_path: Optional[str] = None,
-    sink_format: str = "parquet",
-    sink_mode: str = "append",
-    sink_partition_by: Optional[Sequence[str]] = None,
     dry_run: bool = False,
 ) -> PullResult:
-    """Incremental pull: scan → filter → project → write → new cursor.
+    """Incremental pull: scan → filter → project → new cursor.
+
+    The returned frame is bounded by the new cursor's snapshot; the
+    caller writes it (the reference hands each batch to the target's
+    ``write_resources_batch``). ``dry_run`` counts it instead.
 
     ``where`` compiles into the scan predicate (pushed down with the
     cursor range); ``having`` is the residual post-filter (the
@@ -147,7 +147,7 @@ def pull(
     # rejected by HAVING is consumed, not re-read forever.
     next_cursor = advance_cursor(scanned, cursor, cursor_col, uid_col)
 
-    # Snapshot bound: the advance aggregation and the sink write are
+    # Snapshot bound: the advance aggregation and the caller's write are
     # separate jobs, so on a live source rows can land between them.
     # Bound the written slice by the checkpointed (end, end_uid) pair —
     # write and checkpoint then describe the SAME snapshot; later rows
@@ -177,16 +177,7 @@ def pull(
     if mapping:
         out = apply_mapping(out, mapping)
 
-    rows = -1
-    if sink_path and not dry_run:
-        w = out.write.format(sink_format).mode(sink_mode)
-        if sink_partition_by:
-            # date/ingest-partitioned target: downstream incremental
-            # readers prune on the cursor column instead of scanning
-            w = w.partitionBy(*sink_partition_by)
-        w.save(sink_path)
-    elif dry_run:
-        rows = out.count()
+    rows = out.count() if dry_run else -1
     return PullResult(dataframe=out, cursor=next_cursor, rows=rows)
 
 
@@ -195,9 +186,6 @@ def push_resources(
     *,
     having: Optional[Sequence[Condition]] = None,
     mapping: Optional[MappingSpec] = None,
-    sink_path: Optional[str] = None,
-    sink_format: str = "parquet",
-    sink_mode: str = "append",
     sink_writer=None,
     dry_run: bool = False,
 ) -> dict:
@@ -205,9 +193,10 @@ def push_resources(
     filter → format → write. Counter metrics ride on an Observation
     node computed DURING the sink pass — one execution of the source,
     no separate metrics job. ``sink_writer`` (a ``DataFrame -> None``
-    callable, e.g. a connector's ``write_resource``) lets callers route
-    the SAME observed pass into their own sink instead of re-executing
-    the source for the write."""
+    callable, e.g. a connector's ``write_resource``) is the only write:
+    it receives the SAME observed pass, so the source is not re-executed
+    for the write. Without it, or on a dry run, the plan still executes
+    once for the counters."""
     from pyspark.sql import Observation
 
     obs = Observation()
@@ -219,10 +208,8 @@ def push_resources(
     out = apply_conditions(observed, having)
     if mapping:
         out = apply_mapping(out, mapping)
-    if dry_run or (sink_path is None and sink_writer is None):
+    if dry_run or sink_writer is None:
         out.count()  # dry-run still executes the plan once
-    elif sink_path:
-        out.write.format(sink_format).mode(sink_mode).save(sink_path)
     else:
         sink_writer(out)
     m = obs.get

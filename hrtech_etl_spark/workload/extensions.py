@@ -2210,7 +2210,6 @@ def corpus_prepare_training(spark, sf_dir):
         chunk_chars=_CAP_CHUNK,
         chunk_overlap=_CAP_OVERLAP,
         pack_max_len=_CAP_SEQ,
-        redact=True,
         decon_knobs=dict(shingle_k=5, min_overlap=2),
         packing="concat_split",
         shuffle_seed=_CAP_SEED,
@@ -2740,7 +2739,7 @@ def _bpe_oracle_sql(
     Encoding is then a vocabulary join (each word type's final
     segment count), mirroring bpe_encode_with_vocab, with the same
     chars+eow fallback for (never-occurring) out-of-vocab words.
-    Equivalence of merges AND final segmentation vs bpe_train was
+    Equivalence of merges AND final segmentation vs bpe_train_with_vocab was
     verified at sf0.001/0.01/0.1 before gating, and stays pinned by
     tests/test_bpe.py::test_oracle_sql_training_matches_bpe_train
     (which injects its own ``final_select`` to read the mN CTEs)."""
@@ -6862,7 +6861,6 @@ def corpus_prepare_training_v2(spark, sf_dir):
         chunk_chars=_CAP_CHUNK,
         chunk_overlap=_CAP_OVERLAP,
         pack_max_len=_CAP_SEQ,
-        redact=True,
         decon_knobs=dict(shingle_k=5, min_overlap=2),
         packing="concat_split",
         shuffle_seed=_CAP_SEED,

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from hrtech_etl_spark.operators.joins import asof_join, equi_join, range_join, theta_join
+from hrtech_etl_spark.operators.joins import asof_join
 from hrtech_etl_spark.operators.ranking import with_global_ranks
 from hrtech_etl_spark.sources.testdata import load_table
 from hrtech_etl_spark.workload.registry import davg, dec, dsum, query, sql_davg, sql_dsum
@@ -172,7 +172,7 @@ def join_broadcast_dim(spark, sf_dir):
     of the fact table — THE canonical 100TB join shape."""
     l = load_table(spark, "lineitem", sf_dir)
     p = load_table(spark, "part", sf_dir)
-    joined = equi_join(l, p, l.l_partkey == p.p_partkey, broadcast_right=True)
+    joined = l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
     return joined.groupBy(F.col("p_brand").alias("brand")).agg(
         F.count(F.lit(1)).alias("n_items"), dsum("l_extendedprice").alias("revenue")
     )
@@ -216,7 +216,7 @@ def join_nonequi_suite(spark, sf_dir):
         & (F.col("a.p_retailprice") > F.col("b.p_retailprice"))
     )
     theta = (
-        theta_join(a, b, cond)
+        a.join(b, cond)
         .groupBy(F.col("a.p_size").alias("size"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
@@ -228,12 +228,13 @@ def join_nonequi_suite(spark, sf_dir):
     )
     l = load_table(spark, "lineitem", sf_dir)
     o = load_table(spark, "orders", sf_dir)
-    joined = range_join(
-        l,
+    joined = l.join(
         o,
-        on=l.l_orderkey == o.o_orderkey,
-        range_condition=(l.l_shipdate >= o.o_orderdate)
-        & (l.l_shipdate <= o.o_orderdate + F.expr("INTERVAL 90 DAYS")),
+        (l.l_orderkey == o.o_orderkey)
+        & (
+            (l.l_shipdate >= o.o_orderdate)
+            & (l.l_shipdate <= o.o_orderdate + F.expr("INTERVAL 90 DAYS"))
+        ),
     )
     ranged = joined.groupBy(F.col("l_linestatus").alias("grp")).agg(
         F.count(F.lit(1)).alias("n"), dsum("l_extendedprice").alias("revenue")

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from hrtech_etl_spark.operators.bloom import (
     BloomFilter,
-    bloom_anti_prefilter,
     bloom_build,
     bloom_prefilter,
     bloom_semi_join,
@@ -28,16 +27,6 @@ def test_false_positive_rate_bounded(spark):
     fp = bloom_prefilter(probe, bloom, "k").count()
     # target 1%; allow 3x slack on 20k probes
     assert fp / 20_000 <= 0.03
-
-
-def test_anti_prefilter_complements(spark):
-    keys = spark.range(0, 500).select(F.col("id").alias("k"))
-    bloom = bloom_build(keys, "k", n_keys=500)
-    probe = spark.range(0, 1000).select(F.col("id").alias("k"))
-    might = bloom_prefilter(probe, bloom, "k").count()
-    new = bloom_anti_prefilter(probe, bloom, "k").count()
-    assert might + new == 1000
-    assert new <= 500  # the 500 built keys can never land in 'new'
 
 
 def test_null_keys_never_pass(spark):

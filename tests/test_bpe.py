@@ -20,7 +20,7 @@ def test_sennrich_merge_sequence(spark):
     """The canonical example from Sennrich et al. 2016: es, est,
     est</w>, lo, low are the first five merges."""
     docs = spark.createDataFrame([(1, SENNRICH)], "doc_id long, text string")
-    merges = bpe.bpe_train(docs, "text", num_merges=5)
+    merges = bpe.bpe_train_with_vocab(docs, "text", num_merges=5)[0]
     assert merges == [
         ("e", "s"),
         ("es", "t"),
@@ -32,13 +32,13 @@ def test_sennrich_merge_sequence(spark):
 
 def test_encode_matches_training_segmentation(spark):
     docs = spark.createDataFrame([(1, SENNRICH)], "doc_id long, text string")
-    merges = bpe.bpe_train(docs, "text", num_merges=10)
+    merges = bpe.bpe_train_with_vocab(docs, "text", num_merges=10)[0]
     ranks = {p: i for i, p in enumerate(merges)}
     # 'lowest' was never a training word, but its pieces were
-    assert bpe._encode_word("lowest", ranks, "</w>") == ["low", "est</w>"]
-    assert bpe._encode_word("low", ranks, "</w>") == ["low</w>"]
+    assert bpe._encode_word("lowest", ranks) == ["low", "est</w>"]
+    assert bpe._encode_word("low", ranks) == ["low</w>"]
     # unseen characters stay as singleton symbols
-    assert bpe._encode_word("xyz", ranks, "</w>") == ["x", "y", "z", "</w>"]
+    assert bpe._encode_word("xyz", ranks) == ["x", "y", "z", "</w>"]
 
 
 def test_merge_fold_nonoverlapping(spark):
@@ -60,7 +60,7 @@ def test_merge_fold_nonoverlapping(spark):
 def test_train_deterministic_tiebreak(spark):
     """All pair counts equal → lexicographically smallest pair wins."""
     docs = spark.createDataFrame([(1, "ab cd")], "doc_id long, text string")
-    merges = bpe.bpe_train(docs, "text", num_merges=1, min_count=1)
+    merges = bpe.bpe_train_with_vocab(docs, "text", num_merges=1, min_count=1)[0]
     assert merges == [("a", "b")]
 
 
@@ -90,7 +90,9 @@ def test_roundtrip_property(spark, texts, n_merges):
     ANY number of trained merges — merges only concatenate."""
     docs = [(i, t) for i, t in enumerate(texts)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    merges = bpe.bpe_train(df, "text", num_merges=n_merges, min_count=1)
+    merges = bpe.bpe_train_with_vocab(
+        df, "text", num_merges=n_merges, min_count=1
+    )[0]
     enc = bpe.bpe_encode(df, "text", "doc_id", merges)
     got = {
         r["doc_id"]: r["rt"]
@@ -102,11 +104,11 @@ def test_roundtrip_property(spark, texts, n_merges):
         assert got[did] == " ".join(text.split())
 
 
-def test_local_and_distributed_training_identical(spark):
+def test_local_and_distributed_training_identical(spark, monkeypatch):
     """The collected (driver-side) trainer and the distributed loop
     must learn the IDENTICAL merge list — same pair counting over the
     same non-overlapping fold, same (count DESC, a ASC, b ASC)
-    argmax."""
+    argmax. A collect bound of 0 forces the distributed loop."""
     texts = [
         (1, SENNRICH),
         (2, "the quick brown fox jumps over the lazy dog the the"),
@@ -114,12 +116,16 @@ def test_local_and_distributed_training_identical(spark):
         (4, "mississippi mississippi banana bananas"),
     ]
     docs = spark.createDataFrame(texts, "doc_id long, text string")
-    local = bpe.bpe_train(docs, "text", num_merges=25, min_count=2)
-    dist = bpe.bpe_train(
-        docs, "text", num_merges=25, min_count=2, max_collect=0
+    local, local_vocab = bpe.bpe_train_with_vocab(
+        docs, "text", num_merges=25, min_count=2
+    )
+    monkeypatch.setattr(bpe, "_MAX_COLLECT", 0)
+    dist, dist_vocab = bpe.bpe_train_with_vocab(
+        docs, "text", num_merges=25, min_count=2
     )
     assert local == dist
     assert len(local) >= 10
+    assert sorted(local_vocab.collect()) == sorted(dist_vocab.collect())
 
 
 def test_encode_with_vocab_matches_greedy_kernel(spark):
@@ -167,10 +173,11 @@ def test_encode_with_vocab_oov_fallback(spark):
 def test_oracle_sql_training_matches_bpe_train(spark):
     """The corpus_bpe_tokenize oracle REPLAYS training in DuckDB
     (30 unrolled merge rounds) — pin that the SQL-learned merge list
-    is byte-identical to bpe_train on the real sf0.001 corpus, so the
-    gate can never silently drift into comparing two different
-    tokenizers. (The gate itself only compares the final per-language
-    aggregates; this checks the trained artifact round by round.)"""
+    is byte-identical to bpe_train_with_vocab's on the real sf0.001
+    corpus, so the gate can never silently drift into comparing two
+    different tokenizers. (The gate itself only compares the final
+    per-language aggregates; this checks the trained artifact round by
+    round.)"""
     import duckdb
 
     from hrtech_etl_spark.workload.extensions import _bpe_oracle_sql
@@ -188,6 +195,6 @@ def test_oracle_sql_training_matches_bpe_train(spark):
     sql_merges = [(a, b) for _, a, b in sorted(rows)]
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    spark_merges = bpe.bpe_train(docs, "text", num_merges=30)
+    spark_merges = bpe.bpe_train_with_vocab(docs, "text", num_merges=30)[0]
     assert sql_merges == [tuple(m) for m in spark_merges]
     assert len(sql_merges) == 30

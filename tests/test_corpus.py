@@ -557,7 +557,7 @@ def test_temperature_targets_properties():
     )
     def check(counts, total, alpha):
         n = {f"s{i}": c for i, c in enumerate(counts)}
-        t = temperature_targets(n, total=total, alpha=alpha, cap=False)
+        t = temperature_targets(n, total=total, alpha=alpha)
         # rounding keeps the total within half a unit per stratum
         assert abs(sum(t.values()) - total) <= max(1, len(n) // 2 + 1)
         # monotone: a larger stratum never gets a smaller target
@@ -570,9 +570,8 @@ def test_temperature_targets_properties():
             tot = sum(n.values())
             for s, c in n.items():
                 assert abs(t.get(s, 0) - total * c / tot) <= 1
-        # capping never exceeds populations
-        tc = temperature_targets(n, total=total, alpha=alpha, cap=True)
-        assert all(tc[s] <= n[s] for s in tc)
+        # the clamp to stratum populations is temperature_mixture's,
+        # checked by test_temperature_mixture_targets_and_caps
 
     check()
 

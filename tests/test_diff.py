@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from hrtech_etl_spark.operators.diff import diff_summary, table_diff
+from hrtech_etl_spark.operators.diff import table_diff
 
 
 def _mk(spark, rows):
@@ -23,7 +23,7 @@ def test_classification_and_changed_cols(spark):
         ],                       # 3 removed
     )
     out = {r["k"]: r for r in table_diff(a, b, ["k"]).collect()}
-    assert 1 not in out  # unchanged excluded by default
+    assert 1 not in out  # unchanged keys are not emitted
     assert out[2]["status"] == "changed" and out[2]["changed_cols"] == ["x"]
     assert out[4]["status"] == "changed"
     assert out[4]["changed_cols"] == ["x", "y"]  # compare_cols order
@@ -31,23 +31,14 @@ def test_classification_and_changed_cols(spark):
     assert out[3]["status"] == "removed"
 
 
-def test_include_unchanged_and_summary(spark):
-    a = _mk(spark, [(1, "a", 10), (2, "b", 20)])
-    b = _mk(spark, [(1, "a", 10), (2, "b", 21)])
-    full = table_diff(a, b, ["k"], include_unchanged=True)
-    assert full.count() == 2
-    summary = {
-        r["status"]: r["n_rows"] for r in diff_summary(full).collect()
-    }
-    assert summary == {"unchanged": 1, "changed": 1}
-
-
 def test_compare_subset(spark):
     a = _mk(spark, [(1, "a", 10)])
     b = _mk(spark, [(1, "a", 99)])
-    # y excluded from comparison → unchanged
-    out = table_diff(a, b, ["k"], compare_cols=["x"], include_unchanged=True)
-    assert out.collect()[0]["status"] == "unchanged"
+    # y excluded from comparison → unchanged → no row
+    assert table_diff(a, b, ["k"], compare_cols=["x"]).collect() == []
+    # y compared → changed
+    out = [tuple(r) for r in table_diff(a, b, ["k"], compare_cols=["y"]).collect()]
+    assert out == [(1, "changed", ["y"])]
 
 
 def test_single_shuffle_plan(spark):
@@ -64,13 +55,11 @@ def test_single_shuffle_plan(spark):
 
 def test_presence_only_diff(spark):
     """compare_cols=[] means key-presence only: value differences are
-    ignored, both-present keys are 'unchanged'."""
+    ignored, both-present keys are unchanged and not emitted."""
     a = _mk(spark, [(1, "a", 10), (2, "b", 20)])
     b = _mk(spark, [(1, "zzz", 99), (3, "c", 30)])
     out = {
         r["k"]: r["status"]
-        for r in table_diff(
-            a, b, ["k"], compare_cols=[], include_unchanged=True
-        ).collect()
+        for r in table_diff(a, b, ["k"], compare_cols=[]).collect()
     }
-    assert out == {1: "unchanged", 2: "removed", 3: "added"}
+    assert out == {2: "removed", 3: "added"}

@@ -7,7 +7,7 @@ from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 
-from hrtech_etl_spark.operators.graph import pagerank
+from hrtech_etl_spark.operators.graph import _rank_vector, pagerank
 
 
 def _py_pagerank(edges, iterations=8, damping=0.85):
@@ -190,7 +190,7 @@ def test_pagerank_iteration_join_is_shuffle_hash(spark):
     edges = spark.createDataFrame(
         [(i, (i * 7 + 1) % 50) for i in range(200)], "src long, dst long"
     )
-    pr = pagerank(edges, iterations=4, final_checkpoint=False)
+    pr = _rank_vector(edges, "src", "dst", iterations=4, damping=0.85)
     pr.count()
     plan = pr._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ShuffledHashJoin") == 2, plan

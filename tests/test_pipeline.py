@@ -1,7 +1,7 @@
 """Pull/push pipeline tests on the driver testdata (sf0.001).
 
 Covers the reference pull() semantics end-to-end (scan → where →
-having → mapping → sink + cursor advance) including the tie-safe
+having → mapping → caller write + cursor advance) including the tie-safe
 resume the reference intended but couldn't do (SURVEY.md §8.1)."""
 
 from __future__ import annotations
@@ -114,6 +114,8 @@ def test_pull_empty_slice_keeps_cursor(spark, sf_dir):
 
 
 def test_pull_sink_write(spark, sf_dir, tmp_path):
+    """The caller writes the returned frame: every where-matching row
+    lands in the target, and the cursor advanced over the slice."""
     orders = load_table(spark, "orders", sf_dir)
     out = str(tmp_path / "orders_out")
     res = pull(
@@ -122,8 +124,8 @@ def test_pull_sink_write(spark, sf_dir, tmp_path):
         cursor_col="o_orderdate",
         uid_col="o_orderkey",
         where=[Condition("o_orderstatus", Operator.EQ, "F")],
-        sink_path=out,
     )
+    res.dataframe.write.parquet(out)
     written = spark.read.parquet(out)
     assert written.count() == orders.where("o_orderstatus = 'F'").count()
     assert res.cursor.end is not None

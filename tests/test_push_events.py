@@ -33,8 +33,7 @@ def test_push_events_metrics_and_sink(spark, tmp_path):
         resource_key="user_id",
         order_cols=[F.col("ts"), F.col("event_id")],
         having=having,
-        broadcast_resources=True,
-        sink_path=sink,
+        sink_writer=lambda df: df.write.parquet(sink),
     )
 
     deduped = (
@@ -73,7 +72,7 @@ def test_push_events_dry_run_no_sink(spark, tmp_path):
         event_key="uid",
         resource_key="user_id",
         order_cols=[F.col("ts"), F.col("event_id")],
-        sink_path=sink,
+        sink_writer=lambda df: df.write.parquet(sink),
         dry_run=True,
     )
     assert metrics["skipped_missing"] == 0

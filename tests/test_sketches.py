@@ -160,15 +160,21 @@ def test_theta_rollup_exact_below_cap_and_merge_equals_direct(spark, events):
     query gates against the SQL oracle."""
     from hrtech_etl_spark.operators.sketches import theta_partial, theta_rollup
 
+    def estimate(sketches):
+        return sketches.select(
+            "theta_sketch",
+            F.theta_sketch_estimate("theta_sketch").alias("n_distinct"),
+        )
+
     daily = theta_partial(events, ["day"], "user_id")
-    rolled = theta_rollup(daily, [], estimate_col="n_distinct").collect()[0]
-    direct = theta_rollup(
-        theta_partial(events, [], "user_id"), [], estimate_col="n_distinct"
+    rolled = estimate(theta_rollup(daily, [])).collect()[0]
+    direct = estimate(
+        theta_rollup(theta_partial(events, [], "user_id"), [])
     ).collect()[0]["n_distinct"]
     exact = events.select("user_id").distinct().count()
     assert round(rolled["n_distinct"]) == exact
     assert rolled["n_distinct"] == direct
-    # the merged blob stays usable for set algebra (keep_sketch default)
+    # the merged blob is returned, so it stays usable for set algebra
     assert rolled["theta_sketch"] is not None
 
 
