@@ -12,8 +12,6 @@ ratios), document fingerprinting (see
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -439,344 +437,3 @@ def remove_boilerplate(
             ).alias(text_col),
         )
     )
-
-
-def bigram_lm_scores(
-    docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    add_k: float = 0.5,
-    round_to: int = 4,
-    carry_cols: Sequence[str] = (),
-) -> DataFrame:
-    """Corpus-trained bigram language-model scoring — the CCNet-style
-    perplexity filter (Wenzek et al. 2019) with the n-gram LM trained
-    on the corpus itself instead of an external KenLM: every document
-    gets the mean log-probability of its bigrams under the add-k
-    smoothed corpus model,
-
-        P(w2 | w1) = (C(w1 w2) + k) / (C(w1 ·) + k · V),
-
-    where ``C(w1 ·)`` is w1's count as a bigram context and ``V`` is
-    the vocabulary size over the scored documents (derived from the
-    bigram-type table: docs with < 2 tokens contribute no bigrams and
-    are absent from the output). Low ``avg_logp`` = improbable word
-    sequences = gibberish/noise — sort ascending and cut the tail, or
-    bucket into the CCNet head/middle/tail thirds.
-
-    Returns ``(id, *carry_cols, n_bigrams, avg_logp)`` —
-    ``carry_cols`` (id-functional attributes like language) ride the
-    existing per-doc aggregation instead of costing a second
-    corpus-sized join. Cross-engine determinism:
-    each bigram's log-probability is rounded to 6 decimals and summed
-    in DECIMAL (exact, order-independent), the per-doc mean is ONE
-    IEEE division, rounded to ``round_to`` — the registry hash rules.
-
-    Plan at scale: one corpus explode feeds the (id, bigram) count
-    (the only corpus-sized exchange, map-side partials); the model —
-    bigram counts, context counts, vocab — is all derived from that
-    aggregate, so training adds NO second corpus pass; scoring joins
-    the per-doc bigram types back to the model keyed by bigram (AQE
-    broadcasts the model when it is small) and reassembles per doc.
-    The bigram-type table is cut from its lineage with a LAZY
-    localCheckpoint (the established composed-frame boundary): its
-    three consumers — context counts, vocabulary, and the model join
-    — otherwise each re-derive it and the corpus is exploded three
-    times (verified: 3 parquet scans without the boundary, 1 with).
-    The checkpointed table is model-sized (distinct bigram types),
-    not corpus-sized.
-    """
-    from hrtech_etl_spark.core.partitioning import spread as _spread
-
-    carry = [F.col(c) for c in carry_cols]
-    # scale-conditional width: tokenize+explode is the corpus-heavy
-    # stage and a narrow local scan (the sf0.1 fixture is ONE parquet
-    # partition) would run it on one core; a wide cluster scan passes
-    # through unchanged (see core/partitioning.py::spread)
-    bg = _spread(docs).select(
-        F.col(id_col),
-        *carry,
-        F.explode(word_ngrams(F.col(text_col), 2)).alias("__g"),
-    )
-    docbg = bg.groupBy(id_col, *carry_cols, "__g").agg(
-        F.count(F.lit(1)).alias("__tf")
-    )
-    cnt = (
-        docbg.groupBy("__g")
-        .agg(F.sum("__tf").alias("__c"))
-        .localCheckpoint(eager=False)
-    )
-    vocab = cnt.select(
-        F.explode(
-            F.array(
-                F.substring_index("__g", " ", 1),
-                F.substring_index("__g", " ", -1),
-            )
-        ).alias("__w")
-    ).agg(F.count_distinct("__w").alias("__v"))
-    ctx = cnt.groupBy(
-        F.substring_index("__g", " ", 1).alias("__w1")
-    ).agg(F.sum("__c").alias("__cc"))
-    model = (
-        cnt.join(ctx, F.substring_index(cnt["__g"], " ", 1) == ctx["__w1"])
-        .crossJoin(vocab)
-        .select(
-            "__g",
-            F.round(
-                F.log(
-                    (F.col("__c") + F.lit(add_k))
-                    / (F.col("__cc") + F.lit(add_k) * F.col("__v"))
-                ),
-                6,
-            )
-            .cast("decimal(18,6)")
-            .alias("__logp"),
-        )
-    )
-    return (
-        docbg.join(model, "__g")
-        .groupBy(id_col, *carry_cols)
-        .agg(
-            F.sum("__tf").alias("n_bigrams"),
-            F.round(
-                F.sum(F.col("__tf") * F.col("__logp")).cast("double")
-                / F.sum("__tf"),
-                round_to,
-            ).alias("avg_logp"),
-        )
-    )
-
-
-def bm25_topk(
-    docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    terms: Sequence[str],
-    *,
-    k1: float = 1.2,
-    b: float = 0.75,
-    n: int = 10,
-) -> DataFrame:
-    """BM25 retrieval (Robertson/Lucene variant: ``idf = ln(1 +
-    (N - df + 0.5)/(df + 0.5))``) of the top-``n`` documents for a
-    bag-of-terms query — the classic relevance ranking a curation or
-    search pipeline runs over the corpus.
-
-    Scale shape — a short query term list is a BOUNDED artifact, so
-    nothing per-(doc, term) ever shuffles:
-
-    - ONE corpus tokenize pass emits (id, dl, query-term occurrences)
-      behind a lazy checkpoint (narrow: length + a bounded filtered
-      list per doc); the term rows explode from the filtered list —
-      already query-terms-only BEFORE any exchange — and aggregate
-      per-term tf's as conditional counts in ONE groupBy(id)
-      (map-side partials);
-    - N and avgdl come from a scalar aggregate over the same pinned
-      frame (no second corpus scan), df per term from a 1-row
-      aggregate of the per-doc frame; both ride a broadcast cross
-      join;
-    - the score is an EXPLICIT fixed-order sum of per-term
-      contributions (not a float aggregate over shuffled rows), so it
-      is bit-deterministic and the DuckDB oracle reproduces it
-      exactly; top-n runs as TakeOrderedAndProject.
-
-    Returns ``(id, score)`` with ``score`` rounded to 6 decimals,
-    ordered by (score DESC, id); ties in the rounded score keep
-    deterministic id order.
-    """
-    if not terms:
-        raise ValueError("terms must be non-empty")
-    if len(set(terms)) != len(terms):
-        raise ValueError("terms must be distinct")
-    # ONE tokenize per row (r18 — was two: the corpus-stats aggregate
-    # and the explode branch each re-tokenized the corpus because the
-    # shared token frame had no boundary and column pruning made the
-    # two subtrees canonically different). The per-row output is just
-    # (id, dl, query-term occurrences) — document length plus a
-    # bounded filtered list — so pinning it is a narrow corpus-width
-    # frame, NOT corpus text; both consumers read it back instead of
-    # re-running split over every document. Interleaved sf0.1 A/B:
-    # min 0.218 -> 0.144s, every rep improved; at scale this halves
-    # the corpus passes, the operator's dominant term. Lifecycle: the
-    # pin is per-call and dropped with the returned plan's reference —
-    # ContextCleaner reclaims the blocks once the caller lets go, the
-    # same lifecycle as every lazy localCheckpoint in this package
-    # (Spark exposes no eager free for localCheckpoint blocks).
-    base = docs.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col),
-        F.size(tokens(F.col(text_col))).alias("__dl"),
-        F.filter(
-            tokens(F.col(text_col)), lambda t: t.isin(*terms)
-        ).alias("__ft"),
-    )
-    base = base.localCheckpoint(eager=False)
-    stats = base.agg(
-        F.count(F.lit(1)).alias("__n"),
-        (
-            F.sum("__dl").cast("double") / F.count(F.lit(1))
-        ).alias("__avgdl"),
-    )
-    exploded = base.select(
-        id_col,
-        "__dl",
-        F.explode("__ft").alias("__term"),
-    )
-    per_doc = exploded.groupBy(id_col).agg(
-        F.max("__dl").alias("__dl"),
-        *[
-            F.sum(
-                F.when(F.col("__term") == t, 1).otherwise(0)
-            ).alias(f"__tf_{i}")
-            for i, t in enumerate(terms)
-        ],
-    )
-    # per_doc feeds BOTH the score probe and the df aggregate; without
-    # a boundary, column pruning makes the two subtrees canonically
-    # different (the df branch drops __dl) and the corpus tokenizes
-    # twice. The frame is narrow (matched docs x small ints) — the
-    # repo-standard lazy checkpoint computes it once.
-    per_doc = per_doc.localCheckpoint(eager=False)
-    dfs = per_doc.agg(
-        *[
-            F.sum(
-                F.when(F.col(f"__tf_{i}") > 0, 1).otherwise(0)
-            ).alias(f"__df_{i}")
-            for i in range(len(terms))
-        ]
-    )
-    joined = per_doc.crossJoin(F.broadcast(stats)).crossJoin(
-        F.broadcast(dfs)
-    )
-    score = None
-    for i in range(len(terms)):
-        tf = F.col(f"__tf_{i}").cast("double")
-        idf = F.log(
-            1.0
-            + (F.col("__n") - F.col(f"__df_{i}") + 0.5)
-            / (F.col(f"__df_{i}") + 0.5)
-        )
-        contrib = idf * (tf * (k1 + 1.0)) / (
-            tf
-            + k1
-            * (1.0 - b + b * F.col("__dl") / F.col("__avgdl"))
-        )
-        score = contrib if score is None else score + contrib
-    return (
-        joined.select(
-            id_col, F.round(score, 6).alias("score")
-        )
-        .orderBy(F.col("score").desc(), F.col(id_col))
-        .limit(n)
-    )
-
-
-def unigram_kl_divergence(
-    docs: DataFrame,
-    text_col: str,
-    group_col: str,
-    *,
-    round_to: int = 8,
-) -> DataFrame:
-    """Corpus-drift diagnostic: per group (language, source, crawl
-    snapshot...), the KL divergence ``D_KL(P_group || P_corpus)`` of
-    add-one-smoothed unigram distributions over the corpus vocabulary
-    — "how far is this slice's token distribution from the mixture",
-    the standard check before/after re-weighting a training mix.
-
-    ``p = (c_gt + 1) / (tot_g + V)``, ``q = (c_t + 1) / (tot + V)``,
-    ``KL = Σ_vocab p·ln(p/q)`` — the sum runs over the FULL vocabulary
-    for every group (absent terms contribute at count 0), so smoothed
-    KL is a true divergence (≥ 0).
-
-    Scale shape: ONE corpus tokenize pass aggregates (group, term)
-    counts — vocabulary-sized, not corpus-sized — behind a lazy
-    checkpoint; vocabulary totals, group totals, and V all derive
-    from that small frame; the per-(group, term) grid is a broadcast
-    cross join of two bounded sides. Float determinism: each term's
-    contribution is computed with a fixed op order and quantized to
-    DECIMAL(38, 12) BEFORE the per-group sum, so the commutative
-    decimal sum is independent of row order and a SQL oracle
-    reproduces the value bit-for-bit — no fold over a collected
-    vocabulary array needed. (Scale 12, NOT deeper: Spark casts
-    double→decimal through the shortest 17-significant-digit repr
-    while DuckDB expands the full binary value, so the two only agree
-    below ~15 significant digits — contributions reach magnitude ~30,
-    leaving 12 fractional digits safely inside the unambiguous zone.)
-
-    Returns ``(group_col, n_terms int, kl double)`` where n_terms is
-    the count of vocabulary terms PRESENT in the group."""
-    cl = (
-        docs.where(
-            F.col(text_col).isNotNull() & F.col(group_col).isNotNull()
-        )
-        .select(
-            F.col(group_col).alias("__g"),
-            F.explode(
-                F.filter(tokens(F.col(text_col)), lambda x: x != "")
-            ).alias("__t"),
-        )
-        .groupBy("__g", "__t")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .localCheckpoint(eager=False)
-    )
-    vocab = cl.groupBy("__t").agg(F.sum("__c").alias("__ct"))
-    groups = cl.groupBy("__g").agg(F.sum("__c").alias("__totg"))
-    scalars = vocab.agg(
-        F.count(F.lit(1)).alias("__v"), F.sum("__ct").alias("__tot")
-    )
-    grid = (
-        groups.crossJoin(F.broadcast(vocab))
-        .crossJoin(F.broadcast(scalars))
-        .join(cl, ["__g", "__t"], "left")
-        .withColumn("__cgt", F.coalesce(F.col("__c"), F.lit(0)))
-    )
-    p = (F.col("__cgt") + 1.0) / (F.col("__totg") + F.col("__v"))
-    q = (F.col("__ct") + 1.0) / (F.col("__tot") + F.col("__v"))
-    contrib = (p * F.log(p / q)).cast("decimal(38,12)")
-    return (
-        grid.groupBy("__g")
-        .agg(
-            F.sum(F.when(F.col("__cgt") > 0, 1).otherwise(0))
-            .cast("int")
-            .alias("n_terms"),
-            F.round(F.sum(contrib), round_to).cast("double").alias("kl"),
-        )
-        .withColumnRenamed("__g", group_col)
-        .select(group_col, "n_terms", "kl")
-    )
-
-
-def ccnet_quality_buckets(
-    docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    group_col: str,
-    *,
-    n_buckets: int = 3,
-    add_k: float = 0.5,
-) -> DataFrame:
-    """CCNet's head/middle/tail split (Wenzek et al. 2019): rank every
-    document inside its group (language) by the corpus-trained bigram
-    LM score (:func:`bigram_lm_scores`) and cut the group into
-    ``n_buckets`` equal tiles — bucket 1 ("head") is the most fluent
-    third, the tail is the gibberish end a curation pipeline drops or
-    down-weights.
-
-    The group column rides the LM aggregation via ``carry_cols`` (no
-    second corpus join); the tiling is one ntile window per group with
-    a deterministic (score DESC, id) order, so bucket assignments are
-    reproducible across engines. Returns
-    ``(id, group, n_bigrams, avg_logp, bucket int)``; docs with < 2
-    tokens have no bigrams and are absent, per the LM contract."""
-    if n_buckets < 2:
-        raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-    from pyspark.sql import Window as W
-
-    scored = bigram_lm_scores(
-        docs, text_col, id_col, add_k=add_k, carry_cols=(group_col,)
-    )
-    w = W.partitionBy(group_col).orderBy(
-        F.col("avg_logp").desc(), F.col(id_col)
-    )
-    return scored.withColumn("bucket", F.ntile(n_buckets).over(w))

@@ -807,10 +807,10 @@ def temperature_mixture(
     portable-hash rank, nested-sample contract, one shuffle).
 
     The stratum histogram is a BOUNDED artifact (#strata rows — one
-    tiny aggregate collects to the driver, the recipe computes there;
-    same contract as the BPE merge table). A stratum never over-draws
-    its population (targets clamp to the stratum size; no
-    redistribution — see :func:`mixture_sample`). ``alpha=0.5`` uses
+    tiny aggregate collects to the driver and the recipe computes
+    there). A stratum never over-draws its population (targets clamp
+    to the stratum size; no redistribution — see
+    :func:`mixture_sample`). ``alpha=0.5`` uses
     ``sqrt``, which is IEEE-correctly-rounded in every engine, so the
     integer targets — and therefore the sampled row SET — are exactly
     reproducible in a SQL oracle."""
@@ -966,8 +966,8 @@ def dsir_select(
       ratio ``ln((c_t+1)/(N_t+B)) - ln((c_r+1)/(N_r+B))`` (target vs
       raw), rounded to 6 decimals; a document's log importance weight
       is the sum of its feature occurrences' ratios, accumulated in
-      DECIMAL so the sum is order-independent across engines (the
-      bigram-LM portability rule).
+      DECIMAL so the sum is order-independent across engines (a
+      rounded-then-DECIMAL sum has no float association order).
     - **Selection**: exact top-``ceil(select_frac * N)`` by
       ``(logw DESC, id)`` AMONG SCORED DOCUMENTS via the DISTRIBUTED
       rank plan (operators/ranking.py) — no single-partition window

@@ -12,20 +12,15 @@ Spark-first re-expression:
   ``df.select(col(src).alias(dst), ...)`` — which stays entirely inside
   Catalyst (column pruning reaches the parquet scan, no Python in the
   hot path). Dotted ``from`` paths resolve nested struct fields.
-- Opaque Python formatters are the fenced slow path: a pandas UDF /
-  ``mapInPandas`` wrapper (Arrow-batched, never row-at-a-time) — see
-  :func:`pandas_formatter`.
 """
 
 from __future__ import annotations
 
 import uuid
-from typing import Callable, Iterable, Iterator, Mapping, Sequence
+from typing import Mapping, Sequence
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 MappingSpec = Sequence[Mapping[str, str]]
 
@@ -54,22 +49,3 @@ def build_mapping_projection(mapping: MappingSpec) -> list[Column]:
 def apply_mapping(df: DataFrame, mapping: MappingSpec) -> DataFrame:
     return df.select(*build_mapping_projection(mapping))
 
-
-def pandas_formatter(
-    fn: Callable[[pd.DataFrame], pd.DataFrame],
-    schema: T.StructType,
-) -> Callable[[DataFrame], DataFrame]:
-    """Fence an opaque per-batch Python transform behind mapInPandas.
-
-    ``fn`` receives/returns pandas DataFrames (Arrow-batched). Use only
-    when the transform is not expressible as a column projection.
-    """
-
-    def _iterate(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            yield fn(batch)
-
-    def _apply(df: DataFrame) -> DataFrame:
-        return df.mapInPandas(_iterate, schema=schema)
-
-    return _apply

@@ -2607,68 +2607,6 @@ def dedup_paragraphs(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Bigram LM scoring (the CCNet perplexity filter, corpus-trained)
-# ---------------------------------------------------------------------------
-
-_LM_TOKS = TOKENS_SQL.format(t="text")
-
-#: Shared CTE chain of the corpus-trained bigram LM — the model the
-#: score entry AND the CCNet bucket entry both replay (kept as one
-#: constant so the two oracles can never drift apart).
-_LM_MODEL_CTES = f"""
-    WITH tok AS (SELECT doc_id, {_LM_TOKS} AS t FROM documents),
-    bg AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS g
-      FROM tok WHERE len(t) >= 2
-    ),
-    docbg AS (SELECT doc_id, g, count(*) AS tf FROM bg GROUP BY 1, 2),
-    cnt AS (SELECT g, sum(tf) AS c FROM docbg GROUP BY g),
-    vocab AS (SELECT count(DISTINCT w) AS v FROM (
-      SELECT split_part(g, ' ', 1) AS w FROM cnt
-      UNION SELECT split_part(g, ' ', 2) FROM cnt)),
-    ctx AS (SELECT split_part(g, ' ', 1) AS w1, sum(c) AS cc FROM cnt GROUP BY 1),
-    model AS (
-      SELECT cnt.g,
-             CAST(round(ln((c + 0.5) / (cc + 0.5 * v)), 6) AS DECIMAL(18,6)) AS logp
-      FROM cnt JOIN ctx ON split_part(cnt.g, ' ', 1) = ctx.w1 CROSS JOIN vocab
-    ),
-    scores AS (
-      SELECT d.doc_id,
-             CAST(sum(d.tf) AS BIGINT) AS n_bigrams,
-             round(CAST(sum(d.tf * m.logp) AS DOUBLE) / sum(d.tf), 4) AS avg_logp
-      FROM docbg d JOIN model m ON d.g = m.g
-      GROUP BY d.doc_id
-    )"""
-
-@query(
-    "text_bigram_lm_score",
-    sql=f"""
-    {_LM_MODEL_CTES}
-    SELECT doc_id, n_bigrams, avg_logp FROM scores
-    """,
-)
-def text_bigram_lm_score(spark, sf_dir):
-    """Corpus-trained bigram-LM document scoring
-    (functions/text.py::bigram_lm_scores) — the CCNet perplexity
-    filter with the n-gram model trained on the corpus itself: every
-    doc's mean log-probability under the add-0.5-smoothed bigram
-    model, P(w2|w1) = (C(w1w2)+k)/(C(w1·)+k·V). One corpus-sized
-    exchange total: the (doc, bigram) count feeds bigram counts,
-    context counts, AND the vocabulary (training adds no second
-    corpus pass); scoring joins doc bigram types back to the model.
-    Per-bigram log-probs are rounded to 6 decimals and summed in
-    DECIMAL so the per-doc mean is order-independent across engines
-    (registry hash rules); the oracle restates the identical model
-    and smoothing. Docs with < 2 tokens have no bigrams and are
-    absent by contract. Green at sf0.001/0.01/0.1."""
-    from hrtech_etl_spark.functions.text import bigram_lm_scores
-
-    d = load_table(spark, "documents", sf_dir)
-    return bigram_lm_scores(d, "text", "doc_id")
-
-
-# ---------------------------------------------------------------------------
 # Leakage-safe train/validation split (cluster-level assignment)
 # ---------------------------------------------------------------------------
 
@@ -2711,196 +2649,6 @@ def corpus_leakage_safe_split(spark, sf_dir):
         labels, id_col="id", cluster_col="cluster", val_frac=0.2, seed=11,
         buckets=10,
     ).withColumnRenamed("id", "doc_id")
-
-
-# ---------------------------------------------------------------------------
-# BPE tokenizer: corpus-trained merges + lossless encode (value-gated:
-# the oracle REPLAYS training — 30 unrolled merge rounds in DuckDB SQL)
-# ---------------------------------------------------------------------------
-
-def _bpe_oracle_sql(
-    num_merges: int = 30,
-    min_count: int = 2,
-    final_select: str | None = None,
-) -> str:
-    """DuckDB restatement of the FULL BPE pipeline — training included.
-
-    Training is deterministic (argmax tie-break count DESC, a ASC,
-    b ASC), so the oracle unrolls ``num_merges`` merge rounds as CTE
-    pairs: ``mN`` picks round N's best adjacent pair over the exploded
-    word-type table (HAVING sum(freq) >= min_count restates the
-    early-stop — an empty mN makes round N the identity via the scalar
-    subqueries), ``eN`` applies it. The left-to-right non-overlapping
-    fold is restated window-only: a candidate position conflicts with
-    its successor ONLY when candidates are consecutive (which forces
-    a == b — a run of one repeated symbol), so keeping even offsets
-    within runs of consecutive candidates reproduces the fold exactly;
-    a kept position merges ``sym || next`` and its successor row drops.
-    Encoding is then a vocabulary join (each word type's final
-    segment count), mirroring bpe_encode_with_vocab, with the same
-    chars+eow fallback for (never-occurring) out-of-vocab words.
-    Equivalence of merges AND final segmentation vs bpe_train_with_vocab was
-    verified at sf0.001/0.01/0.1 before gating, and stays pinned by
-    tests/test_bpe.py::test_oracle_sql_training_matches_bpe_train
-    (which injects its own ``final_select`` to read the mN CTEs)."""
-    parts = [r"""
-vocab AS MATERIALIZED (
-  SELECT w AS word, count(*) AS freq FROM (
-    SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w
-    FROM documents
-  ) WHERE w <> '' GROUP BY w
-),
-e0 AS MATERIALIZED (
-  SELECT word, freq, p.pos AS pos, p.sym AS sym
-  FROM vocab, unnest(list_transform(
-         list_append(string_split(word, ''), '</w>'),
-         (s, i) -> {'pos': i, 'sym': s})) AS t(p)
-)"""]
-    for n in range(1, num_merges + 1):
-        prev = f"e{n-1}"
-        parts.append(f"""
-m{n} AS MATERIALIZED (
-  SELECT a, b FROM (
-    SELECT sym AS a, lead(sym) OVER (PARTITION BY word ORDER BY pos) AS b,
-           freq
-    FROM {prev}
-  ) WHERE b IS NOT NULL
-  GROUP BY a, b HAVING sum(freq) >= {min_count}
-  ORDER BY sum(freq) DESC, a, b LIMIT 1
-),
-e{n} AS MATERIALIZED (
-  SELECT word, freq,
-         row_number() OVER (PARTITION BY word ORDER BY pos) AS pos,
-         CASE WHEN keep THEN sym || nxt ELSE sym END AS sym
-  FROM (
-    SELECT *, coalesce(lag(keep) OVER (PARTITION BY word ORDER BY pos),
-                       FALSE) AS consumed
-    FROM (
-      SELECT *, cand AND (pos - min(pos) OVER (PARTITION BY word, grp))
-                % 2 = 0 AS keep
-      FROM (
-        SELECT *, CASE WHEN cand THEN pos - row_number()
-                    OVER (PARTITION BY word, cand ORDER BY pos) END AS grp
-        FROM (
-          SELECT word, freq, pos, sym,
-                 lead(sym) OVER w AS nxt,
-                 sym = (SELECT a FROM m{n})
-                   AND lead(sym) OVER w = (SELECT b FROM m{n}) AS cand
-          FROM {prev} WINDOW w AS (PARTITION BY word ORDER BY pos)
-        )
-      )
-    )
-  ) WHERE NOT consumed
-)""")
-    parts.append(rf"""
-wtok AS (SELECT word, count(*) AS n_sub FROM e{num_merges} GROUP BY word),
-doc_words AS (
-  SELECT doc_id, w AS word FROM (
-    SELECT doc_id,
-           unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w
-    FROM documents
-  ) WHERE w <> ''
-),
-per_doc AS (
-  SELECT dw.doc_id, count(*) AS n_words,
-         sum(coalesce(wt.n_sub, length(dw.word) + 1)) AS n_tokens
-  FROM doc_words dw LEFT JOIN wtok wt USING (word)
-  GROUP BY dw.doc_id
-)
-SELECT d.lang,
-       count(*) AS n_docs,
-       CAST(coalesce(sum(p.n_words), 0) AS BIGINT) AS total_words,
-       CAST(coalesce(sum(p.n_tokens), 0) AS BIGINT) AS total_tokens,
-       round(CAST(sum(p.n_tokens) AS DOUBLE) / sum(p.n_words), 4)
-         AS tokens_per_word
-FROM documents d LEFT JOIN per_doc p USING (doc_id)
-GROUP BY d.lang""")
-    if final_select is not None:
-        parts[-1] = "\n" + final_select
-        return "WITH " + ",".join(parts[:-1]) + parts[-1]
-    return "WITH " + ",".join(parts)
-
-
-@query("corpus_bpe_tokenize", sql=_bpe_oracle_sql())
-def corpus_bpe_tokenize(spark, sf_dir):
-    """Distributed BPE tokenizer end to end (operators/bpe.py):
-    train merge rules on the corpus (ONE corpus pass to the word-TYPE
-    table, then vocabulary-sized merge rounds — a small trained
-    artifact), then encode every document by
-    VOCABULARY JOIN (bpe_encode_with_vocab): training's word table
-    already holds each word type's final segmentation, so encoding is
-    a posexplode ⋈ vocab + grouped reassembly — all JVM-side, no
-    per-word Python in the hot path (the greedy Arrow kernel
-    bpe_encode remains the out-of-vocab general path, equivalence
-    tested in tests/test_bpe.py). VALUE-GATED since round 13: the
-    DuckDB oracle replays the full deterministic training
-    (_bpe_oracle_sql — 30 unrolled merge rounds) and pins per-language
-    totals exactly. In-plan self-checks kept from the rows-only era:
-    (1) LOSSLESSNESS — decode(vocab segmentation) must reproduce every
-    word type exactly, and every document word must be covered by the
-    trained vocabulary; (2) COMPRESSION — total BPE tokens strictly
-    fewer than the unmerged symbol count (chars + one end-of-word per
-    word). Training determinism (argmax tie-break count DESC then
-    lexicographic) is unit-tested against the hand-computed Sennrich
-    et al. example in tests/test_bpe.py."""
-    from hrtech_etl_spark.functions.text import tokens as _tokens
-    from hrtech_etl_spark.operators import bpe
-
-    d = load_table(spark, "documents", sf_dir)
-    merges, vocab = bpe.bpe_train_with_vocab(d, "text", num_merges=30)
-    if len(merges) < 10:
-        raise AssertionError(
-            f"expected a usable merge table, got {len(merges)} merges"
-        )
-    vocab = vocab.localCheckpoint(eager=False)
-    # losslessness at the vocab level (covers every corpus word type):
-    # concatenating a word's final segmentation must reproduce it
-    bad = vocab.where(
-        bpe.bpe_decode_column(F.col("syms")) != F.col("word")
-    ).count()
-    if bad:
-        raise AssertionError(f"{bad} word types failed the BPE round-trip")
-    # coverage: the vocab was trained on this corpus, so no document
-    # word may miss it (guards train/encode tokenization drift)
-    missing = (
-        d.select(
-            F.explode(
-                F.filter(_tokens(F.col("text")), lambda x: x != "")
-            ).alias("word")
-        )
-        .distinct()
-        .join(vocab.select("word"), "word", "left_anti")
-        .count()
-    )
-    if missing:
-        raise AssertionError(f"{missing} document words missing from vocab")
-    enc = bpe.bpe_encode_with_vocab(
-        d, "text", "doc_id", vocab, with_tokens=False
-    ).localCheckpoint(eager=False)
-    chk = enc.join(d.select("doc_id", "text", "lang"), "doc_id")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    totals = chk.agg(
-        F.sum("n_tokens").alias("tok"),
-        F.sum(
-            F.length(F.regexp_replace(norm, " ", "")) + F.col("n_words")
-        ).alias("base"),
-    ).collect()[0]
-    if not totals["tok"] < totals["base"]:
-        raise AssertionError(
-            f"no compression: {totals['tok']} tokens vs {totals['base']} "
-            "unmerged symbols"
-        )
-    return (
-        chk.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_words").alias("total_words"),
-            F.sum("n_tokens").alias("total_tokens"),
-            F.round(
-                F.sum("n_tokens").cast("double") / F.sum("n_words"), 4
-            ).alias("tokens_per_word"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3008,84 +2756,6 @@ def dedup_substring_spans(spark, sf_dir):
     the final aggregate. Green at sf0.001/0.01/0.1."""
     d = load_table(spark, "documents", sf_dir)
     return dd.duplicate_span_stats(d, "text", "doc_id", k=20, min_dup=2)
-
-
-# ---------------------------------------------------------------------------
-# BM25 retrieval (Robertson/Lucene idf variant)
-# ---------------------------------------------------------------------------
-
-_BM25_TERMS = ("dup", "merge", "query")
-_BM25_K1, _BM25_B, _BM25_N = 1.2, 0.75, 10
-
-def _bm25_oracle_sql() -> str:
-    terms = _BM25_TERMS
-    in_list = ", ".join(f"'{t}'" for t in terms)
-    tf_cols = ",\n             ".join(
-        f"sum(CASE WHEN term = '{t}' THEN 1 ELSE 0 END) AS tf_{i}"
-        for i, t in enumerate(terms)
-    )
-    df_cols = ", ".join(
-        f"sum(CASE WHEN tf_{i} > 0 THEN 1 ELSE 0 END) AS df_{i}"
-        for i in range(len(terms))
-    )
-    # EXACT float-op order of functions/text.py::bm25_topk: each
-    # contribution is ln(1 + (n-df+0.5)/(df+0.5)) * (tf*(k1+1)) /
-    # (tf + k1*(1 - b + b*dl/avgdl)), summed left-to-right
-    contribs = " + ".join(
-        f"ln(1.0 + (n - df_{i} + 0.5) / (df_{i} + 0.5))"
-        f" * (CAST(tf_{i} AS DOUBLE) * {_BM25_K1 + 1.0})"
-        f" / (CAST(tf_{i} AS DOUBLE)"
-        f" + {_BM25_K1} * (1.0 - {_BM25_B} + {_BM25_B} * dl / avgdl))"
-        for i in range(len(terms))
-    )
-    toks = "str_split_regex(trim(lower(text)), '\\s+')"
-    return f"""
-    WITH base AS (
-      SELECT doc_id, {toks} AS toks FROM documents WHERE text IS NOT NULL
-    ),
-    stats AS (
-      SELECT count(*) AS n,
-             CAST(sum(len(toks)) AS DOUBLE) / count(*) AS avgdl
-      FROM base
-    ),
-    perdoc AS (
-      SELECT doc_id, max(dl) AS dl,
-             {tf_cols}
-      FROM (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM base)
-      WHERE term IN ({in_list})
-      GROUP BY doc_id
-    ),
-    dfs AS (SELECT {df_cols} FROM perdoc),
-    scored AS (
-      SELECT doc_id, round({contribs}, 6) AS score
-      FROM perdoc, stats, dfs
-    )
-    SELECT doc_id, score FROM (
-      SELECT doc_id, score,
-             row_number() OVER (ORDER BY score DESC, doc_id) AS r
-      FROM scored
-    ) WHERE r <= {_BM25_N}
-    """
-
-@query("text_bm25_topk", sql=_bm25_oracle_sql())
-def text_bm25_topk(spark, sf_dir):
-    """BM25 top-10 retrieval for the bag-of-terms query (dup, merge,
-    query) — functions/text.py::bm25_topk, Robertson/Lucene idf. The
-    query term list is a bounded artifact, so per-term tf's are
-    conditional counts in ONE groupBy(doc_id) (nothing per-(doc,term)
-    shuffles); N/avgdl and the per-term df's ride broadcast cross
-    joins; the score is an explicit fixed-order sum of per-term
-    contributions, bit-identical in the DuckDB oracle (same float-op
-    association, same left-to-right add), and top-10 executes as
-    TakeOrderedAndProject. 'dup' is a rare discriminative term
-    (df≈25/500 at sf0.01), merge/query are common — the ranking
-    exercises the idf spread. Green at sf0.001/0.01/0.1."""
-    from hrtech_etl_spark.functions.text import bm25_topk
-
-    d = load_table(spark, "documents", sf_dir)
-    return bm25_topk(
-        d, "text", "doc_id", _BM25_TERMS, k1=_BM25_K1, b=_BM25_B, n=_BM25_N
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3198,98 +2868,6 @@ def stream_chained_agg(spark, sf_dir):
             memory_table=name,
         )
     return spark.table(name)
-
-
-# ---------------------------------------------------------------------------
-# Corpus drift: per-language unigram KL divergence vs the mixture
-# ---------------------------------------------------------------------------
-
-@query(
-    "text_kl_divergence",
-    sql="""
-    WITH cl AS (
-      SELECT lang AS g, term, count(*) AS c FROM (
-        SELECT lang, unnest(list_filter(
-                 str_split_regex(trim(lower(text)), '\\s+'), x -> x != ''))
-               AS term
-        FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL
-      ) GROUP BY 1, 2
-    ),
-    vocab AS (SELECT term, sum(c) AS ct FROM cl GROUP BY term),
-    groups AS (SELECT g, sum(c) AS totg FROM cl GROUP BY g),
-    scalars AS (SELECT count(*) AS v, sum(ct) AS tot FROM vocab),
-    grid AS (
-      SELECT gr.g, vb.term, gr.totg, vb.ct, sc.v, sc.tot,
-             coalesce(cl.c, 0) AS cgt
-      FROM groups gr CROSS JOIN vocab vb CROSS JOIN scalars sc
-      LEFT JOIN cl ON cl.g = gr.g AND cl.term = vb.term
-    ),
-    contrib AS (
-      SELECT g, cgt,
-             CAST(((cgt + 1.0) / (totg + v))
-                  * ln(((cgt + 1.0) / (totg + v))
-                       / ((ct + 1.0) / (tot + v)))
-                  AS DECIMAL(38,12)) AS dc
-      FROM grid
-    )
-    SELECT g AS lang,
-           CAST(sum(CASE WHEN cgt > 0 THEN 1 ELSE 0 END) AS INT) AS n_terms,
-           CAST(round(sum(dc), 8) AS DOUBLE) AS kl
-    FROM contrib GROUP BY g
-    """,
-)
-def text_kl_divergence(spark, sf_dir):
-    """Per-language corpus drift: KL(P_lang || P_corpus) of
-    add-one-smoothed unigram distributions over the full vocabulary
-    (functions/text.py::unigram_kl_divergence) — the mixture
-    diagnostic a curation pipeline tracks when re-weighting languages
-    or sources. One tokenize pass to the vocabulary-sized (lang, term)
-    count frame behind a lazy checkpoint; totals/V derive from it;
-    the (lang × vocab) grid is a broadcast cross join. Each term's
-    contribution p·ln(p/q) is quantized to DECIMAL(38,12) before the
-    commutative per-group sum, so the value replays bit-for-bit in
-    DuckDB regardless of row order (see the operator docstring for
-    why scale 12 is the portable quantization). Green at
-    sf0.001/0.01/0.1."""
-    from hrtech_etl_spark.functions.text import unigram_kl_divergence
-
-    d = load_table(spark, "documents", sf_dir)
-    return unigram_kl_divergence(d, "text", "lang")
-
-
-# ---------------------------------------------------------------------------
-# CCNet head/middle/tail quality bucketing (LM-score terciles per lang)
-# ---------------------------------------------------------------------------
-
-@query(
-    "text_ccnet_buckets",
-    sql=f"""
-    {_LM_MODEL_CTES}
-    SELECT s.doc_id, doc.lang, s.n_bigrams, s.avg_logp,
-           CAST(ntile(3) OVER (
-             PARTITION BY doc.lang ORDER BY s.avg_logp DESC, s.doc_id
-           ) AS INT) AS bucket
-    FROM scores s JOIN documents doc USING (doc_id)
-    """,
-)
-def text_ccnet_buckets(spark, sf_dir):
-    """CCNet's head/middle/tail split (Wenzek et al. 2019 —
-    functions/text.py::ccnet_quality_buckets): every document ranked
-    inside its language by the corpus-trained bigram-LM score and cut
-    into terciles, bucket 1 = the fluent head, 3 = the gibberish tail
-    a pipeline drops or down-weights. The language rides the LM's
-    per-doc aggregation via carry_cols (NO second corpus join on the
-    Spark side — the oracle joins documents only because its scores
-    CTE, shared verbatim with text_bigram_lm_score via
-    _LM_MODEL_CTES, is doc-only); the tiling is one ntile window per
-    language over the deterministic (score DESC, doc_id) order.
-    Green at sf0.001/0.01/0.1."""
-    from hrtech_etl_spark.functions.text import ccnet_quality_buckets
-
-    d = load_table(spark, "documents", sf_dir)
-    return ccnet_quality_buckets(d, "text", "doc_id", "lang").select(
-        "doc_id", "lang", "n_bigrams", "avg_logp", "bucket"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -6602,7 +6180,7 @@ def corpus_dsir_select(spark, sf_dir):
     otherwise beat real documents' negative-on-average smoothed ratios
     and a crawl's empty-page tail would crowd out every scored doc.
     Per-bucket ratios are rounded to 6 decimals and summed in DECIMAL
-    (order-independent across engines, the bigram-LM rule); ranking
+    (a DECIMAL sum is order-independent across engines); ranking
     uses the DISTRIBUTED exact-rank plan (zero unpartitioned windows);
     the selection threshold multiplies in exact DECIMAL on both sides
     (an IEEE 0.2*N can land just above the integer a DECIMAL engine

@@ -9,7 +9,9 @@ engine's ``tumbling_counts``/``sliding_counts``/``session_counts``)
 the incremental dedup path left in the cut-down dedup module, and the
 first-50 entries over the dedup, text and similarity functions whose
 one-value options were retired (tf-idf, MinHash verify, SimHash bands,
-n-gram Jaccard, SRP buckets)."""
+n-gram Jaccard, SRP buckets), and the post-window entries over the
+cut-down text module (boilerplate removal, PII redaction, repetition
+signals)."""
 
 from __future__ import annotations
 
@@ -38,6 +40,9 @@ ENTRIES = [
     "dedup_simhash",
     "dedup_ngram_jaccard",
     "sim_lsh_topk",
+    "text_boilerplate_removal",
+    "text_redact_pii",
+    "text_repetition_signals",
 ]
 
 

@@ -19,6 +19,7 @@ everything.
 from __future__ import annotations
 
 import ast
+import functools
 import hashlib
 import pathlib
 import py_compile
@@ -41,11 +42,12 @@ R9_PREFIX_LEN = 89
 R9_PREFIX_MD5 = "924af5c735b3ca50a853a1ffbac967c7"
 
 # Same contract, advanced to the end of round 10: 156 entries, minus
-# the six media-codec and perceptual-hash entries and the eleven
-# ANN-serving entries removed since (named in CHANGES.md); the
-# surviving 143 keep their order.
-R10_PREFIX_LEN = 143
-R10_PREFIX_MD5 = "144bd69189a07c29e92fea0a52177cbb"
+# the six media-codec and perceptual-hash entries, the eleven
+# ANN-serving entries and the five corpus-tokenizer and corpus-LM
+# scoring entries removed since (named in CHANGES.md); the surviving
+# 138 keep their order.
+R10_PREFIX_LEN = 138
+R10_PREFIX_MD5 = "27b5fbb50ca3b1803b1ba7f83a6eabc2"
 
 
 def _names() -> list[str]:
@@ -171,6 +173,69 @@ def test_module_imports_are_used(path):
 
 
 REPO_ROOT = TOOLS_DIR.parent
+
+
+@functools.lru_cache(maxsize=None)
+def _name_occurrences() -> dict:
+    """``{name: [(path, lineno), ...]}`` for every Name, Attribute,
+    ImportFrom alias and string constant in the package, ``tests/``,
+    ``tools/``, ``hrbench/`` and ``__spark_entry__.py``."""
+    roots = (PACKAGE_DIR, REPO_ROOT / "tests", TOOLS_DIR, REPO_ROOT / "hrbench")
+    paths = [f for root in roots for f in root.rglob("*.py")]
+    paths.append(REPO_ROOT / "__spark_entry__.py")
+    found = {}
+    for path in paths:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name):
+                names = [node.id]
+            elif isinstance(node, ast.Attribute):
+                names = [node.attr]
+            elif isinstance(node, ast.ImportFrom):
+                names = [alias.name for alias in node.names]
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                names = [node.value]
+            else:
+                continue
+            for name in names:
+                found.setdefault(name, []).append((path, node.lineno))
+    return found
+
+
+def _top_level_definitions(tree: ast.Module):
+    """``(name, first_line, last_line)`` for each undecorated top-level
+    def or class and each single-name assignment."""
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            if not node.decorator_list:
+                yield node.name, node.lineno, node.end_lineno
+        elif isinstance(node, ast.Assign) and len(node.targets) == 1:
+            target = node.targets[0]
+            if isinstance(target, ast.Name):
+                yield target.id, node.lineno, node.end_lineno
+        elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+            yield node.target.id, node.lineno, node.end_lineno
+
+
+@pytest.mark.parametrize(
+    "path",
+    sorted(PACKAGE_DIR.rglob("*.py")),
+    ids=lambda p: str(p.relative_to(PACKAGE_DIR)),
+)
+def test_top_level_definitions_are_referenced(path):
+    """Every undecorated top-level def, class or single-name assignment
+    is named somewhere outside its own body. A retired family leaves
+    behind the helpers and constants only it used."""
+    occurrences = _name_occurrences()
+    orphans = []
+    for name, first, last in _top_level_definitions(ast.parse(path.read_text())):
+        if name.startswith("__") and name.endswith("__"):
+            continue
+        if not any(
+            p != path or not first <= line <= last
+            for p, line in occurrences.get(name, ())
+        ):
+            orphans.append(f"{name} (line {first})")
+    assert not orphans, f"top-level definitions named nowhere else: {orphans}"
 
 
 def _bool_defaults(fn: ast.FunctionDef) -> dict:

@@ -222,231 +222,3 @@ def test_repetition_signals_zero_shuffle(spark):
     out = tx.repetition_signals(df, "text", "doc_id")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
-
-
-# ---------------------------------------------------------------------------
-# bigram_lm_scores (CCNet-style corpus-trained LM filter)
-# ---------------------------------------------------------------------------
-
-
-def _lm_reference(docs, k=0.5):
-    """Pure-Python model: add-k smoothed bigram LM trained on the
-    corpus, per-doc mean log-prob (log terms rounded to 6 decimals,
-    as the operator's cross-engine contract specifies)."""
-    import math
-    from collections import Counter
-
-    bg, per = Counter(), {}
-    for did, text in docs:
-        toks = text.lower().split()
-        grams = Counter(zip(toks, toks[1:]))
-        if grams:
-            per[did] = grams
-            bg.update(grams)
-    ctx = Counter()
-    vocab = set()
-    for (w1, w2), c in bg.items():
-        ctx[w1] += c
-        vocab.update((w1, w2))
-    v = len(vocab)
-    out = {}
-    for did, grams in per.items():
-        n = sum(grams.values())
-        s = sum(
-            tf * round(math.log((bg[g] + k) / (ctx[g[0]] + k * v)), 6)
-            for g, tf in grams.items()
-        )
-        out[did] = (n, s / n)
-    return out
-
-
-def test_bigram_lm_matches_reference(spark):
-    from hrtech_etl_spark.functions.text import bigram_lm_scores
-
-    docs = [
-        (1, "a b a b c"),
-        (2, "a b"),
-        (3, "c c c"),
-        (4, "solo"),  # < 2 tokens -> absent from output
-        (5, ""),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["n_bigrams"], r["avg_logp"])
-        for r in bigram_lm_scores(df, "text", "doc_id").collect()
-    }
-    want = _lm_reference(docs)
-    assert set(got) == set(want) == {1, 2, 3}
-    for did, (n, avg) in want.items():
-        assert got[did][0] == n
-        # both sides round log terms to 6 decimals; the final mean is
-        # rounded half-up at 4 by Spark vs unrounded here
-        assert abs(got[did][1] - avg) <= 1.5e-4, (did, got[did], avg)
-
-
-def test_bigram_lm_more_probable_doc_scores_higher(spark):
-    from hrtech_etl_spark.functions.text import bigram_lm_scores
-
-    # doc 1 repeats the corpus-dominant bigram; doc 2 is one-off
-    docs = [(1, "x y x y x y x y"), (2, "q r"), (3, "x y")]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {
-        r["doc_id"]: r["avg_logp"]
-        for r in bigram_lm_scores(df, "text", "doc_id").collect()
-    }
-    assert got[1] > got[2]
-    assert got[3] > got[2]
-
-
-def test_bigram_lm_single_scan_plan(spark, sf_dir):
-    """The corpus is exploded ONCE: the model table's lazy
-    localCheckpoint boundary keeps the ctx/vocab/model consumers from
-    re-deriving it (3 parquet scans without it)."""
-    from hrtech_etl_spark.functions.text import bigram_lm_scores
-    from hrtech_etl_spark.sources.testdata import load_table
-
-    d = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    df = bigram_lm_scores(d, "text", "doc_id")
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    marker = plan.find("Initial Plan")
-    if marker != -1:
-        plan = plan[:marker]
-    lower = plan.lower()
-    scans = [
-        ln for ln in lower.splitlines() if "scan" in ln and "parquet" in ln
-    ]
-    assert len(scans) == 1, plan
-
-
-def test_bm25_topk_hand_computed(spark):
-    import math
-
-    from hrtech_etl_spark.functions.text import bm25_topk
-
-    docs = [
-        (1, "apple banana apple"),
-        (2, "banana cherry"),
-        (3, "cherry cherry cherry durian"),
-        (4, None),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    out = bm25_topk(df, "text", "doc_id", ["apple", "cherry"], n=10)
-    got = {r["doc_id"]: r["score"] for r in out.collect()}
-    # doc 4 (NULL) excluded everywhere; doc 2/3 match 'cherry',
-    # doc 1 matches 'apple' twice
-    assert set(got) == {1, 2, 3}
-
-    def bm25(tf, dfreq, n_docs, dl, avgdl, k1=1.2, b=0.75):
-        idf = math.log(1.0 + (n_docs - dfreq + 0.5) / (dfreq + 0.5))
-        return idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-
-    n_docs, avgdl = 3, (3 + 2 + 4) / 3.0
-    assert got[1] == round(bm25(2, 1, n_docs, 3, avgdl), 6)
-    assert got[3] == round(bm25(3, 2, n_docs, 4, avgdl), 6)
-    assert got[2] == round(bm25(1, 2, n_docs, 2, avgdl), 6)
-    # rare 'apple' with tf=2 outranks common 'cherry'
-    order = [r["doc_id"] for r in out.collect()]
-    assert order[0] == 1
-
-
-def test_bm25_topk_validation(spark):
-    from hrtech_etl_spark.functions.text import bm25_topk
-
-    df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
-    with pytest.raises(ValueError):
-        bm25_topk(df, "text", "doc_id", [])
-    with pytest.raises(ValueError):
-        bm25_topk(df, "text", "doc_id", ["a", "a"])
-
-
-def test_unigram_kl_divergence_hand_computed(spark):
-    from hrtech_etl_spark.functions.text import unigram_kl_divergence
-
-    docs = [
-        (1, "a a b", "x"),
-        (2, "a b b c", "y"),
-        (3, None, "x"),
-        (4, "a", None),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string, src string")
-    out = {
-        r["src"]: (r["n_terms"], r["kl"])
-        for r in unigram_kl_divergence(df, "text", "src").collect()
-    }
-    # vocab {a,b,c}: V=3, tot=7; x: a2 b1 (totg 3), y: a1 b2 c1 (totg 4)
-    def kl(counts, totg, V=3, tot=7, q_counts={"a": 3, "b": 3, "c": 1}):
-        s = 0.0
-        for t in ("a", "b", "c"):
-            p = (counts.get(t, 0) + 1.0) / (totg + V)
-            q = (q_counts[t] + 1.0) / (tot + V)
-            s += round(p * math.log(p / q), 12)
-        return round(s, 8)
-
-    assert out["x"] == (2, kl({"a": 2, "b": 1}, 3))
-    assert out["y"] == (3, kl({"a": 1, "b": 2, "c": 1}, 4))
-    # smoothed KL is a true divergence
-    assert out["x"][1] >= 0 and out["y"][1] >= 0
-
-
-def test_unigram_kl_divergence_zero_for_identical_slices(spark):
-    from hrtech_etl_spark.functions.text import unigram_kl_divergence
-
-    rows = [(i, "alpha beta gamma", "g%d" % (i % 2)) for i in range(8)]
-    df = spark.createDataFrame(rows, "doc_id long, text string, src string")
-    out = unigram_kl_divergence(df, "text", "src").collect()
-    # both slices have the SAME distribution as the mixture -> KL = 0
-    assert all(abs(r["kl"]) < 1e-9 for r in out)
-
-
-def test_ccnet_quality_buckets(spark):
-    from hrtech_etl_spark.functions.text import ccnet_quality_buckets
-
-    # 9 en docs: 3 fluent (repeated common bigrams), 3 middling,
-    # 3 gibberish (unique bigrams) + one 1-token doc (absent)
-    rows = []
-    for i in range(3):
-        rows.append((i, "the cat sat on the mat the cat sat", "en"))
-    for i in range(3, 6):
-        rows.append((i, "the cat ran to a %d tree quickly" % i, "en"))
-    for i in range(6, 9):
-        rows.append((i, "zq%d xv%d qqj%d wpf%d vvk%d" % (i, i, i, i, i), "en"))
-    rows.append((99, "single", "en"))
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    out = {r["doc_id"]: r for r in
-           ccnet_quality_buckets(df, "text", "doc_id", "lang").collect()}
-    assert 99 not in out  # < 2 tokens -> no bigrams
-    assert len(out) == 9
-    buckets = [out[i]["bucket"] for i in range(9)]
-    # 3 tiles of 3; fluent docs in the head, gibberish in the tail
-    assert sorted(buckets) == [1, 1, 1, 2, 2, 2, 3, 3, 3]
-    assert all(out[i]["bucket"] == 1 for i in range(3))
-    assert all(out[i]["bucket"] == 3 for i in range(6, 9))
-    # scores are monotone with buckets
-    assert out[0]["avg_logp"] > out[6]["avg_logp"]
-
-    with pytest.raises(ValueError):
-        ccnet_quality_buckets(df, "text", "doc_id", "lang", n_buckets=1)
-
-
-def test_ccnet_buckets_single_scan_plan(spark, sf_dir):
-    """The bigram-LM checkpoint boundary HOLDS inside the composed
-    ntile plan: text_ccnet_buckets explodes the corpus ONCE, exactly
-    like its base entry (round-11 verdict item — the observed 3-5x
-    wall gap at sf0.1 was host noise: a same-session A/B measured
-    2.65s ccnet vs 2.90s bigram_lm, identical 12-job/25-stage shape)."""
-    from hrtech_etl_spark.functions.text import ccnet_quality_buckets
-    from hrtech_etl_spark.sources.testdata import load_table
-
-    d = load_table(spark, "documents", sf_dir)
-    df = ccnet_quality_buckets(d, "text", "doc_id", "lang")
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    marker = plan.find("Initial Plan")
-    if marker != -1:
-        plan = plan[:marker]
-    lower = plan.lower()
-    scans = [
-        ln for ln in lower.splitlines() if "scan" in ln and "parquet" in ln
-    ]
-    assert len(scans) == 1, plan

@@ -62,10 +62,7 @@ DEFAULT = [
     "scalar_variant_json",
     # round 10
     "dedup_substring_spans",
-    "text_bm25_topk",
     "corpus_temperature_mix",
-    "text_kl_divergence",
-    "text_ccnet_buckets",
     "agg_correlated_subquery",
     "corpus_weighted_sample",
     # round 10, session 3
